@@ -1,5 +1,7 @@
 package graft.ingest
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
@@ -20,6 +22,11 @@ object Workbook {
     * null. Driver-side by design: workbook sheets are small metadata-ish
     * inputs; bulk data enters the engine through `spark.read`
     * (parquet/csv) instead.
+    *
+    * The data is a local relation (not a parallelized RDD): a driver-side
+    * read of projected columns — the pipeline's grain check over the
+    * cleaned LA names — folds through `ConvertToLocalRelation` and
+    * launches no Spark job.
     */
   def fromGrid(spark: SparkSession, grid: Seq[Seq[String]], headerRow: Int = 2): Workbook = {
     require(grid.size > headerRow, s"grid has ${grid.size} rows, header expected at $headerRow")
@@ -37,8 +44,7 @@ object Workbook {
       val padded = r.padTo(width, null: String)
       Row.fromSeq(padded.map(c => if (c == null || c.isEmpty) null else c))
     }
-    Workbook(a1, spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toIndexedSeq, 1), schema))
+    Workbook(a1, spark.createDataFrame(rows.asJava, schema))
   }
 
   /** Read a CSV-staged sheet (no quoting/escaping — staging format is
@@ -47,7 +53,6 @@ object Workbook {
     * both come from that read.
     */
   def readCsvGrid(spark: SparkSession, path: String, headerRow: Int = 2): Workbook = {
-    import scala.jdk.CollectionConverters._
     val lines = java.nio.file.Files.readAllLines(java.nio.file.Paths.get(path)).asScala.toSeq
     fromGrid(spark, lines.map(_.split(",", -1).toSeq), headerRow)
   }

@@ -75,8 +75,11 @@ object Components {
     if (driverMaxEdges >= 0) {
       val spark = pairs.sparkSession
       import spark.implicits._
+      // guard the input, not the sum: driverMaxEdges + 1 wraps at
+      // Long.MaxValue, and a wrapped cap would collect nothing and pass
+      // the gate with an empty graph
+      require(driverMaxEdges < Int.MaxValue, s"driverMaxEdges too large: $driverMaxEdges")
       val probeCap = driverMaxEdges + 1
-      require(probeCap <= Int.MaxValue, s"driverMaxEdges too large: $driverMaxEdges")
       // typed collect: primitive-friendly tuple encoding, no Row boxing
       val probe = e0.where(col("src").isNotNull && col("dst").isNotNull)
         .limit(probeCap.toInt).as[(Long, Long)].collect()

@@ -127,6 +127,10 @@ object KCore {
       pairs: DataFrame, aCol: String, bCol: String, k: Int,
       maxIter: Int = 50, driverMaxArcs: Long = DriverMaxArcs): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
+    // guard the input, not the sum: the probe cap driverMaxArcs + 1 wraps
+    // at Long.MaxValue, and a wrapped cap collects nothing and passes the
+    // gate with an empty graph
+    require(driverMaxArcs < Int.MaxValue, s"driverMaxArcs too large: $driverMaxArcs")
     // LAZY localCheckpoint: the gate probe below and (over the gate)
     // the prep both read THIS frame — one LogicalRDD, one shuffle
     // lineage — so the caller's producer plan evaluates its map stages
@@ -143,15 +147,17 @@ object KCore {
     // direction-doubles on the driver, so for graphs under the gate the
     // distributed explode + repartition exchange + dedup + arc
     // checkpoint + count were pure overhead (solo q144 at sf0.1:
-    // 4.7 → 3.5 s). An oversized list collects only driverMaxArcs+1
-    // rows before falling through to the distributed lane, which then
-    // reads the same checkpointed raw blocks — the probe costs one
-    // bounded driver transfer, never a producer re-run.
+    // 4.7 → 3.5 s). Cost model: the probe action evaluates the producer
+    // only until driverMaxArcs+1 rows arrive, but the lazy
+    // localCheckpoint then materializes every partition the probe did
+    // not reach in a follow-up job, so either lane pays one full pass
+    // over the producer. What the gate saves is the explode, exchange
+    // and dedup; the over-gate lane reads the checkpointed raw blocks
+    // and never re-runs the producer.
     if (driverMaxArcs >= 0) {
       val spark = pairs.sparkSession
       import spark.implicits._
       val probeCap = driverMaxArcs + 1
-      require(probeCap <= Int.MaxValue, s"driverMaxArcs too large: $driverMaxArcs")
       val probe = cleaned.limit(probeCap.toInt).as[(Long, Long)].collect()
       if (probe.length <= driverMaxArcs) {
         release(cleaned)

@@ -323,7 +323,7 @@ object Relational {
       Some(rollupOracle)),
     GraftQuery(
       "q14b_rollup_cube",
-      (s, d) => rollupBase(s, d, Rollup.cubeLabeled),
+      (s, d) => rollupBase(s, d, Rollup.cubeLabeled(_, _, _, _, _)),
       Some(rollupOracle),
       headline = true),
 

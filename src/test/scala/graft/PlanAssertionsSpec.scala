@@ -405,4 +405,81 @@ class PlanAssertionsSpec extends SparkTestBase {
       s"removal join should broadcast the boilerplate set, got:\n${p.take(1500)}")
     assert(!p.contains("CartesianProduct"), "no line-pair expansion may appear")
   }
+
+  // ---- HPV cycle budget: zero jobs in transform, one shuffle in the fact plan ----
+
+  private def hpvWorkbooks: Seq[graft.ingest.Workbook] = (2023 to 2025).map { y =>
+    graft.ingest.Workbook.fromGrid(spark, Seq(
+      Seq(s"HPV coverage, September ${y - 1} to August $y"),
+      Seq(""),
+      Seq("Local authority", "Year 8 females: Number", "Year 8 females: Number vaccinated",
+        "Year 8 females: % vaccinated", "Year 8 males: Number", "Year 8 males: Number vaccinated"),
+      Seq(" camden ", "100", "80", "80.0", "90", "70"),
+      Seq("ISLINGTON", "*", "60", "50.0", "50", "40"),
+      Seq("*", "", "10", "10.0", "30", "20")))
+  }
+
+  /** Jobs launched by `body`'s thread (and threads it starts), counted
+    * by a listener between two fence jobs: the listener bus delivers in
+    * order, so once the closing fence arrives every job of `body` has.
+    */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val tag = "graft.test.budget"
+    val token = java.util.UUID.randomUUID().toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val fences = new java.util.concurrent.LinkedBlockingQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(tag)).foreach {
+          case t if t == token + "/fence" => fences.put(t)
+          case t if t == token => jobs.incrementAndGet()
+          case _ =>
+        }
+    }
+    def fence(): Unit = {
+      sc.setLocalProperty(tag, token + "/fence")
+      sc.parallelize(Seq(1), 1).count()
+      assert(fences.poll(60, java.util.concurrent.TimeUnit.SECONDS) != null,
+        "listener bus did not deliver the fence job")
+    }
+    sc.addSparkListener(listener)
+    try {
+      fence()
+      sc.setLocalProperty(tag, token)
+      val out = body
+      fence()
+      (out, jobs.get())
+    } finally {
+      sc.setLocalProperty(tag, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("HPV transform plans the cycle without launching a Spark job") {
+    val wbs = hpvWorkbooks
+    val (fact, jobs) = jobsDuring(
+      graft.pipeline.HpvPipeline.transform(wbs, java.time.LocalDate.of(2026, 1, 15)))
+    assert(jobs == 0, s"transform launched $jobs job(s); its driver reads must fold into local relations")
+    val (_, collectJobs) = jobsDuring(fact.collect())
+    assert(collectJobs > 0, "the job counter saw no job for a real action")
+  }
+
+  test("HPV fact plan executes with exactly one shuffle exchange") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    val fact = graft.pipeline.HpvPipeline.transform(hpvWorkbooks, java.time.LocalDate.of(2026, 1, 15))
+    fact.collect()
+    val executed = fact.queryExecution.executedPlan
+    // node types, not plan text: BroadcastExchange and ReusedExchange
+    // nodes are not shuffles, and a reused stage is a leaf
+    val helper = new AdaptiveSparkPlanHelper {}
+    val shuffles = helper.collect(executed) { case e: ShuffleExchangeLike => e }
+    assert(shuffles.size == 1,
+      s"expected one shuffle (the grouping-sets aggregate), got ${shuffles.size}:\n$executed")
+    assert(helper.collect(executed) {
+      case e: org.apache.spark.sql.execution.ExpandExec => e }.size == 1,
+      "both rollups must share one Expand")
+  }
 }

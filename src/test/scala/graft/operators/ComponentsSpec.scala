@@ -118,4 +118,20 @@ class ComponentsSpec extends SparkTestBase {
       .select($"id").as[Long].collect().toSet
     assert(minId == Set(1L, 4L, 8L))
   }
+
+  test("gate bound: Int.MaxValue - 1 takes the driver lane; Long.MaxValue fails loud, not empty") {
+    val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("a", "b")
+    // the largest accepted bound: probe cap = Int.MaxValue, full answer
+    val top = Components.connectedComponents(edges, "a", "b", driverMaxEdges = Int.MaxValue - 1L)
+      .as[(Long, Long)].collect().toMap
+    assert(top == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
+    // driverMaxEdges + 1 would wrap to Long.MinValue and probe nothing
+    val e = intercept[IllegalArgumentException] {
+      Components.connectedComponents(edges, "a", "b", driverMaxEdges = Long.MaxValue)
+    }
+    assert(e.getMessage.contains("driverMaxEdges too large"))
+    intercept[IllegalArgumentException] {
+      Components.connectedComponents(edges, "a", "b", driverMaxEdges = Int.MaxValue.toLong)
+    }
+  }
 }

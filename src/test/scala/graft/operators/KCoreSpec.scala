@@ -74,4 +74,20 @@ class KCoreSpec extends SparkTestBase {
     assert(result(5L) == result(4L))
     assert(result(5L) == Map(1L -> 2L, 2L -> 2L, 3L -> 2L))
   }
+
+  test("gate bound: Int.MaxValue - 1 takes the driver lane; Long.MaxValue fails loud, not empty") {
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("a", "b")
+    // the largest accepted bound: probe cap = Int.MaxValue, full answer
+    val top = KCore.core(edges, "a", "b", k = 2, driverMaxArcs = Int.MaxValue - 1L)
+      .as[(Long, Long)].collect().toMap
+    assert(top == Map(1L -> 2L, 2L -> 2L, 3L -> 2L))
+    // driverMaxArcs + 1 would wrap to Long.MinValue and probe nothing
+    val e = intercept[IllegalArgumentException] {
+      KCore.core(edges, "a", "b", k = 2, driverMaxArcs = Long.MaxValue)
+    }
+    assert(e.getMessage.contains("driverMaxArcs too large"))
+    intercept[IllegalArgumentException] {
+      KCore.core(edges, "a", "b", k = 2, driverMaxArcs = Int.MaxValue.toLong)
+    }
+  }
 }

@@ -10,35 +10,6 @@ import org.apache.spark.sql.Row
 class OpsSpec extends SparkTestBase {
   import spark.implicits._
 
-  test("R1 unpivot folds all non-id columns, computed from schema") {
-    val df = Seq(("camden", "1", "2"), ("barnet", "3", "4"))
-      .toDF("Local authority", "Year 8 females: Number", "Year 8 males: Number")
-    val m = Reshape.unpivot(df, Seq("Local authority"))
-    assert(m.columns.toSeq == Seq("Local authority", "Category", "Value"))
-    assert(m.count() == 4)
-    assert(m.where($"Category" === "Year 8 males: Number" && $"Local authority" === "barnet")
-      .select("Value").as[String].head() == "4")
-  }
-
-  test("R2 pivotAsserted raises on duplicate grain (N3/D4), listing keys") {
-    val dup = Seq(("camden", "8", "F", "Number", "1"), ("camden", "8", "F", "Number", "2"))
-      .toDF("la", "yg", "g", "Metric", "Value")
-    val e = intercept[IllegalStateException] {
-      Reshape.pivotAsserted(dup, Seq("la", "yg", "g"), "Metric", Seq("Number"), "Value")
-    }
-    assert(e.getMessage.contains("camden"))
-    val ok = Seq(("camden", "Number", "1"), ("camden", "Number_Vaccinated", "2"))
-      .toDF("la", "Metric", "Value")
-    val p = Reshape.pivotAsserted(ok, Seq("la"), "Metric", Seq("Number", "Number_Vaccinated"), "Value")
-    assert(p.columns.toSeq == Seq("la", "Number", "Number_Vaccinated"))
-    // closed value list: absent metric still yields a (null) column
-    val onlyN = Reshape.pivotAsserted(
-      Seq(("camden", "Number", "1")).toDF("la", "Metric", "Value"),
-      Seq("la"), "Metric", Seq("Number", "Number_Vaccinated"), "Value")
-    assert(onlyN.columns.toSeq == Seq("la", "Number", "Number_Vaccinated"))
-    assert(onlyN.select("Number_Vaccinated").head().isNullAt(0))
-  }
-
   test("N1 ordering: dropna before sentinel replace keeps '*' rows") {
     val df = Seq(("a", "*", "1"), ("b", null, "2"), ("c", "3", "4"))
       .toDF("k", "total", "vacc")
@@ -95,23 +66,6 @@ class OpsSpec extends SparkTestBase {
     assert(Derive.academicYearText(a1).contains("September 2023 to August 2024"))
     assert(Derive.academicYearEnd("garbage header").isEmpty)
     assert(Derive.academicYearText("garbage header").isEmpty)
-  }
-
-  test("pivot ∘ unpivot = identity on clean unique-grain data (SURVEY §5.2 tier 4)") {
-    import scala.util.Random
-    for (seed <- 1 to 5) {
-      val rnd = new Random(seed)
-      val las = Seq("camden", "barnet", "enfield").take(1 + rnd.nextInt(3))
-      val metrics = Seq("Number", "Number_Vaccinated")
-      val wide = las.map(la => (la, rnd.nextInt(100).toString, rnd.nextInt(100).toString))
-        .toDF("la", "Number", "Number_Vaccinated")
-      val long = Reshape.unpivot(wide, Seq("la"), "Metric", "Value")
-      val back = Reshape.pivotAsserted(long, Seq("la"), "Metric", metrics, "Value")
-      withClue(s"seed=$seed: ") {
-        assert(rowsOf(back.select("la", "Number", "Number_Vaccinated")) ==
-          rowsOf(wide.select("la", "Number", "Number_Vaccinated")))
-      }
-    }
   }
 
   test("U1 unionByNameAll aligns by label and null-fills missing columns") {

@@ -8,7 +8,9 @@ import scala.util.Random
 
 /** A3 equivalence: the faithful rollup-by-union and the single-shuffle
   * labeled-cube formulation must agree as multisets on arbitrary data —
-  * including null measures (D2) and null roll-key values (D6).
+  * including null measures (D2), null roll-key values (D6) and, once the
+  * cube carries a row key, duplicate grain rows — under every
+  * [[Rollup.PandasCompat]] combination.
   * (Property-style via seeded random inputs; scalatestplus bridge isn't
   * in the offline dependency set.)
   */
@@ -44,6 +46,38 @@ class RollupSpec extends SparkTestBase {
       val a = Rollup.byUnion(df, grain, ms, ("g1", "Both"), ("g2", "All"))
       val b = Rollup.cubeLabeled(df, grain, ms, ("g1", "Both"), ("g2", "All"))
       withClue(s"seed=$seed: ") { assertSameRows(a, b) }
+    }
+  }
+
+  private val compats = for (z <- Seq(false, true); d <- Seq(false, true))
+    yield Rollup.PandasCompat(allNullSumZero = z, dropNullKeyGroups = d)
+
+  /** Random rows over a small key space, so the grain repeats; every key
+    * and the first measure can be null.
+    */
+  private def messyRows(rnd: Random, n: Int): Seq[Row] =
+    Seq.fill(n) {
+      def pick(vs: String*): String = {
+        val i = rnd.nextInt(vs.size + 1)
+        if (i == vs.size) null else vs(i)
+      }
+      val m1: java.lang.Long = if (rnd.nextInt(3) == 0) null else Long.box(rnd.nextInt(100).toLong)
+      val m2: java.lang.Long = if (rnd.nextInt(6) == 0) null else Long.box(rnd.nextInt(100).toLong)
+      Row(pick("F", "M"), pick("8", "9"), pick("a", "b"), m1, m2)
+    }
+
+  test("cubeLabeled with a row key ≡ byUnion on duplicate grain rows, all compat flags") {
+    import org.apache.spark.sql.functions.monotonically_increasing_id
+    val grain = Seq("g1", "g2", "k")
+    val ms = Seq("m1", "m2")
+    for (seed <- 1 to 8; compat <- compats) {
+      val rnd = new Random(seed)
+      val rows = { val r = messyRows(rnd, 4 + rnd.nextInt(30)); r :+ r.head } // ≥ 1 exact duplicate
+      val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
+      val a = Rollup.byUnion(df, grain, ms, ("g1", "Both"), ("g2", "All"), compat)
+      val b = Rollup.cubeLabeled(df.withColumn("_rk", monotonically_increasing_id()),
+        grain, ms, ("g1", "Both"), ("g2", "All"), rowKey = Seq("_rk"), compat = compat)
+      withClue(s"seed=$seed compat=$compat: ") { assertSameRows(a, b) }
     }
   }
 

@@ -2,8 +2,13 @@ package graft.pipeline
 
 import java.time.LocalDate
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, trim}
+import org.apache.spark.sql.types.LongType
+
 import graft.SparkTestBase
 import graft.ingest.Workbook
+import graft.ops.{Clean, Combine, Rollup}
 
 /** End-to-end golden test (SURVEY §5.2 tier 2): two synthesized
   * workbooks exercising every branch — sentinel in a measure, born-null
@@ -77,9 +82,115 @@ class HpvPipelineSpec extends SparkTestBase {
       s"only-got=${got -- expected}\nonly-expected=${expected -- got}")
   }
 
+  /** The spec oracle: the reference's combine verbatim — union, dropna,
+    * scrub, cast, then the two rollups by union (`Rollup.byUnion`).
+    */
+  private def faithfulCombine(perFiles: Seq[DataFrame], compat: HpvPipeline.Compat): DataFrame = {
+    val scrubbed = Clean.sentinelsToNull(
+      Clean.dropNullRows(Combine.unionByNameAll(perFiles), HpvPipeline.Measures))
+    val typed = HpvPipeline.Measures.foldLeft(scrubbed)((d, m) =>
+      d.withColumn(m, trim(col(m)).cast(LongType)))
+    val rolled = Rollup.byUnion(typed, HpvPipeline.Grain, HpvPipeline.Measures,
+      ("Gender_Name", "Both"), ("Year_Group_Number", "All"), compat.rollup)
+    rolled.toDF(rolled.columns.map(_.toUpperCase).toIndexedSeq: _*)
+  }
+
   test("single-shuffle combine (grouping sets) ≡ faithful combine") {
-    val files = Seq(fileA, fileB).map(HpvPipeline.perFile(_, D))
-    assertSameRows(HpvPipeline.combine(files), HpvPipeline.combineSingleShuffle(files))
+    // incl. repeated grain (D7, null boroughs) and both compat modes
+    val inputs = Seq(Seq(fileA, fileB), Seq(fileA, fileA, fileB), Seq(nullBoroughs))
+    for (wbs <- inputs; compat <- Seq(HpvPipeline.Compat.Off, HpvPipeline.Compat.PandasExact)) {
+      val files = wbs.map(HpvPipeline.perFile(_, D, compat))
+      withClue(s"compat=$compat files=${wbs.size}: ") {
+        assertSameRows(HpvPipeline.combine(files, compat), faithfulCombine(files, compat))
+      }
+    }
+  }
+
+  /** (borough, year group, gender, total, vaccinated) multiset. */
+  private def cells(out: DataFrame): Map[(String, String, String, Any, Any), Int] =
+    out.collect().toSeq.map { r =>
+      (r.getString(0), r.getString(1), r.getString(2),
+        if (r.isNullAt(3)) null else r.getLong(3),
+        if (r.isNullAt(4)) null else r.getLong(4))
+    }.groupBy(identity).view.mapValues(_.size).toMap
+
+  private def grid(a1: String, header: Seq[String], rows: Seq[String]*): Workbook =
+    Workbook.fromGrid(spark, Seq(Seq(a1), Seq(""), "Local authority" +: header) ++ rows)
+
+  private val y8F = Seq("Year 8 females: Number", "Year 8 females: Number vaccinated")
+
+  test("R1/R2: a duplicate cleaned LA name fails loud, naming the key") {
+    val wb = grid(s"x $T24", y8F, Seq("camden", "1", "1"), Seq(" Camden ", "2", "2"))
+    val e = intercept[IllegalStateException](HpvPipeline.perFile(wb, D))
+    assert(e.getMessage.contains("pivot grain (Local authority, Year Group, Gender, Metric) not unique"))
+    assert(e.getMessage.contains("[Camden,8,Female,Number,2]"), e.getMessage)
+  }
+
+  test("R1/R2: two headers deriving one pivot key fail loud") {
+    val header = Seq("Year 8 females: Number", "Y8 females: Number", "Year 8 females: Number vaccinated")
+    val e = intercept[IllegalStateException](
+      HpvPipeline.perFile(grid(s"x $T24", header, Seq("camden", "1", "2", "1")), D))
+    assert(e.getMessage.contains("[Camden,8,Female,Number,2]"), e.getMessage)
+    // the check needs data rows, like the pivot it replaces
+    assert(HpvPipeline.perFile(grid(s"x $T24", header), D).count() == 0)
+  }
+
+  test("R1/R2: kept headers land; an absent metric gives a null measure") {
+    val wb = grid(s"x $T24",
+      Seq("Year 8 females: Number", "Year 8 females: Number vaccinated", "Year 9 males: Number",
+        "Year 9 males: % vaccinated"),
+      Seq("camden", "10", "5", "7", "70.0"), Seq("barnet", "20", "6", "8", "*"))
+    val out = HpvPipeline.perFile(wb, D)
+    assert(out.columns.toSeq == Seq("Borough_Name", "Year_Group_Number", "Gender_Name",
+      "Students_Total", "Students_Vaccinated", "Academic_Year_End_Date", "Academic_Year_Text",
+      "Date_Extract"))
+    assert(rowsOf(out.select("Borough_Name", "Year_Group_Number", "Gender_Name",
+      "Students_Total", "Students_Vaccinated")) == Map(
+      Seq("Camden", "8", "Female", "10", "5") -> 1, Seq("Camden", "9", "Male", "7", null) -> 1,
+      Seq("Barnet", "8", "Female", "20", "6") -> 1, Seq("Barnet", "9", "Male", "8", null) -> 1))
+  }
+
+  test("golden D7: a repeated academic year keeps both base rows; the rollups double-count") {
+    val wb = grid(s"x $T24", y8F, Seq("camden", "10", "5"))
+    val out = HpvPipeline.transform(Seq(wb, wb), D)
+    assert(cells(out) == Map(
+      ("Camden", "8", "Female", 10L, 5L) -> 2,
+      ("Camden", "8", "Both", 20L, 10L) -> 1,
+      ("Camden", "All", "Female", 20L, 10L) -> 1,
+      ("Camden", "All", "Both", 20L, 10L) -> 1))
+  }
+
+  /** `*` and a blank cell in the borough column both end as null
+    * boroughs; `[E]` does too under pandas title-casing, while initcap
+    * (D1) lowers it to `[e]`, which no sentinel matches.
+    */
+  private def nullBoroughs = grid(s"x $T24", y8F,
+    Seq("*", "10", "5"), Seq("[E]", "20", "9"), Seq("", "30", "1"),
+    Seq("camden", "40", "4"), Seq("islington", "*", "7"))
+
+  test("golden: `*` and a blank borough give two null-borough base rows, rolled together") {
+    val out = HpvPipeline.transform(Seq(nullBoroughs), D)
+    assert(cells(out) == Map(
+      (null, "8", "Female", 10L, 5L) -> 1, (null, "8", "Female", 30L, 1L) -> 1,
+      ("[e]", "8", "Female", 20L, 9L) -> 1, ("Camden", "8", "Female", 40L, 4L) -> 1,
+      ("Islington", "8", "Female", null, 7L) -> 1,
+      (null, "8", "Both", 40L, 6L) -> 1, ("[e]", "8", "Both", 20L, 9L) -> 1,
+      ("Camden", "8", "Both", 40L, 4L) -> 1, ("Islington", "8", "Both", null, 7L) -> 1,
+      (null, "All", "Female", 40L, 6L) -> 1, (null, "All", "Both", 40L, 6L) -> 1,
+      ("[e]", "All", "Female", 20L, 9L) -> 1, ("[e]", "All", "Both", 20L, 9L) -> 1,
+      ("Camden", "All", "Female", 40L, 4L) -> 1, ("Camden", "All", "Both", 40L, 4L) -> 1,
+      ("Islington", "All", "Female", null, 7L) -> 1, ("Islington", "All", "Both", null, 7L) -> 1))
+  }
+
+  test("golden: Compat.PandasExact — `[E]` scrubs too, null-key groups drop, all-null sums are 0") {
+    val out = HpvPipeline.transform(Seq(nullBoroughs), D, HpvPipeline.Compat.PandasExact)
+    assert(cells(out) == Map(
+      (null, "8", "Female", 10L, 5L) -> 1, (null, "8", "Female", 20L, 9L) -> 1,
+      (null, "8", "Female", 30L, 1L) -> 1, ("Camden", "8", "Female", 40L, 4L) -> 1,
+      ("Islington", "8", "Female", null, 7L) -> 1,
+      ("Camden", "8", "Both", 40L, 4L) -> 1, ("Islington", "8", "Both", 0L, 7L) -> 1,
+      ("Camden", "All", "Female", 40L, 4L) -> 1, ("Camden", "All", "Both", 40L, 4L) -> 1,
+      ("Islington", "All", "Female", 0L, 7L) -> 1, ("Islington", "All", "Both", 0L, 7L) -> 1))
   }
 
   test("D3: unmatched A1 still yields (null) metadata columns, no crash") {
