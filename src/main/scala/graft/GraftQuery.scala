@@ -4,9 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One declared engine query: a Spark implementation plus (when the
   * semantics are ANSI-SQL-expressible) an equivalent DuckDB oracle SQL
-  * over the same fixture tables. `headline` marks the representative
-  * subset used for plan review (PlanDump's default set); Bench times
-  * ALL registered queries.
+  * over the same fixture tables. Bench times ALL registered queries.
   *
   * `prepare` is the build/probe split for index-backed queries (IVF,
   * PQ, IVF-PQ): it stages the one-time index build (via
@@ -21,6 +19,5 @@ final case class GraftQuery(
     name: String,
     run: (SparkSession, String) => DataFrame,
     oracle: Option[String],
-    headline: Boolean = false,
     doc: String = "",
     prepare: Option[(SparkSession, String) => Unit] = None)

@@ -23,5 +23,4 @@ object Registry {
       queries.MultimodalQueries.queries
 
   def byName: Map[String, GraftQuery] = all.map(q => q.name -> q).toMap
-  def headlineNames: Seq[String] = all.filter(_.headline).map(_.name)
 }

@@ -28,23 +28,39 @@ object Workbook {
     * cleaned LA names — folds through `ConvertToLocalRelation` and
     * launches no Spark job.
     */
-  def fromGrid(spark: SparkSession, grid: Seq[Seq[String]], headerRow: Int = 2): Workbook = {
-    require(grid.size > headerRow, s"grid has ${grid.size} rows, header expected at $headerRow")
+  def fromGrid(spark: SparkSession, grid: Seq[Seq[String]], headerRow: Int = 2): Workbook =
+    fromSource(spark, grid, headerRow, "grid")
+
+  /** [[fromGrid]] with the grid's origin (a file path) named in its
+    * errors. */
+  private[ingest] def fromSource(
+      spark: SparkSession, grid: Seq[Seq[String]], headerRow: Int, source: String): Workbook = {
+    val (a1, header, rows) = shape(grid, headerRow, source)
+    val schema = StructType(header.map(StructField(_, StringType, nullable = true)))
+    Workbook(a1, spark.createDataFrame(rows.map(Row.fromSeq).asJava, schema))
+  }
+
+  /** The sheet shape every reader shares: (A1, trimmed header row, data
+    * rows padded to the header width with empty cells as null). Fails
+    * loud, naming `source`, on a grid without the header row and on data
+    * past the last header (house style, cf. N3/D4): silently dropping a
+    * stray trailing value would corrupt measures.
+    */
+  private[ingest] def shape(grid: Seq[Seq[String]], headerRow: Int, source: String)
+      : (String, Seq[String], Seq[Seq[String]]) = {
+    require(grid.size > headerRow,
+      s"$source: grid has ${grid.size} rows, header expected at $headerRow")
     val a1 = grid.headOption.flatMap(_.headOption).getOrElse("")
     val header = grid(headerRow).map(c => Option(c).getOrElse("").trim)
     val width = header.size
-    val schema = StructType(header.map(StructField(_, StringType, nullable = true)))
     val rows = grid.drop(headerRow + 1).zipWithIndex.map { case (r, i) =>
-      // fail loud on data past the last header (house style, cf. N3/D4):
-      // silently dropping a stray trailing value would corrupt measures
       val extras = r.drop(width).filter(c => c != null && c.nonEmpty)
       require(extras.isEmpty,
-        s"data row ${headerRow + 2 + i} has ${extras.size} value(s) beyond the " +
+        s"$source row ${headerRow + 2 + i} has ${extras.size} value(s) beyond the " +
           s"$width-column header: ${extras.take(3).mkString(", ")}")
-      val padded = r.padTo(width, null: String)
-      Row.fromSeq(padded.map(c => if (c == null || c.isEmpty) null else c))
+      r.padTo(width, null: String).map(c => if (c == null || c.isEmpty) null else c)
     }
-    Workbook(a1, spark.createDataFrame(rows.asJava, schema))
+    (a1, header, rows)
   }
 
   /** Read a CSV-staged sheet (no quoting/escaping — staging format is
@@ -54,6 +70,6 @@ object Workbook {
     */
   def readCsvGrid(spark: SparkSession, path: String, headerRow: Int = 2): Workbook = {
     val lines = java.nio.file.Files.readAllLines(java.nio.file.Paths.get(path)).asScala.toSeq
-    fromGrid(spark, lines.map(_.split(",", -1).toSeq), headerRow)
+    fromSource(spark, lines.map(_.split(",", -1).toSeq), headerRow, path)
   }
 }

@@ -1,6 +1,5 @@
 package graft.ingest
 
-import java.util.zip.ZipFile
 import javax.xml.stream.{XMLInputFactory, XMLStreamConstants, XMLStreamReader}
 
 import scala.collection.mutable
@@ -27,7 +26,7 @@ object Xlsx {
   def readWorkbook(
       spark: SparkSession, path: String, sheetName: String,
       headerRow: Int = 2): Workbook =
-    Workbook.fromGrid(spark, readGrid(path, sheetName), headerRow)
+    Workbook.fromSource(spark, readGrid(path, sheetName), headerRow, path)
 
   /** Distributed directory ingest — S1/S2 at fleet scale. The single-
     * file `readWorkbook` is driver-side by design (the reference needs
@@ -44,9 +43,10 @@ object Xlsx {
     * the offending path (house fail-loud style, cf. N3/D4) rather than
     * silently aligning columns by position.
     */
-  /** Per-task memory bound for the distributed path: one workbook's
-    * residency is its raw `content` bytes (binaryFile materializes the
-    * file per row) + the parsed string grid — and NOTHING else, since
+  /** Per-workbook memory bound, on the driver path ([[readGrid]]) and
+    * per task on the distributed path: one workbook's residency is its
+    * raw bytes (binaryFile materializes the file per row; `readGrid`
+    * reads the file whole) + the parsed string grid — and NOTHING else, since
     * round 11's central-directory streaming ([[ZipBytesParts]]) removed
     * the inflated-part buffers that used to triple the footprint (the
     * old 64 MB bound's rationale). The bound is therefore 4× looser
@@ -84,10 +84,8 @@ object Xlsx {
     require(firstBytes.length <= maxWorkbookBytes,
       s"$firstPath: ${firstBytes.length} bytes exceeds the distributed-ingest " +
         s"bound of $maxWorkbookBytes")
-    val headGrid = readGridBytes(firstBytes, sheetName, firstPath)
-    require(headGrid.size > headerRow,
-      s"$firstPath: grid has ${headGrid.size} rows, header expected at $headerRow")
-    val header = headGrid(headerRow).map(c => Option(c).getOrElse("").trim)
+    val (_, header, _) =
+      Workbook.shape(readGridBytes(firstBytes, sheetName, firstPath), headerRow, firstPath)
     val width = header.size
     val headerB = spark.sparkContext.broadcast(header)
 
@@ -99,23 +97,12 @@ object Xlsx {
           s"$path: ${bytes.length} bytes exceeds the distributed-ingest bound " +
             s"of $maxWorkbookBytes — oversized workbooks are almost always " +
             "mislabeled data exports; raise maxWorkbookBytes only deliberately")
-        val grid = readGridBytes(bytes, sheetName, path)
-        require(grid.size > headerRow,
-          s"$path: grid has ${grid.size} rows, header expected at $headerRow")
-        val h = grid(headerRow).map(c => Option(c).getOrElse("").trim)
+        val (a1, h, rows) =
+          Workbook.shape(readGridBytes(bytes, sheetName, path), headerRow, path)
         require(h == headerB.value,
           s"$path: header ${h.mkString("|")} does not match the directory's " +
             s"first workbook ($firstPath): ${headerB.value.mkString("|")}")
-        val a1 = grid.headOption.flatMap(_.headOption).getOrElse("")
-        grid.drop(headerRow + 1).zipWithIndex.map { case (r, i) =>
-          val extras = r.drop(h.size).filter(c => c != null && c.nonEmpty)
-          require(extras.isEmpty,
-            s"$path row ${headerRow + 2 + i} has ${extras.size} value(s) beyond " +
-              s"the ${h.size}-column header: ${extras.take(3).mkString(", ")}")
-          val padded = r.padTo(h.size, null: String)
-            .map(c => if (c == null || c.isEmpty) null else c)
-          (path, a1, padded)
-        }
+        rows.map(r => (path, a1, r))
       }
     }
     parsed.select(
@@ -131,23 +118,32 @@ object Xlsx {
       .map(_.getPath).sorted.toSeq
   }
 
-  /** Parse the named sheet into a padded string cell grid. */
+  /** Parse the named sheet of the workbook at `path` into a padded
+    * string cell grid. The file is read whole (refused loudly, with its
+    * path, above [[MaxWorkbookBytes]]) and parsed by [[readGridBytes]],
+    * so the driver path carries the same zip-bomb bound as the
+    * distributed one.
+    */
   def readGrid(path: String, sheetName: String): Seq[Seq[String]] = {
-    val zip =
-      try new ZipFile(path)
-      catch {
+    val bytes =
+      try {
+        val file = java.nio.file.Paths.get(path)
+        val size = java.nio.file.Files.size(file)
+        require(size <= MaxWorkbookBytes,
+          s"$path: $size bytes exceeds the workbook bound of $MaxWorkbookBytes")
+        java.nio.file.Files.readAllBytes(file)
+      } catch {
         case e: java.io.IOException =>
           throw new IllegalArgumentException(s"$path is not a readable xlsx: ${e.getMessage}", e)
       }
-    try readParts(new FileParts(zip), sheetName)
-    finally zip.close()
+    readGridBytes(bytes, sheetName, path)
   }
 
-  /** Parse the named sheet from workbook BYTES — the executor-side
-    * entry for distributed ingest: no filesystem access, no temp file.
-    * The zip directory is materialized once into an in-memory part map
-    * (config-shaped workbooks, not bulk data), then the identical StAX
-    * pipeline runs.
+  /** Parse the named sheet from workbook BYTES — the one zip reader,
+    * shared by [[readGrid]] and the executors of [[readWorkbooks]]: no
+    * filesystem access, no temp file. Parts stream out of the bytes
+    * through the central directory ([[ZipBytesParts]]) into the StAX
+    * pipeline, each inflate bounded by `maxPartBytes`.
     */
   def readGridBytes(
       bytes: Array[Byte], sheetName: String,
@@ -163,27 +159,14 @@ object Xlsx {
     readParts(parts, sheetName)
   }
 
-  private def readParts(parts: Parts, sheetName: String): Seq[Seq[String]] = {
+  private def readParts(parts: ZipBytesParts, sheetName: String): Seq[Seq[String]] = {
     val shared = readSharedStrings(parts)
     val dateStyles = readDateStyles(parts)
     val (sheetPart, epoch1904) = resolveSheetPart(parts, sheetName)
     readSheet(parts, sheetPart, shared, dateStyles, epoch1904)
   }
 
-  /** Random-access view over a workbook's zip parts: a ZipFile for a
-    * local path (driver), or a pre-read entry map for bytes that
-    * arrived through `binaryFile` on an executor.
-    */
-  private sealed trait Parts {
-    def open(name: String): Option[java.io.InputStream]
-    def describe: String
-  }
-  private final class FileParts(zip: ZipFile) extends Parts {
-    def open(name: String): Option[java.io.InputStream] =
-      Option(zip.getEntry(name)).map(zip.getInputStream)
-    def describe: String = zip.getName
-  }
-  /** Random-access Parts over workbook BYTES via the zip CENTRAL
+  /** Random-access zip parts over workbook BYTES via the zip CENTRAL
     * DIRECTORY — no part is ever inflated into a buffer (round 11,
     * replacing the former prefetch-everything entry map): each `open`
     * locates the entry from the directory and STREAMS it through an
@@ -204,7 +187,7 @@ object Xlsx {
     * sane config-workbook bound.
     */
   private final class ZipBytesParts(
-      bytes: Array[Byte], val describe: String, maxPartBytes: Long) extends Parts {
+      bytes: Array[Byte], val describe: String, maxPartBytes: Long) {
     private def u16(off: Int): Int =
       (bytes(off) & 0xff) | ((bytes(off + 1) & 0xff) << 8)
     private def u32(off: Int): Long =
@@ -346,7 +329,7 @@ object Xlsx {
     * `<numFmt>` codes are classified by [[isDateFormatCode]]; only the
     * `<cellXfs>` list maps cell `s` indexes (cellStyleXfs does not).
     */
-  private def readDateStyles(parts: Parts): IndexedSeq[Boolean] =
+  private def readDateStyles(parts: ZipBytesParts): IndexedSeq[Boolean] =
     withPart(parts, "xl/styles.xml") { r =>
       val customDate = mutable.Map.empty[Int, Boolean]
       val flags = mutable.ArrayBuffer.empty[Boolean]
@@ -434,7 +417,8 @@ object Xlsx {
     f
   }
 
-  private def withPart[A](parts: Parts, name: String)(f: XMLStreamReader => A): Option[A] =
+  private def withPart[A](
+      parts: ZipBytesParts, name: String)(f: XMLStreamReader => A): Option[A] =
     parts.open(name).map { in =>
       val r = factory.createXMLStreamReader(in)
       // the zip-bomb refusal fires inside the parser's reads now
@@ -455,7 +439,7 @@ object Xlsx {
   /** sharedStrings.xml: each <si> is one string — concatenate every <t>
     * inside it (plain or rich-text runs), EXCLUDING phonetic guides
     * (<rPh>/<phoneticPr> furigana would otherwise corrupt the value). */
-  private def readSharedStrings(parts: Parts): IndexedSeq[String] =
+  private def readSharedStrings(parts: ZipBytesParts): IndexedSeq[String] =
     withPart(parts, "xl/sharedStrings.xml") { r =>
       val out = mutable.ArrayBuffer.empty[String]
       val cur = new StringBuilder
@@ -492,7 +476,7 @@ object Xlsx {
     * would double the inflate+parse cost on every workbook in the
     * distributed ingest path). Returns (sheet part, 1904-epoch flag).
     */
-  private def resolveSheetPart(parts: Parts, sheetName: String): (String, Boolean) = {
+  private def resolveSheetPart(parts: ZipBytesParts, sheetName: String): (String, Boolean) = {
     var epoch1904 = false
     val rid = withPart(parts, "xl/workbook.xml") { r =>
       var found: Option[String] = None
@@ -530,7 +514,7 @@ object Xlsx {
     * values resolved per cell type, gaps null-filled.
     */
   private def readSheet(
-      parts: Parts, part: String, shared: IndexedSeq[String],
+      parts: ZipBytesParts, part: String, shared: IndexedSeq[String],
       dateStyles: IndexedSeq[Boolean] = IndexedSeq.empty,
       epoch1904: Boolean = false): Seq[Seq[String]] = {
     case class Cell(row: Int, colIdx: Int, value: String)

@@ -52,6 +52,12 @@ object Components {
     *   sit in the block manager until GC (observed as the q95 bench
     *   leak). Callers needing the pair frame afterwards should pass a
     *   recomputable plan or re-checkpoint.
+    * @param driverMaxEdges driver-lane gate: the largest number of RAW
+    *   pair rows (non-null, counted before direction normalization and
+    *   dedup) solved by driver-side union-find; one more row takes the
+    *   distributed label propagation, so duplicate-heavy inputs go
+    *   distributed even when their distinct edges would fit. Negative
+    *   disables the driver lane; must be below `Int.MaxValue`.
     * @return (node, component) — component = min node id reachable
     */
   def connectedComponents(

@@ -122,6 +122,13 @@ object KCore {
     * internally; self-loops dropped). Returns (vertex, core_degree):
     * the surviving vertices with their degree INSIDE the core
     * (≥ k by construction). Empty result when no k-core exists.
+    *
+    * @param driverMaxArcs driver-lane gate: the largest number of RAW
+    *   pair rows (non-null, non-loop, counted before canonicalization
+    *   and dedup) solved on the driver; one more row takes the
+    *   distributed peel, so duplicate-heavy inputs go distributed even
+    *   when their distinct arcs would fit. Negative disables the driver
+    *   lane; must be below `Int.MaxValue`.
     */
   def core(
       pairs: DataFrame, aCol: String, bCol: String, k: Int,

@@ -154,60 +154,41 @@ object Triangles {
     trianglesFromAdjacency(adjacency(edges, degreeOriented), broadcastMaxAdjEntries)
 
   /** Probe-side adjacency rows larger than this split into disjoint
-    * sorted chunks (union of chunk intersections = the full
-    * intersection, each triangle still exactly once) — the hub guard:
-    * a power-law hub's multi-MB neighbor row otherwise sits whole in
-    * the shuffled-hash build map and rides every skew-split replica.
-    * 64k entries ≈ ~200 KB packed.
+    * chunks (union of chunk intersections = the full intersection, each
+    * triangle still exactly once) — the hub guard: a power-law hub's
+    * multi-MB neighbor row otherwise sits whole in the shuffled-hash
+    * build map and rides every skew-split replica. 64k entries ≈ 512 KB
+    * of ids.
     */
   private val DefaultMaxAdjChunk = 64 * 1024
-
-  /** Fallback-lane payload encodings (see [[trianglesFromAdjacency]]),
-    * A/B'd interleaved at sf10 (120 M edge rows, 3 rounds each,
-    * BASELINE.md round-12):
-    *  - `Arrays` (default): raw arrays + `array_intersect` — the r11
-    *    kernel; fastest-or-tied wall on this host's storage-local
-    *    shuffle (warm 53-129 s; the spread is hypervisor steal).
-    *  - `SortedMerge`: sorted arrays + two-pointer
-    *    [[graft.expressions.SortedIntersect]] — same bytes; measured
-    *    WITHIN-NOISE-WORSE here (144-194 s; the data-dependent merge
-    *    branches mispredict where the hash probes don't) — kept
-    *    because the branch profile differs on other cores and the
-    *    kernel is the building block for galloping variants.
-    *  - `PackedVarint`: delta-varint binaries — 19.2 → 7.9 GB exchange
-    *    (2.4×) for ~2× intersect CPU; the network-bound-cluster
-    *    setting, where shuffle bytes cross the fabric and CPU is
-    *    abundant. On a 1000-executor cluster this is the lane to pick;
-    *    on one 128 GB box whose shuffle never leaves page cache it
-    *    loses, and the default reflects the measurement, not the
-    *    theory.
-    */
-  object AdjPayload extends Enumeration {
-    val Arrays, SortedMerge, PackedVarint = Value
-  }
 
   /** [[triangles]] over a pre-built [[adjacency]] frame — for callers
     * that reuse the adjacency for other statistics (q186's clustering
     * coefficient derives wedges from it too). `adj` must come from
     * [[adjacency]] (checkpointed, (src, nbrs) deduped).
     *
-    * Two attach lanes, size-gated exactly as before:
-    *  - broadcast (small graphs): plain arrays + `array_intersect` —
-    *    no exchange ships an array, so re-encoding would only add work;
-    *  - shuffled fallback (big graphs): probe rows above `maxAdjChunk`
-    *    entries split into disjoint chunks (hub guard, doc above —
-    *    a slice partitions the set whatever the order, so the guard
-    *    costs nothing in the default lane; AQE's skew-split balances
-    *    the stream side), payload/kernel per [[AdjPayload]] (default:
-    *    the r11 raw-array + `array_intersect` shape, which the
-    *    round-12 interleaved A/B kept on top for storage-local
-    *    shuffles).
+    * Two attach lanes, size-gated on the adjacency payload (Σd⁺
+    * entries), both intersecting raw neighbor arrays with
+    * `array_intersect`:
+    *  - broadcast (small graphs): the whole adjacency rides to every
+    *    task and joins on dst;
+    *  - shuffled fallback (big graphs): a shuffled hash join on dst.
+    *    Probe rows above `maxAdjChunk` entries split into disjoint
+    *    chunks (hub guard, doc above; a slice partitions the entry set
+    *    whatever the order, so no sort is needed) and AQE's skew-split
+    *    balances the stream side. The kernel is the raw-array hash
+    *    intersection because the round-12 interleaved A/B at sf10 (120 M
+    *    edge rows, 3 rounds each, BASELINE.md) kept it fastest-or-tied
+    *    on a single host with storage-local shuffle against a sorted
+    *    two-pointer merge (within-noise worse: its data-dependent branches
+    *    mispredict) and delta-varint packed arrays (2.4× fewer exchange
+    *    bytes for ~2× intersect CPU — a loss while shuffle never leaves
+    *    page cache).
     */
   def trianglesFromAdjacency(
       adj: DataFrame,
       broadcastMaxAdjEntries: Long = BroadcastMaxAdjEntries,
-      maxAdjChunk: Int = DefaultMaxAdjChunk,
-      payload: AdjPayload.Value = AdjPayload.Arrays): DataFrame = {
+      maxAdjChunk: Int = DefaultMaxAdjChunk): DataFrame = {
     val adjEntries = adj.agg(coalesce(sum(size(col("nbrs"))), lit(0L))).head.getLong(0)
     // re-expand edges FROM the adjacency (narrow), carrying the source's
     // neighbor payload along — only the destination side needs a join.
@@ -217,42 +198,26 @@ object Triangles {
     // full parallelism first (a ~|E|-long shuffle of a |V|-row table,
     // trivial next to leaving 27 of 32 cores idle through the probe).
     val spread = adj.repartition(adj.sparkSession.sparkContext.defaultParallelism)
-    if (adjEntries <= broadcastMaxAdjEntries) {
-      val probe = adj.select(col("src").as("b0"), col("nbrs").as("nb"))
-      spread.select(col("src").as("a"), col("nbrs").as("na"), explode(col("nbrs")).as("b"))
-        .join(broadcast(probe), col("b") === col("b0"))
-        .select(col("a"), col("b"),
-          explode(array_intersect(col("na"), col("nb"))).as("c"))
-    } else {
-      import graft.functions.GraphFunctions.{packAdj, packedIntersect, sortedIntersect}
-      import AdjPayload._
-      // Arrays keeps the raw order (array_intersect hashes — no sort
-      // needed); the other lanes require ascending entries
-      val base = if (payload == Arrays) col("nbrs") else array_sort(col("nbrs"))
-      def enc(c: org.apache.spark.sql.Column) =
-        if (payload == PackedVarint) packAdj(c) else c
-      def intersect(x: org.apache.spark.sql.Column, y: org.apache.spark.sql.Column) =
-        payload match {
-          case Arrays => array_intersect(x, y)
-          case SortedMerge => sortedIntersect(x, y)
-          case PackedVarint => packedIntersect(x, y)
-        }
-      // disjoint chunks of the probe row (1 chunk for normal vertices
-      // — the slice is the whole array; hubs split; a slice partitions
-      // the entry SET in every lane, ordered or not)
-      val chunks = transform(
-        sequence(lit(0), ((size(col("nbrs")) - 1) / maxAdjChunk).cast("int")),
-        i => enc(slice(base, i * maxAdjChunk + 1, lit(maxAdjChunk))))
-      val probe = adj.select(col("src").as("b0"), explode(chunks).as("nbb"))
-      // shuffle_hash (not default sort-merge): no sort over wide-
-      // payload rows, and the per-partition build side is the
-      // adjacency slice, which partitions evenly on vertex id
-      spread.select(col("src").as("a"), enc(base).as("nab"),
-          explode(col("nbrs")).as("b"))
-        .join(probe.hint("shuffle_hash"), col("b") === col("b0"))
-        .select(col("a"), col("b"),
-          explode(intersect(col("nab"), col("nbb"))).as("c"))
-    }
+    val stream = spread.select(col("src").as("a"), col("nbrs").as("na"),
+      explode(col("nbrs")).as("b"))
+    val attached =
+      if (adjEntries <= broadcastMaxAdjEntries) {
+        val probe = adj.select(col("src").as("b0"), col("nbrs").as("nb"))
+        stream.join(broadcast(probe), col("b") === col("b0"))
+      } else {
+        // disjoint chunks of the probe row (1 chunk for normal vertices
+        // — the slice is the whole array; hubs split)
+        val chunks = transform(
+          sequence(lit(0), ((size(col("nbrs")) - 1) / maxAdjChunk).cast("int")),
+          i => slice(col("nbrs"), i * maxAdjChunk + 1, lit(maxAdjChunk)))
+        val probe = adj.select(col("src").as("b0"), explode(chunks).as("nb"))
+        // shuffle_hash (not default sort-merge): no sort over wide-
+        // payload rows, and the per-partition build side is the
+        // adjacency slice, which partitions evenly on vertex id
+        stream.join(probe.hint("shuffle_hash"), col("b") === col("b0"))
+      }
+    attached.select(col("a"), col("b"),
+      explode(array_intersect(col("na"), col("nb"))).as("c"))
   }
 
   /** Undirected vertex degrees recovered from an [[adjacency]] frame:

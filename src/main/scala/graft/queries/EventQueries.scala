@@ -33,8 +33,7 @@ object EventQueries {
           event_type, count(*) AS n,
           CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
         FROM events GROUP BY 1, 2
-      """),
-      headline = true),
+      """)),
 
     // ---- q45: sessionization — 30-minute inactivity gap per user ----
     GraftQuery(
@@ -59,8 +58,7 @@ object EventQueries {
                         THEN 1 ELSE 0 END) AS BIGINT) AS n_sessions,
           count(*) AS n_events
         FROM w GROUP BY user_id
-      """),
-      headline = true),
+      """)),
 
     // ---- q46: backward as-of join — last click at-or-before each
     //      purchase, per user (union+window formulation, one shuffle) ----

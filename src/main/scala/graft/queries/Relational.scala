@@ -52,8 +52,7 @@ object Relational {
         FROM lineitem
         WHERE l_shipdate < TIMESTAMP '2000-01-01'
         GROUP BY l_returnflag, l_linestatus
-      """),
-      headline = true),
+      """)),
 
     // ---- q02: selective filter + single-row agg (TPC-H Q6 shape);
     //      filters must reach the parquet scan as PushedFilters ----
@@ -77,8 +76,7 @@ object Relational {
         FROM lineitem
         WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
           AND l_discount BETWEEN 0.02 AND 0.06 AND l_quantity < 24
-      """),
-      headline = true),
+      """)),
 
     // ---- q03: 3-way join + agg + deterministic top-k (TPC-H Q3 shape) ----
     GraftQuery(
@@ -106,8 +104,7 @@ object Relational {
           AND o_orderdate < TIMESTAMP '1998-06-01' AND l_shipdate > TIMESTAMP '1998-06-01'
         GROUP BY o_orderkey, CAST(o_orderdate AS DATE)
         ORDER BY revenue DESC, o_orderkey LIMIT 10
-      """),
-      headline = true),
+      """)),
 
     // ---- q04: broadcast join of a small dimension into the fact ----
     GraftQuery(
@@ -161,8 +158,7 @@ object Relational {
         WHERE r_name = 'ASIA'
           AND o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1998-01-01'
         GROUP BY n_name
-      """),
-      headline = true),
+      """)),
 
     // ---- q06: global sort + limit with full tie-break ----
     GraftQuery(
@@ -195,8 +191,7 @@ object Relational {
             row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rn
           FROM orders) t
         WHERE rn <= 3
-      """),
-      headline = true),
+      """)),
 
     // ---- q08: running (cumulative) sum per customer ----
     GraftQuery(
@@ -324,8 +319,7 @@ object Relational {
     GraftQuery(
       "q14b_rollup_cube",
       (s, d) => rollupBase(s, d, Rollup.cubeLabeled(_, _, _, _, _)),
-      Some(rollupOracle),
-      headline = true),
+      Some(rollupOracle)),
 
     // ---- q15: string scalar functions (SURVEY E1-E5 family) ----
     GraftQuery(

@@ -38,8 +38,7 @@ object Relational3 {
             row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rn
           FROM orders) t
         WHERE rn <= 3
-      """),
-      headline = true),
+      """)),
 
     // ---- q51: binned range join — lineitems shipped within 7 days of
     //      each (small-cohort) order's date. The BETWEEN predicate is

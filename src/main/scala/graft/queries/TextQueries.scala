@@ -150,8 +150,7 @@ object TextQueries {
       "q34_dedup_minhash_lsh",
       (s, d) => Dedup.minhashLsh(Tables.documents(s, d), "doc_id", "text",
         shingleN = 3, bands = 8, rowsPerBand = 2, tau = 0.3),
-      Some(minhashMd5OracleSql()),
-      headline = true),
+      Some(minhashMd5OracleSql())),
 
     // ---- q56: BPE-ish token accounting — the "how many tokens will
     //      this corpus cost" query. Same RE2-safe pattern both engines;

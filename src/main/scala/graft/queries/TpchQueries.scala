@@ -230,8 +230,7 @@ object TpchQueries {
           AND o_orderdate >= TIMESTAMP '1997-01-01' AND o_orderdate < TIMESTAMP '1997-04-01'
         GROUP BY c_custkey, c_name, c_acctbal, n_name
         ORDER BY revenue DESC, c_custkey LIMIT 20
-      """),
-      headline = true),
+      """)),
 
     // ---- q65: TPC-H Q13 shape — customer order-count distribution via
     //      left outer join + two-level aggregation. ----

@@ -231,8 +231,7 @@ object VectorQueries {
             row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
           FROM pairs)
         SELECT query_id, neighbor_id, sim, rank FROM ranked WHERE rank <= 10
-      """),
-      headline = true),
+      """)),
 
     // ---- q42: LSH-bucketed approximate top-k (scale path). The oracle
     //      replicates the ENTIRE algorithm — the md5-derived ±1

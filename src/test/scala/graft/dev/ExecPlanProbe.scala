@@ -6,8 +6,8 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 /** Dev-only: RUN named queries and print the EXECUTED plan's join
   * strategies and exchange count — the static explain shows the
   * pre-AQE plan (SortMergeJoin rows that AQE upgrades to broadcast at
-  * runtime), so "fix the join strategy" decisions must read this, not
-  * PlanDump (guide §7.2).
+  * runtime), so "fix the join strategy" decisions must read this
+  * (guide §7.2).
   *
   * Usage: sbt "Test/runMain graft.dev.ExecPlanProbe [sfDir] <query ...>"
   */

@@ -243,6 +243,20 @@ class XlsxSpec extends SparkTestBase {
       Xlsx.readGridBytes(bytes, "Local_authority", "bomb.xlsx", maxPartBytes = 1024L * 1024)
     }
     assert(e.getMessage.contains("zip bomb") && e.getMessage.contains("bomb.xlsx"))
+    // the driver path (readGrid → readWorkbook) carries the default bound
+    val big = bigSheetXlsx(mib = 150).toString
+    assert(150L * 1024 * 1024 > Xlsx.MaxPartBytes)
+    val eFile = intercept[IllegalArgumentException](Xlsx.readGrid(big, "Local_authority"))
+    assert(eFile.getMessage.contains("zip bomb") && eFile.getMessage.contains(big),
+      eFile.getMessage)
+  }
+
+  test("readGrid refuses a corrupt file as not a readable xlsx, naming the path") {
+    val f = java.nio.file.Files.createTempFile("graft_corrupt", ".xlsx")
+    java.nio.file.Files.writeString(f, "this is not a zip archive " * 4)
+    val e = intercept[IllegalArgumentException](Xlsx.readGrid(f.toString, "Local_authority"))
+    assert(e.getMessage.contains("is not a readable xlsx") && e.getMessage.contains(f.toString),
+      e.getMessage)
   }
 
   /** Peak LIVE heap during `body`, sampled with forced GC so transient
@@ -264,9 +278,11 @@ class XlsxSpec extends SparkTestBase {
     (r, math.max(peak, used() - base))
   }
 
-  test("round 11: a 150 MB-inflating sheet part streams through the parser, no part-sized buffer") {
-    // worksheet = the normal fixture rows + 150 x 1 MiB XML comments:
-    // huge inflated part, tiny cell content, tiny compressed bytes
+  /** The fixture workbook whose sheet part carries `mib` × 1 MiB of XML
+    * comments after the normal rows: huge inflated part, tiny cell
+    * content, tiny compressed bytes.
+    */
+  private def bigSheetXlsx(mib: Int): java.nio.file.Path = {
     val f = java.nio.file.Files.createTempFile("graft_bigsheet", ".xlsx")
     val zos = new ZipOutputStream(java.nio.file.Files.newOutputStream(f))
     def put(name: String, content: String): Unit = {
@@ -280,10 +296,14 @@ class XlsxSpec extends SparkTestBase {
     zos.putNextEntry(new ZipEntry("xl/worksheets/sheet2.xml"))
     zos.write(sheet2Xml.replace("</worksheet>", "").getBytes("UTF-8"))
     val comment = ("<!-- " + "pad " * ((1 << 20) / 4) + " -->").getBytes("UTF-8")
-    (1 to 150).foreach(_ => zos.write(comment))
+    (1 to mib).foreach(_ => zos.write(comment))
     zos.write("</worksheet>".getBytes("UTF-8"))
     zos.closeEntry(); zos.close()
-    val bytes = java.nio.file.Files.readAllBytes(f)
+    f
+  }
+
+  test("round 11: a 150 MB-inflating sheet part streams through the parser, no part-sized buffer") {
+    val bytes = java.nio.file.Files.readAllBytes(bigSheetXlsx(mib = 150))
     assert(bytes.length < 16 * 1024 * 1024, "fixture should compress small")
     val ((grid), peak) = peakLiveHeapDuring {
       Xlsx.readGridBytes(bytes, "Local_authority", "big.xlsx",

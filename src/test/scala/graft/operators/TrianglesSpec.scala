@@ -73,32 +73,6 @@ class TrianglesSpec extends SparkTestBase {
       "over-threshold adjacency must not broadcast")
   }
 
-  test("packed adjacency kernels: pack/intersect agree with the naive set intersection") {
-    import graft.expressions.PackedAdjacency
-    val rnd = new scala.util.Random(7)
-    def arr(n: Int, bound: Long): Array[Long] =
-      Seq.fill(n)(rnd.nextLong().abs % bound).distinct.sorted.toArray
-    for (_ <- 0 until 50) {
-      val a = arr(rnd.nextInt(40), 200)
-      val b = arr(rnd.nextInt(40), 200)
-      val got = PackedAdjacency.intersect(
-        PackedAdjacency.pack(org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(a)),
-        PackedAdjacency.pack(org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(b)))
-      assert(got.toSeq == a.toSet.intersect(b.toSet).toSeq.sorted,
-        s"a=${a.toSeq} b=${b.toSeq}")
-    }
-    // wide gaps (varint multi-byte lanes) and negatives via zigzag first
-    val wide = Array(-5L, 3L, 1L << 40, (1L << 40) + 1, Long.MaxValue - 1)
-    val packed = PackedAdjacency.pack(
-      org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(wide))
-    assert(PackedAdjacency.intersect(packed, packed).toSeq == wide.toSeq)
-    // fail-loud on unsorted input
-    intercept[IllegalArgumentException] {
-      PackedAdjacency.pack(
-        org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(Array(3L, 2L)))
-    }
-  }
-
   test("auto-orientation probe: power-law graphs take the degree-oriented lane, near-uniform graphs keep canonical; result identical either way") {
     // near-uniform ring lattice: every vertex degree 6, max degree far
     // BELOW sqrt(m) — the co-order shape, canonical lane
@@ -134,11 +108,9 @@ class TrianglesSpec extends SparkTestBase {
       .select("a", "b", "c").as[(Long, Long, Long)].collect().toSet
     assert(expected.size == 23, s"fixture should close 23 hub triangles, got ${expected.size}")
     val adj = Triangles.adjacency(Triangles.canonicalEdges(edges, "u", "v"))
-    for (p <- Triangles.AdjPayload.values) {
-      val chunked = Triangles.trianglesFromAdjacency(
-        adj, broadcastMaxAdjEntries = 0L, maxAdjChunk = 4, payload = p)
-        .select("a", "b", "c").as[(Long, Long, Long)].collect().toSet
-      assert(chunked == expected, s"chunked fallback lane $p diverged")
-    }
+    val chunked = Triangles.trianglesFromAdjacency(
+      adj, broadcastMaxAdjEntries = 0L, maxAdjChunk = 4)
+      .select("a", "b", "c").as[(Long, Long, Long)].collect().toSet
+    assert(chunked == expected, "chunked fallback lane diverged")
   }
 }
