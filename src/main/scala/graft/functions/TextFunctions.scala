@@ -168,9 +168,8 @@ object TextFunctions {
 
   /** The ordered redaction chain: email → IPv4 → phone → bare 8-16
     * digit id runs, each replaced by its typed tag. A pure map over the
-    * codegen'd regexp_replace — no shuffle, scale-trivial; the deletion
-    * complement of load.Forget (drop the ROW) for the "keep the text,
-    * lose the identifier" obligation.
+    * codegen'd regexp_replace — no shuffle, scale-trivial; serves the
+    * "keep the text, lose the identifier" obligation (q149).
     */
   def redactPii(c: Column): Column =
     regexp_replace(

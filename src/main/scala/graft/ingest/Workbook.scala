@@ -41,7 +41,9 @@ object Workbook {
   }
 
   /** The sheet shape every reader shares: (A1, trimmed header row, data
-    * rows padded to the header width with empty cells as null). Fails
+    * rows padded to the header width with empty cells as null). A blank
+    * A1 is "" even when the readers pad it with null (row 1 holds a
+    * later cell), so its metadata derives to null (D3). Fails
     * loud, naming `source`, on a grid without the header row and on data
     * past the last header (house style, cf. N3/D4): silently dropping a
     * stray trailing value would corrupt measures.
@@ -50,7 +52,7 @@ object Workbook {
       : (String, Seq[String], Seq[Seq[String]]) = {
     require(grid.size > headerRow,
       s"$source: grid has ${grid.size} rows, header expected at $headerRow")
-    val a1 = grid.headOption.flatMap(_.headOption).getOrElse("")
+    val a1 = grid.headOption.flatMap(_.headOption).flatMap(Option(_)).getOrElse("")
     val header = grid(headerRow).map(c => Option(c).getOrElse("").trim)
     val width = header.size
     val rows = grid.drop(headerRow + 1).zipWithIndex.map { case (r, i) =>

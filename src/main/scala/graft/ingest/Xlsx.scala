@@ -144,20 +144,26 @@ object Xlsx {
     * filesystem access, no temp file. Parts stream out of the bytes
     * through the central directory ([[ZipBytesParts]]) into the StAX
     * pipeline, each inflate bounded by `maxPartBytes`.
+    *
+    * Every failure is an IllegalArgumentException naming `sourceName`:
+    * the reader's own refusals already name it (the zip-bomb message
+    * among them, passed through unchanged); anything else — a corrupt
+    * zip, truncated XML, a non-numeric shared-string index — is wrapped
+    * as "not a readable xlsx".
     */
   def readGridBytes(
       bytes: Array[Byte], sheetName: String,
       sourceName: String = "<bytes>",
-      maxPartBytes: Long = MaxPartBytes): Seq[Seq[String]] = {
-    val parts =
-      try new ZipBytesParts(bytes, sourceName, maxPartBytes)
-      catch {
-        case ex: java.io.IOException =>
-          throw new IllegalArgumentException(
-            s"$sourceName is not a readable xlsx: ${ex.getMessage}", ex)
-      }
-    readParts(parts, sheetName)
-  }
+      maxPartBytes: Long = MaxPartBytes): Seq[Seq[String]] =
+    try readParts(new ZipBytesParts(bytes, sourceName, maxPartBytes), sheetName)
+    catch {
+      // NumberFormatException is an IllegalArgumentException too: the
+      // message test, not the type, tells a named refusal from a raw one
+      case e: IllegalArgumentException
+        if e.getMessage != null && e.getMessage.contains(sourceName) => throw e
+      case e: Exception =>
+        throw new IllegalArgumentException(s"$sourceName is not a readable xlsx: $e", e)
+    }
 
   private def readParts(parts: ZipBytesParts, sheetName: String): Seq[Seq[String]] = {
     val shared = readSharedStrings(parts)
@@ -224,6 +230,9 @@ object Xlsx {
         val extraLen = u16(off + 30)
         val commentLen = u16(off + 32)
         val lho = u32(off + 42)
+        if (off + 46 + nameLen + extraLen + commentLen > bytes.length)
+          throw new java.io.IOException(
+            s"$describe: central directory entry at offset $off runs past the end")
         val name = new String(bytes, off + 46, nameLen, "UTF-8")
         // Per-ENTRY zip64 markers (the real value lives in the zip64
         // extra field this parser deliberately doesn't read): clamping
@@ -502,7 +511,8 @@ object Xlsx {
           if (attr(r, "Id").contains(rid)) found = attr(r, "Target")
       }
       found
-    }.flatten.getOrElse(throw new IllegalArgumentException(s"relationship $rid not found"))
+    }.flatten.getOrElse(throw new IllegalArgumentException(
+      s"relationship $rid not found in ${parts.describe}"))
     val part =
       if (target.startsWith("/")) target.drop(1)
       else if (target.startsWith("xl/")) target
@@ -587,7 +597,7 @@ object Xlsx {
         }
       }
       out.toSeq
-    }.getOrElse(throw new IllegalArgumentException(s"sheet part $part missing"))
+    }.getOrElse(throw new IllegalArgumentException(s"sheet part $part missing in ${parts.describe}"))
 
     if (cells.isEmpty) return Seq.empty
     val nRows = cells.map(_.row).max + 1

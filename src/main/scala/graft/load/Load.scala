@@ -5,15 +5,20 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 import scala.util.{Failure, Success, Try}
 
-/** Sink with the reference's truncate-then-load contract (SURVEY.md §2.7
-  * K1-K5; reference `src/utils/database_util.py:37-57`).
+/** The HPV pipeline's sink, with the reference's truncate-then-load
+  * contract (SURVEY.md §2.7 K1-K5; reference
+  * `src/utils/database_util.py:37-57`).
   *
   * The reference wraps TRUNCATE + bulk append in one transaction and
   * ROLLBACKs on failure. A naive `SaveMode.Overwrite` to a parquet path
   * does NOT give that guarantee — Spark deletes the target before the
   * write job runs, so a mid-job failure loses the previous contents.
-  * We stage into a sibling directory and swap via rename: any failure
-  * before the swap leaves the destination untouched.
+  * [[replaceTable]] stages into a sibling directory and swaps via
+  * rename ([[stagedSwap]]): any failure before the swap leaves the
+  * destination untouched. [[replacePartitions]] and
+  * [[replaceCatalogTable]] give the same contract per partition and
+  * through the session catalog; [[replaceJdbcTable]] over a live JDBC
+  * connection.
   */
 final case class LoadReport(rows: Long, destination: String)
 
@@ -28,71 +33,79 @@ final class LockHeldException(message: String, cause: Throwable)
 
 object Load {
 
-  /** K2/K3: staged atomic-ish replace of a destination path. Format is
-    * any Spark DataSource (parquet default; csv/json/orc supported —
-    * csv/json write with headers/schema suitable for re-reading).
-    * Returns K4's row-count report on success; K5's structured failure
-    * otherwise (destination preserved).
+  /** K2/K3: staged atomic-ish replace of a parquet destination path
+    * ([[stagedSwap]]). Returns K4's row-count report on success; K5's
+    * structured failure otherwise (destination preserved).
+    *
+    * `decorateStaging`: sidecar metadata (underscore-prefixed files,
+    * which Spark readers ignore) written INTO the staging dir so it
+    * publishes atomically with the table in the same swap — e.g.
+    * streaming.SubstringIngest's applied-batch watermark, which must
+    * never be observable without the index state it describes.
     */
   def replaceTable(
       spark: SparkSession, df: DataFrame, destination: String,
-      format: String = "parquet",
       decorateStaging: Path => Unit = _ => ()): Try[LoadReport] = {
     val result = Try {
-      val dest = new Path(destination)
-      val staging = new Path(destination + "__staging")
-      val backup = new Path(destination + "__old")
-      val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // A backup WITHOUT a destination means a prior swap's restore
-      // failed and the backup holds the only copy of the old table —
-      // clearing it on retry would destroy that copy right before
-      // re-attempting the same swap (same guard as the catalog and
-      // partition variants). A backup beside an existing destination is
-      // crash debris from after a successful publish — safe to clear.
-      if (fs.exists(backup) && !fs.exists(dest))
-        throw new IllegalStateException(
-          s"destination $destination is missing but backup $backup exists — a prior " +
-            "swap failed and was not restored; recover manually before loading")
-      val writer = df.write.mode(SaveMode.Overwrite).format(format)
-      (if (format == "csv") writer.option("header", "true") else writer)
-        .save(staging.toString)
-      // decorateStaging: sidecar metadata (underscore-prefixed files,
-      // which Spark readers ignore) written INTO the staging dir so it
-      // publishes atomically with the table in the same swap — e.g.
-      // streaming.SubstringIngest's applied-batch watermark, which must
-      // never be observable without the index state it describes.
-      decorateStaging(staging)
-      // Count-back with the WRITER's schema: inference would fail on an
-      // empty json stage (no rows to infer from) and default csv parsing
-      // (multiLine=false) miscounts values containing embedded newlines.
-      val rows = reader(spark, format, Some(df.schema))
-        .load(staging.toString).count()
-      // Swap via backup: the previous table is MOVED aside (not deleted)
-      // so a failed staging→dest rename can roll it back — deleting
-      // first would lose it exactly when rename fails (cross-filesystem
-      // staging, concurrent parent removal, ...).
-      if (fs.exists(backup)) fs.delete(backup, true)
-      val hadPrev = fs.exists(dest)
-      if (hadPrev && !fs.rename(dest, backup))
-        throw new java.io.IOException(s"backup rename $dest -> $backup failed")
-      try {
-        if (!fs.rename(staging, dest))
-          throw new java.io.IOException(s"rename $staging -> $dest returned false")
-      } catch {
-        case e: Throwable =>
-          // restore on ANY failure mode (thrown or returned-false), and
-          // report honestly whether the restore itself succeeded
-          val note =
-            if (!hadPrev) ""
-            else if (scala.util.Try(fs.rename(backup, dest)).getOrElse(false))
-              "; previous table restored"
-            else s"; RESTORE FAILED — previous table left at $backup"
-          throw new java.io.IOException(s"swap to $dest failed$note", e)
+      val rows = stagedSwap(spark, destination) { staging =>
+        df.write.mode(SaveMode.Overwrite).parquet(staging.toString)
+        decorateStaging(staging)
+        // K4: count back what was staged, read with the writer's schema
+        spark.read.schema(df.schema).parquet(staging.toString).count()
       }
-      if (hadPrev) fs.delete(backup, true)
       LoadReport(rows, destination)
     }
     report(result, destination)
+  }
+
+  /** Publish whatever `stage` writes into `<destination>__staging` as
+    * `destination`, in one rename. The previous contents are MOVED
+    * aside to `<destination>__old` (not deleted) so a failed
+    * staging→dest rename can roll them back — deleting first would lose
+    * them exactly when the rename fails (cross-filesystem staging,
+    * concurrent parent removal, ...). Any failure inside `stage` leaves
+    * the destination untouched. Returns `stage`'s result.
+    *
+    * A backup WITHOUT a destination means a prior swap's restore failed
+    * and the backup holds the only copy of the old contents — clearing
+    * it on retry would destroy that copy, so the swap refuses. A backup
+    * beside an existing destination is crash debris from after a
+    * successful publish — safe to clear. Shared by [[replaceTable]] and
+    * `operators.IndexStore`, whose unit of atomicity is a whole index
+    * directory.
+    */
+  private[graft] def stagedSwap[T](spark: SparkSession, destination: String)(
+      stage: Path => T): T = {
+    val dest = new Path(destination)
+    val staging = new Path(destination + "__staging")
+    val backup = new Path(destination + "__old")
+    val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(backup) && !fs.exists(dest))
+      throw new IllegalStateException(
+        s"destination $destination is missing but backup $backup exists — a prior " +
+          "swap failed and was not restored; recover manually before loading")
+    if (fs.exists(staging)) fs.delete(staging, true)
+    val out = stage(staging)
+    if (fs.exists(backup)) fs.delete(backup, true)
+    val hadPrev = fs.exists(dest)
+    if (hadPrev && !fs.rename(dest, backup))
+      throw new java.io.IOException(s"backup rename $dest -> $backup failed")
+    try {
+      if (!fs.rename(staging, dest))
+        throw new java.io.IOException(s"rename $staging -> $dest returned false")
+    } catch {
+      case e: Throwable =>
+        // restore on ANY failure mode (thrown or returned-false), and
+        // report honestly whether the restore itself succeeded
+        val note =
+          if (!hadPrev) ""
+          else if (Try(fs.rename(backup, dest)).getOrElse(false))
+            "; previous contents restored"
+          else s"; RESTORE FAILED — previous contents left at $backup"
+        throw new java.io.IOException(s"swap to $dest failed$note", e)
+    }
+    if (hadPrev) fs.delete(backup, true)
+    out
   }
 
   /** Partition-level staged replace: only the partitions PRESENT in
@@ -114,15 +127,14 @@ object Load {
     * (`col=value`) to REMOVE even though the staged delta has no rows
     * for them — an empty partition produces no staging directory, so
     * "this partition is now empty" is inexpressible through `df` alone
-    * (a deletion pass that empties a whole partition needs this or the
-    * old files silently survive). Drops participate in the same
+    * (a refresh that empties a whole partition needs this or the old
+    * files silently survive). Drops participate in the same
     * backup/rollback: the old bytes move to the backup root and are
     * restored on any failure.
     */
   def replacePartitions(
       spark: SparkSession, df: DataFrame, destination: String,
-      partitionCol: String, format: String = "parquet",
-      dropPartitions: Seq[String] = Nil): Try[LoadReport] = {
+      partitionCol: String, dropPartitions: Seq[String] = Nil): Try[LoadReport] = {
     val result = Try {
       val dest = new Path(destination)
       val staging = new Path(destination + "__staging")
@@ -147,14 +159,10 @@ object Load {
       require(dropPartitions.forall(_.startsWith(partitionCol + "=")),
         s"dropPartitions entries must be '$partitionCol=<value>' directory names, " +
           s"got ${dropPartitions.filterNot(_.startsWith(partitionCol + "=")).mkString(", ")}")
-      val writer = df.write.mode(SaveMode.Overwrite).format(format)
-        .partitionBy(partitionCol)
-      (if (format == "csv") writer.option("header", "true") else writer)
-        .save(staging.toString)
+      df.write.mode(SaveMode.Overwrite).partitionBy(partitionCol).parquet(staging.toString)
       // count back what was STAGED (the writer's schema — the partition
       // column comes back from the directory names)
-      val rows = reader(spark, format, Some(df.schema))
-        .load(staging.toString).count()
+      val rows = spark.read.schema(df.schema).parquet(staging.toString).count()
       val staged = fs.listStatus(staging)
         .filter(_.isDirectory).map(_.getPath.getName)
         .filter(_.startsWith(partitionCol + "="))
@@ -202,30 +210,28 @@ object Load {
     report(result, destination)
   }
 
-  /** Small-files compaction: rewrite a table directory into
-    * ~`targetBytes`-sized files through the same staged swap as
-    * [[replaceTable]] (any failure leaves the original layout intact).
-    * The 100 TB hygiene operator: streaming sinks and per-partition
-    * delta loads accrete thousands of KB-scale files whose per-file
-    * open/footer cost eventually dominates scans; compaction restores
-    * scan-sized files. File count = ceil(current bytes / targetBytes)
-    * — computed from the live listing, so repeated runs converge and a
-    * compacted table is a no-op rewrite.
+  /** Small-files compaction: rewrite a parquet table directory into
+    * ~`targetBytes`-sized files through [[replaceTable]]'s staged swap
+    * (any failure leaves the original layout intact). Streaming sinks
+    * and per-partition delta loads accrete thousands of KB-scale files
+    * whose per-file open/footer cost eventually dominates scans;
+    * compaction restores scan-sized files. File count =
+    * ceil(current bytes / targetBytes) — computed from the live
+    * listing, so repeated runs converge and a compacted table is a
+    * no-op rewrite.
     */
   def compact(
       spark: SparkSession, destination: String,
-      format: String = "parquet", targetBytes: Long = 128L * 1024 * 1024): Try[LoadReport] = {
+      targetBytes: Long = 128L * 1024 * 1024): Try[LoadReport] = {
     Try {
       val dest = new Path(destination)
       val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val bytes = fs.getContentSummary(dest).getLength
       val nFiles = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-      val reader = if (format == "csv")
-        spark.read.format(format).option("header", "true") else spark.read.format(format)
       // the staged write fully materializes from the CURRENT files
       // before the swap touches them, so reading-while-replacing is safe
-      (nFiles, reader.load(destination).repartition(nFiles))
-    }.flatMap { case (nFiles, df) => replaceTable(spark, df, destination, format) }
+      spark.read.parquet(destination).repartition(nFiles)
+    }.flatMap(df => replaceTable(spark, df, destination))
   }
 
   /** Roll back every partition TOUCHED by a failed publish — not just
@@ -268,11 +274,6 @@ object Load {
     *  - an orphaned `__old` WITHOUT a destination means a prior swap's
     *    restore failed — refuse to run rather than guess which copy is
     *    authoritative.
-    *
-    * No JDBC driver ships in this environment; against a real
-    * warehouse the same staged-swap sequence runs as CREATE TABLE
-    * staging AS … / ALTER TABLE RENAME, or collapses to the native
-    * transactional TRUNCATE+COPY where the warehouse provides one.
     */
   def replaceCatalogTable(
       spark: SparkSession, df: DataFrame, table: String): Try[LoadReport] = {
@@ -428,11 +429,11 @@ object Load {
 
   /** Cooperative single-writer lock for a destination. Every sink in
     * this module assumes ONE writer — two concurrent staged swaps (say
-    * a forget pass racing a compaction) can interleave their
+    * a stream trigger racing a compaction) can interleave their
     * backup/publish renames and break the rollback invariant. Callers
     * that can race wrap the sink call (note the inner `.get` — a
     * Try-returning body would otherwise nest as Success(Failure(...))):
-    * `Load.withLock(spark, dir, "nightly-forget") { Load.replaceTable(...).get }`.
+    * `Load.withLock(spark, dir, "nightly-load") { Load.replaceTable(...).get }`.
     *
     * The lock is an atomically-created `<dir>__lock` file holding owner
     * and acquisition time for diagnostics. The create must be the race
@@ -477,25 +478,6 @@ object Load {
     }
     try body
     finally fs.delete(lock, false)
-  }
-
-  /** The ONE source of truth for reading back what this module's
-    * writers produce. csv needs the writer-matching option set (header
-    * row, quoted embedded newlines, `"` escape) — duplicating it at
-    * call sites is how a writer-option change silently miscounts a
-    * count-back. With no schema, csv additionally infers types (an
-    * extra pass — callers that know the schema must pass it).
-    */
-  private[load] def reader(
-      spark: SparkSession, format: String,
-      schema: Option[org.apache.spark.sql.types.StructType]): org.apache.spark.sql.DataFrameReader = {
-    val base = spark.read.format(format)
-    val typed = schema.fold(base)(base.schema)
-    if (format == "csv") {
-      val r = typed.option("header", "true")
-        .option("multiLine", "true").option("escape", "\"")
-      if (schema.isEmpty) r.option("inferSchema", "true") else r
-    } else typed
   }
 
   private def report(result: Try[LoadReport], destination: String): Try[LoadReport] = {

@@ -71,8 +71,7 @@ object IncrementalAgg {
       // every touched partition rides the drop list: replacePartitions
       // keeps the ones with staged content, and a touched partition
       // whose recomputed aggregate is EMPTY has its stale files removed
-      // instead of silently surviving (same staged-wins contract as the
-      // forget pass)
+      // instead of silently surviving
       val drops = touchedRows.map(r => dirName(partitionCol, Option(r.getString(1))))
       Load.replacePartitions(spark, refreshed, aggDir, partitionCol,
         dropPartitions = drops.toSeq).get

@@ -175,10 +175,8 @@ object Ivf {
   }
 
   /** Assign NEW vectors to frozen centroids — the per-batch rows of
-    * [[extend]] alone, without the union: what a segmented streaming
-    * store ([[graft.streaming.AnnIngest]]) appends per trigger so its
-    * publish is O(batch), not O(index). Same (vid, v, cid) schema as
-    * the assignments table.
+    * [[extend]], before the union. Same (vid, v, cid) schema as the
+    * assignments table.
     */
   def assignNew(
       centroids: DataFrame, newVecs: DataFrame,

@@ -61,6 +61,21 @@ object IvfPq {
     ()
   }
 
+  /** Residual-encode NEW vectors against the index's frozen centroids
+    * and codebooks — the per-batch rows of [[extend]] (the
+    * [[Ivf.assignNew]] counterpart). Same (vid, cid, codes) schema as
+    * `coded`.
+    */
+  def encodeNew(
+      ix: Index, newVecs: DataFrame, idCol: String, vecCol: String): DataFrame = {
+    val p = Similarity.prep(newVecs, idCol, vecCol)
+    val assigned = Ivf.nearest(p, ix.centroids, keep = 1)
+    val resid = assigned.join(broadcast(ix.centroids), "cid")
+      .select(col("vid"), col("cid"),
+        zip_with(col("v"), col("cvec"), (a, b) => a - b).as("v"))
+    Pq.encodePrepped(resid, ix.cb)
+  }
+
   /** Extend a built index with new vectors using the EXISTING coarse
     * centroids and residual codebooks (no retraining) — the
     * [[Ivf.extend]] contract at the IVF-PQ level: assign, re-derive
@@ -71,30 +86,6 @@ object IvfPq {
     * coded table is released once the merged one materializes; callers
     * must not reuse the OLD Index afterwards.
     */
-  /** Residual-encode NEW vectors against frozen centroids + codebooks
-    * — the per-batch rows of [[extend]] alone, without the union (the
-    * [[Ivf.assignNew]] counterpart): what a segmented streaming store
-    * appends per trigger. Same (vid, cid, codes) schema as `coded`.
-    */
-  def encodeNew(
-      ix: Index, newVecs: DataFrame, idCol: String, vecCol: String): DataFrame =
-    encodeNew(ix.centroids, ix.cb, newVecs, idCol, vecCol)
-
-  /** [[encodeNew]] from the bare frozen quantizer (centroids +
-    * codebooks) — what a streaming sink loads per trigger without
-    * touching the coded table.
-    */
-  def encodeNew(
-      centroids: DataFrame, cb: Pq.Codebooks, newVecs: DataFrame,
-      idCol: String, vecCol: String): DataFrame = {
-    val p = Similarity.prep(newVecs, idCol, vecCol)
-    val assigned = Ivf.nearest(p, centroids, keep = 1)
-    val resid = assigned.join(broadcast(centroids), "cid")
-      .select(col("vid"), col("cid"),
-        zip_with(col("v"), col("cvec"), (a, b) => a - b).as("v"))
-    Pq.encodePrepped(resid, cb)
-  }
-
   def extend(
       ix: Index, newVecs: DataFrame, idCol: String, vecCol: String): Index = {
     val coded = ix.coded.unionByName(encodeNew(ix, newVecs, idCol, vecCol))

@@ -10,10 +10,7 @@ import graft.operators.AsOfJoin
 /** Event-stream-shaped batch coverage over the `events` fixture:
   * tumbling-window aggregation, gap-based sessionization, and the
   * backward as-of join (an operator Spark lacks natively — implemented
-  * as union + window, one shuffle). The Structured Streaming versions of
-  * the same aggregations live in graft.streaming and are spec-verified
-  * for batch↔stream equality (streams can't run under the Verify
-  * harness).
+  * as union + window, one shuffle).
   */
 object EventQueries {
 

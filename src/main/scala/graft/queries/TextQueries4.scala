@@ -11,8 +11,7 @@ import graft.functions.TextFunctions.{tokenCount, tokens}
   * surface — cross-document span dedup with in-place reassembly (q131),
   * an inverted-index conjunctive search (q132), robust MAD outlier
   * gating (q133), n-gram-LM familiarity scoring (q134), and a
-  * k-anonymity risk report (q135, the audit-side companion of the
-  * right-to-be-forgotten pass in [[graft.load.Forget]]).
+  * k-anonymity risk report (q135).
   *
   * All five are engine-exact: integer or md5 outputs, and the only
   * floating-point values (q133's median/MAD) are 0.25-grid doubles both
@@ -218,9 +217,8 @@ object TextQueries4 {
 
     // ---- q135: k-anonymity risk report — group size per
     //      quasi-identifier tuple (lang, source, n_chars-century);
-    //      groups smaller than k=3 re-identify their members. The
-    //      audit-side companion of the Forget deletion pass: run this
-    //      BEFORE publishing a "de-identified" extract. ----
+    //      groups smaller than k=3 re-identify their members. Run
+    //      this BEFORE publishing a "de-identified" extract. ----
     GraftQuery(
       "q135_k_anonymity",
       (s, d) => {

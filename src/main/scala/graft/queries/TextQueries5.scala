@@ -253,9 +253,8 @@ object TextQueries5 {
       """)),
 
     // ---- q149: PII redaction — the "keep the text, lose the
-    //      identifier" scrub a released training corpus needs (the
-    //      row-deletion side lives in load.Forget). The fixture corpus
-    //      carries no PII, so both engines plant the SAME
+    //      identifier" scrub a released training corpus needs. The
+    //      fixture corpus carries no PII, so both engines plant the SAME
     //      doc_id-derived email/phone/IP/account tokens before
     //      scrubbing — the patterns are then exercised against text
     //      that genuinely contains every type, and the tail of real

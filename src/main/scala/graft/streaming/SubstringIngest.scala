@@ -133,11 +133,11 @@ import graft.operators.SubstringDedup
   *
   * == Standing soak gate ==
   *
-  * `sbt "Test/runMain graft.dev.StoreSoaks"` soaks this store (and the
-  * ANN store) through 50 real micro-batches at sf1; diff its
-  * per-trigger wall/publish-bytes columns against the recorded table
-  * in BASELINE.md ("Standing store-soak gate") after any
-  * store/compaction change.
+  * `sbt "Test/runMain graft.dev.SubstringSoak <sf1 dir> 50 8"` soaks
+  * this store through 50 real micro-batches; diff its per-trigger
+  * wall/publish-bytes columns against the recorded table in
+  * BASELINE.md ("Standing store-soak gate") after any store/compaction
+  * change.
   */
 object SubstringIngest extends Logging {
 

@@ -259,6 +259,39 @@ class XlsxSpec extends SparkTestBase {
       e.getMessage)
   }
 
+  test("malformed workbooks fail as IllegalArgumentException naming the path") {
+    val sheet1 = """<?xml version="1.0"?><worksheet xmlns="x"><sheetData/></worksheet>"""
+    def parts(over: (String, String)*) = writeXlsx(Map(
+      "xl/workbook.xml" -> workbookXml,
+      "xl/_rels/workbook.xml.rels" -> relsXml,
+      "xl/sharedStrings.xml" -> sharedXml,
+      "xl/worksheets/sheet1.xml" -> sheet1,
+      "xl/worksheets/sheet2.xml" -> sheet2Xml) ++ over)
+    // the first central-directory entry's name length runs past the end
+    val nameOverrun = {
+      val p = fixture
+      val b = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p))
+      val eocd = b.length - 22 // no archive comment
+      def u32(o: Int) = (0 until 4).map(i => (b(o + i) & 0xff) << (8 * i)).sum
+      val cd = u32(eocd + 16)
+      b(cd + 28) = 0xf0.toByte; b(cd + 29) = 0xff.toByte
+      java.nio.file.Files.write(java.nio.file.Paths.get(p), b)
+      p
+    }
+    val cases = Seq(
+      "central-directory name past the end" -> nameOverrun,
+      "non-numeric shared-string index" -> parts("xl/worksheets/sheet2.xml" ->
+        sheet2Xml.replace("""<c r="A1" t="s"><v>0</v></c>""", """<c r="A1" t="s"><v>x</v></c>""")),
+      "unterminated workbook.xml" -> parts("xl/workbook.xml" ->
+        """<?xml version="1.0"?><workbook xmlns="x"><sheets>"""),
+      "missing relationship" -> parts("xl/_rels/workbook.xml.rels" -> relsXml.replace(
+        """<Relationship Id="rId2" Type="t" Target="worksheets/sheet2.xml"/>""", "")))
+    cases.foreach { case (what, p) =>
+      val e = intercept[IllegalArgumentException](Xlsx.readGrid(p, "Local_authority"))
+      assert(e.getMessage != null && e.getMessage.contains(p), s"$what: $e")
+    }
+  }
+
   /** Peak LIVE heap during `body`, sampled with forced GC so transient
     * garbage doesn't pollute the reading — a part-sized buffer held
     * across the parse (the pre-round-11 implementation) is live and

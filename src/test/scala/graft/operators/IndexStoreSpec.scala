@@ -5,10 +5,10 @@ import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 import graft.core.Tables
 
-/** Index persistence: a loaded index must probe BIT-IDENTICALLY to the
-  * freshly built one (doubles round-trip parquet exactly), saves must
-  * be atomic overwrites (second save replaces the first), and loads
-  * must refuse directories that aren't saved indexes.
+/** kNN-graph persistence: a loaded graph must search BIT-IDENTICALLY
+  * to the freshly built one (doubles round-trip parquet exactly), saves
+  * must be atomic overwrites (second save replaces the first), and
+  * loads must refuse directories that aren't saved indexes.
   */
 class IndexStoreSpec extends SparkTestBase {
   import spark.implicits._
@@ -17,41 +17,6 @@ class IndexStoreSpec extends SparkTestBase {
 
   private def probeRows(df: org.apache.spark.sql.DataFrame) =
     df.as[(Long, Long, Double, Long)].collect().toSet
-
-  test("IVF round-trip: loaded index probes bit-identically") {
-    val emb = Tables.embeddings(spark, sf)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf").toString + "/ix"
-    val built = Ivf.build(emb, "vec_id", "embedding", nCentroids = 8)
-    val want = probeRows(Ivf.probe(
-      built._1, built._2, emb.where($"vec_id" < 5), "vec_id", "embedding", k = 10, nProbe = 3)
-      .select($"query_id", $"neighbor_id", $"sim", $"rank"))
-    IndexStore.saveIvf(spark, built, dir)
-    Ivf.release(built)
-    val loaded = IndexStore.loadIvf(spark, dir)
-    val got = probeRows(Ivf.probe(
-      loaded._1, loaded._2, emb.where($"vec_id" < 5), "vec_id", "embedding", k = 10, nProbe = 3)
-      .select($"query_id", $"neighbor_id", $"sim", $"rank"))
-    Ivf.release(loaded)
-    assert(got == want)
-  }
-
-  test("IVF-PQ round-trip: codebooks and coded corpus survive exactly") {
-    val emb = Tables.embeddings(spark, sf)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq").toString + "/ix"
-    val built = IvfPq.build(emb, "vec_id", "embedding", nCentroids = 8)
-    val want = probeRows(IvfPq.probe(
-      built, emb.where($"vec_id" < 5), "vec_id", "embedding", k = 10, nProbe = 3)
-      .select($"query_id", $"neighbor_id", $"score", $"rank"))
-    IndexStore.saveIvfPq(spark, built, dir)
-    IvfPq.release(built)
-    val loaded = IndexStore.loadIvfPq(spark, dir)
-    assert(loaded.cb.m == built.cb.m && loaded.cb.k == built.cb.k)
-    val got = probeRows(IvfPq.probe(
-      loaded, emb.where($"vec_id" < 5), "vec_id", "embedding", k = 10, nProbe = 3)
-      .select($"query_id", $"neighbor_id", $"score", $"rank"))
-    IvfPq.release(loaded)
-    assert(got == want)
-  }
 
   test("kNN graph round-trip: persisted edges search bit-identically") {
     val emb = Tables.embeddings(spark, sf)
@@ -77,21 +42,24 @@ class IndexStoreSpec extends SparkTestBase {
     val emb = Tables.embeddings(spark, sf)
     val base = java.nio.file.Files.createTempDirectory("graft_ixswap").toString
     val dir = base + "/ix"
-    val ix8 = Ivf.build(emb, "vec_id", "embedding", nCentroids = 8)
-    IndexStore.saveIvf(spark, ix8, dir)
-    Ivf.release(ix8)
-    val ix4 = Ivf.build(emb, "vec_id", "embedding", nCentroids = 4)
-    IndexStore.saveIvf(spark, ix4, dir) // overwrite via staged swap
-    Ivf.release(ix4)
-    val loaded = IndexStore.loadIvf(spark, dir)
-    assert(loaded._1.count() == 4, "second save must fully replace the first")
-    Ivf.release(loaded)
+    val k8 = Similarity.knnGraph(emb, "vec_id", "embedding", k = 8).localCheckpoint(true)
+    val first = k8.count()
+    IndexStore.saveKnnGraph(spark, k8, dir)
+    Lineage.release(k8)
+    val k4 = Similarity.knnGraph(emb, "vec_id", "embedding", k = 4).localCheckpoint(true)
+    val want = k4.count()
+    assert(want < first)
+    IndexStore.saveKnnGraph(spark, k4, dir) // overwrite via staged swap
+    Lineage.release(k4)
+    val loaded = IndexStore.loadKnnGraph(spark, dir)
+    assert(loaded.count() == want, "second save must fully replace the first")
+    loaded.unpersist(blocking = true)
     // no stray staging/backup debris after a clean swap
     assert(!new java.io.File(dir + "__staging").exists())
     assert(!new java.io.File(dir + "__old").exists())
     // a random parquet dir is not an index
     val foreign = base + "/foreign"
     Seq((1L, 2L)).toDF("a", "b").write.parquet(foreign)
-    intercept[IllegalArgumentException] { IndexStore.loadIvf(spark, foreign) }
+    intercept[IllegalArgumentException] { IndexStore.loadKnnGraph(spark, foreign) }
   }
 }

@@ -205,6 +205,21 @@ class HpvPipelineSpec extends SparkTestBase {
     assert(row.isNullAt(out.columns.indexOf("ACADEMIC_YEAR_TEXT")))
   }
 
+  test("D3: a blank A1 beside a filled B1 yields null metadata; D7 reports it unparsed") {
+    // readers pad a blank A1 with null when row 1 has a later cell
+    def wb = Workbook.fromGrid(spark, Seq(
+      Seq(null, "Provisional"),
+      Seq(""),
+      Seq("Local authority", "Year 8 females: Number", "Year 8 females: Number vaccinated"),
+      Seq("camden", "10", "5")))
+    assert(wb.a1 == "")
+    val out = HpvPipeline.transform(Seq(wb), D)
+    val row = out.where(out("YEAR_GROUP_NUMBER") === "8").head()
+    assert(row.isNullAt(out.columns.indexOf("ACADEMIC_YEAR_END_DATE")))
+    assert(row.isNullAt(out.columns.indexOf("ACADEMIC_YEAR_TEXT")))
+    assert(HpvPipeline.duplicateAcademicYears(Seq(wb, wb)) == Seq((None, 2)))
+  }
+
   test("D6: sentinel in a key column forms a null-key group (SQL semantics)") {
     val wb = Workbook.fromGrid(spark, Seq(
       Seq(s"x $T24"),
