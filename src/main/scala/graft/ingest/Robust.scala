@@ -29,9 +29,8 @@ object Robust {
 
   /** Union-by-name read across parquet directories whose schemas have
     * EVOLVED (columns added over time). Spark's per-file projection
-    * fills absent columns with null — the same label-alignment
-    * semantics the pipeline's unioner applies to frames
-    * (`graft.ops.Combine`), pushed down to the scan.
+    * fills absent columns with null — the label alignment of pandas
+    * `concat` (reference `src/main.py:77`), pushed down to the scan.
     */
   def readEvolved(spark: SparkSession, dirs: Seq[String]): DataFrame = {
     require(dirs.nonEmpty, "readEvolved needs at least one directory")

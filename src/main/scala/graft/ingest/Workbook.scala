@@ -5,14 +5,25 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
-/** A reference-shaped workbook sheet: the data table (headers taken from
-  * a mid-sheet header row, all columns string-typed) plus the raw A1
-  * metadata cell (SURVEY.md §2.1 S2/S3).
+/** A reference-shaped workbook sheet, as shaped cells: the raw A1
+  * metadata cell, the header taken from a mid-sheet header row, and the
+  * data rows under it, every cell a string or null (SURVEY.md §2.1
+  * S2/S3). `source` names the file (or `grid`) in every error about it.
   *
-  * One read captures both — fixing the reference's double scan of every
-  * file (`src/main.py:27,30`; divergence D5).
+  * One read captures both A1 and the table — fixing the reference's
+  * double scan of every file (`src/main.py:27,30`; divergence D5). The
+  * cells stay on the driver: the pipeline stacks every workbook into
+  * one relation itself, so no per-file DataFrame is built on its path.
   */
-final case class Workbook(a1: String, data: DataFrame)
+final case class Workbook(
+    source: String, a1: String, header: Seq[String], rows: Seq[Seq[String]])(
+    val spark: SparkSession) {
+
+  /** The data table as a local relation (all columns string-typed), for
+    * specs and ad-hoc reads. */
+  lazy val data: DataFrame = spark.createDataFrame(rows.map(Row.fromSeq).asJava,
+    StructType(header.map(StructField(_, StringType, nullable = true))))
+}
 
 object Workbook {
 
@@ -22,11 +33,6 @@ object Workbook {
     * null. Driver-side by design: workbook sheets are small metadata-ish
     * inputs; bulk data enters the engine through `spark.read`
     * (parquet/csv) instead.
-    *
-    * The data is a local relation (not a parallelized RDD): a driver-side
-    * read of projected columns — the pipeline's grain check over the
-    * cleaned LA names — folds through `ConvertToLocalRelation` and
-    * launches no Spark job.
     */
   def fromGrid(spark: SparkSession, grid: Seq[Seq[String]], headerRow: Int = 2): Workbook =
     fromSource(spark, grid, headerRow, "grid")
@@ -36,8 +42,7 @@ object Workbook {
   private[ingest] def fromSource(
       spark: SparkSession, grid: Seq[Seq[String]], headerRow: Int, source: String): Workbook = {
     val (a1, header, rows) = shape(grid, headerRow, source)
-    val schema = StructType(header.map(StructField(_, StringType, nullable = true)))
-    Workbook(a1, spark.createDataFrame(rows.map(Row.fromSeq).asJava, schema))
+    Workbook(source, a1, header, rows)(spark)
   }
 
   /** The sheet shape every reader shares: (A1, trimmed header row, data

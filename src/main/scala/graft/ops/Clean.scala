@@ -31,9 +31,9 @@ object Clean {
     else df.na.replace(stringCols.toSeq, sentinels.map(_ -> (null: String)).toMap)
   }
 
-  /** P1/P2: drop every column whose name satisfies `pred` (driver-side
-    * schema metaprogramming — the reference's name-pattern column drops).
+  /** P1/P2: the reference's name-pattern column drops — a header naming
+    * a percentage or the 2-doses measure is not kept.
     */
-  def dropColumnsWhere(df: DataFrame, pred: String => Boolean): DataFrame =
-    df.drop(df.columns.filter(pred).toIndexedSeq: _*)
+  def droppedByName(header: String): Boolean =
+    header.contains("%") || header.contains("2 doses")
 }

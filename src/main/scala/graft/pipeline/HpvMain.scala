@@ -31,15 +31,16 @@ object HpvMain {
     val sheet = graft.core.DotEnv.get("HPV_SHEET", envFile, "Local_authority")
 
     val spark = Sessions.local()
-    val xlsx = Xlsx.glob(dataDir).map(p => Xlsx.readWorkbook(spark, p, sheet))
-    val csvs = Xlsx.glob(dataDir, ext = ".csv")
-      .map(p => Workbook.readCsvGrid(spark, p))
-    val workbooks = xlsx ++ csvs
-    require(workbooks.nonEmpty, s"no *.xlsx or *.csv workbooks under $dataDir")
+    try {
+      val xlsx = Xlsx.glob(dataDir).map(p => Xlsx.readWorkbook(spark, p, sheet))
+      val csvs = Xlsx.glob(dataDir, ext = ".csv")
+        .map(p => Workbook.readCsvGrid(spark, p))
+      val workbooks = xlsx ++ csvs
+      require(workbooks.nonEmpty, s"no *.xlsx or *.csv workbooks under $dataDir")
 
-    val fact = HpvPipeline.transform(workbooks, LocalDate.now())
-    // Load prints the reference's "Uploaded X rows to <dest>" signal (K4).
-    Load.replaceTable(spark, fact, dest).get
-    spark.stop()
+      val fact = HpvPipeline.transform(workbooks, LocalDate.now())
+      // Load prints the reference's "Uploaded X rows to <dest>" signal (K4).
+      Load.replaceTable(spark, fact, dest).get
+    } finally spark.stop()
   }
 }

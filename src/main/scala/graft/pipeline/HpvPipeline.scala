@@ -4,17 +4,18 @@ import java.time.LocalDate
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.ingest.Workbook
-import graft.ops.{Clean, Combine, Derive, Rollup}
+import graft.ops.{Clean, Derive, Rollup}
 
 /** The reference pipeline (`/root/reference/src/main.py:17-120`)
-  * re-expressed Spark-first: every step is a lazy DataFrame transform, so
-  * Catalyst collapses the per-file projection chain into ~one Project and
-  * pushes the null/sentinel filters below the unions (SURVEY.md §4.2).
+  * re-expressed Spark-first: the per-file reshape builds one stacked
+  * relation on the driver, and every step after it is a lazy DataFrame
+  * transform, so Catalyst folds the null/sentinel filters and the casts
+  * into that relation (SURVEY.md §4.2).
   *
   * Semantics notes honored (SURVEY.md §2.8): N1 (dropna before sentinel
   * replace), N2 (full-frame replace), N3 (fail-loud pivot grain), N5
@@ -30,20 +31,24 @@ import graft.ops.{Clean, Combine, Derive, Rollup}
   * GROUP BY), where pandas groupby silently drops them.
   *
   * Cost per cycle: `transform` launches no Spark job, and the fact plan
-  * it returns holds exactly one shuffle exchange.
-  *  - [[perFile]] reshapes each workbook with one narrow projection (an
-  *    `explode` driven by the header names), not melt + pivot; its
-  *    driver-side reads (header derivation, the grain check) are over
-  *    local relations and fold into `ConvertToLocalRelation`.
-  *  - The grain check (N3/D4) runs on the driver, per file, over the
+  * it returns has one leaf and one shuffle exchange.
+  *  - [[stack]] reshapes every workbook on the driver into ONE local
+  *    relation (an N-workbook cycle no longer plans an N-way union of
+  *    per-file frames). It runs the optimizer twice, whatever the
+  *    workbook count: one collect derives every distinct header's keys,
+  *    one cleans every distinct LA name. Both are over local relations
+  *    and fold into `ConvertToLocalRelation`.
+  *  - The grain check (N3/D4) runs on the driver, per workbook, over the
   *    cleaned LA names and the derived header keys, before `dropna`.
-  *  - [[combine]] folds both rollups into one grouping-sets aggregate
-  *    ([[Rollup.cubeLabeled]]): one Expand, one shuffle. A hidden,
-  *    non-string row key joins the finest grouping set so that set
-  *    passes every base row through, as the reference's union does. The
-  *    grain can repeat — a `*` borough scrubs to null beside a blank
-  *    one, and D7 repeats an academic year across workbooks — and
-  *    without the key such rows would merge into one.
+  *  - [[combine]]'s dropna, sentinel scrub and cast fold into the one
+  *    `LocalTableScan`; it then folds both rollups into one
+  *    grouping-sets aggregate ([[Rollup.cubeLabeled]]): one Expand, one
+  *    shuffle. The stack's hidden, non-string row key joins the finest
+  *    grouping set so that set passes every base row through, as the
+  *    reference's union does. The grain can repeat — a `*` borough
+  *    scrubs to null beside a blank one, and D7 repeats an academic
+  *    year across workbooks — and without the key such rows would
+  *    merge into one.
   * The load that follows pays the write, the count-back and the swap.
   */
 object HpvPipeline {
@@ -84,112 +89,154 @@ object HpvPipeline {
     StructField("ACADEMIC_YEAR_TEXT", StringType),
     StructField("DATE_EXTRACT", DateType)))
 
-  /** Per-file transform (`main.py:24-74`): clean → drop-by-name → melt →
-    * derive → pivot (asserted) → rename → per-file metadata (N7).
+  /** Per-file transform (`main.py:24-74`) of every workbook, stacked:
+    * clean → drop-by-name → melt → derive → pivot (asserted) → rename →
+    * per-file metadata (N7) → union (U1), as ONE local relation built on
+    * the driver from the workbooks' shaped cells.
     *
-    * Melt + pivot is fused into one narrow step. Each surviving header's
-    * (year group, gender, metric) is derived once, on the driver, with
-    * the [[Derive]] expressions over a local relation of header names.
-    * Every LA row then explodes into one row per (year group, gender),
-    * carrying its `Number` and `Number_Vaccinated` cells (a typed null
-    * where the workbook has no such column) — no shuffle, no job. The
-    * pivot's fail-loud grain contract is checked by [[assertGrain]].
+    * Melt + pivot is fused: each kept header's (year group, gender,
+    * metric) is derived once, and every LA row becomes one row per (year
+    * group, gender) with its raw `Number` and `Number_Vaccinated` cells
+    * (a typed null where the workbook has no such column). The header
+    * keys of all workbooks come from one collect of the [[Derive]]
+    * expressions over a local relation of the distinct headers; the LA
+    * names of all workbooks are cleaned by one collect over a local
+    * relation of the distinct raw names. Each row also carries the
+    * hidden [[RowKey]], a running index unique across the stack. The
+    * pivot's fail-loud grain contract is checked per workbook by
+    * [[assertGrain]]; every refusal names the workbook's `source`.
     */
-  def perFile(wb: Workbook, extractDate: LocalDate,
+  def stack(workbooks: Seq[Workbook], extractDate: LocalDate,
       compat: Compat = Compat.Off): DataFrame = {
-    val cleaned = wb.data.withColumn(IdCol,
-      if (compat.pandasTitle) Derive.cleanNamePandasTitle(col(IdCol))
-      else Derive.cleanName(col(IdCol)))
-    val pruned = Clean.dropColumnsWhere(
-      cleaned, c => c != IdCol && (c.contains("%") || c.contains("2 doses")))
-    val headers = pruned.columns.filterNot(_ == IdCol).toSeq
-    require(headers.nonEmpty,
-      s"workbook has no measure columns besides '$IdCol' after dropping % and 2-doses columns")
-    val keys = headerKeys(pruned.sparkSession, headers)
-    assertGrain(pruned, keys)
-    val cells = keys.map(k => (k.yearGroup, k.gender)).distinct.map { case (yg, g) =>
-      def cell(metric: String): Column = keys
-        .find(k => k.yearGroup == yg && k.gender == g && k.metric == metric)
-        .fold(lit(null).cast(StringType))(k => col(quoted(k.header)))
-      struct(
-        lit(yg).cast(StringType).as("Year_Group_Number"),
-        lit(g).as("Gender_Name"),
-        cell("Number").as("Students_Total"),
-        cell("Number_Vaccinated").as("Students_Vaccinated"))
+    require(workbooks.nonEmpty, "no workbooks to stack")
+    val spark = workbooks.head.spark
+    // (workbook, id column, kept measure columns), refused before any Spark work
+    val layouts = workbooks.map { wb =>
+      // case-insensitive, as Spark's default column resolution matches it
+      val ids = wb.header.indices.filter(i => wb.header(i).equalsIgnoreCase(IdCol))
+      if (ids.size != 1) throw new IllegalArgumentException(
+        s"${wb.source}: expected one '$IdCol' column in the header, found ${ids.size}: " +
+          wb.header.mkString("[", ", ", "]"))
+      val kept = wb.header.indices.filter(i => i != ids.head && !Clean.droppedByName(wb.header(i)))
+      require(kept.nonEmpty, s"${wb.source}: workbook has no measure columns besides " +
+        s"'$IdCol' after dropping % and 2-doses columns")
+      (wb, ids.head, kept)
     }
-    pruned
-      .select(col(IdCol).as("Borough_Name"), explode(array(cells: _*)).as("cell"))
-      .select(col("Borough_Name"), col("cell.*"))
-      .withColumn("Academic_Year_End_Date",
-        lit(Derive.academicYearEnd(wb.a1).map(Integer.valueOf).orNull).cast(IntegerType))
-      .withColumn("Academic_Year_Text",
-        lit(Derive.academicYearText(wb.a1).orNull).cast(StringType))
-      .withColumn("Date_Extract", lit(java.sql.Date.valueOf(extractDate)))
+    val keyOf = headerKeys(spark,
+      layouts.flatMap { case (wb, _, kept) => kept.map(wb.header) }.distinct)
+    val cleaned = cleanNames(spark,
+      layouts.flatMap { case (wb, id, _) => wb.rows.map(_(id)) }.distinct, compat)
+    // per-file metadata (E6/E7, N7)
+    val years = workbooks.map(wb =>
+      (Derive.academicYearEnd(wb.a1).map(Integer.valueOf).orNull,
+        Derive.academicYearText(wb.a1).orNull))
+    val date = java.sql.Date.valueOf(extractDate)
+    var rowKey = 0L
+    val rows = layouts.zip(years).flatMap { case ((wb, id, kept), (ayEnd, ayText)) =>
+      val keys = kept.map(i => i -> keyOf(wb.header(i)))
+      val names = wb.rows.map(r => cleaned(Option(r(id))))
+      assertGrain(wb.source, names, keys.map(_._2))
+      val cells = keys.map { case (_, k) => (k.yearGroup, k.gender) }.distinct.map { case (yg, g) =>
+        def cell(metric: String): Option[Int] = keys.collectFirst {
+          case (i, k) if k.yearGroup == yg && k.gender == g && k.metric == metric => i
+        }
+        (yg, g, cell("Number"), cell("Number_Vaccinated"))
+      }
+      wb.rows.zip(names).flatMap { case (r, name) =>
+        cells.map { case (yg, g, total, vaccinated) =>
+          rowKey += 1
+          Row(name, yg, g, total.map(r).orNull, vaccinated.map(r).orNull,
+            ayEnd, ayText, date, rowKey)
+        }
+      }
+    }
+    // a column is nullable only if a value can be null: the fact table's schema carries it
+    val schema = StructType(Seq(
+      StructField("Borough_Name", StringType),
+      StructField("Year_Group_Number", StringType, keyOf.values.exists(_.yearGroup == null)),
+      StructField("Gender_Name", StringType, nullable = false),
+      StructField("Students_Total", StringType),
+      StructField("Students_Vaccinated", StringType),
+      StructField("Academic_Year_End_Date", IntegerType, years.exists(_._1 == null)),
+      StructField("Academic_Year_Text", StringType, years.exists(_._2 == null)),
+      StructField("Date_Extract", DateType, nullable = false),
+      StructField(RowKey, LongType, nullable = false)))
+    spark.createDataFrame(rows.asJava, schema)
   }
 
   /** A measure header's derived pivot key (E3-E5). */
-  private final case class HeaderKey(
-      header: String, yearGroup: String, gender: String, metric: String)
+  private final case class HeaderKey(yearGroup: String, gender: String, metric: String)
 
-  /** E3-E5 over the header names, evaluated on the driver with the same
-    * [[Derive]] expressions the melted rows used (one source of truth);
+  /** E3-E5 over the header names, evaluated on the driver with the
+    * [[Derive]] expressions (one source of truth); a local relation, so
+    * no job.
+    */
+  private def headerKeys(spark: SparkSession, headers: Seq[String]): Map[String, HeaderKey] = {
+    val c = col("Category")
+    local(spark, "Category", headers)
+      .select(c, Derive.yearGroupFromHeader(c), Derive.genderFromHeader(c),
+        Derive.metricFromHeader(c))
+      .collect()
+      .map(r => r.getString(0) -> HeaderKey(r.getString(1), r.getString(2), r.getString(3)))
+      .toMap
+  }
+
+  /** E1/E2 over the raw LA names (null included), keyed by the raw name;
     * a local relation, so no job.
     */
-  private def headerKeys(spark: SparkSession, headers: Seq[String]): Seq[HeaderKey] = {
-    val names = spark.createDataFrame(headers.map(Row(_)).asJava,
-      StructType(Seq(StructField("Category", StringType))))
-    val c = col("Category")
-    names.select(c, Derive.yearGroupFromHeader(c), Derive.genderFromHeader(c),
-        Derive.metricFromHeader(c))
-      .collect().toSeq
-      .map(r => HeaderKey(r.getString(0), r.getString(1), r.getString(2), r.getString(3)))
+  private def cleanNames(spark: SparkSession, names: Seq[String],
+      compat: Compat): Map[Option[String], String] = {
+    val c = col(IdCol)
+    local(spark, IdCol, names)
+      .select(c, if (compat.pandasTitle) Derive.cleanNamePandasTitle(c) else Derive.cleanName(c))
+      .collect()
+      .map(r => Option(r.getString(0)) -> r.getString(1))
+      .toMap
   }
+
+  /** A one-column string local relation. */
+  private def local(spark: SparkSession, name: String, values: Seq[String]): DataFrame =
+    spark.createDataFrame(values.map(Row(_)).asJava,
+      StructType(Seq(StructField(name, StringType))))
 
   /** The pivot's fail-loud contract (N3/D4): pandas `pivot` raises on a
     * duplicate (LA, year group, gender, metric) key. In a workbook such a
     * key comes from two headers deriving the same (year group, gender,
     * metric), or from two data rows whose LA names clean to the same
     * string; either needs at least one data row. Checked on the driver
-    * over the cleaned id column — before `dropna`, like the reference —
+    * over the cleaned LA names — before `dropna`, like the reference —
     * reporting up to 20 keys with their multiplicity.
     */
-  private def assertGrain(pruned: DataFrame, keys: Seq[HeaderKey]): Unit = {
-    val ids = pruned.select(col(IdCol)).collect().toSeq.map(_.get(0))
+  private def assertGrain(source: String, ids: Seq[String], keys: Seq[HeaderKey]): Unit = {
     def counts[K](ks: Seq[K]): Seq[(K, Int)] = {
       val n = ks.groupBy(identity).view.mapValues(_.size).toMap
       ks.distinct.map(k => k -> n(k))
     }
     val idCounts = counts(ids)
-    val keyCounts = counts(keys.map(k => (k.yearGroup, k.gender, k.metric)))
+    val keyCounts = counts(keys)
     if (idCounts.exists(_._2 > 1) || (ids.nonEmpty && keyCounts.exists(_._2 > 1))) {
       val dups = (for {
         (id, ni) <- idCounts.iterator
-        ((yg, g, m), nk) <- keyCounts.iterator
+        (k, nk) <- keyCounts.iterator
         if ni * nk > 1
-      } yield Row(id, yg, g, m, ni.toLong * nk)).take(20).toSeq
+      } yield Row(id, k.yearGroup, k.gender, k.metric, ni.toLong * nk)).take(20).toSeq
       throw new IllegalStateException(
-        s"pivot grain ($IdCol, Year Group, Gender, Metric) not unique; first duplicates: " +
-          dups.map(_.toString).mkString("; "))
+        s"$source: pivot grain ($IdCol, Year Group, Gender, Metric) not unique; " +
+          "first duplicates: " + dups.map(_.toString).mkString("; "))
     }
   }
 
-  /** A column reference to `name` taken literally (headers may hold dots). */
-  private def quoted(name: String): String = "`" + name.replace("`", "``") + "`"
-
-  /** Combine phase (`main.py:77-120`): union (U1) → dropna (P3, N1) →
-    * sentinel replace (P4, N2) → numeric cast → Both/All rollups (A3,
-    * N5) → uppercase column names (P6).
+  /** Combine phase (`main.py:77-120`) over the [[stack]]: dropna (P3,
+    * N1) → sentinel replace (P4, N2) → numeric cast → Both/All rollups
+    * (A3, N5) → uppercase column names (P6).
     *
-    * The rollups are one grouping-sets aggregate (one shuffle). Each
-    * unioned row first gets a hidden `long` row key, unique across the
-    * union and immune to the sentinel scrub, which keeps the base rows
-    * as they are even where the grain repeats (see the object doc).
+    * The rollups are one grouping-sets aggregate (one shuffle). The
+    * stack's hidden row key, unique per row and immune to the sentinel
+    * scrub, keeps the base rows as they are even where the grain
+    * repeats (see the object doc).
     */
-  def combine(perFiles: Seq[DataFrame],
-      compat: Compat = Compat.Off): DataFrame = {
-    val unioned = Combine.unionByNameAll(perFiles)
-      .withColumn(RowKey, monotonically_increasing_id())
-    val dropped = Clean.dropNullRows(unioned, Measures)
+  def combine(stacked: DataFrame, compat: Compat = Compat.Off): DataFrame = {
+    val dropped = Clean.dropNullRows(stacked, Measures)
     val scrubbed = Clean.sentinelsToNull(dropped)
     val typed = scrubbed
       .withColumn("Students_Total", trim(col("Students_Total")).cast(LongType))
@@ -201,8 +248,8 @@ object HpvPipeline {
     rolled.toDF(rolled.columns.map(_.toUpperCase).toIndexedSeq: _*)
   }
 
-  /** Hidden row key of [[combine]]; never in its output. */
-  private val RowKey = "_row"
+  /** Hidden row key of [[stack]]; never in the output of [[combine]]. */
+  private[pipeline] val RowKey = "_row"
 
   /** D7: academic years that appear in MORE THAN ONE workbook. The
     * reference (src/main.py:77 + the 6-key rollups at :91-114) silently
@@ -225,7 +272,7 @@ object HpvPipeline {
         s"[hpv] WARNING (D7): academic year ${yr.getOrElse("<unparsed>")} appears in $n " +
           "workbooks — reference semantics double-count it in the rollups")
     }
-    val out = combine(workbooks.map(perFile(_, extractDate, compat)), compat)
+    val out = combine(stack(workbooks, extractDate, compat), compat)
       .select(OutputSchema.fieldNames.map(col).toIndexedSeq: _*)
     val got = out.schema.fields.map(f => f.name -> f.dataType).toSeq
     val want = OutputSchema.fields.map(f => f.name -> f.dataType).toSeq

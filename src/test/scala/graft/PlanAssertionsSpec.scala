@@ -406,7 +406,7 @@ class PlanAssertionsSpec extends SparkTestBase {
     assert(!p.contains("CartesianProduct"), "no line-pair expansion may appear")
   }
 
-  // ---- HPV cycle budget: zero jobs in transform, one shuffle in the fact plan ----
+  // ---- HPV cycle budget: zero jobs in transform; one leaf, one shuffle in the fact plan ----
 
   private def hpvWorkbooks: Seq[graft.ingest.Workbook] = (2023 to 2025).map { y =>
     graft.ingest.Workbook.fromGrid(spark, Seq(
@@ -481,5 +481,21 @@ class PlanAssertionsSpec extends SparkTestBase {
     assert(helper.collect(executed) {
       case e: org.apache.spark.sql.execution.ExpandExec => e }.size == 1,
       "both rollups must share one Expand")
+  }
+
+  test("HPV fact plan reads one stacked leaf, whatever the workbook count") {
+    import org.apache.spark.sql.execution.LocalTableScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val helper = new AdaptiveSparkPlanHelper {}
+    for (wbs <- Seq(hpvWorkbooks.take(1), hpvWorkbooks, hpvWorkbooks ++ hpvWorkbooks)) {
+      val fact = graft.pipeline.HpvPipeline.transform(wbs, java.time.LocalDate.of(2026, 1, 15))
+      fact.collect()
+      val executed = fact.queryExecution.executedPlan
+      // query stages are walked into, so the leaves are the real scans
+      val leaves = helper.collectLeaves(executed)
+      assert(leaves.size == 1 && leaves.head.isInstanceOf[LocalTableScanExec],
+        s"${wbs.size} workbook(s): expected one LocalTableScan leaf, got " +
+          s"${leaves.map(_.nodeName).mkString(", ")}:\n$executed")
+    }
   }
 }

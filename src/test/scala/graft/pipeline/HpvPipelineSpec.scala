@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.LongType
 
 import graft.SparkTestBase
 import graft.ingest.Workbook
-import graft.ops.{Clean, Combine, Rollup}
+import graft.ops.{Clean, Rollup}
 
 /** End-to-end golden test (SURVEY §5.2 tier 2): two synthesized
   * workbooks exercising every branch — sentinel in a measure, born-null
@@ -82,12 +82,13 @@ class HpvPipelineSpec extends SparkTestBase {
       s"only-got=${got -- expected}\nonly-expected=${expected -- got}")
   }
 
-  /** The spec oracle: the reference's combine verbatim — union, dropna,
-    * scrub, cast, then the two rollups by union (`Rollup.byUnion`).
+  /** The spec oracle: the reference's combine verbatim over the stacked
+    * workbooks — dropna, scrub, cast, then the two rollups by union
+    * (`Rollup.byUnion`), which needs no row key.
     */
-  private def faithfulCombine(perFiles: Seq[DataFrame], compat: HpvPipeline.Compat): DataFrame = {
+  private def faithfulCombine(stacked: DataFrame, compat: HpvPipeline.Compat): DataFrame = {
     val scrubbed = Clean.sentinelsToNull(
-      Clean.dropNullRows(Combine.unionByNameAll(perFiles), HpvPipeline.Measures))
+      Clean.dropNullRows(stacked.drop(HpvPipeline.RowKey), HpvPipeline.Measures))
     val typed = HpvPipeline.Measures.foldLeft(scrubbed)((d, m) =>
       d.withColumn(m, trim(col(m)).cast(LongType)))
     val rolled = Rollup.byUnion(typed, HpvPipeline.Grain, HpvPipeline.Measures,
@@ -99,9 +100,9 @@ class HpvPipelineSpec extends SparkTestBase {
     // incl. repeated grain (D7, null boroughs) and both compat modes
     val inputs = Seq(Seq(fileA, fileB), Seq(fileA, fileA, fileB), Seq(nullBoroughs))
     for (wbs <- inputs; compat <- Seq(HpvPipeline.Compat.Off, HpvPipeline.Compat.PandasExact)) {
-      val files = wbs.map(HpvPipeline.perFile(_, D, compat))
+      val stacked = HpvPipeline.stack(wbs, D, compat)
       withClue(s"compat=$compat files=${wbs.size}: ") {
-        assertSameRows(HpvPipeline.combine(files, compat), faithfulCombine(files, compat))
+        assertSameRows(HpvPipeline.combine(stacked, compat), faithfulCombine(stacked, compat))
       }
     }
   }
@@ -121,7 +122,7 @@ class HpvPipelineSpec extends SparkTestBase {
 
   test("R1/R2: a duplicate cleaned LA name fails loud, naming the key") {
     val wb = grid(s"x $T24", y8F, Seq("camden", "1", "1"), Seq(" Camden ", "2", "2"))
-    val e = intercept[IllegalStateException](HpvPipeline.perFile(wb, D))
+    val e = intercept[IllegalStateException](HpvPipeline.stack(Seq(wb), D))
     assert(e.getMessage.contains("pivot grain (Local authority, Year Group, Gender, Metric) not unique"))
     assert(e.getMessage.contains("[Camden,8,Female,Number,2]"), e.getMessage)
   }
@@ -129,10 +130,10 @@ class HpvPipelineSpec extends SparkTestBase {
   test("R1/R2: two headers deriving one pivot key fail loud") {
     val header = Seq("Year 8 females: Number", "Y8 females: Number", "Year 8 females: Number vaccinated")
     val e = intercept[IllegalStateException](
-      HpvPipeline.perFile(grid(s"x $T24", header, Seq("camden", "1", "2", "1")), D))
+      HpvPipeline.stack(Seq(grid(s"x $T24", header, Seq("camden", "1", "2", "1"))), D))
     assert(e.getMessage.contains("[Camden,8,Female,Number,2]"), e.getMessage)
     // the check needs data rows, like the pivot it replaces
-    assert(HpvPipeline.perFile(grid(s"x $T24", header), D).count() == 0)
+    assert(HpvPipeline.stack(Seq(grid(s"x $T24", header)), D).count() == 0)
   }
 
   test("R1/R2: kept headers land; an absent metric gives a null measure") {
@@ -140,10 +141,10 @@ class HpvPipelineSpec extends SparkTestBase {
       Seq("Year 8 females: Number", "Year 8 females: Number vaccinated", "Year 9 males: Number",
         "Year 9 males: % vaccinated"),
       Seq("camden", "10", "5", "7", "70.0"), Seq("barnet", "20", "6", "8", "*"))
-    val out = HpvPipeline.perFile(wb, D)
+    val out = HpvPipeline.stack(Seq(wb), D)
     assert(out.columns.toSeq == Seq("Borough_Name", "Year_Group_Number", "Gender_Name",
       "Students_Total", "Students_Vaccinated", "Academic_Year_End_Date", "Academic_Year_Text",
-      "Date_Extract"))
+      "Date_Extract", HpvPipeline.RowKey))
     assert(rowsOf(out.select("Borough_Name", "Year_Group_Number", "Gender_Name",
       "Students_Total", "Students_Vaccinated")) == Map(
       Seq("Camden", "8", "Female", "10", "5") -> 1, Seq("Camden", "9", "Male", "7", null) -> 1,
@@ -261,6 +262,45 @@ class HpvPipelineSpec extends SparkTestBase {
     val out = HpvPipeline.transform(Seq(wb), D)
     assert(out.count() == 4) // base + Both + All·Female + All·Both
     java.nio.file.Files.delete(tmp)
+  }
+
+  test("refusals name the workbook: no Local authority column, no measure, duplicate grain") {
+    def csv(header: String, rows: String*): java.nio.file.Path = {
+      val tmp = java.nio.file.Files.createTempFile("wb", ".csv")
+      java.nio.file.Files.writeString(tmp, (Seq(s"Coverage $T24,,", ",,", header) ++ rows)
+        .mkString("", "\n", "\n"))
+      tmp
+    }
+    val noId = csv("Area,Year 8 females: Number,Year 8 females: Number vaccinated", "camden,1,1")
+    val dupLa = csv("Local authority,Year 8 females: Number,Year 8 females: Number vaccinated",
+      "camden,1,1", "CAMDEN,2,2")
+    val noMeasure = csv("Local authority,Year 8 females: % vaccinated", "camden,50.0")
+    try {
+      val e = intercept[IllegalArgumentException](HpvPipeline.transform(
+        Seq(fileA, Workbook.readCsvGrid(spark, noId.toString)), D))
+      assert(e.getMessage.startsWith(s"$noId: "), e.getMessage)
+      assert(e.getMessage.contains("'Local authority'"), e.getMessage)
+      val g = intercept[IllegalStateException](HpvPipeline.transform(
+        Seq(Workbook.readCsvGrid(spark, dupLa.toString)), D))
+      assert(g.getMessage.startsWith(s"$dupLa: pivot grain"), g.getMessage)
+      val m = intercept[IllegalArgumentException](HpvPipeline.transform(
+        Seq(Workbook.readCsvGrid(spark, noMeasure.toString)), D))
+      assert(m.getMessage.contains(s"$noMeasure: workbook has no measure columns"), m.getMessage)
+    } finally Seq(noId, dupLa, noMeasure).foreach(java.nio.file.Files.delete)
+  }
+
+  test("the Local authority column matches case-insensitively; two such columns are refused") {
+    def wb(ids: String*) = Workbook.fromGrid(spark, Seq(
+      Seq(s"Coverage $T25"), Seq(""),
+      ids ++ Seq("Year 9 females: Number", "Year 9 females: Number vaccinated"),
+      ids.map(_ => "camden") ++ Seq("110", "95")))
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
+    assert(rows(HpvPipeline.transform(Seq(wb("LOCAL AUTHORITY")), D)) ==
+      rows(HpvPipeline.transform(Seq(wb("Local authority")), D)))
+    val e = intercept[IllegalArgumentException](
+      HpvPipeline.transform(Seq(wb("Local authority", "Local Authority")), D))
+    assert(e.getMessage.contains("expected one 'Local authority' column in the header, found 2"),
+      e.getMessage)
   }
 
   test("D7: duplicate academic years across workbooks are detected") {
