@@ -28,32 +28,15 @@ object Xlsx {
       headerRow: Int = 2): Workbook =
     Workbook.fromSource(spark, readGrid(path, sheetName), headerRow, path)
 
-  /** Distributed directory ingest — S1/S2 at fleet scale. The single-
-    * file `readWorkbook` is driver-side by design (the reference needs
-    * ~5 files, `main.py:17`); a directory of thousands of workbooks
-    * would serialize on the driver, so here workbook BYTES flow through
-    * `spark.read.format("binaryFile")` and each executor parses its
-    * files with the same StAX pipeline (`readGridBytes`) — the driver
-    * opens exactly ONE file (the lexicographically first) to fix the
-    * output schema. Per-file A1 metadata survives as a `_a1` column
-    * beside `_source_path` provenance (N7: metadata is captured per
-    * file, not once per run).
-    *
-    * All files must share the header row; a mismatch fails loudly with
-    * the offending path (house fail-loud style, cf. N3/D4) rather than
-    * silently aligning columns by position.
-    */
-  /** Per-workbook memory bound, on the driver path ([[readGrid]]) and
-    * per task on the distributed path: one workbook's residency is its
-    * raw bytes (binaryFile materializes the file per row; `readGrid`
-    * reads the file whole) + the parsed string grid — and NOTHING else, since
-    * round 11's central-directory streaming ([[ZipBytesParts]]) removed
-    * the inflated-part buffers that used to triple the footprint (the
-    * old 64 MB bound's rationale). The bound is therefore 4× looser
-    * now; a workbook above it still fails loudly WITH ITS PATH — a
-    * 256 MB+ "workbook" in a fleet directory is almost always a
-    * mislabeled data export that belongs in `spark.read` (house
-    * fail-loud style, cf. the header-mismatch check).
+  /** Per-workbook memory bound of [[readGrid]]: one workbook's
+    * residency is its raw bytes (`readGrid` reads the file whole) + the
+    * parsed string grid — and NOTHING else, since round 11's
+    * central-directory streaming ([[ZipBytesParts]]) removed the
+    * inflated-part buffers that used to triple the footprint (the old
+    * 64 MB bound's rationale). The bound is therefore 4× looser now; a
+    * workbook above it still fails loudly WITH ITS PATH — a 256 MB+
+    * "workbook" is almost always a mislabeled data export that belongs
+    * in `spark.read` (house fail-loud style).
     */
   val MaxWorkbookBytes: Long = 256L << 20
 
@@ -62,53 +45,6 @@ object Xlsx {
     * sharedStrings; reading is cut off at the bound with a loud error.
     */
   val MaxPartBytes: Long = 128L << 20
-
-  def readWorkbooks(
-      spark: SparkSession, dir: String, sheetName: String,
-      headerRow: Int = 2,
-      maxWorkbookBytes: Long = MaxWorkbookBytes): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{col, min}
-    import spark.implicits._
-    val bin = spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.xlsx").load(dir)
-      .select(col("path"), col("content"))
-    // schema probe reads ONE file's bytes: min over a content-pruned
-    // path projection first, then fetch just that file — ordering the
-    // full (path, content) rows would drag every workbook's bytes
-    // through the probe and double the directory I/O
-    val firstPathRow = bin.agg(min(col("path"))).collect()
-    val firstPath = if (firstPathRow.isEmpty) null else firstPathRow(0).getString(0)
-    require(firstPath != null, s"no .xlsx files under $dir")
-    val firstBytes = bin.where(col("path") === firstPath)
-      .select(col("content")).head().getAs[Array[Byte]](0)
-    require(firstBytes.length <= maxWorkbookBytes,
-      s"$firstPath: ${firstBytes.length} bytes exceeds the distributed-ingest " +
-        s"bound of $maxWorkbookBytes")
-    val (_, header, _) =
-      Workbook.shape(readGridBytes(firstBytes, sheetName, firstPath), headerRow, firstPath)
-    val width = header.size
-    val headerB = spark.sparkContext.broadcast(header)
-
-    // typed mapPartitions carries (path, a1, padded cells); the final
-    // SELECT fans the array into named columns inside Catalyst
-    val parsed = bin.as[(String, Array[Byte])].mapPartitions { it =>
-      it.flatMap { case (path, bytes) =>
-        require(bytes.length <= maxWorkbookBytes,
-          s"$path: ${bytes.length} bytes exceeds the distributed-ingest bound " +
-            s"of $maxWorkbookBytes — oversized workbooks are almost always " +
-            "mislabeled data exports; raise maxWorkbookBytes only deliberately")
-        val (a1, h, rows) =
-          Workbook.shape(readGridBytes(bytes, sheetName, path), headerRow, path)
-        require(h == headerB.value,
-          s"$path: header ${h.mkString("|")} does not match the directory's " +
-            s"first workbook ($firstPath): ${headerB.value.mkString("|")}")
-        rows.map(r => (path, a1, r))
-      }
-    }
-    parsed.select(
-      col("_1").as("_source_path") +: col("_2").as("_a1") +:
-        (0 until width).map(i => col("_3")(i).as(header(i))): _*)
-  }
 
   /** The reference's glob step (S1): every file with `ext` under `dir`,
     * sorted for deterministic processing order. */
@@ -120,9 +56,9 @@ object Xlsx {
 
   /** Parse the named sheet of the workbook at `path` into a padded
     * string cell grid. The file is read whole (refused loudly, with its
-    * path, above [[MaxWorkbookBytes]]) and parsed by [[readGridBytes]],
-    * so the driver path carries the same zip-bomb bound as the
-    * distributed one.
+    * path, above [[MaxWorkbookBytes]]; the size is checked before any
+    * byte is read) and parsed by [[readGridBytes]] under its zip-bomb
+    * bound.
     */
   def readGrid(path: String, sheetName: String): Seq[Seq[String]] = {
     val bytes =
@@ -140,10 +76,10 @@ object Xlsx {
   }
 
   /** Parse the named sheet from workbook BYTES — the one zip reader,
-    * shared by [[readGrid]] and the executors of [[readWorkbooks]]: no
-    * filesystem access, no temp file. Parts stream out of the bytes
-    * through the central directory ([[ZipBytesParts]]) into the StAX
-    * pipeline, each inflate bounded by `maxPartBytes`.
+    * behind [[readGrid]]: no filesystem access, no temp file. Parts
+    * stream out of the bytes through the central directory
+    * ([[ZipBytesParts]]) into the StAX pipeline, each inflate bounded
+    * by `maxPartBytes`.
     *
     * Every failure is an IllegalArgumentException naming `sourceName`:
     * the reader's own refusals already name it (the zip-bomb message
@@ -176,7 +112,7 @@ object Xlsx {
     * DIRECTORY — no part is ever inflated into a buffer (round 11,
     * replacing the former prefetch-everything entry map): each `open`
     * locates the entry from the directory and STREAMS it through an
-    * Inflater, so per-task residency is the raw content bytes + the
+    * Inflater, so per-workbook residency is the raw content bytes + the
     * parsed grid, independent of how large the XML parts inflate.
     * Never-consumed parts (media, themes, pivot caches) are never even
     * inflated — the old blocklist is obsolete by construction.
@@ -482,8 +418,8 @@ object Xlsx {
     * part). The same single workbook.xml pass also captures
     * `<workbookPr date1904>` — the element precedes `<sheets>` in the
     * schema, so one scan serves both (re-opening the part per flag
-    * would double the inflate+parse cost on every workbook in the
-    * distributed ingest path). Returns (sheet part, 1904-epoch flag).
+    * would double the inflate+parse cost on every workbook). Returns
+    * (sheet part, 1904-epoch flag).
     */
   private def resolveSheetPart(parts: ZipBytesParts, sheetName: String): (String, Boolean) = {
     var epoch1904 = false

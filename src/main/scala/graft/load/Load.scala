@@ -15,10 +15,8 @@ import scala.util.{Failure, Success, Try}
   * write job runs, so a mid-job failure loses the previous contents.
   * [[replaceTable]] stages into a sibling directory and swaps via
   * rename ([[stagedSwap]]): any failure before the swap leaves the
-  * destination untouched. [[replacePartitions]] and
-  * [[replaceCatalogTable]] give the same contract per partition and
-  * through the session catalog; [[replaceJdbcTable]] over a live JDBC
-  * connection.
+  * destination untouched. [[replaceJdbcTable]] gives the same contract
+  * over a live JDBC connection, as one database transaction.
   */
 final case class LoadReport(rows: Long, destination: String)
 
@@ -106,207 +104,6 @@ object Load {
     }
     if (hadPrev) fs.delete(backup, true)
     out
-  }
-
-  /** Partition-level staged replace: only the partitions PRESENT in
-    * `df` are rewritten; every other partition of the destination is
-    * untouched. This is the nightly-delta shape a 100 TB store needs —
-    * [[replaceTable]] rewrites (and re-reads, and re-swaps) the whole
-    * table, a non-starter when the delta touches 1 of 3000 date
-    * partitions. Same guarantee per partition as the full swap: new
-    * contents are fully staged first; the publish is a rename pair with
-    * backup; any failure rolls every already-published partition back.
-    *
-    * (Spark's own `partitionOverwriteMode=dynamic` INSERT OVERWRITE
-    * gives the per-partition scoping but not the backup/restore — a
-    * mid-publish crash can leave some partitions new, some old, none
-    * recoverable. The staged swap here keeps the old bytes until every
-    * partition is published.)
-    *
-    * `dropPartitions`: destination partition DIRECTORY NAMES
-    * (`col=value`) to REMOVE even though the staged delta has no rows
-    * for them — an empty partition produces no staging directory, so
-    * "this partition is now empty" is inexpressible through `df` alone
-    * (a refresh that empties a whole partition needs this or the old
-    * files silently survive). Drops participate in the same
-    * backup/rollback: the old bytes move to the backup root and are
-    * restored on any failure.
-    */
-  def replacePartitions(
-      spark: SparkSession, df: DataFrame, destination: String,
-      partitionCol: String, dropPartitions: Seq[String] = Nil): Try[LoadReport] = {
-    val result = Try {
-      val dest = new Path(destination)
-      val staging = new Path(destination + "__staging")
-      val backupRoot = new Path(destination + "__old")
-      val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // A NON-EMPTY backup root means a prior publish failed with an
-      // incomplete rollback — it holds the ONLY copy of those
-      // partitions' old bytes. Deleting it here would destroy them on
-      // the retry. Refuse and make the operator decide (an empty dir —
-      // debris from a crash between mkdirs and swap — is safe to clear).
-      // Checked BEFORE the staging write: a retry against a known-bad
-      // backup state must not pay the full delta write first.
-      if (fs.exists(backupRoot)) {
-        if (fs.listStatus(backupRoot).nonEmpty)
-          throw new IllegalStateException(
-            s"backup dir $backupRoot is non-empty — a prior partition publish " +
-              "failed and was not fully rolled back; recover manually before loading")
-        fs.delete(backupRoot, true)
-      }
-      // argument-shape check BEFORE the staging write — a malformed
-      // drop list must fail in milliseconds, not after the delta lands
-      require(dropPartitions.forall(_.startsWith(partitionCol + "=")),
-        s"dropPartitions entries must be '$partitionCol=<value>' directory names, " +
-          s"got ${dropPartitions.filterNot(_.startsWith(partitionCol + "=")).mkString(", ")}")
-      df.write.mode(SaveMode.Overwrite).partitionBy(partitionCol).parquet(staging.toString)
-      // count back what was STAGED (the writer's schema — the partition
-      // column comes back from the directory names)
-      val rows = spark.read.schema(df.schema).parquet(staging.toString).count()
-      val staged = fs.listStatus(staging)
-        .filter(_.isDirectory).map(_.getPath.getName)
-        .filter(_.startsWith(partitionCol + "="))
-      // a partition both staged and dropped would be contradictory;
-      // staged content wins (the drop list is for EMPTIED partitions)
-      val drops = dropPartitions.filterNot(staged.toSet)
-      val parts = staged ++ drops
-      fs.mkdirs(backupRoot)
-      if (!fs.exists(dest)) fs.mkdirs(dest)
-      val swapped = scala.collection.mutable.ListBuffer[String]()
-      try {
-        staged.foreach { p =>
-          val d = new Path(dest, p)
-          val b = new Path(backupRoot, p)
-          val hadPrev = fs.exists(d)
-          if (hadPrev && !fs.rename(d, b))
-            throw new java.io.IOException(s"backup rename $d -> $b failed")
-          if (!fs.rename(new Path(staging, p), d))
-            throw new java.io.IOException(s"publish rename of partition $p failed")
-          swapped += p
-        }
-        drops.foreach { p =>
-          val d = new Path(dest, p)
-          if (fs.exists(d)) {
-            if (!fs.rename(d, new Path(backupRoot, p)))
-              throw new java.io.IOException(s"drop rename of partition $p failed")
-            swapped += p
-          }
-        }
-      } catch {
-        case e: Throwable =>
-          val restored = rollbackPartitions(fs, dest, backupRoot, parts.toSeq, swapped.toSet)
-          // a fully-restored backup root is empty shell — remove it so the
-          // retry isn't refused by the non-empty-backup guard above
-          if (restored) Try(fs.delete(backupRoot, true))
-          val note =
-            if (restored) "; all published partitions rolled back"
-            else s"; ROLLBACK INCOMPLETE — previous partitions left at $backupRoot"
-          throw new java.io.IOException(s"partition publish to $dest failed$note", e)
-      }
-      fs.delete(backupRoot, true)
-      fs.delete(staging, true) // leftover _SUCCESS marker etc.
-      LoadReport(rows, destination)
-    }
-    report(result, destination)
-  }
-
-  /** Small-files compaction: rewrite a parquet table directory into
-    * ~`targetBytes`-sized files through [[replaceTable]]'s staged swap
-    * (any failure leaves the original layout intact). Streaming sinks
-    * and per-partition delta loads accrete thousands of KB-scale files
-    * whose per-file open/footer cost eventually dominates scans;
-    * compaction restores scan-sized files. File count =
-    * ceil(current bytes / targetBytes) — computed from the live
-    * listing, so repeated runs converge and a compacted table is a
-    * no-op rewrite.
-    */
-  def compact(
-      spark: SparkSession, destination: String,
-      targetBytes: Long = 128L * 1024 * 1024): Try[LoadReport] = {
-    Try {
-      val dest = new Path(destination)
-      val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val bytes = fs.getContentSummary(dest).getLength
-      val nFiles = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-      // the staged write fully materializes from the CURRENT files
-      // before the swap touches them, so reading-while-replacing is safe
-      spark.read.parquet(destination).repartition(nFiles)
-    }.flatMap(df => replaceTable(spark, df, destination))
-  }
-
-  /** Roll back every partition TOUCHED by a failed publish — not just
-    * the fully published ones: the partition that failed mid-swap may
-    * have had its backup rename succeed and its publish rename fail,
-    * leaving its old bytes in the backup and its destination dir
-    * missing. For each affected partition: drop whatever sits at the
-    * destination (staged bytes or nothing), then restore the backup if
-    * one exists. Package-private so the spec can exercise the
-    * mid-swap states directly (fault injection through the FS layer is
-    * not portable).
-    */
-  private[load] def rollbackPartitions(
-      fs: org.apache.hadoop.fs.FileSystem, dest: Path, backupRoot: Path,
-      parts: Seq[String], swapped: Set[String]): Boolean =
-    parts.map { p => // map-then-forall: attempt EVERY partition — a
-      // forall would short-circuit on the first failed restore and
-      // abandon the rest even where their renames would succeed
-      val d = new Path(dest, p)
-      val b = new Path(backupRoot, p)
-      Try {
-        if (fs.exists(b)) {
-          fs.delete(d, true)
-          fs.rename(b, d)
-        } else if (swapped.contains(p)) fs.delete(d, true) else true
-      }.getOrElse(false)
-    }.forall(identity)
-
-  /** K2/K3 against a CATALOG TABLE — the shape a warehouse deployment
-    * uses (the reference's destination is a warehouse table:
-    * `database_util.py:39` TRUNCATE + `:42-49` bulk load + `:57`
-    * ROLLBACK). Same contract as [[replaceTable]], delivered through
-    * the session catalog instead of a path:
-    *
-    *  - the new contents are FULLY written to a staging table first —
-    *    a mid-write failure leaves the destination untouched (the
-    *    transactional guarantee the reference gets from ROLLBACK);
-    *  - the publish is a rename pair (dest → __old, staging → dest)
-    *    with restore-on-failure, mirroring the path sink's swap;
-    *  - an orphaned `__old` WITHOUT a destination means a prior swap's
-    *    restore failed — refuse to run rather than guess which copy is
-    *    authoritative.
-    */
-  def replaceCatalogTable(
-      spark: SparkSession, df: DataFrame, table: String): Try[LoadReport] = {
-    val staging = table + "__staging"
-    val backup = table + "__old"
-    val result = Try {
-      val cat = spark.catalog
-      if (!cat.tableExists(table) && cat.tableExists(backup))
-        throw new IllegalStateException(
-          s"destination $table is missing but backup $backup exists — a prior " +
-            "swap failed and was not restored; recover manually before loading")
-      // leftover staging from a prior failed run is abandoned garbage
-      spark.sql(s"DROP TABLE IF EXISTS ${quoted(staging)}")
-      df.write.mode(SaveMode.Overwrite).saveAsTable(staging)
-      val rows = spark.table(staging).count()
-      spark.sql(s"DROP TABLE IF EXISTS ${quoted(backup)}")
-      val hadPrev = cat.tableExists(table)
-      if (hadPrev) spark.sql(s"ALTER TABLE ${quoted(table)} RENAME TO ${quoted(backup)}")
-      try spark.sql(s"ALTER TABLE ${quoted(staging)} RENAME TO ${quoted(table)}")
-      catch {
-        case e: Throwable =>
-          val note =
-            if (!hadPrev) ""
-            else if (Try(spark.sql(
-              s"ALTER TABLE ${quoted(backup)} RENAME TO ${quoted(table)}")).isSuccess)
-              "; previous table restored"
-            else s"; RESTORE FAILED — previous table left at $backup"
-          throw new java.io.IOException(s"publish of $table failed$note", e)
-      }
-      if (hadPrev) spark.sql(s"DROP TABLE IF EXISTS ${quoted(backup)}")
-      LoadReport(rows, table)
-    }
-    report(result, table)
   }
 
   /** K2/K3 over a LIVE JDBC CONNECTION — the closest shape to the
@@ -412,24 +209,9 @@ object Load {
     "\"" + name + "\""
   }
 
-  /** Dot-separated multi-part name with each part backticked, so the
-    * handwritten SQL resolves the SAME table as saveAsTable/tableExists
-    * (which parse names multi-part). Quoting the whole name as one
-    * identifier would aim DROP/ALTER at a single-part table literally
-    * named "db.tbl__staging" in the current database — every qualified
-    * load would fail at publish. Backticks inside a part are rejected
-    * rather than mis-quoted.
-    */
-  private def quoted(name: String): String = {
-    require(!name.contains("`"), s"table name must not contain backticks: $name")
-    val parts = name.split('.')
-    require(parts.nonEmpty && parts.forall(_.nonEmpty), s"malformed table name: $name")
-    parts.map(p => s"`$p`").mkString(".")
-  }
-
   /** Cooperative single-writer lock for a destination. Every sink in
     * this module assumes ONE writer — two concurrent staged swaps (say
-    * a stream trigger racing a compaction) can interleave their
+    * a stream trigger racing a nightly load) can interleave their
     * backup/publish renames and break the rollback invariant. Callers
     * that can race wrap the sink call (note the inner `.get` — a
     * Try-returning body would otherwise nest as Success(Failure(...))):

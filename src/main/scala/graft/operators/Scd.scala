@@ -33,8 +33,8 @@ import org.apache.spark.sql.functions._
   * Scale shape: one equi-join of updates against the CURRENT slice on
   * the key (broadcast when the update batch is small — the nightly
   * case) plus per-key windows over the update batch; closed history
-  * never shuffles. Pairs with `Load.replaceTable`/`replacePartitions`
-  * to publish the result.
+  * never shuffles. Pairs with `Load.replaceTable` to publish the
+  * result.
   */
 object Scd {
 

@@ -6,26 +6,12 @@ import org.apache.spark.sql.functions._
 /** Manual skew-mitigation patterns (SURVEY §4 / 100-TB design point).
   *
   * AQE's skew-join splitting (enabled in graft.core.Sessions) covers
-  * sort-merge joins at runtime; these operators are the explicit salting
-  * patterns for the cases AQE doesn't reach — aggregations over hot
-  * keys, and joins where the optimizer lacks runtime stats (e.g. first
-  * pass over fresh data). Salts are derived deterministically from row
-  * content, so results are stable across retries/speculation.
+  * sort-merge joins at runtime; the salted aggregation here covers a
+  * case AQE doesn't reach — sums over hot keys. Salts are derived
+  * deterministically from row content, so results are stable across
+  * retries/speculation.
   */
 object Skew {
-
-  /** Join `big` (skewed keys) to `small` by scattering each big-side row
-    * to one of `salts` sub-keys and replicating the small side across
-    * all of them. Semantics identical to `big.join(small, key)`; the
-    * shuffle spreads a hot key over `salts` partitions.
-    */
-  def saltedJoin(big: DataFrame, small: DataFrame, key: String, salts: Int): DataFrame = {
-    require(salts > 1, "salts must be > 1")
-    val bigS = big.withColumn("_salt", pmod(hash(big.columns.map(col): _*), lit(salts)))
-    val smallS = small
-      .withColumn("_salt", explode(sequence(lit(0), lit(salts - 1))))
-    bigS.join(smallS, Seq(key, "_salt")).drop("_salt")
-  }
 
   /** Two-phase salted sum aggregation: partial sums per (keys, salt) —
     * spreading a hot key across `salts` reducers — then final sums per

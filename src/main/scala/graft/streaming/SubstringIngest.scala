@@ -201,6 +201,12 @@ object SubstringIngest extends Logging {
     */
   val DeadAtFile = "_dead_at"
 
+  /** Partition column of the retention reports: batch `b`'s report
+    * lands in `<reportDir>/__batch=<b>`, so a replayed batch rewrites
+    * its own landing instead of adding a second copy.
+    */
+  val BatchCol = "__batch"
+
   private val SegPrefix = "seg_"
   private val MsegPrefix = "mseg_"
   private val StagingSuffix = "__staging"
@@ -659,8 +665,8 @@ object SubstringIngest extends Logging {
       .start()
 
   /** One micro-batch application — the foreachBatch body, public so the
-    * crash-window specs can replay it at chosen interruption points
-    * (the MetricsStoreSpec discipline). Idempotent per batchId.
+    * crash-window specs can replay it at chosen interruption points.
+    * Idempotent per batchId.
     */
   def applyBatch(
       batch: DataFrame, batchId: Long, indexDir: String, reportDir: String,
@@ -692,7 +698,7 @@ object SubstringIngest extends Logging {
             val live = readLive(spark, st)
             SubstringDedup.cleanKeepFirstIncremental(live, batch, k)
               .write.mode("overwrite")
-              .parquet(s"$reportDir/${MetricsStore.BatchCol}=$batchId")
+              .parquet(s"$reportDir/$BatchCol=$batchId")
             // O(batch) publish: the batch's own gram segment, committed
             // by one atomic rename (bloom sidecar rides inside)
             val bloom = docIdBloom(batch, bloomExpectedItems, bloomFpp)
@@ -874,13 +880,13 @@ object SubstringIngest extends Logging {
     StructField("doc_id", LongType), StructField("n_tokens", LongType),
     StructField("removed_tokens", LongType), StructField("removed_ppm", LongType),
     StructField("kept_md5", StringType),
-    StructField(MetricsStore.BatchCol, LongType)))
+    StructField(BatchCol, LongType)))
 
   /** All retention reports published so far, with the batch column
     * dropped (the read surface mirrors batch cleanKeepFirst's schema).
     */
   def readReports(spark: SparkSession, reportDir: String): DataFrame =
-    spark.read.schema(ReportSchema).parquet(reportDir).drop(MetricsStore.BatchCol)
+    spark.read.schema(ReportSchema).parquet(reportDir).drop(BatchCol)
 
   /** EXACT id-reuse audit, no capacity bound: every applied batch's
     * retention report carries one row per ingested doc_id, so one
@@ -896,7 +902,7 @@ object SubstringIngest extends Logging {
     spark.read.schema(ReportSchema).parquet(reportDir)
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_occurrences"),
-        sort_array(collect_set(col(MetricsStore.BatchCol))).as("batches"))
+        sort_array(collect_set(col(BatchCol))).as("batches"))
       .where(col("n_occurrences") > 1)
   }
 }

@@ -155,79 +155,6 @@ class XlsxSpec extends SparkTestBase {
     assert(e.getMessage.contains("Nope"))
   }
 
-  // per-file variant of the fixture: distinct A1 banner + one distinct
-  // data row, same header — the N-file directory shape
-  private def variantXlsx(dir: String, fname: String, banner: String, area: String): Unit = {
-    val shared = sharedXml.replace("Coverage September 2023 to August 2024", banner)
-    val sheet = sheet2Xml.replace("camden", area)
-    val p = writeXlsx(Map(
-      "xl/workbook.xml" -> workbookXml,
-      "xl/_rels/workbook.xml.rels" -> relsXml,
-      "xl/sharedStrings.xml" -> shared,
-      "xl/worksheets/sheet1.xml" ->
-        """<?xml version="1.0"?><worksheet xmlns="x"><sheetData/></worksheet>""",
-      "xl/worksheets/sheet2.xml" -> sheet))
-    java.nio.file.Files.move(java.nio.file.Paths.get(p),
-      java.nio.file.Paths.get(dir, fname))
-  }
-
-  test("distributed N-file ingest == sequential per-file reads, A1 preserved per file") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_xlsx_dist").toString
-    val files = Seq(("a.xlsx", "Coverage A", "camden"),
-      ("b.xlsx", "Coverage B", "barnet"), ("c.xlsx", "Coverage C", "enfield"))
-    files.foreach { case (f, banner, area) => variantXlsx(dir, f, banner, area) }
-
-    val got = Xlsx.readWorkbooks(spark, dir, "Local_authority")
-    // distributed rows == the union of driver-side per-file reads
-    val want = Xlsx.glob(dir).flatMap { p =>
-      val wb = Xlsx.readWorkbook(spark, p, "Local_authority")
-      wb.data.collect().map(r => (wb.a1, r.toSeq))
-    }.toSet
-    val gotSet = got.collect()
-      .map(r => (r.getAs[String]("_a1"), r.toSeq.drop(2))).toSet
-    assert(gotSet == want)
-    // per-file A1 metadata survives, one value per source file (N7)
-    val a1ByFile = got.select($"_source_path", $"_a1").distinct().collect()
-      .map(r => (new java.io.File(r.getString(0)).getName, r.getString(1))).toMap
-    assert(a1ByFile == Map("a.xlsx" -> "Coverage A", "b.xlsx" -> "Coverage B",
-      "c.xlsx" -> "Coverage C"))
-    // schema: provenance + the shared header
-    assert(got.columns.toSeq == Seq("_source_path", "_a1",
-      "Local authority", "Year 8 females: Number", "Year 8 females: Number vaccinated"))
-  }
-
-  test("distributed ingest scales to a 120-workbook directory with bounded memory") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_xlsx_many").toString
-    val n = 120
-    (0 until n).foreach { i =>
-      variantXlsx(dir, f"wb_$i%03d.xlsx", s"Coverage $i", s"area$i")
-    }
-    val got = Xlsx.readWorkbooks(spark, dir, "Local_authority")
-    // every file contributes its 2 data rows, with per-file provenance + A1
-    assert(got.count() == 2L * n)
-    assert(got.select($"_source_path").distinct().count() == n)
-    val a1s = got.select($"_a1").distinct().as[String].collect().toSet
-    assert(a1s == (0 until n).map(i => s"Coverage $i").toSet)
-    val areas = got.select($"Local authority").as[String].collect().toSet
-    assert(areas == (0 until n).map(i => s"area$i").toSet + "barnet")
-  }
-
-  test("distributed ingest refuses an oversized workbook loudly, with its path") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_xlsx_big").toString
-    variantXlsx(dir, "a.xlsx", "Coverage A", "camden")
-    variantXlsx(dir, "big.xlsx", "Coverage B", "barnet")
-    val e = intercept[Exception] {
-      // tiny bound so the regular fixture trips it — the guard is the
-      // same one a 64 MB+ mislabeled export would hit in production
-      Xlsx.readWorkbooks(spark, dir, "Local_authority", maxWorkbookBytes = 64L).collect()
-    }
-    val msg = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
-      .map(_.getMessage).find(m => m != null && m.contains("distributed-ingest bound"))
-    assert(msg.isDefined, s"expected the size-bound error, got: ${e.getMessage}")
-  }
-
   test("a zip part inflating past the bound is refused as a probable bomb") {
     // 2 MB of zeros compresses to ~2 KB: a miniature bomb shape
     val bomb = new String(Array.fill(2 * 1024 * 1024)('a'))
@@ -352,7 +279,6 @@ class XlsxSpec extends SparkTestBase {
   }
 
   test("round 11: a 70 MB workbook (media ballast) ingests end-to-end — the 64 MB bound is lifted") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_xlsx_70mb").toString
     val f = java.nio.file.Files.createTempFile("graft_big", ".xlsx")
     val zos = new ZipOutputStream(java.nio.file.Files.newOutputStream(f))
     def put(name: String, content: String): Unit = {
@@ -371,33 +297,24 @@ class XlsxSpec extends SparkTestBase {
     val chunk = new Array[Byte](1 << 20)
     (1 to 70).foreach { _ => rnd.nextBytes(chunk); zos.write(chunk) }
     zos.closeEntry(); zos.close()
-    java.nio.file.Files.move(f, java.nio.file.Paths.get(dir, "big.xlsx"))
-    assert(new java.io.File(dir, "big.xlsx").length() > 64L * 1024 * 1024)
-    val got = Xlsx.readWorkbooks(spark, dir, "Local_authority").collect()
-    assert(got.length == 2 && got.map(_.getString(2)).toSet == Set("camden", "barnet"))
+    try {
+      assert(java.nio.file.Files.size(f) > 64L * 1024 * 1024)
+      val got = Xlsx.readWorkbook(spark, f.toString, "Local_authority").rows
+      assert(got.length == 2 && got.map(_.head).toSet == Set("camden", "barnet"))
+    } finally java.nio.file.Files.delete(f)
   }
 
-  test("distributed ingest fails loudly on a header-mismatched workbook") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_xlsx_mism").toString
-    variantXlsx(dir, "a.xlsx", "Coverage A", "camden")
-    // b.xlsx renames a header cell: si[2] text differs
-    val shared = sharedXml.replace("Year 8 females: Number<",
-      "Year 8 MALES: Number<")
-    val p = writeXlsx(Map(
-      "xl/workbook.xml" -> workbookXml,
-      "xl/_rels/workbook.xml.rels" -> relsXml,
-      "xl/sharedStrings.xml" -> shared,
-      "xl/worksheets/sheet1.xml" ->
-        """<?xml version="1.0"?><worksheet xmlns="x"><sheetData/></worksheet>""",
-      "xl/worksheets/sheet2.xml" -> sheet2Xml))
-    java.nio.file.Files.move(java.nio.file.Paths.get(p),
-      java.nio.file.Paths.get(dir, "b.xlsx"))
-    val e = intercept[org.apache.spark.SparkException] {
-      Xlsx.readWorkbooks(spark, dir, "Local_authority").collect()
-    }
-    val msg = Option(e.getCause).map(_.getMessage).getOrElse(e.getMessage)
-    assert(msg != null && msg.contains("does not match the directory's first workbook"),
-      s"expected the named header-mismatch error, got: $msg")
+  test("readGrid refuses a workbook above MaxWorkbookBytes, naming the path") {
+    // sparse file: its length is set, but no byte is written — and none
+    // is read, since the size check runs before readAllBytes
+    val f = java.nio.file.Files.createTempFile("graft_oversize", ".xlsx")
+    try {
+      val raf = new java.io.RandomAccessFile(f.toFile, "rw")
+      try raf.setLength(Xlsx.MaxWorkbookBytes + 1) finally raf.close()
+      val e = intercept[IllegalArgumentException](Xlsx.readGrid(f.toString, "Local_authority"))
+      assert(e.getMessage.contains(f.toString) &&
+        e.getMessage.contains("exceeds the workbook bound"), e.getMessage)
+    } finally java.nio.file.Files.delete(f)
   }
 
   test("cells without r attributes fall back to row/column cursors") {

@@ -54,171 +54,58 @@ class LoadSpec extends SparkTestBase {
     assert(spark.read.parquet(dir).as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
   }
 
-  test("replacePartitions rewrites only the delta's partitions") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_loadp").toString + "/t"
-    val full = Seq((1L, "a"), (2L, "a"), (3L, "b"), (4L, "c")).toDF("v", "p")
-    assert(Load.replacePartitions(spark, full, dir, "p").map(_.rows) == Success(4L))
-    // delta touches ONLY p=b; a and c must keep their original bytes
-    val aFiles = new java.io.File(dir, "p=a").listFiles().map(_.getName).toSet
-    val delta = Seq((30L, "b"), (31L, "b")).toDF("v", "p")
-    assert(Load.replacePartitions(spark, delta, dir, "p").map(_.rows) == Success(2L))
-    val back = spark.read.parquet(dir).select($"v", $"p").as[(Long, String)]
-      .collect().sorted.toSeq
-    assert(back == Seq((1L, "a"), (2L, "a"), (4L, "c"), (30L, "b"), (31L, "b")))
-    assert(new java.io.File(dir, "p=a").listFiles().map(_.getName).toSet == aFiles,
-      "untouched partition must not be rewritten")
-    assert(!new java.io.File(dir + "__old").exists && !new java.io.File(dir + "__staging").exists,
-      "staging/backup debris must be cleaned up")
-  }
+  // ---- stagedSwap's pre-swap states, driven through replaceTable ----
 
-  test("failed partition load preserves every destination partition") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_loadp").toString + "/t"
-    val full = Seq((1L, "a"), (3L, "b")).toDF("v", "p")
-    assert(Load.replacePartitions(spark, full, dir, "p").isSuccess)
-    // ANSI cast failure mid-staging-write: destination untouched
-    val bad = Seq(("x", "b")).toDF("s", "p")
-      .select(col("s").cast("long").as("v"), col("p"))
-    Load.replacePartitions(spark, bad, dir, "p") match {
-      case Failure(_) => // expected
-      case Success(r) => fail(s"expected failure, got $r")
+  private def tempDest(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString + "/t"
+
+  private def exists(path: String): Boolean = new java.io.File(path).exists
+
+  test("a backup without a destination is refused before staging; the backup is untouched") {
+    val dir = tempDest("graft_swap_orphan")
+    val backup = java.nio.file.Paths.get(dir + "__old")
+    java.nio.file.Files.createDirectories(backup)
+    java.nio.file.Files.write(backup.resolve("part-0"), "OLD".getBytes("UTF-8"))
+    Load.replaceTable(spark, Seq(1).toDF("v"), dir) match {
+      case Failure(e) => assert(e.getMessage.contains("recover manually"), e.getMessage)
+      case Success(r) => fail(s"expected a refusal, got $r")
     }
-    val back = spark.read.parquet(dir).select($"v", $"p").as[(Long, String)]
-      .collect().sorted.toSeq
-    assert(back == Seq((1L, "a"), (3L, "b")))
+    // the guard runs before the stage: nothing staged, nothing published
+    assert(backup.toFile.list().toSeq == Seq("part-0"))
+    assert(new String(java.nio.file.Files.readAllBytes(backup.resolve("part-0")), "UTF-8") == "OLD")
+    assert(!exists(dir) && !exists(dir + "__staging"))
   }
 
-  test("compact collapses a many-small-files table without changing its rows") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact").toString + "/t"
-    spark.range(0, 1000).toDF("v").repartition(20)
-      .write.parquet(dir)
-    def files = new java.io.File(dir).listFiles()
-      .filter(f => f.getName.endsWith(".parquet")).length
-    assert(files == 20)
-    val r = Load.compact(spark, dir, targetBytes = Long.MaxValue)
-    assert(r.map(_.rows) == Success(1000L), s"got $r")
-    assert(files == 1, "must collapse to ceil(bytes/target) = 1 file")
-    assert(spark.read.parquet(dir).count() == 1000)
-    assert(!new java.io.File(dir + "__old").exists && !new java.io.File(dir + "__staging").exists)
-    // idempotent: a second run keeps the single file and the rows
-    assert(Load.compact(spark, dir, targetBytes = Long.MaxValue).map(_.rows) == Success(1000L))
-    assert(files == 1)
+  test("__old debris beside an existing destination is cleared and the load succeeds") {
+    val dir = tempDest("graft_swap_debris")
+    assert(Load.replaceTable(spark, Seq(1, 2, 3).toDF("v"), dir).isSuccess)
+    // a crash after a successful publish, before the backup was dropped
+    val backup = java.nio.file.Paths.get(dir + "__old")
+    java.nio.file.Files.createDirectories(backup)
+    java.nio.file.Files.write(backup.resolve("part-0"), "DEBRIS".getBytes("UTF-8"))
+    assert(Load.replaceTable(spark, Seq(9, 10).toDF("v"), dir) == Success(LoadReport(2, dir)))
+    assert(spark.read.parquet(dir).as[Int].collect().sorted.toSeq == Seq(9, 10))
+    assert(!exists(dir + "__old") && !exists(dir + "__staging"))
   }
 
-  test("mid-swap rollback restores the half-moved partition, not only published ones") {
-    // manufacture the exact state after a publish rename fails: p=a fully
-    // published (backup holds its old bytes), p=b backed up but its
-    // destination missing, p=c untouched, p=d brand new and published
-    val root = java.nio.file.Files.createTempDirectory("graft_rb")
-    def mk(rel: String, content: String): Unit = {
-      val f = root.resolve(rel)
-      java.nio.file.Files.createDirectories(f.getParent)
-      java.nio.file.Files.write(f, content.getBytes)
+  test("a leftover __staging from a failed run is cleared and the load succeeds") {
+    val dir = tempDest("graft_swap_staging")
+    assert(Load.replaceTable(spark, Seq(1, 2, 3).toDF("v"), dir).isSuccess)
+    // a run that died after staging, before the swap
+    Seq(77, 78, 79, 80).toDF("v").write.parquet(dir + "__staging")
+    assert(Load.replaceTable(spark, Seq(9, 10).toDF("v"), dir) == Success(LoadReport(2, dir)))
+    assert(spark.read.parquet(dir).as[Int].collect().sorted.toSeq == Seq(9, 10))
+    assert(!exists(dir + "__old") && !exists(dir + "__staging"))
+    // replaceTable's overwrite-mode write would hide a skipped clear; a
+    // stage that only adds files (IndexStore's shape) shows it
+    val stale = java.nio.file.Paths.get(dir + "__staging", "stale")
+    java.nio.file.Files.createDirectories(stale.getParent)
+    java.nio.file.Files.write(stale, "STALE".getBytes("UTF-8"))
+    Load.stagedSwap(spark, dir) { staging =>
+      val d = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(staging.toString))
+      java.nio.file.Files.write(d.resolve("fresh"), "FRESH".getBytes("UTF-8"))
     }
-    mk("t/p=a/part-0", "NEW-a"); mk("t__old/p=a/part-0", "OLD-a")
-    mk("t__old/p=b/part-0", "OLD-b") // dest p=b missing: swap died here
-    mk("t/p=c/part-0", "OLD-c")      // untouched
-    mk("t/p=d/part-0", "NEW-d")      // new partition, no backup
-    val fs = new org.apache.hadoop.fs.Path(root.toString)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ok = Load.rollbackPartitions(fs,
-      new org.apache.hadoop.fs.Path(root.resolve("t").toString),
-      new org.apache.hadoop.fs.Path(root.resolve("t__old").toString),
-      parts = Seq("p=a", "p=b", "p=c", "p=d"),
-      swapped = Set("p=a", "p=d"))
-    assert(ok, "rollback must report success")
-    def read(rel: String) = new String(java.nio.file.Files.readAllBytes(root.resolve(rel)))
-    assert(read("t/p=a/part-0") == "OLD-a", "published partition must revert")
-    assert(read("t/p=b/part-0") == "OLD-b", "half-moved partition must be restored")
-    assert(read("t/p=c/part-0") == "OLD-c", "untouched partition must stay")
-    assert(!java.nio.file.Files.exists(root.resolve("t/p=d")),
-      "brand-new published partition must be removed")
-  }
-
-  /** Drop a catalog table AND its leftover managed-warehouse directory
-    * (debris from a crashed earlier test run would fail CREATE).
-    */
-  private def resetTables(names: String*): Unit = names.foreach { n =>
-    spark.sql(s"DROP TABLE IF EXISTS `$n`")
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    val d = new java.io.File(wh, n)
-    if (d.exists) {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(); ()
-      }
-      rm(d)
-    }
-  }
-
-  test("replaceCatalogTable swaps atomically and reports row count") {
-    val t = "load_cat_t1"
-    resetTables(t, t + "__staging", t + "__old")
-    assert(Load.replaceCatalogTable(spark, Seq(1, 2, 3).toDF("v"), t) ==
-      Success(LoadReport(3, t)))
-    assert(Load.replaceCatalogTable(spark, Seq(9, 10).toDF("v"), t) ==
-      Success(LoadReport(2, t)))
-    assert(spark.table(t).as[Int].collect().sorted.toSeq == Seq(9, 10))
-    assert(!spark.catalog.tableExists(t + "__staging"))
-    assert(!spark.catalog.tableExists(t + "__old"))
-  }
-
-  test("failed catalog load preserves the previous table (the reference's ROLLBACK)") {
-    val t = "load_cat_t2"
-    resetTables(t, t + "__staging", t + "__old")
-    assert(Load.replaceCatalogTable(spark, Seq(1L, 2L, 3L).toDF("v"), t).isSuccess)
-    // mid-write failure: ANSI cast throws inside the staging write job,
-    // so the publish swap is never reached
-    val bad = Seq("not-a-number").toDF("s").select(col("s").cast("long").as("v"))
-    Load.replaceCatalogTable(spark, bad, t) match {
-      case Failure(_) => // expected
-      case Success(r) => fail(s"expected failure, got $r")
-    }
-    assert(spark.table(t).as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
-    // and a subsequent good load recovers without manual cleanup
-    assert(Load.replaceCatalogTable(spark, Seq(7L).toDF("v"), t).map(_.rows) ==
-      Success(1L))
-  }
-
-  test("qualified db.tbl destination publishes to the named database, not a mis-quoted literal") {
-    spark.sql("CREATE DATABASE IF NOT EXISTS load_qdb")
-    val t = "load_qdb.qt1"
-    Seq(t, t + "__staging", t + "__old").foreach { n =>
-      spark.sql("DROP TABLE IF EXISTS " + n.split('.').map(p => s"`$p`").mkString("."))
-      // clear leftover managed-warehouse debris (same rationale as
-      // resetTables, one directory level deeper for the database)
-      val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-      val d = new java.io.File(new java.io.File(wh, "load_qdb.db"), n.split('.').last)
-      if (d.exists) {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles.foreach(rm)
-          f.delete(); ()
-        }
-        rm(d)
-      }
-    }
-    assert(Load.replaceCatalogTable(spark, Seq(1, 2).toDF("v"), t).map(_.rows) ==
-      Success(2L))
-    // the swap (the second load) is where the old one-identifier quoting broke
-    assert(Load.replaceCatalogTable(spark, Seq(5).toDF("v"), t).map(_.rows) ==
-      Success(1L))
-    assert(spark.table(t).as[Int].collect().toSeq == Seq(5))
-    assert(!spark.catalog.tableExists(t + "__staging"))
-    assert(!spark.catalog.tableExists(t + "__old"))
-    // and no single-part debris named "load_qdb.qt1*" landed in the default db
-    assert(spark.catalog.listTables("default").collect().forall(!_.name.contains("qt1")))
-    // names that can't be quoted safely are rejected, not mis-published
-    assert(Load.replaceCatalogTable(spark, Seq(1).toDF("v"), "bad`tick").isFailure)
-  }
-
-  test("orphaned catalog backup without a destination refuses to load") {
-    val t = "load_cat_t3"
-    resetTables(t, t + "__staging", t + "__old")
-    Seq(42).toDF("v").write.saveAsTable(t + "__old")
-    val r = Load.replaceCatalogTable(spark, Seq(1).toDF("v"), t)
-    assert(r.isFailure)
-    // the backup copy is untouched and the destination was not created
-    assert(spark.table(t + "__old").as[Int].collect().toSeq == Seq(42))
-    assert(!spark.catalog.tableExists(t))
+    assert(new java.io.File(dir).list().toSeq == Seq("fresh"))
   }
 
   // ---- JDBC sink (embedded Derby — a real connection, real

@@ -1,26 +1,13 @@
 package graft.operators
 
 import graft.SparkTestBase
-import graft.core.Tables
 import org.apache.spark.sql.functions._
 
 /** Salting must be a pure physical rewrite: results identical to the
-  * direct formulation on real fixture data (plus a hand-made hot key).
+  * direct formulation, on data with a hand-made hot key.
   */
 class SkewSpec extends SparkTestBase {
   import spark.implicits._
-
-  private val sf = "/root/testdata/sf0.001"
-
-  test("saltedJoin ≡ plain join on fixture data") {
-    val l = Tables.lineitem(spark, sf)
-      .select(col("l_partkey").as("partkey"), col("l_quantity"), col("l_orderkey"))
-    val p = Tables.part(spark, sf)
-      .select(col("p_partkey").as("partkey"), col("p_brand"))
-    val plain = l.join(p, Seq("partkey"))
-    val salted = Skew.saltedJoin(l, p, "partkey", salts = 8)
-    assertSameRows(plain, salted)
-  }
 
   test("saltedSumAgg ≡ direct groupBy-sum, including a hot key") {
     // 90% of rows share one key — the shape salting exists for

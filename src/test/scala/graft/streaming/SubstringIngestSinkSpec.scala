@@ -92,7 +92,7 @@ class SubstringIngestSinkSpec extends SparkTestBase {
     assert(applied1 == 0L)
     SubstringDedup.cleanKeepFirstIncremental(idx1, batch2, k)
       .write.mode("overwrite")
-      .parquet(s"$reportDir/${MetricsStore.BatchCol}=1")
+      .parquet(s"$reportDir/${SubstringIngest.BatchCol}=1")
     // replay of batch 1 (watermark 0 < 1): recomputes the report from
     // the unchanged index and folds — the terminal state must equal a
     // clean uninterrupted run's
