@@ -7,7 +7,10 @@ import org.apache.spark.sql.SparkSession
 
 /** Minimal JDK-only XLSX reader (SURVEY.md §7.3 / §2.1 S2-S3): an xlsx
   * file is a zip of OOXML XML parts, readable with `java.util.zip` +
-  * StAX — no POI dependency (none exists in the offline jar set).
+  * StAX — no POI dependency (none exists in the offline jar set). The
+  * workbook is opened by path with `java.util.zip.ZipFile` and never
+  * held whole in memory: each consumed part streams out through the
+  * central directory into its StAX parser.
   *
   * Scope is exactly the reference's need (`src/main.py:27,30`): one
   * named sheet, string-typed cell grid, header-row offset, cell A1
@@ -28,15 +31,13 @@ object Xlsx {
       headerRow: Int = 2): Workbook =
     Workbook.fromSource(spark, readGrid(path, sheetName), headerRow, path)
 
-  /** Per-workbook memory bound of [[readGrid]]: one workbook's
-    * residency is its raw bytes (`readGrid` reads the file whole) + the
-    * parsed string grid — and NOTHING else, since round 11's
-    * central-directory streaming ([[ZipBytesParts]]) removed the
-    * inflated-part buffers that used to triple the footprint (the old
-    * 64 MB bound's rationale). The bound is therefore 4× looser now; a
-    * workbook above it still fails loudly WITH ITS PATH — a 256 MB+
-    * "workbook" is almost always a mislabeled data export that belongs
-    * in `spark.read` (house fail-loud style).
+  /** Workbook file-size bound of [[readGrid]], checked before the file
+    * is opened. The file is never held whole: parts stream out of it
+    * through the zip central directory, so one workbook's residency is
+    * the parsed string grid plus the inflater buffers. A workbook above
+    * the bound still fails loudly WITH ITS PATH — a 256 MB+ "workbook"
+    * is almost always a mislabeled data export that belongs in
+    * `spark.read` (house fail-loud style).
     */
   val MaxWorkbookBytes: Long = 256L << 20
 
@@ -55,159 +56,54 @@ object Xlsx {
   }
 
   /** Parse the named sheet of the workbook at `path` into a padded
-    * string cell grid. The file is read whole (refused loudly, with its
-    * path, above [[MaxWorkbookBytes]]; the size is checked before any
-    * byte is read) and parsed by [[readGridBytes]] under its zip-bomb
-    * bound.
-    */
-  def readGrid(path: String, sheetName: String): Seq[Seq[String]] = {
-    val bytes =
-      try {
-        val file = java.nio.file.Paths.get(path)
-        val size = java.nio.file.Files.size(file)
-        require(size <= MaxWorkbookBytes,
-          s"$path: $size bytes exceeds the workbook bound of $MaxWorkbookBytes")
-        java.nio.file.Files.readAllBytes(file)
-      } catch {
-        case e: java.io.IOException =>
-          throw new IllegalArgumentException(s"$path is not a readable xlsx: ${e.getMessage}", e)
-      }
-    readGridBytes(bytes, sheetName, path)
-  }
-
-  /** Parse the named sheet from workbook BYTES — the one zip reader,
-    * behind [[readGrid]]: no filesystem access, no temp file. Parts
-    * stream out of the bytes through the central directory
-    * ([[ZipBytesParts]]) into the StAX pipeline, each inflate bounded
-    * by `maxPartBytes`.
+    * string cell grid. The size is checked against [[MaxWorkbookBytes]]
+    * before the file is opened; parts are then opened by name through
+    * the zip central directory (`java.util.zip.ZipFile`) and streamed
+    * into the StAX parsers, each inflate bounded by `maxPartBytes`.
+    * Parts the reader never consumes (media, themes, pivot caches) are
+    * never inflated.
     *
-    * Every failure is an IllegalArgumentException naming `sourceName`:
-    * the reader's own refusals already name it (the zip-bomb message
-    * among them, passed through unchanged); anything else — a corrupt
-    * zip, truncated XML, a non-numeric shared-string index — is wrapped
-    * as "not a readable xlsx".
+    * Every failure is an IllegalArgumentException naming `path`: the
+    * reader's own refusals already name it (the zip-bomb message among
+    * them, passed through unchanged); anything else — a corrupt zip,
+    * truncated XML, a non-numeric shared-string index — is wrapped as
+    * "not a readable xlsx".
     */
-  def readGridBytes(
-      bytes: Array[Byte], sheetName: String,
-      sourceName: String = "<bytes>",
+  def readGrid(
+      path: String, sheetName: String,
       maxPartBytes: Long = MaxPartBytes): Seq[Seq[String]] =
-    try readParts(new ZipBytesParts(bytes, sourceName, maxPartBytes), sheetName)
-    catch {
+    try {
+      val size = java.nio.file.Files.size(java.nio.file.Paths.get(path))
+      require(size <= MaxWorkbookBytes,
+        s"$path: $size bytes exceeds the workbook bound of $MaxWorkbookBytes")
+      val zip = new java.util.zip.ZipFile(path)
+      try {
+        val parts = new ZipParts(zip, path, maxPartBytes)
+        val shared = readSharedStrings(parts)
+        val dateStyles = readDateStyles(parts)
+        val (sheetPart, epoch1904) = resolveSheetPart(parts, sheetName)
+        readSheet(parts, sheetPart, shared, dateStyles, epoch1904)
+      } finally zip.close()
+    } catch {
       // NumberFormatException is an IllegalArgumentException too: the
       // message test, not the type, tells a named refusal from a raw one
       case e: IllegalArgumentException
-        if e.getMessage != null && e.getMessage.contains(sourceName) => throw e
+        if e.getMessage != null && e.getMessage.contains(path) => throw e
       case e: Exception =>
-        throw new IllegalArgumentException(s"$sourceName is not a readable xlsx: $e", e)
+        throw new IllegalArgumentException(s"$path is not a readable xlsx: $e", e)
     }
 
-  private def readParts(parts: ZipBytesParts, sheetName: String): Seq[Seq[String]] = {
-    val shared = readSharedStrings(parts)
-    val dateStyles = readDateStyles(parts)
-    val (sheetPart, epoch1904) = resolveSheetPart(parts, sheetName)
-    readSheet(parts, sheetPart, shared, dateStyles, epoch1904)
-  }
-
-  /** Random-access zip parts over workbook BYTES via the zip CENTRAL
-    * DIRECTORY — no part is ever inflated into a buffer (round 11,
-    * replacing the former prefetch-everything entry map): each `open`
-    * locates the entry from the directory and STREAMS it through an
-    * Inflater, so per-workbook residency is the raw content bytes + the
-    * parsed grid, independent of how large the XML parts inflate.
-    * Never-consumed parts (media, themes, pivot caches) are never even
-    * inflated — the old blocklist is obsolete by construction.
-    *
-    * The zip-bomb refusal survives as a READ-SIDE bound: the returned
-    * stream counts inflated bytes and throws past `maxPartBytes`
-    * (sharedStrings/styles materialize parser-side state, so unbounded
-    * inflation must still cut off loudly rather than OOM).
-    *
-    * Central-directory sizes are authoritative even for streamed-writer
-    * zips (data-descriptor entries whose LOCAL headers carry zeros —
-    * the case ZipInputStream must inflate-to-skip). Zip64 workbooks
-    * (≥ 4 GiB or ≥ 65535 entries) are refused loudly — far past any
-    * sane config-workbook bound.
+  /** The workbook's parts by name. The zip-bomb refusal is a READ-SIDE
+    * bound: the returned stream counts inflated bytes and throws past
+    * `maxPartBytes` (sharedStrings/styles materialize parser-side
+    * state, so unbounded inflation must cut off loudly rather than OOM).
     */
-  private final class ZipBytesParts(
-      bytes: Array[Byte], val describe: String, maxPartBytes: Long) {
-    private def u16(off: Int): Int =
-      (bytes(off) & 0xff) | ((bytes(off + 1) & 0xff) << 8)
-    private def u32(off: Int): Long =
-      (u16(off).toLong) | (u16(off + 2).toLong << 16)
-
-    // EOCD: scan back for PK\5\6 (comment can trail, max 64 KiB)
-    private val eocd: Int = {
-      val lo = math.max(0, bytes.length - 22 - 0xffff)
-      var i = bytes.length - 22
-      while (i >= lo && !(bytes(i) == 0x50 && bytes(i + 1) == 0x4b &&
-        bytes(i + 2) == 0x05 && bytes(i + 3) == 0x06)) i -= 1
-      if (i < lo) throw new java.io.IOException(
-        s"$describe: no zip end-of-central-directory record")
-      i
-    }
-    private val nEntries = u16(eocd + 10)
-    private val cdOffset = u32(eocd + 16)
-    if (nEntries == 0xffff || cdOffset == 0xffffffffL)
-      throw new java.io.IOException(
-        s"$describe: zip64 workbook (>4 GiB or >65534 parts) — not a config workbook")
-
-    /** name → (localHeaderOffset, method, compressedSize). */
-    private val dir: Map[String, (Long, Int, Long)] = {
-      val b = Map.newBuilder[String, (Long, Int, Long)]
-      var off = cdOffset.toInt
-      var i = 0
-      while (i < nEntries) {
-        if (off + 46 > bytes.length || u32(off) != 0x02014b50L)
-          throw new java.io.IOException(
-            s"$describe: corrupt central directory at offset $off")
-        val method = u16(off + 10)
-        val csize = u32(off + 20)
-        val nameLen = u16(off + 28)
-        val extraLen = u16(off + 30)
-        val commentLen = u16(off + 32)
-        val lho = u32(off + 42)
-        if (off + 46 + nameLen + extraLen + commentLen > bytes.length)
-          throw new java.io.IOException(
-            s"$describe: central directory entry at offset $off runs past the end")
-        val name = new String(bytes, off + 46, nameLen, "UTF-8")
-        // Per-ENTRY zip64 markers (the real value lives in the zip64
-        // extra field this parser deliberately doesn't read): clamping
-        // a 0xffffffff csize/offset would read into the next entry's
-        // bytes and parse garbage — fail loudly like the EOCD-level
-        // markers above (advice r11).
-        if (csize == 0xffffffffL || lho == 0xffffffffL)
-          throw new java.io.IOException(
-            s"$describe: zip64 entry $name (csize/offset marker) — not a config workbook")
-        b += name -> ((lho, method, csize))
-        off += 46 + nameLen + extraLen + commentLen
-        i += 1
-      }
-      b.result()
-    }
-
+  private final class ZipParts(
+      zip: java.util.zip.ZipFile, val describe: String, maxPartBytes: Long) {
     def open(name: String): Option[java.io.InputStream] =
-      dir.get(name).map { case (lho, method, csize) =>
-        val o = lho.toInt
-        if (o + 30 > bytes.length || u32(o) != 0x04034b50L)
-          throw new java.io.IOException(
-            s"$describe: corrupt local header for $name at offset $o")
-        // LOCAL name/extra lengths (may differ from the CD's extra)
-        val dataOff = o + 30 + u16(o + 26) + u16(o + 28)
-        val raw = new java.io.ByteArrayInputStream(
-          bytes, dataOff, math.min(csize, (bytes.length - dataOff).toLong).toInt)
-        val stream = method match {
-          case 0 => raw // stored
-          case 8 => new java.util.zip.InflaterInputStream(
-            raw, new java.util.zip.Inflater(true), 64 * 1024)
-          case m => throw new java.io.IOException(
-            s"$describe: zip part $name uses unsupported compression method $m")
-        }
-        new BoundedStream(stream, name)
-      }
+      Option(zip.getEntry(name)).map(e => new BoundedStream(zip.getInputStream(e), name))
 
-    /** Counts inflated bytes and refuses past the bound — the zip-bomb
-      * guard, now enforced at read time instead of prefetch time.
-      */
+    /** Counts inflated bytes and refuses past the bound. */
     private final class BoundedStream(in: java.io.InputStream, name: String)
       extends java.io.FilterInputStream(in) {
       private var seen = 0L
@@ -274,7 +170,7 @@ object Xlsx {
     * `<numFmt>` codes are classified by [[isDateFormatCode]]; only the
     * `<cellXfs>` list maps cell `s` indexes (cellStyleXfs does not).
     */
-  private def readDateStyles(parts: ZipBytesParts): IndexedSeq[Boolean] =
+  private def readDateStyles(parts: ZipParts): IndexedSeq[Boolean] =
     withPart(parts, "xl/styles.xml") { r =>
       val customDate = mutable.Map.empty[Int, Boolean]
       val flags = mutable.ArrayBuffer.empty[Boolean]
@@ -363,11 +259,11 @@ object Xlsx {
   }
 
   private def withPart[A](
-      parts: ZipBytesParts, name: String)(f: XMLStreamReader => A): Option[A] =
+      parts: ZipParts, name: String)(f: XMLStreamReader => A): Option[A] =
     parts.open(name).map { in =>
       val r = factory.createXMLStreamReader(in)
-      // the zip-bomb refusal fires inside the parser's reads now
-      // (read-time bound, ZipBytesParts) — unwrap it from any StAX
+      // the zip-bomb refusal fires inside the parser's reads
+      // (read-time bound, ZipParts) — unwrap it from any StAX
       // wrapping so callers keep seeing the named IllegalArgumentException
       try f(r)
       catch {
@@ -384,7 +280,7 @@ object Xlsx {
   /** sharedStrings.xml: each <si> is one string — concatenate every <t>
     * inside it (plain or rich-text runs), EXCLUDING phonetic guides
     * (<rPh>/<phoneticPr> furigana would otherwise corrupt the value). */
-  private def readSharedStrings(parts: ZipBytesParts): IndexedSeq[String] =
+  private def readSharedStrings(parts: ZipParts): IndexedSeq[String] =
     withPart(parts, "xl/sharedStrings.xml") { r =>
       val out = mutable.ArrayBuffer.empty[String]
       val cur = new StringBuilder
@@ -421,7 +317,7 @@ object Xlsx {
     * would double the inflate+parse cost on every workbook). Returns
     * (sheet part, 1904-epoch flag).
     */
-  private def resolveSheetPart(parts: ZipBytesParts, sheetName: String): (String, Boolean) = {
+  private def resolveSheetPart(parts: ZipParts, sheetName: String): (String, Boolean) = {
     var epoch1904 = false
     val rid = withPart(parts, "xl/workbook.xml") { r =>
       var found: Option[String] = None
@@ -460,7 +356,7 @@ object Xlsx {
     * values resolved per cell type, gaps null-filled.
     */
   private def readSheet(
-      parts: ZipBytesParts, part: String, shared: IndexedSeq[String],
+      parts: ZipParts, part: String, shared: IndexedSeq[String],
       dateStyles: IndexedSeq[Boolean] = IndexedSeq.empty,
       epoch1904: Boolean = false): Seq[Seq[String]] = {
     case class Cell(row: Int, colIdx: Int, value: String)

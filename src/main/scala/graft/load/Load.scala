@@ -1,7 +1,8 @@
 package graft.load
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 import scala.util.{Failure, Success, Try}
 
@@ -33,7 +34,10 @@ object Load {
 
   /** K2/K3: staged atomic-ish replace of a parquet destination path
     * ([[stagedSwap]]). Returns K4's row-count report on success; K5's
-    * structured failure otherwise (destination preserved).
+    * structured failure otherwise (destination preserved). The count is
+    * an observed metric of the write job itself, not a second read of
+    * the staged files; an unnamed [[Observation]] keeps concurrent
+    * loads from sharing a metric name.
     *
     * `decorateStaging`: sidecar metadata (underscore-prefixed files,
     * which Spark readers ignore) written INTO the staging dir so it
@@ -46,10 +50,11 @@ object Load {
       decorateStaging: Path => Unit = _ => ()): Try[LoadReport] = {
     val result = Try {
       val rows = stagedSwap(spark, destination) { staging =>
-        df.write.mode(SaveMode.Overwrite).parquet(staging.toString)
+        val written = Observation()
+        df.observe(written, count(lit(1)).as("rows"))
+          .write.mode(SaveMode.Overwrite).parquet(staging.toString)
         decorateStaging(staging)
-        // K4: count back what was staged, read with the writer's schema
-        spark.read.schema(df.schema).parquet(staging.toString).count()
+        written.get("rows").asInstanceOf[Long]
       }
       LoadReport(rows, destination)
     }

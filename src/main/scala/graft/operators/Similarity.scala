@@ -563,7 +563,7 @@ object Similarity {
     * about where the MATRIX fits, the quadratic work is the operator's
     * contract either way (the 100 TB lane is [[nearDupPairsApprox]]).
     */
-  private[graft] val MaxBruteKernelElements = sys.env.get("SPARK_GRAFT_BRUTE_KERNEL_ELEMS").map(_.toLong).getOrElse(32L * 1000 * 1000)
+  private[graft] val MaxBruteKernelElements: Long = 32L * 1000 * 1000
 
   /** Exact near-duplicate pairs by cosine ≥ tau (upper-triangle brute
     * kernel over unit vectors — the exact baseline; `nearDupPairsApprox`

@@ -18,7 +18,17 @@ import org.apache.spark.sql.functions._
   * the base plan copied into the union four times); `cubeLabeled` is
   * one Aggregate over one Catalyst `Expand` — one shuffle. A ScalaTest
   * property asserts multiset equality of the two under every
-  * [[PandasCompat]] combination.
+  * `pandasExact` setting.
+  *
+  * `pandasExact` (opt-in; off keeps the engine's SQL semantics, the
+  * better ones and what every oracle encodes) flips the two rollup
+  * divergences the register documents:
+  *  - D2: a group whose every measure value is null sums to 0, as
+  *    pandas `sum(min_count=0)` does, instead of SQL's null;
+  *  - D6: rows with a null in any non-rolled grouping key are EXCLUDED
+  *    from the re-aggregation, as pandas `groupby` silently drops NaN
+  *    keys — the base copies of those rows still pass through the
+  *    union untouched, exactly like the reference.
   *
   * `byUnion` passes base rows through unaggregated, while the grouping-
   * sets form aggregates every set including the finest. Without a
@@ -29,37 +39,21 @@ import org.apache.spark.sql.functions._
   */
 object Rollup {
 
-  /** Opt-in pandas-exact toggles for the rollup divergences the
-    * register documents (round 11 — VERDICT r10 "missing" #3):
-    *  - `allNullSumZero` (D2): a group whose every measure value is
-    *    null sums to 0, as pandas `sum(min_count=0)` does, instead of
-    *    SQL's null.
-    *  - `dropNullKeyGroups` (D6): rows with a null in any non-rolled
-    *    grouping key are EXCLUDED from the re-aggregation, as pandas
-    *    `groupby` silently drops NaN keys — the base copies of those
-    *    rows still pass through the union untouched, exactly like the
-    *    reference.
-    * Defaults preserve the engine's SQL semantics (the better ones,
-    * and what every oracle encodes).
-    */
-  final case class PandasCompat(
-      allNullSumZero: Boolean = false, dropNullKeyGroups: Boolean = false)
-
   /** Re-aggregate `df` after overwriting `rollCol` with a constant label.
     * `grain` must list every output key column (including `rollCol`);
     * `measures` are summed with their original names kept.
     */
   private def relabelAgg(
       df: DataFrame, grain: Seq[String], rollCol: String, label: String,
-      measures: Seq[String], compat: PandasCompat = PandasCompat()): DataFrame = {
+      measures: Seq[String], pandasExact: Boolean): DataFrame = {
     val kept =
-      if (!compat.dropNullKeyGroups) df
+      if (!pandasExact) df
       else grain.filterNot(_ == rollCol)
         .foldLeft(df)((d, k) => d.where(col(k).isNotNull))
     val relabeled = kept.withColumn(rollCol, lit(label))
     val aggs = measures.map { m =>
       val s = sum(col(m))
-      (if (compat.allNullSumZero) coalesce(s, lit(0L)) else s).as(m)
+      (if (pandasExact) coalesce(s, lit(0L)) else s).as(m)
     }
     relabeled.groupBy(grain.map(col): _*).agg(aggs.head, aggs.tail: _*)
   }
@@ -68,10 +62,10 @@ object Rollup {
   def byUnion(
       base: DataFrame, grain: Seq[String], measures: Seq[String],
       roll1: (String, String), roll2: (String, String),
-      compat: PandasCompat = PandasCompat()): DataFrame = {
-    val r1 = relabelAgg(base, grain, roll1._1, roll1._2, measures, compat)
+      pandasExact: Boolean = false): DataFrame = {
+    val r1 = relabelAgg(base, grain, roll1._1, roll1._2, measures, pandasExact)
     val withR1 = base.unionByName(r1)
-    val r2 = relabelAgg(withR1, grain, roll2._1, roll2._2, measures, compat)
+    val r2 = relabelAgg(withR1, grain, roll2._1, roll2._2, measures, pandasExact)
     withR1.unionByName(r2)
   }
 
@@ -80,22 +74,22 @@ object Rollup {
     * `Dataset.groupingSets`. One shuffle through a Catalyst `Expand`
     * node; partial aggregation still combines map-side per grouping set.
     * `grouping()` indicators (legal only inside the aggregate) drive the
-    * label substitution and the compat rules, which run as a projection
-    * and filter over the one aggregate:
+    * label substitution and the `pandasExact` rules, which run as a
+    * projection and filter over the one aggregate:
     *  - `rowKey` joins the finest set only, making it a passthrough of
     *    the base rows (see the object doc);
-    *  - `allNullSumZero` coalesces the rolled sets' sums to 0;
-    *  - `dropNullKeyGroups` drops rolled groups with a null non-rolled
-    *    key. The (label2, label1) cell re-aggregates roll1's rows, and
-    *    under D6 those exist only for base rows whose `roll2` column is
-    *    non-null, so that cell sums and counts just those rows (no such
-    *    row: no cell).
+    *  - D2 coalesces the rolled sets' sums to 0;
+    *  - D6 drops rolled groups with a null non-rolled key. The
+    *    (label2, label1) cell re-aggregates roll1's rows, and under D6
+    *    those exist only for base rows whose `roll2` column is non-null,
+    *    so that cell sums and counts just those rows (no such row: no
+    *    cell).
     */
   def cubeLabeled(
       base: DataFrame, grain: Seq[String], measures: Seq[String],
       roll1: (String, String), roll2: (String, String),
       rowKey: Seq[String] = Nil,
-      compat: PandasCompat = PandasCompat()): DataFrame = {
+      pandasExact: Boolean = false): DataFrame = {
     val (c1, l1) = roll1
     val (c2, l2) = roll2
     val keep = grain.filterNot(c => c == c1 || c == c2)
@@ -106,7 +100,7 @@ object Rollup {
     // roll2 test below sees real values even in the sets that roll it
     val fromRoll1 = col(c2).isNotNull
     val cellAggs =
-      if (!compat.dropNullKeyGroups) Nil
+      if (!pandasExact) Nil
       else measures.map(m => sum(when(fromRoll1, col(m))).as(s"_r1_$m")) :+
         count(when(fromRoll1, lit(1))).as("_r1_n")
     val aggs =
@@ -120,14 +114,15 @@ object Rollup {
     val rolled = rolled1 || rolled2
     val cell = rolled1 && rolled2
     val kept =
-      if (!compat.dropNullKeyGroups) agg
+      if (!pandasExact) agg
       else agg.where(!rolled || (
         keep.map(col(_).isNotNull).foldLeft(lit(true))(_ && _) &&
           (rolled1 || col(c1).isNotNull) && (rolled2 || col(c2).isNotNull) &&
           (!cell || col("_r1_n") > 0)))
     val measureCols = measures.map { m =>
-      val v = if (!compat.dropNullKeyGroups) col(m) else when(cell, col(s"_r1_$m")).otherwise(col(m))
-      (if (compat.allNullSumZero) when(rolled, coalesce(v, lit(0L))).otherwise(v) else v).as(m)
+      if (!pandasExact) col(m).as(m)
+      else when(rolled, coalesce(when(cell, col(s"_r1_$m")).otherwise(col(m)), lit(0L)))
+        .otherwise(col(m)).as(m)
     }
     kept
       .withColumn(c1, when(rolled1, lit(l1)).otherwise(col(c1)))

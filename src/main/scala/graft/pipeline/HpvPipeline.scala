@@ -49,7 +49,8 @@ import graft.ops.{Clean, Derive, Rollup}
   *    scrubs to null beside a blank one, and D7 repeats an academic
   *    year across workbooks — and without the key such rows would
   *    merge into one.
-  * The load that follows pays the write, the count-back and the swap.
+  * The load that follows pays the write (which also counts the rows)
+  * and the swap.
   */
 object HpvPipeline {
 
@@ -62,14 +63,10 @@ object HpvPipeline {
     * encodes. [[Compat.PandasExact]] completes reference parity to the
     * letter for migrations that diff outputs against the legacy run.
     */
-  final case class Compat(
-      pandasTitle: Boolean = false,
-      rollup: Rollup.PandasCompat = Rollup.PandasCompat())
+  sealed trait Compat
   object Compat {
-    val Off: Compat = Compat()
-    val PandasExact: Compat =
-      Compat(pandasTitle = true, rollup = Rollup.PandasCompat(
-        allNullSumZero = true, dropNullKeyGroups = true))
+    case object Off extends Compat
+    case object PandasExact extends Compat
   }
 
   val IdCol = "Local authority"
@@ -188,7 +185,7 @@ object HpvPipeline {
       compat: Compat): Map[Option[String], String] = {
     val c = col(IdCol)
     local(spark, IdCol, names)
-      .select(c, if (compat.pandasTitle) Derive.cleanNamePandasTitle(c) else Derive.cleanName(c))
+      .select(c, if (compat == Compat.PandasExact) Derive.cleanNamePandasTitle(c) else Derive.cleanName(c))
       .collect()
       .map(r => Option(r.getString(0)) -> r.getString(1))
       .toMap
@@ -244,7 +241,7 @@ object HpvPipeline {
     val rolled = Rollup.cubeLabeled(
       typed, Grain, Measures,
       roll1 = ("Gender_Name", "Both"), roll2 = ("Year_Group_Number", "All"),
-      rowKey = Seq(RowKey), compat = compat.rollup)
+      rowKey = Seq(RowKey), pandasExact = compat == Compat.PandasExact)
     rolled.toDF(rolled.columns.map(_.toUpperCase).toIndexedSeq: _*)
   }
 

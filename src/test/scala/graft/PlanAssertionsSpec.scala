@@ -419,44 +419,6 @@ class PlanAssertionsSpec extends SparkTestBase {
       Seq("*", "", "10", "10.0", "30", "20")))
   }
 
-  /** Jobs launched by `body`'s thread (and threads it starts), counted
-    * by a listener between two fence jobs: the listener bus delivers in
-    * order, so once the closing fence arrives every job of `body` has.
-    */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val tag = "graft.test.budget"
-    val token = java.util.UUID.randomUUID().toString
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val fences = new java.util.concurrent.LinkedBlockingQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty(tag)).foreach {
-          case t if t == token + "/fence" => fences.put(t)
-          case t if t == token => jobs.incrementAndGet()
-          case _ =>
-        }
-    }
-    def fence(): Unit = {
-      sc.setLocalProperty(tag, token + "/fence")
-      sc.parallelize(Seq(1), 1).count()
-      assert(fences.poll(60, java.util.concurrent.TimeUnit.SECONDS) != null,
-        "listener bus did not deliver the fence job")
-    }
-    sc.addSparkListener(listener)
-    try {
-      fence()
-      sc.setLocalProperty(tag, token)
-      val out = body
-      fence()
-      (out, jobs.get())
-    } finally {
-      sc.setLocalProperty(tag, null)
-      sc.removeSparkListener(listener)
-    }
-  }
-
   test("HPV transform plans the cycle without launching a Spark job") {
     val wbs = hpvWorkbooks
     val (fact, jobs) = jobsDuring(

@@ -165,11 +165,10 @@ class XlsxSpec extends SparkTestBase {
       "xl/worksheets/sheet1.xml" ->
         """<?xml version="1.0"?><worksheet xmlns="x"><sheetData/></worksheet>""",
       "xl/worksheets/sheet2.xml" -> sheet2Xml))
-    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p))
     val e = intercept[IllegalArgumentException] {
-      Xlsx.readGridBytes(bytes, "Local_authority", "bomb.xlsx", maxPartBytes = 1024L * 1024)
+      Xlsx.readGrid(p, "Local_authority", maxPartBytes = 1024L * 1024)
     }
-    assert(e.getMessage.contains("zip bomb") && e.getMessage.contains("bomb.xlsx"))
+    assert(e.getMessage.contains("zip bomb") && e.getMessage.contains(p), e.getMessage)
     // the driver path (readGrid → readWorkbook) carries the default bound
     val big = bigSheetXlsx(mib = 150).toString
     assert(150L * 1024 * 1024 > Xlsx.MaxPartBytes)
@@ -263,11 +262,10 @@ class XlsxSpec extends SparkTestBase {
   }
 
   test("round 11: a 150 MB-inflating sheet part streams through the parser, no part-sized buffer") {
-    val bytes = java.nio.file.Files.readAllBytes(bigSheetXlsx(mib = 150))
-    assert(bytes.length < 16 * 1024 * 1024, "fixture should compress small")
+    val big = bigSheetXlsx(mib = 150)
+    assert(java.nio.file.Files.size(big) < 16 * 1024 * 1024, "fixture should compress small")
     val ((grid), peak) = peakLiveHeapDuring {
-      Xlsx.readGridBytes(bytes, "Local_authority", "big.xlsx",
-        maxPartBytes = 512L * 1024 * 1024)
+      Xlsx.readGrid(big.toString, "Local_authority", maxPartBytes = 512L * 1024 * 1024)
     }
     // content identical to the plain fixture's sheet
     assert(grid(3)(0) == "camden" && grid(4)(0) == "barnet")
@@ -306,7 +304,7 @@ class XlsxSpec extends SparkTestBase {
 
   test("readGrid refuses a workbook above MaxWorkbookBytes, naming the path") {
     // sparse file: its length is set, but no byte is written — and none
-    // is read, since the size check runs before readAllBytes
+    // is read, since the size check runs before the file is opened
     val f = java.nio.file.Files.createTempFile("graft_oversize", ".xlsx")
     try {
       val raf = new java.io.RandomAccessFile(f.toFile, "rw")
@@ -315,6 +313,26 @@ class XlsxSpec extends SparkTestBase {
       assert(e.getMessage.contains(f.toString) &&
         e.getMessage.contains("exceeds the workbook bound"), e.getMessage)
     } finally java.nio.file.Files.delete(f)
+  }
+
+  test("a zip64 workbook (65,536 filler parts past the fixture) is read") {
+    // more than 65,534 entries: ZipOutputStream writes zip64 end records
+    val f = java.nio.file.Files.createTempFile("graft_zip64", ".xlsx")
+    val zos = new ZipOutputStream(java.nio.file.Files.newOutputStream(f))
+    def put(name: String, content: String): Unit = {
+      zos.putNextEntry(new ZipEntry(name)); zos.write(content.getBytes("UTF-8")); zos.closeEntry()
+    }
+    put("xl/workbook.xml", workbookXml)
+    put("xl/_rels/workbook.xml.rels", relsXml)
+    put("xl/sharedStrings.xml", sharedXml)
+    put("xl/worksheets/sheet1.xml",
+      """<?xml version="1.0"?><worksheet xmlns="x"><sheetData/></worksheet>""")
+    put("xl/worksheets/sheet2.xml", sheet2Xml)
+    (0 until 65536).foreach(i => put(s"xl/filler/f$i", ""))
+    zos.close()
+    try assert(Xlsx.readGrid(f.toString, "Local_authority") ==
+      Xlsx.readGrid(fixture, "Local_authority"))
+    finally java.nio.file.Files.delete(f)
   }
 
   test("cells without r attributes fall back to row/column cursors") {

@@ -54,6 +54,35 @@ class LoadSpec extends SparkTestBase {
     assert(spark.read.parquet(dir).as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
   }
 
+  test("replaceTable counts rows in the write job itself, for filtered and empty frames") {
+    val dir = tempDest("graft_load_observed")
+    // 4 partitions, a third of the rows filtered out in each
+    val filtered = spark.range(0, 10000, 1, 4).where(col("id") % 3 =!= 0).toDF("v")
+    val (r, jobs) = jobsDuring(Load.replaceTable(spark, filtered, dir))
+    assert(r == Success(LoadReport(6666, dir)), s"got $r")
+    assert(jobs == 1, s"replaceTable ran $jobs jobs; the write alone must report the count")
+    assert(spark.read.parquet(dir).count() == 6666)
+    val empty = spark.range(0, 100, 1, 2).where(col("id") < 0).toDF("v")
+    assert(Load.replaceTable(spark, empty, dir) == Success(LoadReport(0, dir)))
+    assert(spark.read.parquet(dir).count() == 0)
+  }
+
+  test("a retried write task is counted once (child JVM at local[2,3])") {
+    // the shared local[4] session allows no task retry; local[2,3] does
+    val dir = tempDest("graft_load_retry")
+    val cmd = Seq(java.nio.file.Paths.get(sys.props("java.home"), "bin", "java").toString, "-Xmx1g") ++
+      org.apache.spark.launcher.JavaModuleOptions.defaultModuleOptionArray() ++
+      Seq("-cp", sys.props("java.class.path"), "graft.load.RetriedLoadMain", dir)
+    val log = java.nio.file.Files.createTempFile("graft_load_retry", ".log")
+    val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(true)
+      .redirectOutput(log.toFile).start()
+    val exited = proc.waitFor(5, java.util.concurrent.TimeUnit.MINUTES)
+    if (!exited) proc.destroyForcibly()
+    val out = new String(java.nio.file.Files.readAllBytes(log), "UTF-8")
+    assert(exited && proc.exitValue() == 0, out)
+    assert(out.contains("reported=6666 onDisk=6666"), out)
+  }
+
   // ---- stagedSwap's pre-swap states, driven through replaceTable ----
 
   private def tempDest(prefix: String): String =
@@ -174,5 +203,31 @@ class LoadSpec extends SparkTestBase {
       Iterator.continually(rs).takeWhile(_.next()).map(x => (x.getLong(1), x.getLong(2))).toList
     }
     assert(got == List((1L, 100L), (2L, 200L)), "rollback must preserve previous contents")
+  }
+}
+
+/** Child-JVM half of LoadSpec's retry case: a UDF fails the first
+  * attempt of one partition, so the write succeeds only through a task
+  * retry; prints the reported row count and the count on disk.
+  * Usage: RetriedLoadMain <destination>
+  */
+object RetriedLoadMain {
+  def main(args: Array[String]): Unit = {
+    import org.apache.spark.TaskContext
+    val spark = graft.core.Sessions.configure(
+      org.apache.spark.sql.SparkSession.builder().master("local[2,3]"), 2).getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    val failFirstAttempt = udf { (v: Long) =>
+      val tc = TaskContext.get()
+      if (tc.partitionId() == 1 && tc.attemptNumber() == 0)
+        throw new IllegalStateException("injected first-attempt failure")
+      v
+    }
+    val df = spark.range(0, 10000, 1, 3).where(col("id") % 3 =!= 0)
+      .select(failFirstAttempt(col("id")).as("v"))
+    val reported = Load.replaceTable(spark, df, args(0)).get.rows
+    val onDisk = spark.read.parquet(args(0)).count()
+    println(s"reported=$reported onDisk=$onDisk")
+    spark.stop()
   }
 }

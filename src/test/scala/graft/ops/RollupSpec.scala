@@ -10,7 +10,7 @@ import scala.util.Random
   * labeled-cube formulation must agree as multisets on arbitrary data —
   * including null measures (D2), null roll-key values (D6) and, once the
   * cube carries a row key, duplicate grain rows — under every
-  * [[Rollup.PandasCompat]] combination.
+  * `pandasExact` setting.
   * (Property-style via seeded random inputs; scalatestplus bridge isn't
   * in the offline dependency set.)
   */
@@ -49,8 +49,7 @@ class RollupSpec extends SparkTestBase {
     }
   }
 
-  private val compats = for (z <- Seq(false, true); d <- Seq(false, true))
-    yield Rollup.PandasCompat(allNullSumZero = z, dropNullKeyGroups = d)
+  private val compats = Seq(false, true)
 
   /** Random rows over a small key space, so the grain repeats; every key
     * and the first measure can be null.
@@ -76,8 +75,8 @@ class RollupSpec extends SparkTestBase {
       val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
       val a = Rollup.byUnion(df, grain, ms, ("g1", "Both"), ("g2", "All"), compat)
       val b = Rollup.cubeLabeled(df.withColumn("_rk", monotonically_increasing_id()),
-        grain, ms, ("g1", "Both"), ("g2", "All"), rowKey = Seq("_rk"), compat = compat)
-      withClue(s"seed=$seed compat=$compat: ") { assertSameRows(a, b) }
+        grain, ms, ("g1", "Both"), ("g2", "All"), rowKey = Seq("_rk"), pandasExact = compat)
+      withClue(s"seed=$seed pandasExact=$compat: ") { assertSameRows(a, b) }
     }
   }
 
@@ -107,7 +106,7 @@ class RollupSpec extends SparkTestBase {
     val meas = Seq("m1", "m2")
     val sql = Rollup.byUnion(df, grain, meas, ("g1", "Both"), ("g2", "All"))
     val compat = Rollup.byUnion(df, grain, meas, ("g1", "Both"), ("g2", "All"),
-      Rollup.PandasCompat(allNullSumZero = true, dropNullKeyGroups = true))
+      pandasExact = true)
     // D2: the (Both, 8, a) gender-rollup group has only null m1 values ->
     // SQL null, pandas 0
     def cell(out: org.apache.spark.sql.DataFrame, g1: String, g2: String) =

@@ -92,7 +92,8 @@ class HpvPipelineSpec extends SparkTestBase {
     val typed = HpvPipeline.Measures.foldLeft(scrubbed)((d, m) =>
       d.withColumn(m, trim(col(m)).cast(LongType)))
     val rolled = Rollup.byUnion(typed, HpvPipeline.Grain, HpvPipeline.Measures,
-      ("Gender_Name", "Both"), ("Year_Group_Number", "All"), compat.rollup)
+      ("Gender_Name", "Both"), ("Year_Group_Number", "All"),
+      pandasExact = compat == HpvPipeline.Compat.PandasExact)
     rolled.toDF(rolled.columns.map(_.toUpperCase).toIndexedSeq: _*)
   }
 
