@@ -10,10 +10,17 @@ For each seed in A..B it runs `perfbench/run.py` once from each checkout
 BENCHMARK.json), alternating which side goes first, so drift in the host's load lands on both sides. Then, per metric,
 it prints each side's median and [q1, q3] and how many pairs the change
 won ("better" is taken from the parent's BENCHMARK.json; per-layer
-metrics count lower as better unless declared otherwise). A run that
-reports failed ops is counted and the failures are printed; a run that
-exits non-zero stops the comparison. `--out` keeps every finished run's
-result line as it lands, one JSON object a line.
+metrics count lower as better unless declared otherwise), with two
+verdicts:
+
+- claim: the change won at least 9/10 of the pairs, and its median beats
+  the parent's by more than the parent's q3 - q1;
+- bound: the change's median is within the parent's median times
+  (1 + the metric's BENCHMARK.json bound); "-" for a metric without one.
+
+A run that reports failed ops is counted and the failures are printed; a
+run that exits non-zero stops the comparison. `--out` keeps every finished
+run's result line as it lands, one JSON object a line.
 """
 
 import argparse
@@ -47,6 +54,22 @@ def quartiles(xs):
     return q1, q2, q3
 
 
+def verdicts(pq, cq, wins, n, lower, bound):
+    """(claim, bound) for one metric from each side's (q1, median, q3).
+
+    claim: the change won at least 9/10 of the n pairs and its median
+    beats the parent's by more than the parent's q3 - q1. bound: the
+    change's median is no worse than the parent's by more than `bound`
+    (a fraction of the parent's median); None when `bound` is None.
+    """
+    gap = pq[1] - cq[1] if lower else cq[1] - pq[1]
+    claim = wins * 10 >= 9 * n and gap > pq[2] - pq[0]
+    if bound is None:
+        return claim, None
+    limit = pq[1] * (1 + bound) if lower else pq[1] * (1 - bound)
+    return claim, (cq[1] <= limit if lower else cq[1] >= limit)
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("parent")
@@ -63,6 +86,7 @@ def main():
     seconds = bench["run_seconds"]
     better = {m["name"]: m.get("better", "lower")
               for m in bench["end_to_end"] + bench.get("per_layer", [])}
+    bounds = {m["name"]: m["bound"] for m in bench["end_to_end"] if "bound" in m}
 
     sides = {"parent": a.parent, "change": a.change}
     results = {"parent": [], "change": []}
@@ -87,16 +111,18 @@ def main():
     print("failed ops: parent %d, change %d" % (
         sum(r["failed"] for r in results["parent"]),
         sum(r["failed"] for r in results["change"])))
-    print("%-28s %26s %26s %6s" % ("metric", "parent median [q1, q3]",
-                                    "change median [q1, q3]", "wins"))
+    print("%-28s %26s %26s %6s %5s %5s" % ("metric", "parent median [q1, q3]",
+                                            "change median [q1, q3]", "wins", "claim", "bound"))
     for name in results["parent"][0]["metrics"]:
         p = [r["metrics"][name]["value"] for r in results["parent"]]
         c = [r["metrics"][name]["value"] for r in results["change"]]
         lower = better.get(name, "lower") == "lower"
         wins = sum(1 for x, y in zip(p, c) if (y < x if lower else y > x))
         pq, cq = quartiles(p), quartiles(c)
-        print("%-28s %10.4g [%6.4g, %6.4g] %10.4g [%6.4g, %6.4g] %3d/%d" % (
-            name, pq[1], pq[0], pq[2], cq[1], cq[0], cq[2], wins, n))
+        c_ok, b_ok = verdicts(pq, cq, wins, n, lower, bounds.get(name))
+        print("%-28s %10.4g [%6.4g, %6.4g] %10.4g [%6.4g, %6.4g] %3d/%d %5s %5s" % (
+            name, pq[1], pq[0], pq[2], cq[1], cq[0], cq[2], wins, n,
+            "yes" if c_ok else "no", "-" if b_ok is None else "yes" if b_ok else "no"))
 
 
 if __name__ == "__main__":

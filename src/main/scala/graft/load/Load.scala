@@ -1,9 +1,13 @@
 package graft.load
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.util.QueryExecutionListener
 
+import scala.concurrent.{Await, Promise}
+import scala.concurrent.duration._
 import scala.util.{Failure, Success, Try}
 
 /** The HPV pipeline's sink, with the reference's truncate-then-load
@@ -35,9 +39,8 @@ object Load {
   /** K2/K3: staged atomic-ish replace of a parquet destination path
     * ([[stagedSwap]]). Returns K4's row-count report on success; K5's
     * structured failure otherwise (destination preserved). The count is
-    * an observed metric of the write job itself, not a second read of
-    * the staged files; an unnamed [[Observation]] keeps concurrent
-    * loads from sharing a metric name.
+    * an observed metric of the write job itself ([[writeCounted]]), not
+    * a second read of the staged files.
     *
     * `decorateStaging`: sidecar metadata (underscore-prefixed files,
     * which Spark readers ignore) written INTO the staging dir so it
@@ -50,15 +53,38 @@ object Load {
       decorateStaging: Path => Unit = _ => ()): Try[LoadReport] = {
     val result = Try {
       val rows = stagedSwap(spark, destination) { staging =>
-        val written = Observation()
-        df.observe(written, count(lit(1)).as("rows"))
-          .write.mode(SaveMode.Overwrite).parquet(staging.toString)
+        val rows = writeCounted(spark, df, staging.toString)
         decorateStaging(staging)
-        written.get("rows").asInstanceOf[Long]
+        rows
       }
       LoadReport(rows, destination)
     }
     report(result, destination)
+  }
+
+  /** Writes `df` as parquet to `path` and returns the rows written,
+    * counted by a uniquely named `observe` metric of the write job (a
+    * retried task counts once). A listener registered for the write alone reads the metric
+    * when the write succeeds. Spark's `Observation` is not used: once
+    * registered, its session-wide listener re-plans every FAILED query
+    * on the listener bus, where a failure in planning throws again and
+    * is logged as a listener ERROR.
+    */
+  private def writeCounted(spark: SparkSession, df: DataFrame, path: String): Long = {
+    val name = s"graft_load_rows_${java.util.UUID.randomUUID()}"
+    val rows = Promise[Long]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        qe.observedMetrics.get(name).foreach(m => rows.trySuccess(m.getLong(0)))
+      // the plan of a failed query is not touched: its lazy phases would re-run
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      df.observe(name, count(lit(1)).as("rows")).write.mode(SaveMode.Overwrite).parquet(path)
+      // the listener bus delivers the write's end asynchronously
+      Await.result(rows.future, 5.minutes)
+    } finally spark.listenerManager.unregister(listener)
   }
 
   /** Publish whatever `stage` writes into `<destination>__staging` as

@@ -1,11 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** The reference's rollup-by-union pattern (SURVEY.md §2.5 A1-A3;
-  * reference `src/main.py:87-119`) and its single-shuffle grouping-sets
-  * reformulation.
+  * reference `src/main.py:87-119`) in three equivalent forms.
   *
   * Semantics (note N5): the second rollup runs over base ∪ first-rollup,
   * so the (label2, label1) cell aggregates the already-rolled rows —
@@ -14,11 +15,18 @@ import org.apache.spark.sql.functions._
   * label1 coordinate is label1, so re-summing them yields the grand
   * total, the cube's (ALL, ALL) cell).
   *
-  * `byUnion` is the row-for-row faithful translation (two shuffles, and
-  * the base plan copied into the union four times); `cubeLabeled` is
-  * one Aggregate over one Catalyst `Expand` — one shuffle. A ScalaTest
-  * property asserts multiset equality of the two under every
-  * `pandasExact` setting.
+  *  - `byUnion` is the row-for-row faithful translation (two shuffles,
+  *    and the base plan copied into the union four times);
+  *  - `cubeLabeled` is one Aggregate over one Catalyst `Expand` — one
+  *    shuffle. It aggregates every set including the finest, so it
+  *    agrees with `byUnion` only when `base` is unique at (grain);
+  *  - `labeledCubeRows` computes the same cube over rows already on the
+  *    driver, with no Spark job: each base row passes through as it is,
+  *    so it agrees with `byUnion` on any input, duplicate grain rows
+  *    included. The HPV fact table (about 12k rows) is rolled up this way.
+  *
+  * A ScalaTest property asserts multiset equality of each with
+  * `byUnion`, under every `pandasExact` setting the form takes.
   *
   * `pandasExact` (opt-in; off keeps the engine's SQL semantics, the
   * better ones and what every oracle encodes) flips the two rollup
@@ -29,13 +37,6 @@ import org.apache.spark.sql.functions._
   *    from the re-aggregation, as pandas `groupby` silently drops NaN
   *    keys — the base copies of those rows still pass through the
   *    union untouched, exactly like the reference.
-  *
-  * `byUnion` passes base rows through unaggregated, while the grouping-
-  * sets form aggregates every set including the finest. Without a
-  * `rowKey` the two agree only when `base` is unique at (grain); with a
-  * `rowKey` (a non-string column set unique per base row) the finest set
-  * is a passthrough and they agree on any input, duplicate grain rows
-  * included.
   */
 object Rollup {
 
@@ -74,59 +75,77 @@ object Rollup {
     * `Dataset.groupingSets`. One shuffle through a Catalyst `Expand`
     * node; partial aggregation still combines map-side per grouping set.
     * `grouping()` indicators (legal only inside the aggregate) drive the
-    * label substitution and the `pandasExact` rules, which run as a
-    * projection and filter over the one aggregate:
-    *  - `rowKey` joins the finest set only, making it a passthrough of
-    *    the base rows (see the object doc);
-    *  - D2 coalesces the rolled sets' sums to 0;
-    *  - D6 drops rolled groups with a null non-rolled key. The
-    *    (label2, label1) cell re-aggregates roll1's rows, and under D6
-    *    those exist only for base rows whose `roll2` column is non-null,
-    *    so that cell sums and counts just those rows (no such row: no
-    *    cell).
+    * label substitution, a projection over the one aggregate.
     */
   def cubeLabeled(
       base: DataFrame, grain: Seq[String], measures: Seq[String],
-      roll1: (String, String), roll2: (String, String),
-      rowKey: Seq[String] = Nil,
-      pandasExact: Boolean = false): DataFrame = {
+      roll1: (String, String), roll2: (String, String)): DataFrame = {
     val (c1, l1) = roll1
     val (c2, l2) = roll2
     val keep = grain.filterNot(c => c == c1 || c == c2)
-    val sets = Seq(
-      keep ++ Seq(c1, c2) ++ rowKey, keep :+ c1, keep :+ c2, keep
-    ).map(_.map(col))
-    // aggregate functions read the un-expanded input columns, so the
-    // roll2 test below sees real values even in the sets that roll it
-    val fromRoll1 = col(c2).isNotNull
-    val cellAggs =
-      if (!pandasExact) Nil
-      else measures.map(m => sum(when(fromRoll1, col(m))).as(s"_r1_$m")) :+
-        count(when(fromRoll1, lit(1))).as("_r1_n")
-    val aggs =
-      measures.map(m => sum(col(m)).as(m)) ++ cellAggs :+
-        grouping(col(c1)).as("_g1") :+ grouping(col(c2)).as("_g2")
-    val agg = base
-      .groupingSets(sets, (keep ++ Seq(c1, c2) ++ rowKey).map(col): _*)
+    val sets = Seq(keep ++ Seq(c1, c2), keep :+ c1, keep :+ c2, keep).map(_.map(col))
+    val aggs = measures.map(m => sum(col(m)).as(m)) :+
+      grouping(col(c1)).as("_g1") :+ grouping(col(c2)).as("_g2")
+    base
+      .groupingSets(sets, (keep ++ Seq(c1, c2)).map(col): _*)
       .agg(aggs.head, aggs.tail: _*)
-    val rolled1 = col("_g1") === 1
-    val rolled2 = col("_g2") === 1
-    val rolled = rolled1 || rolled2
-    val cell = rolled1 && rolled2
-    val kept =
-      if (!pandasExact) agg
-      else agg.where(!rolled || (
-        keep.map(col(_).isNotNull).foldLeft(lit(true))(_ && _) &&
-          (rolled1 || col(c1).isNotNull) && (rolled2 || col(c2).isNotNull) &&
-          (!cell || col("_r1_n") > 0)))
-    val measureCols = measures.map { m =>
-      if (!pandasExact) col(m).as(m)
-      else when(rolled, coalesce(when(cell, col(s"_r1_$m")).otherwise(col(m)), lit(0L)))
-        .otherwise(col(m)).as(m)
+      .withColumn(c1, when(col("_g1") === 1, lit(l1)).otherwise(col(c1)))
+      .withColumn(c2, when(col("_g2") === 1, lit(l2)).otherwise(col(c2)))
+      .select((grain ++ measures).map(col): _*)
+  }
+
+  /** The labeled cube over `rows` on the driver, returned in the same
+    * layout as `rows` (named by `columns`; every column not in
+    * `measures` is a grouping key, every measure a nullable long).
+    *
+    * Each base row passes through unchanged, and also joins three
+    * groups: roll1's (its `roll1` column set to the label), roll2's
+    * (its `roll2` column set to the label) and the cell (both set). SQL
+    * semantics: null keys group together, a group with no non-null value
+    * sums to null, and a sum past the long range fails as ANSI `sum`
+    * does, never wrapping. Under `pandasExact` a row joins a group only
+    * when that group's non-rolled keys are all non-null (D6), and rolled
+    * sums coalesce to 0 (D2). The cell re-aggregates roll1's rows, and
+    * under D6 those exist only for rows whose `roll2` column is non-null,
+    * so the cell then takes just those rows (none: no cell).
+    */
+  def labeledCubeRows(
+      rows: Seq[Row], columns: Seq[String], measures: Seq[String],
+      roll1: (String, String), roll2: (String, String),
+      pandasExact: Boolean = false): Seq[Row] = {
+    def index(c: String): Int = {
+      val i = columns.indexOf(c)
+      require(i >= 0, s"no column $c in ${columns.mkString("[", ", ", "]")}")
+      i
     }
-    kept
-      .withColumn(c1, when(rolled1, lit(l1)).otherwise(col(c1)))
-      .withColumn(c2, when(rolled2, lit(l2)).otherwise(col(c2)))
-      .select((grain.map(col) ++ measureCols): _*)
+    val n = columns.size
+    val (i1, i2) = (index(roll1._1), index(roll2._1))
+    val ms = measures.map(index).toIndexedSeq
+    val keep = columns.indices.filterNot(i => i == i1 || i == i2 || ms.contains(i))
+    // per rolled set: the labels it sets, and the columns that must be
+    // non-null under D6
+    val sets = Seq(
+      (Seq(i1 -> roll1._2), keep :+ i2),
+      (Seq(i2 -> roll2._2), keep :+ i1),
+      (Seq(i1 -> roll1._2, i2 -> roll2._2), keep :+ i2)).zipWithIndex
+    // key: the group's output row with its measures blank, then the set's
+    // index (a base value can equal a label); value: the measures' sums
+    val groups = mutable.LinkedHashMap.empty[mutable.ArraySeq[Any], Array[java.lang.Long]]
+    for (r <- rows; ((labels, nonNull), s) <- sets
+         if !pandasExact || nonNull.forall(!r.isNullAt(_))) {
+      val key = Array.tabulate[Any](n + 1)(i => if (i < n) r.get(i) else s)
+      ms.foreach(key(_) = null)
+      labels.foreach { case (i, label) => key(i) = label }
+      val sums = groups.getOrElseUpdate(mutable.ArraySeq.make(key), new Array[java.lang.Long](ms.size))
+      for (j <- ms.indices if !r.isNullAt(ms(j))) {
+        val v = r.getLong(ms(j))
+        sums(j) = if (sums(j) == null) v else Math.addExact(sums(j).longValue, v)
+      }
+    }
+    rows ++ groups.map { case (key, sums) =>
+      val out = key.toArray.take(n)
+      for (j <- ms.indices) out(ms(j)) = if (sums(j) == null && pandasExact) 0L else sums(j)
+      Row.fromSeq(out.toIndexedSeq)
+    }
   }
 }

@@ -12,10 +12,10 @@ import graft.ingest.Workbook
 import graft.ops.{Clean, Derive, Rollup}
 
 /** The reference pipeline (`/root/reference/src/main.py:17-120`)
-  * re-expressed Spark-first: the per-file reshape builds one stacked
-  * relation on the driver, and every step after it is a lazy DataFrame
-  * transform, so Catalyst folds the null/sentinel filters and the casts
-  * into that relation (SURVEY.md §4.2).
+  * re-expressed for a table of about 12k rows: the per-file reshape
+  * builds one stacked relation on the driver, Catalyst folds the
+  * null/sentinel filters and the casts into that relation (SURVEY.md
+  * §4.2), and the rollups run on the driver over its rows.
   *
   * Semantics notes honored (SURVEY.md §2.8): N1 (dropna before sentinel
   * replace), N2 (full-frame replace), N3 (fail-loud pivot grain), N5
@@ -30,8 +30,9 @@ import graft.ops.{Clean, Derive, Rollup}
   * are null (a sentinel in a key column) DO form null-key groups (SQL
   * GROUP BY), where pandas groupby silently drops them.
   *
-  * Cost per cycle: `transform` launches no Spark job, and the fact plan
-  * it returns has one leaf and one shuffle exchange.
+  * Cost per cycle: `transform` launches no Spark job, and the fact table
+  * it returns is one local relation, whose write is one job of one stage
+  * (no Expand, no aggregate, no shuffle).
   *  - [[stack]] reshapes every workbook on the driver into ONE local
   *    relation (an N-workbook cycle no longer plans an N-way union of
   *    per-file frames). It runs the optimizer twice, whatever the
@@ -41,14 +42,13 @@ import graft.ops.{Clean, Derive, Rollup}
   *  - The grain check (N3/D4) runs on the driver, per workbook, over the
   *    cleaned LA names and the derived header keys, before `dropna`.
   *  - [[combine]]'s dropna, sentinel scrub and cast fold into the one
-  *    `LocalTableScan`; it then folds both rollups into one
-  *    grouping-sets aggregate ([[Rollup.cubeLabeled]]): one Expand, one
-  *    shuffle. The stack's hidden, non-string row key joins the finest
-  *    grouping set so that set passes every base row through, as the
-  *    reference's union does. The grain can repeat — a `*` borough
-  *    scrubs to null beside a blank one, and D7 repeats an academic
-  *    year across workbooks — and without the key such rows would
-  *    merge into one.
+  *    local relation, so one collect evaluates them without a job. Both
+  *    rollups then run on the driver over the collected rows
+  *    ([[Rollup.labeledCubeRows]]), and the output rows become one local
+  *    relation. Each base row passes through as it is, as in the
+  *    reference's union, even where the grain repeats — a `*` borough
+  *    scrubs to null beside a blank one, and D7 repeats an academic year
+  *    across workbooks.
   * The load that follows pays the write (which also counts the rows)
   * and the swap.
   */
@@ -98,10 +98,9 @@ object HpvPipeline {
     * keys of all workbooks come from one collect of the [[Derive]]
     * expressions over a local relation of the distinct headers; the LA
     * names of all workbooks are cleaned by one collect over a local
-    * relation of the distinct raw names. Each row also carries the
-    * hidden [[RowKey]], a running index unique across the stack. The
-    * pivot's fail-loud grain contract is checked per workbook by
-    * [[assertGrain]]; every refusal names the workbook's `source`.
+    * relation of the distinct raw names. The pivot's fail-loud grain
+    * contract is checked per workbook by [[assertGrain]]; every refusal
+    * names the workbook's `source`.
     */
   def stack(workbooks: Seq[Workbook], extractDate: LocalDate,
       compat: Compat = Compat.Off): DataFrame = {
@@ -128,7 +127,6 @@ object HpvPipeline {
       (Derive.academicYearEnd(wb.a1).map(Integer.valueOf).orNull,
         Derive.academicYearText(wb.a1).orNull))
     val date = java.sql.Date.valueOf(extractDate)
-    var rowKey = 0L
     val rows = layouts.zip(years).flatMap { case ((wb, id, kept), (ayEnd, ayText)) =>
       val keys = kept.map(i => i -> keyOf(wb.header(i)))
       val names = wb.rows.map(r => cleaned(Option(r(id))))
@@ -141,9 +139,7 @@ object HpvPipeline {
       }
       wb.rows.zip(names).flatMap { case (r, name) =>
         cells.map { case (yg, g, total, vaccinated) =>
-          rowKey += 1
-          Row(name, yg, g, total.map(r).orNull, vaccinated.map(r).orNull,
-            ayEnd, ayText, date, rowKey)
+          Row(name, yg, g, total.map(r).orNull, vaccinated.map(r).orNull, ayEnd, ayText, date)
         }
       }
     }
@@ -156,8 +152,7 @@ object HpvPipeline {
       StructField("Students_Vaccinated", StringType),
       StructField("Academic_Year_End_Date", IntegerType, years.exists(_._1 == null)),
       StructField("Academic_Year_Text", StringType, years.exists(_._2 == null)),
-      StructField("Date_Extract", DateType, nullable = false),
-      StructField(RowKey, LongType, nullable = false)))
+      StructField("Date_Extract", DateType, nullable = false)))
     spark.createDataFrame(rows.asJava, schema)
   }
 
@@ -224,29 +219,30 @@ object HpvPipeline {
   }
 
   /** Combine phase (`main.py:77-120`) over the [[stack]]: dropna (P3,
-    * N1) → sentinel replace (P4, N2) → numeric cast → Both/All rollups
-    * (A3, N5) → uppercase column names (P6).
+    * N1) → sentinel replace (P4, N2) → numeric cast → uppercase column
+    * names (P6) → Both/All rollups (A3, N5), as a local relation in the
+    * column order of [[OutputSchema]].
     *
-    * The rollups are one grouping-sets aggregate (one shuffle). The
-    * stack's hidden row key, unique per row and immune to the sentinel
-    * scrub, keeps the base rows as they are even where the grain
-    * repeats (see the object doc).
+    * The dropna, scrub and cast stay Catalyst expressions; over the
+    * stack's local relation they fold into `ConvertToLocalRelation`, so
+    * the one collect launches no job, and a measure that is not a
+    * number fails it with Spark's `CAST_INVALID_INPUT`. The rollups run
+    * on the driver over the collected rows ([[Rollup.labeledCubeRows]]).
     */
   def combine(stacked: DataFrame, compat: Compat = Compat.Off): DataFrame = {
-    val dropped = Clean.dropNullRows(stacked, Measures)
-    val scrubbed = Clean.sentinelsToNull(dropped)
-    val typed = scrubbed
-      .withColumn("Students_Total", trim(col("Students_Total")).cast(LongType))
-      .withColumn("Students_Vaccinated", trim(col("Students_Vaccinated")).cast(LongType))
-    val rolled = Rollup.cubeLabeled(
-      typed, Grain, Measures,
-      roll1 = ("Gender_Name", "Both"), roll2 = ("Year_Group_Number", "All"),
-      rowKey = Seq(RowKey), pandasExact = compat == Compat.PandasExact)
-    rolled.toDF(rolled.columns.map(_.toUpperCase).toIndexedSeq: _*)
+    val scrubbed = Clean.sentinelsToNull(Clean.dropNullRows(stacked, Measures))
+    // one projection (cast, rename, reorder), so the optimizer folds one
+    // pass over the rows rather than one per step
+    val typed = scrubbed.select(OutputSchema.fieldNames.toIndexedSeq.map { name =>
+      val from = (Grain ++ Measures).find(_.equalsIgnoreCase(name)).get
+      (if (Measures.contains(from)) trim(col(from)).cast(LongType) else col(from)).as(name)
+    }: _*)
+    val base = typed.collect().toSeq
+    val rolled = Rollup.labeledCubeRows(base, OutputSchema.fieldNames.toSeq,
+      Measures.map(_.toUpperCase), roll1 = ("GENDER_NAME", "Both"),
+      roll2 = ("YEAR_GROUP_NUMBER", "All"), pandasExact = compat == Compat.PandasExact)
+    stacked.sparkSession.createDataFrame(rolled.asJava, OutputSchema)
   }
-
-  /** Hidden row key of [[stack]]; never in the output of [[combine]]. */
-  private[pipeline] val RowKey = "_row"
 
   /** D7: academic years that appear in MORE THAN ONE workbook. The
     * reference (src/main.py:77 + the 6-key rollups at :91-114) silently
@@ -259,8 +255,8 @@ object HpvPipeline {
       .collect { case (yr, ws) if ws.size > 1 => (yr, ws.size) }
       .toSeq.sortBy(_._1)
 
-  /** Full pipeline: workbooks → fact table, with the output-schema
-    * assertion the reference delegates to its destination DDL.
+  /** Full pipeline: workbooks → fact table, in the destination schema
+    * the reference delegates to its DDL ([[OutputSchema]]).
     */
   def transform(workbooks: Seq[Workbook], extractDate: LocalDate = LocalDate.now(),
       compat: Compat = Compat.Off): DataFrame = {
@@ -269,11 +265,6 @@ object HpvPipeline {
         s"[hpv] WARNING (D7): academic year ${yr.getOrElse("<unparsed>")} appears in $n " +
           "workbooks — reference semantics double-count it in the rollups")
     }
-    val out = combine(stack(workbooks, extractDate, compat), compat)
-      .select(OutputSchema.fieldNames.map(col).toIndexedSeq: _*)
-    val got = out.schema.fields.map(f => f.name -> f.dataType).toSeq
-    val want = OutputSchema.fields.map(f => f.name -> f.dataType).toSeq
-    require(got == want, s"output schema mismatch: got $got, want $want")
-    out
+    combine(stack(workbooks, extractDate, compat), compat)
   }
 }

@@ -83,6 +83,42 @@ class LoadSpec extends SparkTestBase {
     assert(out.contains("reported=6666 onDisk=6666"), out)
   }
 
+  /** ERROR events logged while `body` runs, up to the delivery of every
+    * listener event `body` posted (`jobsDuring` fences the bus).
+    */
+  private def errorsDuring(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender("graft-load-errors", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.ERROR))
+          errors.add(s"${e.getLoggerName}: ${e.getMessage.getFormattedMessage}")
+    }
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    appender.start()
+    root.addAppender(appender)
+    try jobsDuring(body)
+    finally {
+      root.removeAppender(appender)
+      appender.stop()
+    }
+    errors.toArray(Array.empty[String]).toSeq
+  }
+
+  test("after a load, a query that fails in planning logs no listener ERROR") {
+    val dir = tempDest("graft_load_quiet")
+    assert(Load.replaceTable(spark, Seq(1, 2).toDF("v"), dir).isSuccess)
+    // a bad cast over a local relation fails in the optimizer, before any job
+    val errors = errorsDuring {
+      val e = intercept[Exception](Seq("x").toDF("s").select(col("s").cast("long")).collect())
+      assert(e.getMessage.contains("CAST_INVALID_INPUT"), e.getMessage)
+    }
+    assert(errors.isEmpty, errors.mkString("\n"))
+  }
+
   // ---- stagedSwap's pre-swap states, driven through replaceTable ----
 
   private def tempDest(prefix: String): String =

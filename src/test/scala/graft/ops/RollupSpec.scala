@@ -6,11 +6,11 @@ import org.apache.spark.sql.types._
 
 import scala.util.Random
 
-/** A3 equivalence: the faithful rollup-by-union and the single-shuffle
-  * labeled-cube formulation must agree as multisets on arbitrary data —
-  * including null measures (D2), null roll-key values (D6) and, once the
-  * cube carries a row key, duplicate grain rows — under every
-  * `pandasExact` setting.
+/** A3 equivalence: the faithful rollup-by-union, the single-shuffle
+  * labeled-cube formulation and the driver-side labeled cube must agree
+  * as multisets on arbitrary data — including null measures (D2), null
+  * roll-key values (D6) and, for the driver cube, duplicate grain rows —
+  * under every `pandasExact` setting they take.
   * (Property-style via seeded random inputs; scalatestplus bridge isn't
   * in the offline dependency set.)
   */
@@ -66,7 +66,7 @@ class RollupSpec extends SparkTestBase {
     }
 
   test("cubeLabeled with a row key ≡ byUnion on duplicate grain rows, all compat flags") {
-    import org.apache.spark.sql.functions.monotonically_increasing_id
+    // the driver cube passes base rows through, so duplicate grain rows stay apart
     val grain = Seq("g1", "g2", "k")
     val ms = Seq("m1", "m2")
     for (seed <- 1 to 8; compat <- compats) {
@@ -74,8 +74,9 @@ class RollupSpec extends SparkTestBase {
       val rows = { val r = messyRows(rnd, 4 + rnd.nextInt(30)); r :+ r.head } // ≥ 1 exact duplicate
       val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
       val a = Rollup.byUnion(df, grain, ms, ("g1", "Both"), ("g2", "All"), compat)
-      val b = Rollup.cubeLabeled(df.withColumn("_rk", monotonically_increasing_id()),
-        grain, ms, ("g1", "Both"), ("g2", "All"), rowKey = Seq("_rk"), pandasExact = compat)
+      val b = spark.createDataFrame(spark.sparkContext.parallelize(
+        Rollup.labeledCubeRows(rows, schema.fieldNames.toSeq, ms, ("g1", "Both"), ("g2", "All"),
+          pandasExact = compat)), schema)
       withClue(s"seed=$seed pandasExact=$compat: ") { assertSameRows(a, b) }
     }
   }

@@ -84,11 +84,11 @@ class HpvPipelineSpec extends SparkTestBase {
 
   /** The spec oracle: the reference's combine verbatim over the stacked
     * workbooks — dropna, scrub, cast, then the two rollups by union
-    * (`Rollup.byUnion`), which needs no row key.
+    * (`Rollup.byUnion`).
     */
   private def faithfulCombine(stacked: DataFrame, compat: HpvPipeline.Compat): DataFrame = {
     val scrubbed = Clean.sentinelsToNull(
-      Clean.dropNullRows(stacked.drop(HpvPipeline.RowKey), HpvPipeline.Measures))
+      Clean.dropNullRows(stacked, HpvPipeline.Measures))
     val typed = HpvPipeline.Measures.foldLeft(scrubbed)((d, m) =>
       d.withColumn(m, trim(col(m)).cast(LongType)))
     val rolled = Rollup.byUnion(typed, HpvPipeline.Grain, HpvPipeline.Measures,
@@ -145,7 +145,7 @@ class HpvPipelineSpec extends SparkTestBase {
     val out = HpvPipeline.stack(Seq(wb), D)
     assert(out.columns.toSeq == Seq("Borough_Name", "Year_Group_Number", "Gender_Name",
       "Students_Total", "Students_Vaccinated", "Academic_Year_End_Date", "Academic_Year_Text",
-      "Date_Extract", HpvPipeline.RowKey))
+      "Date_Extract"))
     assert(rowsOf(out.select("Borough_Name", "Year_Group_Number", "Gender_Name",
       "Students_Total", "Students_Vaccinated")) == Map(
       Seq("Camden", "8", "Female", "10", "5") -> 1, Seq("Camden", "9", "Male", "7", null) -> 1,
@@ -302,6 +302,21 @@ class HpvPipelineSpec extends SparkTestBase {
       HpvPipeline.transform(Seq(wb("Local authority", "Local Authority")), D))
     assert(e.getMessage.contains("expected one 'Local authority' column in the header, found 2"),
       e.getMessage)
+  }
+
+  test("a measure that is not a number after the scrub fails transform with CAST_INVALID_INPUT") {
+    val wb = grid(s"x $T24", y8F, Seq("camden", "12 pupils", "5"), Seq("barnet", "*", "6"))
+    val e = intercept[Exception](HpvPipeline.transform(Seq(wb), D))
+    assert(e.getMessage.contains("CAST_INVALID_INPUT") && e.getMessage.contains("12 pupils"),
+      e.getMessage)
+  }
+
+  test("a rolled sum past Long.MaxValue fails with an overflow, never wraps") {
+    val max = Long.MaxValue.toString
+    val wb = grid(s"x $T24", y8F ++ Seq("Year 8 males: Number", "Year 8 males: Number vaccinated"),
+      Seq("camden", max, "5", "1", "6"))
+    val e = intercept[ArithmeticException](HpvPipeline.transform(Seq(wb), D))
+    assert(e.getMessage.toLowerCase.contains("overflow"), e.getMessage)
   }
 
   test("D7: duplicate academic years across workbooks are detected") {
