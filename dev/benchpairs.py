@@ -15,8 +15,14 @@ verdicts:
 
 - claim: the change won at least 9/10 of the pairs, and its median beats
   the parent's by more than the parent's q3 - q1;
-- bound: the change's median is within the parent's median times
-  (1 + the metric's BENCHMARK.json bound); "-" for a metric without one.
+- bound: "yes" when the change's median is within the parent's median
+  times (1 + the metric's BENCHMARK.json bound), else "no";
+  "unresolved" when the parent's own q3 - q1 is wider than its median
+  times the bound, unless every change run beats every parent run; "-"
+  for a metric without a bound.
+
+Ties count for neither side. `python3 -m unittest discover -s dev -p
+'test_*.py'` runs the tests of the win count and the verdicts.
 
 A run that reports failed ops is counted and the failures are printed; a
 run that exits non-zero stops the comparison. `--out` keeps every finished
@@ -54,20 +60,33 @@ def quartiles(xs):
     return q1, q2, q3
 
 
-def verdicts(pq, cq, wins, n, lower, bound):
-    """(claim, bound) for one metric from each side's (q1, median, q3).
+def wins(parent, change, lower):
+    """Pairs the change won, pair i being (parent[i], change[i]); a tie
+    counts for neither side."""
+    return sum(1 for x, y in zip(parent, change) if (y < x if lower else y > x))
 
-    claim: the change won at least 9/10 of the n pairs and its median
-    beats the parent's by more than the parent's q3 - q1. bound: the
-    change's median is no worse than the parent's by more than `bound`
-    (a fraction of the parent's median); None when `bound` is None.
+
+def verdicts(parent, change, lower, bound):
+    """(claim, bound) for one metric from each side's runs, paired by index.
+
+    claim (a bool): the change won at least 9/10 of the pairs and its
+    median beats the parent's by more than the parent's q3 - q1. bound:
+    "yes" when the change's median is no worse than the parent's by more
+    than `bound` (a fraction of the parent's median), else "no";
+    "unresolved" when the parent's q3 - q1 exceeds its median times
+    `bound`, unless every change run beats every parent run; "-" when
+    `bound` is None.
     """
+    pq, cq = quartiles(parent), quartiles(change)
     gap = pq[1] - cq[1] if lower else cq[1] - pq[1]
-    claim = wins * 10 >= 9 * n and gap > pq[2] - pq[0]
+    claim = wins(parent, change, lower) * 10 >= 9 * len(parent) and gap > pq[2] - pq[0]
     if bound is None:
-        return claim, None
+        return claim, "-"
+    all_better = max(change) < min(parent) if lower else min(change) > max(parent)
+    if pq[2] - pq[0] > abs(pq[1]) * bound and not all_better:
+        return claim, "unresolved"
     limit = pq[1] * (1 + bound) if lower else pq[1] * (1 - bound)
-    return claim, (cq[1] <= limit if lower else cq[1] >= limit)
+    return claim, "yes" if (cq[1] <= limit if lower else cq[1] >= limit) else "no"
 
 
 def main():
@@ -111,18 +130,17 @@ def main():
     print("failed ops: parent %d, change %d" % (
         sum(r["failed"] for r in results["parent"]),
         sum(r["failed"] for r in results["change"])))
-    print("%-28s %26s %26s %6s %5s %5s" % ("metric", "parent median [q1, q3]",
-                                            "change median [q1, q3]", "wins", "claim", "bound"))
+    print("%-28s %26s %26s %6s %5s %10s" % ("metric", "parent median [q1, q3]",
+                                             "change median [q1, q3]", "wins", "claim", "bound"))
     for name in results["parent"][0]["metrics"]:
         p = [r["metrics"][name]["value"] for r in results["parent"]]
         c = [r["metrics"][name]["value"] for r in results["change"]]
         lower = better.get(name, "lower") == "lower"
-        wins = sum(1 for x, y in zip(p, c) if (y < x if lower else y > x))
         pq, cq = quartiles(p), quartiles(c)
-        c_ok, b_ok = verdicts(pq, cq, wins, n, lower, bounds.get(name))
-        print("%-28s %10.4g [%6.4g, %6.4g] %10.4g [%6.4g, %6.4g] %3d/%d %5s %5s" % (
-            name, pq[1], pq[0], pq[2], cq[1], cq[0], cq[2], wins, n,
-            "yes" if c_ok else "no", "-" if b_ok is None else "yes" if b_ok else "no"))
+        claim, bound = verdicts(p, c, lower, bounds.get(name))
+        print("%-28s %10.4g [%6.4g, %6.4g] %10.4g [%6.4g, %6.4g] %3d/%d %5s %10s" % (
+            name, pq[1], pq[0], pq[2], cq[1], cq[0], cq[2], wins(p, c, lower), n,
+            "yes" if claim else "no", bound))
 
 
 if __name__ == "__main__":

@@ -2,8 +2,7 @@ package graft.ingest
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.SparkSession
 
 /** A reference-shaped workbook sheet, as shaped cells: the raw A1
   * metadata cell, the header taken from a mid-sheet header row, and the
@@ -12,18 +11,12 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   *
   * One read captures both A1 and the table — fixing the reference's
   * double scan of every file (`src/main.py:27,30`; divergence D5). The
-  * cells stay on the driver: the pipeline stacks every workbook into
-  * one relation itself, so no per-file DataFrame is built on its path.
+  * cells stay on the driver: the pipeline reshapes every workbook into
+  * fact rows itself, so no per-file DataFrame is built.
   */
 final case class Workbook(
     source: String, a1: String, header: Seq[String], rows: Seq[Seq[String]])(
-    val spark: SparkSession) {
-
-  /** The data table as a local relation (all columns string-typed), for
-    * specs and ad-hoc reads. */
-  lazy val data: DataFrame = spark.createDataFrame(rows.map(Row.fromSeq).asJava,
-    StructType(header.map(StructField(_, StringType, nullable = true))))
-}
+    val spark: SparkSession)
 
 object Workbook {
 

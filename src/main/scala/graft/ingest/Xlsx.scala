@@ -113,7 +113,7 @@ object Xlsx {
           if (seen > maxPartBytes)
             throw new IllegalArgumentException(
               s"$describe: zip part $name inflates past the $maxPartBytes-byte " +
-                "bound — refusing a probable zip bomb")
+                "bound - refusing a probable zip bomb")
         }
         n
       }

@@ -111,7 +111,7 @@ object Load {
     val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(backup) && !fs.exists(dest))
       throw new IllegalStateException(
-        s"destination $destination is missing but backup $backup exists — a prior " +
+        s"destination $destination is missing but backup $backup exists - a prior " +
           "swap failed and was not restored; recover manually before loading")
     if (fs.exists(staging)) fs.delete(staging, true)
     val out = stage(staging)
@@ -130,7 +130,7 @@ object Load {
           if (!hadPrev) ""
           else if (Try(fs.rename(backup, dest)).getOrElse(false))
             "; previous contents restored"
-          else s"; RESTORE FAILED — previous contents left at $backup"
+          else s"; RESTORE FAILED - previous contents left at $backup"
         throw new java.io.IOException(s"swap to $dest failed$note", e)
     }
     if (hadPrev) fs.delete(backup, true)
@@ -271,7 +271,7 @@ object Load {
         try new String(in.readAllBytes(), "UTF-8") finally in.close()
       }.getOrElse("<unreadable>")
       throw new LockHeldException(
-        s"destination $destination is locked by: $holder — concurrent " +
+        s"destination $destination is locked by: $holder - concurrent " +
           "writers are not allowed; if the holder crashed, remove " +
           s"$lock manually", e)
     }

@@ -10,18 +10,26 @@ import org.apache.spark.sql.types.StringType
   * survives the null-filter and only then becomes null, so it flows into
   * downstream rollups (where SQL `sum` skips it), while born-null
   * measures were already dropped.
+  *
+  * The HPV pipeline applies N1 and N2 to its driver rows itself
+  * (`HpvPipeline.combine`), with [[DefaultSentinels]] and
+  * [[droppedByName]] from here. [[dropNullRows]] and [[sentinelsToNull]]
+  * are the DataFrame reference forms of P3/P4: the faithful combine in
+  * `HpvPipelineSpec` and `OpsSpec` check against them.
   */
 object Clean {
 
   /** NHS small-number suppression markers (reference `src/main.py:81-83`). */
   val DefaultSentinels: Seq[String] = Seq("*", "[E]", "[DS]")
 
-  /** P3: drop rows where ANY of `cols` is null (pandas dropna(subset)). */
+  /** P3: drop rows where ANY of `cols` is null (pandas dropna(subset));
+    * the reference form of `HpvPipeline.combine`'s N1. */
   def dropNullRows(df: DataFrame, cols: Seq[String]): DataFrame =
     df.na.drop(cols)
 
   /** P4 + N2: replace sentinel strings with null in EVERY string-typed
-    * column (the reference's replace is full-frame — keys included).
+    * column (the reference's replace is full-frame — keys included); the
+    * reference form of `HpvPipeline.combine`'s N2.
     */
   def sentinelsToNull(df: DataFrame, sentinels: Seq[String] = DefaultSentinels): DataFrame = {
     val stringCols = df.schema.fields.collect {

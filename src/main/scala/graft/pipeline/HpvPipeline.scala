@@ -4,7 +4,7 @@ import java.time.LocalDate
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -12,10 +12,10 @@ import graft.ingest.Workbook
 import graft.ops.{Clean, Derive, Rollup}
 
 /** The reference pipeline (`/root/reference/src/main.py:17-120`)
-  * re-expressed for a table of about 12k rows: the per-file reshape
-  * builds one stacked relation on the driver, Catalyst folds the
-  * null/sentinel filters and the casts into that relation (SURVEY.md
-  * §4.2), and the rollups run on the driver over its rows.
+  * re-expressed for a table of about 12k rows: one driver pass builds
+  * the fact rows, Catalyst evaluates the scalar derivations and the
+  * numeric cast once per distinct value (SURVEY.md §4.2), and the
+  * rollups run on the driver.
   *
   * Semantics notes honored (SURVEY.md §2.8): N1 (dropna before sentinel
   * replace), N2 (full-frame replace), N3 (fail-loud pivot grain), N5
@@ -33,22 +33,21 @@ import graft.ops.{Clean, Derive, Rollup}
   * Cost per cycle: `transform` launches no Spark job, and the fact table
   * it returns is one local relation, whose write is one job of one stage
   * (no Expand, no aggregate, no shuffle).
-  *  - [[stack]] reshapes every workbook on the driver into ONE local
-  *    relation (an N-workbook cycle no longer plans an N-way union of
-  *    per-file frames). It runs the optimizer twice, whatever the
-  *    workbook count: one collect derives every distinct header's keys,
-  *    one cleans every distinct LA name. Both are over local relations
-  *    and fold into `ConvertToLocalRelation`.
+  *  - [[stack]] reshapes every workbook on the driver into rows in the
+  *    column order of [[OutputSchema]]. Two collects over one-column
+  *    local relations, whatever the workbook count, evaluate the
+  *    [[Derive]] expressions: one over the distinct headers, one over
+  *    the distinct LA names. Both fold into `ConvertToLocalRelation`.
   *  - The grain check (N3/D4) runs on the driver, per workbook, over the
   *    cleaned LA names and the derived header keys, before `dropna`.
-  *  - [[combine]]'s dropna, sentinel scrub and cast fold into the one
-  *    local relation, so one collect evaluates them without a job. Both
-  *    rollups then run on the driver over the collected rows
-  *    ([[Rollup.labeledCubeRows]]), and the output rows become one local
-  *    relation. Each base row passes through as it is, as in the
-  *    reference's union, even where the grain repeats — a `*` borough
-  *    scrubs to null beside a blank one, and D7 repeats an academic year
-  *    across workbooks.
+  *  - [[combine]] runs dropna and the sentinel scrub over those rows on
+  *    the driver, and one more such collect casts the distinct measure
+  *    strings. Both rollups run on the driver
+  *    ([[Rollup.labeledCubeRows]]), and the output rows become the
+  *    cycle's one fact relation. Each base row passes through as it is,
+  *    as in the reference's union, even where the grain repeats — a `*`
+  *    borough scrubs to null beside a blank one, and D7 repeats an
+  *    academic year across workbooks.
   * The load that follows pays the write (which also counts the rows)
   * and the swap.
   */
@@ -70,9 +69,6 @@ object HpvPipeline {
   }
 
   val IdCol = "Local authority"
-  val Grain: Seq[String] = Seq(
-    "Borough_Name", "Year_Group_Number", "Gender_Name",
-    "Academic_Year_End_Date", "Academic_Year_Text", "Date_Extract")
   val Measures: Seq[String] = Seq("Students_Total", "Students_Vaccinated")
 
   /** Fixed destination schema (reference `docs/Create HPV Table.sql:1-10`). */
@@ -88,22 +84,21 @@ object HpvPipeline {
 
   /** Per-file transform (`main.py:24-74`) of every workbook, stacked:
     * clean → drop-by-name → melt → derive → pivot (asserted) → rename →
-    * per-file metadata (N7) → union (U1), as ONE local relation built on
-    * the driver from the workbooks' shaped cells.
+    * per-file metadata (N7) → union (U1), as driver rows in the column
+    * order of [[OutputSchema]], the measures still their raw cell strings.
     *
     * Melt + pivot is fused: each kept header's (year group, gender,
     * metric) is derived once, and every LA row becomes one row per (year
     * group, gender) with its raw `Number` and `Number_Vaccinated` cells
-    * (a typed null where the workbook has no such column). The header
-    * keys of all workbooks come from one collect of the [[Derive]]
-    * expressions over a local relation of the distinct headers; the LA
-    * names of all workbooks are cleaned by one collect over a local
-    * relation of the distinct raw names. The pivot's fail-loud grain
-    * contract is checked per workbook by [[assertGrain]]; every refusal
-    * names the workbook's `source`.
+    * (null where the workbook has no such column). The [[Derive]]
+    * expressions run once over the distinct headers of all workbooks,
+    * and the LA-name cleaning once over their distinct raw names
+    * ([[evaluate]]). The pivot's fail-loud grain contract is checked per
+    * workbook by [[assertGrain]]; every refusal names the workbook's
+    * `source`.
     */
   def stack(workbooks: Seq[Workbook], extractDate: LocalDate,
-      compat: Compat = Compat.Off): DataFrame = {
+      compat: Compat = Compat.Off): Seq[Row] = {
     require(workbooks.nonEmpty, "no workbooks to stack")
     val spark = workbooks.head.spark
     // (workbook, id column, kept measure columns), refused before any Spark work
@@ -118,18 +113,22 @@ object HpvPipeline {
         s"'$IdCol' after dropping % and 2-doses columns")
       (wb, ids.head, kept)
     }
-    val keyOf = headerKeys(spark,
-      layouts.flatMap { case (wb, _, kept) => kept.map(wb.header) }.distinct)
-    val cleaned = cleanNames(spark,
-      layouts.flatMap { case (wb, id, _) => wb.rows.map(_(id)) }.distinct, compat)
+    val keyOf = evaluate(spark,
+      layouts.flatMap { case (wb, _, kept) => kept.map(wb.header) }.distinct) { c =>
+      Seq(Derive.yearGroupFromHeader(c), Derive.genderFromHeader(c), Derive.metricFromHeader(c))
+    }.map { case (h, r) => h -> HeaderKey(r.getString(0), r.getString(1), r.getString(2)) }
+    val cleaned = evaluate(spark,
+      layouts.flatMap { case (wb, id, _) => wb.rows.map(_(id)) }.distinct) { c =>
+      Seq(if (compat == Compat.PandasExact) Derive.cleanNamePandasTitle(c) else Derive.cleanName(c))
+    }.map { case (n, r) => n -> r.getString(0) }
     // per-file metadata (E6/E7, N7)
     val years = workbooks.map(wb =>
       (Derive.academicYearEnd(wb.a1).map(Integer.valueOf).orNull,
         Derive.academicYearText(wb.a1).orNull))
     val date = java.sql.Date.valueOf(extractDate)
-    val rows = layouts.zip(years).flatMap { case ((wb, id, kept), (ayEnd, ayText)) =>
+    layouts.zip(years).flatMap { case ((wb, id, kept), (ayEnd, ayText)) =>
       val keys = kept.map(i => i -> keyOf(wb.header(i)))
-      val names = wb.rows.map(r => cleaned(Option(r(id))))
+      val names = wb.rows.map(r => cleaned(r(id)))
       assertGrain(wb.source, names, keys.map(_._2))
       val cells = keys.map { case (_, k) => (k.yearGroup, k.gender) }.distinct.map { case (yg, g) =>
         def cell(metric: String): Option[Int] = keys.collectFirst {
@@ -143,53 +142,26 @@ object HpvPipeline {
         }
       }
     }
-    // a column is nullable only if a value can be null: the fact table's schema carries it
-    val schema = StructType(Seq(
-      StructField("Borough_Name", StringType),
-      StructField("Year_Group_Number", StringType, keyOf.values.exists(_.yearGroup == null)),
-      StructField("Gender_Name", StringType, nullable = false),
-      StructField("Students_Total", StringType),
-      StructField("Students_Vaccinated", StringType),
-      StructField("Academic_Year_End_Date", IntegerType, years.exists(_._1 == null)),
-      StructField("Academic_Year_Text", StringType, years.exists(_._2 == null)),
-      StructField("Date_Extract", DateType, nullable = false)))
-    spark.createDataFrame(rows.asJava, schema)
   }
 
   /** A measure header's derived pivot key (E3-E5). */
   private final case class HeaderKey(yearGroup: String, gender: String, metric: String)
 
-  /** E3-E5 over the header names, evaluated on the driver with the
-    * [[Derive]] expressions (one source of truth); a local relation, so
-    * no job.
+  /** Catalyst expressions over distinct driver values: `exprs` of one
+    * string column, over a one-column local relation of `values` (null
+    * included). The one collect folds into `ConvertToLocalRelation`, so
+    * no job runs. Keyed by input value; each row holds the expressions'
+    * results in order.
     */
-  private def headerKeys(spark: SparkSession, headers: Seq[String]): Map[String, HeaderKey] = {
-    val c = col("Category")
-    local(spark, "Category", headers)
-      .select(c, Derive.yearGroupFromHeader(c), Derive.genderFromHeader(c),
-        Derive.metricFromHeader(c))
+  private def evaluate(spark: SparkSession, values: Seq[String])(
+      exprs: Column => Seq[Column]): Map[String, Row] = {
+    val c = col("value")
+    spark.createDataFrame(values.map(Row(_)).asJava, StructType(Seq(StructField("value", StringType))))
+      .select(c +: exprs(c): _*)
       .collect()
-      .map(r => r.getString(0) -> HeaderKey(r.getString(1), r.getString(2), r.getString(3)))
+      .map(r => r.getString(0) -> Row.fromSeq(r.toSeq.tail))
       .toMap
   }
-
-  /** E1/E2 over the raw LA names (null included), keyed by the raw name;
-    * a local relation, so no job.
-    */
-  private def cleanNames(spark: SparkSession, names: Seq[String],
-      compat: Compat): Map[Option[String], String] = {
-    val c = col(IdCol)
-    local(spark, IdCol, names)
-      .select(c, if (compat == Compat.PandasExact) Derive.cleanNamePandasTitle(c) else Derive.cleanName(c))
-      .collect()
-      .map(r => Option(r.getString(0)) -> r.getString(1))
-      .toMap
-  }
-
-  /** A one-column string local relation. */
-  private def local(spark: SparkSession, name: String, values: Seq[String]): DataFrame =
-    spark.createDataFrame(values.map(Row(_)).asJava,
-      StructType(Seq(StructField(name, StringType))))
 
   /** The pivot's fail-loud contract (N3/D4): pandas `pivot` raises on a
     * duplicate (LA, year group, gender, metric) key. In a workbook such a
@@ -218,30 +190,32 @@ object HpvPipeline {
     }
   }
 
-  /** Combine phase (`main.py:77-120`) over the [[stack]]: dropna (P3,
-    * N1) → sentinel replace (P4, N2) → numeric cast → uppercase column
-    * names (P6) → Both/All rollups (A3, N5), as a local relation in the
-    * column order of [[OutputSchema]].
+  /** Combine phase (`main.py:77-120`) over the [[stack]]'s rows, on the
+    * driver: dropna (P3, N1: a row goes when either raw measure is null)
+    * → sentinel replace (P4, N2: every string cell equal to one of
+    * [[Clean.DefaultSentinels]], untrimmed, becomes null) → numeric cast
+    * → Both/All rollups (A3, N5, [[Rollup.labeledCubeRows]]), as one
+    * local relation in [[OutputSchema]].
     *
-    * The dropna, scrub and cast stay Catalyst expressions; over the
-    * stack's local relation they fold into `ConvertToLocalRelation`, so
-    * the one collect launches no job, and a measure that is not a
-    * number fails it with Spark's `CAST_INVALID_INPUT`. The rollups run
-    * on the driver over the collected rows ([[Rollup.labeledCubeRows]]).
+    * The cast is Spark's `trim(c).cast(LongType)`, evaluated once per
+    * distinct measure string ([[evaluate]]), so a measure that is not a
+    * number fails with Spark's ANSI `CAST_INVALID_INPUT`, naming it.
     */
-  def combine(stacked: DataFrame, compat: Compat = Compat.Off): DataFrame = {
-    val scrubbed = Clean.sentinelsToNull(Clean.dropNullRows(stacked, Measures))
-    // one projection (cast, rename, reorder), so the optimizer folds one
-    // pass over the rows rather than one per step
-    val typed = scrubbed.select(OutputSchema.fieldNames.toIndexedSeq.map { name =>
-      val from = (Grain ++ Measures).find(_.equalsIgnoreCase(name)).get
-      (if (Measures.contains(from)) trim(col(from)).cast(LongType) else col(from)).as(name)
-    }: _*)
-    val base = typed.collect().toSeq
-    val rolled = Rollup.labeledCubeRows(base, OutputSchema.fieldNames.toSeq,
-      Measures.map(_.toUpperCase), roll1 = ("GENDER_NAME", "Both"),
-      roll2 = ("YEAR_GROUP_NUMBER", "All"), pandasExact = compat == Compat.PandasExact)
-    stacked.sparkSession.createDataFrame(rolled.asJava, OutputSchema)
+  def combine(spark: SparkSession, rows: Seq[Row], compat: Compat = Compat.Off): DataFrame = {
+    val measures = Measures.map(_.toUpperCase)
+    val at = measures.map(OutputSchema.fieldIndex)
+    val scrubbed = rows.collect {
+      case r if at.forall(!r.isNullAt(_)) =>
+        r.toSeq.map { case s: String if Clean.DefaultSentinels.contains(s) => null; case v => v }
+    }
+    val asLong = evaluate(spark, scrubbed.flatMap(r => at.map(r(_).asInstanceOf[String])).distinct)(
+      c => Seq(trim(c).cast(LongType)))
+    val typed = scrubbed.map(r => Row.fromSeq(
+      at.foldLeft(r)((cells, i) => cells.updated(i, asLong(cells(i).asInstanceOf[String]).get(0)))))
+    val rolled = Rollup.labeledCubeRows(typed, OutputSchema.fieldNames.toSeq, measures,
+      roll1 = ("GENDER_NAME", "Both"), roll2 = ("YEAR_GROUP_NUMBER", "All"),
+      pandasExact = compat == Compat.PandasExact)
+    spark.createDataFrame(rolled.asJava, OutputSchema)
   }
 
   /** D7: academic years that appear in MORE THAN ONE workbook. The
@@ -263,8 +237,9 @@ object HpvPipeline {
     duplicateAcademicYears(workbooks).foreach { case (yr, n) =>
       System.err.println(
         s"[hpv] WARNING (D7): academic year ${yr.getOrElse("<unparsed>")} appears in $n " +
-          "workbooks — reference semantics double-count it in the rollups")
+          "workbooks - reference semantics double-count it in the rollups")
     }
-    combine(stack(workbooks, extractDate, compat), compat)
+    val rows = stack(workbooks, extractDate, compat)
+    combine(workbooks.head.spark, rows, compat)
   }
 }

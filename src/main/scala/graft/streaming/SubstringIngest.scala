@@ -767,7 +767,7 @@ object SubstringIngest extends Logging {
     overCap.foreach { c =>
       logWarning(
         s"substringIngest ${st.dir}: a merged id-bloom class holds ~${c.n} ids, past " +
-          s"its ${if (c.cap >= 0) c.cap else bloomExpectedItems} capacity — the id " +
+          s"its ${if (c.cap >= 0) c.cap else bloomExpectedItems} capacity - the id " +
           "guard is DEGRADED (would mostly false-refuse); marking the store " +
           "_ids_bloom_incomplete. Run auditIngestedIds over the report directory " +
           "for an exact check, or re-bootstrap with a larger bloomExpectedItems")
@@ -788,7 +788,7 @@ object SubstringIngest extends Logging {
           .where(hit(col("doc_id"))).limit(5).collect().map(_.getLong(0))
         require(hits.isEmpty,
           s"substringIngestSink batch=$batchId re-uses already-ingested doc_ids " +
-            s"${hits.mkString(", ")} (bloom hit, fpp ~$DefaultBloomFpp) — ids must be " +
+            s"${hits.mkString(", ")} (bloom hit, fpp ~$DefaultBloomFpp) - ids must be " +
             "globally unique across the stream; replays of the same batch are " +
             "skipped by the watermark, so this is a source re-emitting ids")
         // async executor-side release; the driver ref is the

@@ -2,9 +2,11 @@ package graft.pipeline
 
 import java.time.LocalDate
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, trim}
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types._
 
 import graft.SparkTestBase
 import graft.ingest.Workbook
@@ -82,6 +84,18 @@ class HpvPipelineSpec extends SparkTestBase {
       s"only-got=${got -- expected}\nonly-expected=${expected -- got}")
   }
 
+  /** The stacked rows' raw schema: the grain and measure names of the
+    * reference's combine, the measures still strings. */
+  private val rawSchema = StructType(Seq(
+    StructField("Borough_Name", StringType),
+    StructField("Year_Group_Number", StringType),
+    StructField("Gender_Name", StringType),
+    StructField("Students_Total", StringType),
+    StructField("Students_Vaccinated", StringType),
+    StructField("Academic_Year_End_Date", IntegerType),
+    StructField("Academic_Year_Text", StringType),
+    StructField("Date_Extract", DateType)))
+
   /** The spec oracle: the reference's combine verbatim over the stacked
     * workbooks — dropna, scrub, cast, then the two rollups by union
     * (`Rollup.byUnion`).
@@ -91,7 +105,8 @@ class HpvPipelineSpec extends SparkTestBase {
       Clean.dropNullRows(stacked, HpvPipeline.Measures))
     val typed = HpvPipeline.Measures.foldLeft(scrubbed)((d, m) =>
       d.withColumn(m, trim(col(m)).cast(LongType)))
-    val rolled = Rollup.byUnion(typed, HpvPipeline.Grain, HpvPipeline.Measures,
+    val grain = rawSchema.fieldNames.toSeq.filterNot(HpvPipeline.Measures.contains)
+    val rolled = Rollup.byUnion(typed, grain, HpvPipeline.Measures,
       ("Gender_Name", "Both"), ("Year_Group_Number", "All"),
       pandasExact = compat == HpvPipeline.Compat.PandasExact)
     rolled.toDF(rolled.columns.map(_.toUpperCase).toIndexedSeq: _*)
@@ -103,7 +118,8 @@ class HpvPipelineSpec extends SparkTestBase {
     for (wbs <- inputs; compat <- Seq(HpvPipeline.Compat.Off, HpvPipeline.Compat.PandasExact)) {
       val stacked = HpvPipeline.stack(wbs, D, compat)
       withClue(s"compat=$compat files=${wbs.size}: ") {
-        assertSameRows(HpvPipeline.combine(stacked, compat), faithfulCombine(stacked, compat))
+        assertSameRows(HpvPipeline.combine(spark, stacked, compat),
+          faithfulCombine(spark.createDataFrame(stacked.asJava, rawSchema), compat))
       }
     }
   }
@@ -134,7 +150,7 @@ class HpvPipelineSpec extends SparkTestBase {
       HpvPipeline.stack(Seq(grid(s"x $T24", header, Seq("camden", "1", "2", "1"))), D))
     assert(e.getMessage.contains("[Camden,8,Female,Number,2]"), e.getMessage)
     // the check needs data rows, like the pivot it replaces
-    assert(HpvPipeline.stack(Seq(grid(s"x $T24", header)), D).count() == 0)
+    assert(HpvPipeline.stack(Seq(grid(s"x $T24", header)), D).isEmpty)
   }
 
   test("R1/R2: kept headers land; an absent metric gives a null measure") {
@@ -142,14 +158,12 @@ class HpvPipelineSpec extends SparkTestBase {
       Seq("Year 8 females: Number", "Year 8 females: Number vaccinated", "Year 9 males: Number",
         "Year 9 males: % vaccinated"),
       Seq("camden", "10", "5", "7", "70.0"), Seq("barnet", "20", "6", "8", "*"))
-    val out = HpvPipeline.stack(Seq(wb), D)
-    assert(out.columns.toSeq == Seq("Borough_Name", "Year_Group_Number", "Gender_Name",
-      "Students_Total", "Students_Vaccinated", "Academic_Year_End_Date", "Academic_Year_Text",
-      "Date_Extract"))
-    assert(rowsOf(out.select("Borough_Name", "Year_Group_Number", "Gender_Name",
-      "Students_Total", "Students_Vaccinated")) == Map(
-      Seq("Camden", "8", "Female", "10", "5") -> 1, Seq("Camden", "9", "Male", "7", null) -> 1,
-      Seq("Barnet", "8", "Female", "20", "6") -> 1, Seq("Barnet", "9", "Male", "8", null) -> 1))
+    // rows in OutputSchema column order, the measures still raw strings
+    val out = HpvPipeline.stack(Seq(wb), D).map(_.toSeq)
+    def r(b: String, yg: String, g: String, t: String, v: String) = Seq(b, yg, g, t, v, 2024, T24, sqlD)
+    assert(out.sortBy(_.mkString("|")) == Seq(
+      r("Barnet", "8", "Female", "20", "6"), r("Barnet", "9", "Male", "8", null),
+      r("Camden", "8", "Female", "10", "5"), r("Camden", "9", "Male", "7", null)))
   }
 
   test("golden D7: a repeated academic year keeps both base rows; the rollups double-count") {
@@ -259,7 +273,7 @@ class HpvPipelineSpec extends SparkTestBase {
          |""".stripMargin)
     val wb = Workbook.readCsvGrid(spark, tmp.toString)
     assert(wb.a1 == s"Coverage $T24")
-    assert(wb.data.columns.toSeq == Seq("Local authority", "Year 8 females: Number", "Year 8 females: Number vaccinated"))
+    assert(wb.header == Seq("Local authority", "Year 8 females: Number", "Year 8 females: Number vaccinated"))
     val out = HpvPipeline.transform(Seq(wb), D)
     assert(out.count() == 4) // base + Both + All·Female + All·Both
     java.nio.file.Files.delete(tmp)
@@ -311,12 +325,37 @@ class HpvPipelineSpec extends SparkTestBase {
       e.getMessage)
   }
 
+  test("N1 before the cast: a non-number beside a born-null measure is dropped, never cast") {
+    val wb = grid(s"x $T24", y8F, Seq("camden", "12 pupils", ""), Seq("barnet", "7", "6"))
+    val out = HpvPipeline.transform(Seq(wb), D)
+    assert(cells(out).keySet.map(_._1) == Set("Barnet"))
+  }
+
+  test("N2 matches a sentinel exactly: a padded ' * ' is not scrubbed, so its cast fails") {
+    val wb = grid(s"x $T24", y8F, Seq("camden", " * ", "5"))
+    val e = intercept[Exception](HpvPipeline.transform(Seq(wb), D))
+    // the cast sees the trimmed value
+    assert(e.getMessage.contains("CAST_INVALID_INPUT") && e.getMessage.contains("'*'"),
+      e.getMessage)
+  }
+
   test("a rolled sum past Long.MaxValue fails with an overflow, never wraps") {
     val max = Long.MaxValue.toString
     val wb = grid(s"x $T24", y8F ++ Seq("Year 8 males: Number", "Year 8 males: Number vaccinated"),
       Seq("camden", max, "5", "1", "6"))
     val e = intercept[ArithmeticException](HpvPipeline.transform(Seq(wb), D))
     assert(e.getMessage.toLowerCase.contains("overflow"), e.getMessage)
+  }
+
+  test("D7: the duplicate-year warning is ASCII and names the year") {
+    val wb = grid(s"x $T24", y8F, Seq("camden", "10", "5"))
+    val buf = new java.io.ByteArrayOutputStream
+    val err = System.err
+    System.setErr(new java.io.PrintStream(buf, true, "UTF-8"))
+    try HpvPipeline.transform(Seq(wb, wb), D) finally System.setErr(err)
+    val lines = buf.toString("UTF-8").linesIterator.filter(_.contains("(D7)")).toSeq
+    assert(lines.size == 1, buf.toString("UTF-8"))
+    assert(lines.head.forall(_ < 128) && lines.head.contains("academic year 2024"), lines.head)
   }
 
   test("D7: duplicate academic years across workbooks are detected") {
