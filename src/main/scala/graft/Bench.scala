@@ -23,7 +23,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.core.Sessions.envCores
 
     // ---- load gate: refuse to publish a contended number. Three
     // rounds running, the published total was a host-contention artifact
@@ -109,7 +109,7 @@ object Bench {
     val steal0 = stealJiffies
 
     val spark = graft.core.Sessions
-      .configure(SparkSession.builder().master(s"local[$cpus]"), cpus.toInt)
+      .configure(SparkSession.builder().master(s"local[$cpus]"), cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

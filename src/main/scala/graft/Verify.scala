@@ -9,13 +9,13 @@ object Verify {
     // Optional third arg (dev only): comma-separated subset of query names.
     val keep: String => Boolean =
       if (args.length > 2) args(2).split(",").toSet else _ => true
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = graft.core.Sessions.envCores
     // the engine's standard session config (UTC, NTZ inference off,
     // AQE, …) — one source of truth with Bench/Sessions.local, so a
     // session-level conf change can't silently diverge the verify
     // harness from the engine (the r7 ADVICE drift hazard)
     val spark = graft.core.Sessions
-      .configure(SparkSession.builder().master(s"local[$cpus]"), cpus.toInt)
+      .configure(SparkSession.builder().master(s"local[$cpus]"), cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

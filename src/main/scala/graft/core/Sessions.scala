@@ -45,12 +45,22 @@ object Sessions {
         sys.props("java.io.tmpdir") + "/graft_warehouse")
       .config("spark.ui.enabled", "false")
 
+  /** Cores a local run uses when `SPARK_GRAFT_CPUS` is unset: this
+    * machine's, capped at 32.
+    */
+  val DefaultCores: Int = Runtime.getRuntime.availableProcessors.min(32)
+
+  /** `SPARK_GRAFT_CPUS`, else [[DefaultCores]]: the core count (and
+    * shuffle-partition count) of the Bench, Verify and ScaleUp mains.
+    */
+  def envCores: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(DefaultCores)(_.toInt)
+
   /** Local session for tests / ad-hoc runs, with graft's SQL function
     * extensions registered. Registration also runs imperatively on the
     * returned session: builder-time `withExtensions` is silently dropped
     * when `getOrCreate` reuses a session that already exists in the JVM.
     */
-  def local(cores: Int = Runtime.getRuntime.availableProcessors.min(32)): SparkSession = {
+  def local(cores: Int = DefaultCores): SparkSession = {
     val s = configure(SparkSession.builder().master(s"local[$cores]"), cores)
       .appName("graft")
       .withExtensions(new graft.GraftExtensions()(_))

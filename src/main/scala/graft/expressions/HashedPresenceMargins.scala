@@ -39,7 +39,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, StringType}
   * the fold formulation is K interpreted `aggregate()` higher-order
   * lambdas, each re-evaluating the hash/distinct subtree and paying
   * lambda-variable plumbing per element — measured ~3.0 s per corpus
-  * pass at sf0.1 for LangId's K=4 (LidScoreProfile), ~0.4 s fused.
+  * pass at sf0.1 for LangId's K=4, ~0.4 s fused (BASELINE.md "Records
+  * of the deleted dev harnesses").
   *
   * Null semantics: null array → null margins; a null ELEMENT → null
   * margins (the fold's null bucket poisons its decimal sum the same

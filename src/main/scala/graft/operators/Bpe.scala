@@ -217,17 +217,8 @@ object Bpe extends org.apache.spark.internal.Logging {
     * count ties, batches of 1) degrades to the round-per-merge shape,
     * never below it.
     */
-  /** @param onRound progress hook, called once per distributed round
-    *                 with (1-based round index, the merges that round
-    *                 applied) — a 32k-merge production run is hours
-    *                 even batched, and an opaque driver loop is
-    *                 undebuggable; also how the A/B harness observes
-    *                 realized batch width.
-    */
-  private[operators] def trainDistributed(
-      wordFreq: DataFrame, nMerges: Int,
-      batchTopK: Int = DefaultBatchTopK,
-      onRound: (Int, Seq[(String, String)]) => Unit = (_, _) => ()): Seq[(String, String)] = {
+  private def trainDistributed(
+      wordFreq: DataFrame, nMerges: Int, batchTopK: Int): Seq[(String, String)] = {
     require(batchTopK >= 1, s"batchTopK must be >= 1, got $batchTopK")
     var vocab = wordFreq
       .select(col("w"), col("freq"), initialSymstr(col("w")).as("symstr"))
@@ -277,7 +268,6 @@ object Bpe extends org.apache.spark.internal.Logging {
           val picked = planBatch(top, maxIncoming, maxOutgoing, liveConcats)
           merges ++= picked
           done += picked.size
-          onRound(rounds, picked)
           if (done < nMerges) {
             val next = vocab
               .select(col("w"), col("freq"),
@@ -400,10 +390,10 @@ object Bpe extends org.apache.spark.internal.Logging {
     * deletion max-heap (stale entries are discarded when their stored
     * count no longer matches the live map) + a pair→words index so
     * each round touches only the words containing the merged pair.
-    * Exactly the distributed trainer's semantics; `private[operators]`
-    * so the equivalence spec can drive it directly.
+    * Exactly the distributed trainer's semantics (BpeSpec pins the two
+    * lanes equal through [[trainMerges]]'s gate).
     */
-  private[operators] def trainInMemory(
+  private def trainInMemory(
       vocab: Array[(String, Long)], nMerges: Int): Seq[(String, String)] = {
     import scala.collection.mutable
     val syms: Array[Array[String]] = vocab.map { case (w, _) => codePointSyms(w) }

@@ -41,7 +41,7 @@ object Components {
     * diameter-bound rounds of driver-synchronized Spark jobs. Above the
     * threshold the distributed label propagation below takes over.
     */
-  private val DriverMaxEdges = 2L * 1000 * 1000
+  private val DriverMaxPairRows = 2L * 1000 * 1000
 
   /** @param pairs undirected edge list (one row per pair; direction and
     *   duplicates are normalized away here). CONSUMED: any
@@ -52,7 +52,7 @@ object Components {
     *   sit in the block manager until GC (observed as the q95 bench
     *   leak). Callers needing the pair frame afterwards should pass a
     *   recomputable plan or re-checkpoint.
-    * @param driverMaxEdges driver-lane gate: the largest number of RAW
+    * @param driverMaxPairRows driver-lane gate: the largest number of RAW
     *   pair rows (non-null, counted before direction normalization and
     *   dedup) solved by driver-side union-find; one more row takes the
     *   distributed label propagation, so duplicate-heavy inputs go
@@ -63,7 +63,7 @@ object Components {
   def connectedComponents(
       pairs: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 25,
-      driverMaxEdges: Long = DriverMaxEdges): DataFrame = {
+      driverMaxPairRows: Long = DriverMaxPairRows): DataFrame = {
     val e0 = pairs.select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
 
     // Small-graph fast path: exact driver-side union-find, gated by a
@@ -74,22 +74,22 @@ object Components {
     // pass re-scans O(N²) work or its cache; union-find needs neither
     // direction-doubling nor dedup, duplicates and self-loops are
     // absorbed). The limit makes the gate safe: an oversized edge list
-    // collects only driverMaxEdges+1 rows before falling to the
-    // distributed path. `driverMaxEdges` therefore now counts RAW pair
-    // rows, not normalized directed edges — same scale, same budget
-    // rationale (see DriverMaxEdges).
-    if (driverMaxEdges >= 0) {
+    // collects only driverMaxPairRows+1 rows before falling to the
+    // distributed path. The gate therefore counts RAW pair rows, not
+    // normalized directed edges — same scale, same budget rationale
+    // (see DriverMaxPairRows).
+    if (driverMaxPairRows >= 0) {
       val spark = pairs.sparkSession
       import spark.implicits._
-      // guard the input, not the sum: driverMaxEdges + 1 wraps at
+      // guard the input, not the sum: driverMaxPairRows + 1 wraps at
       // Long.MaxValue, and a wrapped cap would collect nothing and pass
       // the gate with an empty graph
-      require(driverMaxEdges < Int.MaxValue, s"driverMaxEdges too large: $driverMaxEdges")
-      val probeCap = driverMaxEdges + 1
+      require(driverMaxPairRows < Int.MaxValue, s"driverMaxPairRows too large: $driverMaxPairRows")
+      val probeCap = driverMaxPairRows + 1
       // typed collect: primitive-friendly tuple encoding, no Row boxing
       val probe = e0.where(col("src").isNotNull && col("dst").isNotNull)
         .limit(probeCap.toInt).as[(Long, Long)].collect()
-      if (probe.length <= driverMaxEdges) {
+      if (probe.length <= driverMaxPairRows) {
         Lineage.release(pairs) // see @param pairs
         val labeled = driverUnionFind(probe)
         return spark.createDataset(labeled).toDF("node", "component")

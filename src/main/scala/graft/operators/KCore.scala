@@ -69,7 +69,7 @@ object KCore {
     * exactly the graphs small enough not to need them. Same scale,
     * same ~300-500 MB transient-heap budget rationale.
     */
-  private val DriverMaxArcs = 4L * 1000 * 1000
+  private val DriverMaxPairRows = 4L * 1000 * 1000
 
   /** Textbook cascade over RAW undirected pairs (self-loops/nulls
     * pre-filtered by the caller; any orientation, duplicates fine —
@@ -123,7 +123,7 @@ object KCore {
     * the surviving vertices with their degree INSIDE the core
     * (≥ k by construction). Empty result when no k-core exists.
     *
-    * @param driverMaxArcs driver-lane gate: the largest number of RAW
+    * @param driverMaxPairRows driver-lane gate: the largest number of RAW
     *   pair rows (non-null, non-loop, counted before canonicalization
     *   and dedup) solved on the driver; one more row takes the
     *   distributed peel, so duplicate-heavy inputs go distributed even
@@ -132,12 +132,12 @@ object KCore {
     */
   def core(
       pairs: DataFrame, aCol: String, bCol: String, k: Int,
-      maxIter: Int = 50, driverMaxArcs: Long = DriverMaxArcs): DataFrame = {
+      maxIter: Int = 50, driverMaxPairRows: Long = DriverMaxPairRows): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    // guard the input, not the sum: the probe cap driverMaxArcs + 1 wraps
+    // guard the input, not the sum: the probe cap driverMaxPairRows + 1 wraps
     // at Long.MaxValue, and a wrapped cap collects nothing and passes the
     // gate with an empty graph
-    require(driverMaxArcs < Int.MaxValue, s"driverMaxArcs too large: $driverMaxArcs")
+    require(driverMaxPairRows < Int.MaxValue, s"driverMaxPairRows too large: $driverMaxPairRows")
     // LAZY localCheckpoint: the gate probe below and (over the gate)
     // the prep both read THIS frame — one LogicalRDD, one shuffle
     // lineage — so the caller's producer plan evaluates its map stages
@@ -155,18 +155,18 @@ object KCore {
     // distributed explode + repartition exchange + dedup + arc
     // checkpoint + count were pure overhead (solo q144 at sf0.1:
     // 4.7 → 3.5 s). Cost model: the probe action evaluates the producer
-    // only until driverMaxArcs+1 rows arrive, but the lazy
+    // only until driverMaxPairRows+1 rows arrive, but the lazy
     // localCheckpoint then materializes every partition the probe did
     // not reach in a follow-up job, so either lane pays one full pass
     // over the producer. What the gate saves is the explode, exchange
     // and dedup; the over-gate lane reads the checkpointed raw blocks
     // and never re-runs the producer.
-    if (driverMaxArcs >= 0) {
+    if (driverMaxPairRows >= 0) {
       val spark = pairs.sparkSession
       import spark.implicits._
-      val probeCap = driverMaxArcs + 1
+      val probeCap = driverMaxPairRows + 1
       val probe = cleaned.limit(probeCap.toInt).as[(Long, Long)].collect()
-      if (probe.length <= driverMaxArcs) {
+      if (probe.length <= driverMaxPairRows) {
         release(cleaned)
         return spark.createDataset(driverPeel(probe, k)).toDF("vertex", "core_degree")
       }

@@ -277,7 +277,8 @@ object LangId {
         val e = new Array[Double](k)
         c = 0
         // StrictMath.exp = Spark's exp() codegen (one-ulp Math.exp
-        // divergences measured, QcLaneDebug3)
+        // divergences measured; BASELINE.md "Records of the deleted dev
+        // harnesses")
         while (c < k) { e(c) = java.lang.StrictMath.exp(m(c) - mx); c += 1 }
         var z = e(0)
         c = 1
@@ -333,9 +334,10 @@ object LangId {
     * the [[graft.expressions.CharGrams]] featurizer — one pass per
     * row — replacing K interpreted `aggregate()` decimal folds that
     * re-evaluated the gram/hash subtree per class (measured 3.0 s →
-    * ~0.4 s per corpus pass at sf0.1, LidScoreProfile). The kernel
-    * replays the fold's decimal arithmetic exactly (order-free exact
-    * adds of the same dec18-rounded terms), so margins are
+    * ~0.4 s per corpus pass at sf0.1; BASELINE.md "Records of the
+    * deleted dev harnesses"). The kernel replays the fold's decimal
+    * arithmetic exactly (order-free exact adds of the same
+    * dec18-rounded terms), so margins are
     * BIT-IDENTICAL — [[scoreViaMarginFold]] keeps the fold
     * formulation and LangIdSpec pins kernel ≡ fold ≡ features-path on
     * adversarial fixtures.

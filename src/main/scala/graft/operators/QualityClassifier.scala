@@ -235,7 +235,8 @@ object QualityClassifier {
         // them. StrictMath.exp, NOT Math.exp: Spark's exp() codegen
         // calls StrictMath (measured: 10% of values differ from
         // Math.exp by one ulp — enough to diverge the lanes at
-        // iteration 2, QcLaneDebug3)
+        // iteration 2; BASELINE.md "Records of the deleted dev
+        // harnesses")
         val sig = 1.0 / (1.0 + java.lang.StrictMath.exp(-m))
         val err = if (y == 1.0) sig - 1.0 else sig
         val errD = dec18(err) // err * 1.0 == err, rounded once per doc

@@ -371,7 +371,7 @@ object Similarity {
     * bounded set while the target neighborhoods spread). Passing 0
     * (the defaults for `entryPoints`, and opt-in for `beam`/`rounds`)
     * AUTO-SIZES by corpus count N, measured at the recall knee
-    * (GraphAnnProbe/GraphAnnProbe2, BASELINE r14):
+    * (BASELINE.md "Graph-ANN auto-sized search"):
     *  - entries: ⌈√N⌉ (min 4) — seed coverage must scale with N; the
     *    seed pool stays |queries|·√N, sub-linear and broadcast-sized.
     *    This is the flat-graph answer to HNSW's hierarchy, whose top
@@ -434,9 +434,9 @@ object Similarity {
       val nEntries = if (entryPoints > 0) entryPoints.toLong else math.max(4L, sqrtN)
       // WIDE beam, FEW rounds (the auto shape): a round costs fixed
       // job-launch overhead (4 broadcast joins) while beam costs only
-      // frontier ROWS — measured at sf0.1 (GraphAnnProbe2): 3√N beam ×
-      // 3 rounds reaches 0.90 recall in 3.8 s where 1.5√N × 6 rounds
-      // reached 0.80 in 8.9 s. Rows stay sub-linear: |queries|·3√N·deg.
+      // frontier ROWS — measured at sf0.1 (BASELINE.md "Graph-ANN
+      // auto-sized search"): 3√N beam × 3 rounds reaches 0.90 recall
+      // in 3.8 s where 1.5√N × 6 rounds reached 0.80 in 8.9 s. Rows stay sub-linear: |queries|·3√N·deg.
       val nBeam =
         if (beam > 0) beam.toLong
         else math.max(2L * k, 3L * sqrtN)

@@ -32,13 +32,14 @@ import graft.functions.TextFunctions.{tokens, textShinglesAll}
   *   3. per-document windows (islands merge / coverage expansion) —
   *      partitioned by doc_id, bounded by document length.
   * At 100 TB the gram shuffle dominates at ~k× the corpus bytes. The
-  * standard width reduction (hash each gram to two 60-bit md5-derived
-  * longs before the shuffle) was MEASURED a 2× loss at sf10 (26 M
-  * grams, 4-round in-JVM A/B, `SpanKeyAB`: text keys 3.8 s vs md5 keys
-  * 7.7 s min-of-4) — at k=8 the ~45-byte text key is cheaper to hash
-  * and shuffle than an md5+conv per gram costs to compute; it would
-  * only pay for much longer grams. Exact text also keeps the oracle
-  * comparison collision-free.
+  * standard width reduction (hash each gram to md5-derived keys before
+  * the shuffle) was MEASURED a 2× loss at sf10, k=8 (26 M grams, text
+  * keys 3.8 s vs md5 keys 7.7 s min-of-4; BASELINE.md "Records of the
+  * deleted dev harnesses"): the ~45-byte text key is cheaper to hash
+  * and shuffle than an md5 per gram costs to compute. A k=20 A/B
+  * favoured md5 keys (BASELINE.md "Wide-gram hashed keys A/B at
+  * k=20"), but no query runs grams that wide, so there is no md5 lane.
+  * Exact text also keeps the oracle comparison collision-free.
   *
   * Reference anchor: the reference pipeline has no corpus ops at all
   * (/root/reference/src/main.py is xlsx→rollup→load); this lives in the
@@ -54,7 +55,7 @@ object SubstringDedup extends org.apache.spark.internal.Logging {
     * guard needed). One fused byte-scan kernel per doc
     * (lowercase→tokenize→gram) + posexplode, all inside codegen.
     */
-  private[operators] def gramOccurrences(
+  private def gramOccurrences(
       docs: DataFrame, k: Int, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
     require(k >= 2, s"gram width k must be >= 2, got $k")
@@ -74,7 +75,7 @@ object SubstringDedup extends org.apache.spark.internal.Logging {
     * slower on the fixture; keep-one callers use the packed-bigint
     * variant below instead). Columns: (doc_id, pos).
     */
-  private[operators] def duplicatedStarts(occ: DataFrame): DataFrame = {
+  private def duplicatedStarts(occ: DataFrame): DataFrame = {
     val gs = occ.groupBy(col("g")).agg(count(lit(1)).as("cnt"))
       .where(col("cnt") >= 2).select(col("g"))
     // shuffle_hash, measured at sf10 (26 M grams): 6.8 s vs AQE's
@@ -96,10 +97,7 @@ object SubstringDedup extends org.apache.spark.internal.Logging {
     * The oracle replicates the formula verbatim
     * (doc_id * 2097152 + pos).
     */
-  // private[operators] (not private): the IncJoinAB dev harness reuses
-  // the exact production expression so its A/B carries identical
-  // key/payload shapes (advice r10)
-  private[operators] def packedOrder: org.apache.spark.sql.Column = {
+  private def packedOrder: org.apache.spark.sql.Column = {
     val ok = col("doc_id") >= 0 && col("doc_id") < (1L << 42) &&
       col("pos") < (1L << 21)
     when(ok, shiftleft(col("doc_id"), 21) + col("pos"))
@@ -112,7 +110,7 @@ object SubstringDedup extends org.apache.spark.internal.Logging {
     * (first = min packed (doc_id, pos) corpus-wide). Columns:
     * (doc_id, pos).
     */
-  private[operators] def nonFirstStarts(occ: DataFrame): DataFrame = {
+  private def nonFirstStarts(occ: DataFrame): DataFrame = {
     val gs = occ.groupBy(col("g"))
       .agg(count(lit(1)).as("cnt"), min(packedOrder).as("fp"))
       .where(col("cnt") >= 2)
@@ -132,29 +130,16 @@ object SubstringDedup extends org.apache.spark.internal.Logging {
     * true maximal duplicated runs (see the object doc for the
     * soundness/over-approximation argument).
     */
-  /** Replace the gram TEXT key with its 16-byte md5 (binary) — the
-    * wide-gram shuffle reduction. At k=8 the text keys WIN (round-10
-    * A/B: md5 keys were ~2× slower — short gram strings shuffle
-    * cheaper than the extra per-row hashing); at k=20 the ~120-char
-    * gram text dwarfs the 16-byte digest and the md5 lane flips ahead
-    * (round-11 A/B in BASELINE.md). Exactness: a conflated pair of
-    * distinct grams needs an md5 collision — ~n²/2^129 at any corpus
-    * size, the same md5-family argument minhash already rests on.
-    */
-  private def hashedGramKeys(occ: DataFrame): DataFrame =
-    occ.withColumn("g", unhex(md5(col("g"))))
-
   def duplicatedSpans(
       docs: DataFrame, k: Int = 8, idCol: String = "doc_id",
-      textCol: String = "text", hashGramKeys: Boolean = false): DataFrame = {
+      textCol: String = "text"): DataFrame = {
     // NO staging checkpoint, measured: the fused gram kernel recomputes
     // in 1.4 s at sf10 where reading a 26.5 M-row staged gram table
     // cost ~50 s PER CONSUMER (deserialized block-manager rows lose to
     // re-running codegen over the 180 MB parquet scan). Recompute-both-
     // sides is also the only shape that scales: at 100 TB the gram
     // table is k× the corpus and could never be pinned in storage.
-    val occ0 = gramOccurrences(docs, k, idCol, textCol)
-    val d = duplicatedStarts(if (hashGramKeys) hashedGramKeys(occ0) else occ0)
+    val d = duplicatedStarts(gramOccurrences(docs, k, idCol, textCol))
     val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
     d.withColumn("ni",
         when(lag(col("pos"), 1).over(w).isNull
@@ -190,11 +175,10 @@ object SubstringDedup extends org.apache.spark.internal.Logging {
     */
   def cleanKeepFirst(
       docs: DataFrame, k: Int = 8, idCol: String = "doc_id",
-      textCol: String = "text", hashGramKeys: Boolean = false): DataFrame = {
+      textCol: String = "text"): DataFrame = {
     // Same no-staging rationale as duplicatedSpans (kernel recompute
     // beats reading back a materialized gram table, measured at sf10).
-    val occ0 = gramOccurrences(docs, k, idCol, textCol)
-    val nonFirst = nonFirstStarts(if (hashGramKeys) hashedGramKeys(occ0) else occ0)
+    val nonFirst = nonFirstStarts(gramOccurrences(docs, k, idCol, textCol))
     retentionReport(docs, nonFirst, k, idCol, textCol)
   }
 

@@ -65,12 +65,12 @@ import graft.operators.SubstringDedup
   *    cleanup, retried opportunistically on later triggers, so a crash
   *    between commit and delete double-counts nothing.
   *
-  * Liveness rule (what [[readState]] reads): `base/` if present, else
-  * a legacy round-11 layout's root parquet files; plus every `mseg_<T>`
-  * with T > compacted-through; plus every `seg_<b>` with b above BOTH
-  * compacted-through and the highest live mseg T. Applied watermark =
-  * max over all of those ids. Read fan-out is bounded by
-  * 1 + 2·maxSegments parts.
+  * Liveness rule (what [[readState]] reads): `base/` if present; plus
+  * every `mseg_<T>` with T > compacted-through; plus every `seg_<b>`
+  * with b above BOTH compacted-through and the highest live mseg T.
+  * Applied watermark = max over all of those ids. Read fan-out is
+  * bounded by 1 + 2·maxSegments parts. A directory with data files at
+  * its root is not such a store and is refused.
   *
   * == Exactly-once across crashes ==
   *
@@ -111,11 +111,11 @@ import graft.operators.SubstringDedup
   * (default 1e-4; a refused CLEAN batch is possible but rare — widen
   * `bloomExpectedItems`/lower `bloomFpp` if ids are very dense).
   * Coverage is exact for stores built entirely through this sink or
-  * [[bootstrap]]; a legacy bootstrap (replaceTable at the root) has no
-  * bloom, its ids are unguarded, and the store carries an
-  * `_ids_bloom_incomplete` marker through compaction so the gap is
-  * visible. Replays of the SAME batch are the watermark's job and are
-  * skipped before the guard runs.
+  * [[bootstrap]]; a live part without a bloom leaves its ids
+  * unguarded, and the store then carries an `_ids_bloom_incomplete`
+  * marker through compaction so the gap is visible. Replays of the
+  * SAME batch are the watermark's job and are skipped before the guard
+  * runs.
   *
   * '''Saturation''' (the guard's own scale bound): blooms merge by
   * OR-ing fixed bitsets, so once the TOTAL ingested ids exceed
@@ -140,9 +140,6 @@ import graft.operators.SubstringDedup
   * change.
   */
 object SubstringIngest extends Logging {
-
-  /** Legacy (round-11) root watermark file — honored read-only. */
-  val AppliedBatchFile = "_applied_batch"
 
   /** Sidecar beside each `_ids_bloom`: how many ids went into it
     * (summed through compaction) — the saturation accounting that lets
@@ -177,8 +174,8 @@ object SubstringIngest extends Logging {
   /** Per-segment doc-id bloom sidecar. */
   val IdsBloomFile = "_ids_bloom"
 
-  /** Marker: some live data predates the bloom guard (legacy
-    * bootstrap) — id coverage is best-effort, not complete.
+  /** Marker: some live data carries no bloom, or the guard saturated
+    * — id coverage is best-effort, not complete.
     */
   val BloomIncompleteFile = "_ids_bloom_incomplete"
 
@@ -191,13 +188,11 @@ object SubstringIngest extends Logging {
     * its file list just before the fold could hit FileNotFound).
     * Death is therefore stamped explicitly: the fold commit writes
     * this file (millis) into each part it made dead; a dead part
-    * missing one (crash between the fold rename and the stamps, or a
-    * legacy layout) is stamped by the first sweep that sees it. A dead
-    * part is deleted only once its stamp is `graceMs` old, so it
-    * always survives at least the full grace window of wall time
-    * AFTER its death was recorded. For dead parts that are plain
-    * FILES (legacy root layout) the tombstone sits beside them as
-    * `_dead_at_<name>` (underscore-prefixed — invisible to readers).
+    * missing one (crash between the fold rename and the stamps) is
+    * stamped by the first sweep that sees it. A dead part is deleted
+    * only once its stamp is `graceMs` old, so it always survives at
+    * least the full grace window of wall time AFTER its death was
+    * recorded.
     */
   val DeadAtFile = "_dead_at"
 
@@ -218,8 +213,8 @@ object SubstringIngest extends Logging {
     StructField("g", StringType), StructField("fp", LongType),
     StructField("cnt", LongType)))
 
-  /** One live data part: its path(s) and whether it carries a bloom. */
-  private case class Part(paths: Seq[Path], bloomAt: Option[Path])
+  /** One live data part: its directory and its bloom, if it has one. */
+  private case class Part(path: Path, bloomAt: Option[Path])
 
   /** Parsed store state under the liveness rule. */
   private case class Store(
@@ -227,7 +222,6 @@ object SubstringIngest extends Logging {
       dir: Path,
       exists: Boolean,
       baseDir: Option[Path],
-      legacyRootFiles: Seq[Path],
       compactedThrough: Long,
       liveMsegs: Seq[(Long, Path)], // ascending fold-through id
       liveSegs: Seq[(Long, Path)], // ascending batch id
@@ -236,22 +230,10 @@ object SubstringIngest extends Logging {
       bloomIncomplete: Boolean) {
     def applied: Long =
       (compactedThrough +: (liveMsegs.map(_._1) ++ liveSegs.map(_._1))).max
-    def liveParts: Seq[Part] = {
-      val basePart = baseDir match {
-        case Some(b) => Seq(Part(Seq(b), someIfExists(fs, new Path(b, IdsBloomFile))))
-        case None if legacyRootFiles.nonEmpty =>
-          Seq(Part(legacyRootFiles, None)) // legacy layout: no bloom
-        case None => Nil
-      }
-      basePart ++ (liveMsegs ++ liveSegs).map { case (_, p) =>
-        Part(Seq(p), someIfExists(fs, new Path(p, IdsBloomFile)))
-      }
-    }
-    /** Parquet data bytes of base (or the legacy root files). */
-    def baseDataBytes: Long = baseDir match {
-      case Some(b) => dataBytes(fs, b)
-      case None => legacyRootFiles.map(p => fs.getFileStatus(p).getLen).sum
-    }
+    def liveParts: Seq[Part] = (baseDir ++ (liveMsegs ++ liveSegs).map(_._2)).toSeq
+      .map(p => Part(p, someIfExists(fs, new Path(p, IdsBloomFile))))
+    /** Parquet data bytes of base. */
+    def baseDataBytes: Long = baseDir.fold(0L)(dataBytes(fs, _))
     /** Parquet data bytes across the live minor-compacted runs. */
     def msegDataBytes: Long = liveMsegs.map { case (_, p) => dataBytes(fs, p) }.sum
   }
@@ -280,15 +262,24 @@ object SubstringIngest extends Logging {
     val dir = new Path(indexDir)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(dir))
-      return Store(fs, dir, exists = false, None, Nil, -1L, Nil, Nil, Nil, Nil,
+      return Store(fs, dir, exists = false, None, -1L, Nil, Nil, Nil, Nil,
         bloomIncomplete = false)
     val children = fs.listStatus(dir).toSeq
+    // every part lives in a directory; a data file at the root means
+    // this is some other table, not a segmented store
+    val rootFiles = children.filter { s =>
+      val n = s.getPath.getName
+      s.isFile && !n.startsWith("_") && !n.startsWith(".")
+    }
+    if (rootFiles.nonEmpty)
+      throw new IllegalArgumentException(
+        s"substringIngest: $dir holds data files at its root " +
+          s"(${rootFiles.map(_.getPath.getName).take(3).mkString(", ")}); " +
+          "a gram store keeps its data in base/, mseg_<T>/ and seg_<b>/ only")
     val baseDir = children.find(s => s.isDirectory && s.getPath.getName == "base")
       .map(_.getPath)
     val compactedThrough = baseDir
       .flatMap(b => readLongFile(fs, new Path(b, CompactedThroughFile)))
-      // legacy root watermark only meaningful while its root files are live
-      .orElse(if (baseDir.isEmpty) readLongFile(fs, new Path(dir, AppliedBatchFile)) else None)
       .getOrElse(-1L)
     def idDirs(prefix: String): Seq[(Long, Path)] = children.filter(s =>
       s.isDirectory && s.getPath.getName.startsWith(prefix) &&
@@ -303,17 +294,11 @@ object SubstringIngest extends Logging {
     val (live, dead) = idDirs(SegPrefix).partition(_._1 > segCover)
     val staleStaging = children.filter(s =>
       s.isDirectory && s.getPath.getName.endsWith(StagingSuffix)).map(_.getPath)
-    // legacy root data files (round-11 layout): dead once base exists
-    val rootFiles = children.filter { s =>
-      val n = s.getPath.getName
-      s.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }.map(_.getPath)
     Store(fs, dir, exists = true, baseDir,
-      legacyRootFiles = if (baseDir.isEmpty) rootFiles else Nil,
       compactedThrough = compactedThrough,
       liveMsegs = liveM.sortBy(_._1),
       liveSegs = live.sortBy(_._1),
-      deadSegs = (dead ++ deadM).map(_._2) ++ (if (baseDir.isDefined) rootFiles else Nil),
+      deadSegs = (dead ++ deadM).map(_._2),
       staleStaging = staleStaging,
       bloomIncomplete = fs.exists(new Path(dir, BloomIncompleteFile)))
   }
@@ -323,7 +308,7 @@ object SubstringIngest extends Logging {
     * [[compact]] consume.
     */
   private def readLive(spark: SparkSession, st: Store): DataFrame = {
-    val paths = st.liveParts.flatMap(_.paths).map(_.toString)
+    val paths = st.liveParts.map(_.path.toString)
     if (paths.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], IndexSchema)
     else spark.read.schema(IndexSchema).parquet(paths: _*)
@@ -336,10 +321,10 @@ object SubstringIngest extends Logging {
 
   /** Published index state: (merged one-row-per-gram view, applied
     * batch watermark). A missing directory (first start) reads as
-    * watermark -1; a PRE-EXISTING index from [[bootstrap]] — or a
-    * legacy round-11 layout, or a batch gramIndex + replaceTable at
-    * the root — reads as its recorded watermark (-1 when none), with
-    * every stream batch id (>= 0) applying on top.
+    * watermark -1; a PRE-EXISTING index from [[bootstrap]] reads as
+    * its recorded watermark, with every stream batch id (>= 0)
+    * applying on top. A directory with data files at its root is
+    * refused with an `IllegalArgumentException` naming it.
     */
   def readState(spark: SparkSession, indexDir: String): (DataFrame, Long) = {
     val st = readStore(spark, indexDir)
@@ -350,7 +335,7 @@ object SubstringIngest extends Logging {
     * trigger or an operator checks before a manual [[compact]]:
     * applied watermark, live part counts, data bytes per level, id
     * count behind the guard blooms, and whether guard coverage is
-    * complete (false once a legacy bootstrap or bloom saturation was
+    * complete (false once a bloom-less part or bloom saturation was
     * observed — pair with [[auditIngestedIds]] then).
     */
   case class StoreStats(
@@ -393,7 +378,7 @@ object SubstringIngest extends Logging {
     * incomplete-coverage marker: the fresh bloom covers every id in
     * `docs`.
     *
-    * Superseded parts (old segments/runs/legacy root files) become
+    * Superseded parts (old segments and runs) become
     * dead BY RULE the instant the swap lands — the liveness view
     * excludes them — and by default are left on disk, death-stamped at
     * the swap, for the grace-window sweep to collect: the bootstrap
@@ -426,11 +411,10 @@ object SubstringIngest extends Logging {
         }).get
       val post = readStore(spark, indexDir)
       // every pre-existing part is dead by rule now (compactedThrough
-      // covers all their ids; legacy root files die once base exists)
+      // covers all their ids)
       if (offline) post.deadSegs.foreach(post.fs.delete(_, true))
       else stampDead(post.fs, post.deadSegs, System.currentTimeMillis())
       post.fs.delete(new Path(post.dir, BloomIncompleteFile), false)
-      post.fs.delete(new Path(post.dir, AppliedBatchFile), false)
     }.get
     ()
   }
@@ -579,17 +563,13 @@ object SubstringIngest extends Logging {
     */
   val DefaultSweepGraceMs: Long = 10L * 60 * 1000
 
-  private def tombstonePath(fs: FileSystem, p: Path): Path =
-    if (fs.getFileStatus(p).isDirectory) new Path(p, DeadAtFile)
-    else new Path(p.getParent, s"${DeadAtFile}_${p.getName}")
-
   /** Record death time on parts a fold just made dead (see
     * [[DeadAtFile]]). Idempotent; a replayed fold never re-stamps.
     */
   private def stampDead(fs: FileSystem, parts: Seq[Path], atMillis: Long): Unit =
     parts.foreach { p =>
       if (fs.exists(p)) {
-        val t = tombstonePath(fs, p)
+        val t = new Path(p, DeadAtFile)
         if (!fs.exists(t)) writeLongFile(fs, t, atMillis)
       }
     }
@@ -597,18 +577,17 @@ object SubstringIngest extends Logging {
   private def sweepDead(st: Store, graceMs: Long): Unit = {
     // staging debris is invisible to readers — always safe to drop;
     // dead DATA parts wait out the reader grace window measured from
-    // their DEATH stamp (self-healing: an unstamped dead part — crash
-    // window or legacy — is stamped now and deleted graceMs later)
+    // their DEATH stamp (self-healing: an unstamped dead part from a
+    // crash window is stamped now and deleted graceMs later)
     st.staleStaging.foreach(st.fs.delete(_, true))
     val now = System.currentTimeMillis()
     st.deadSegs.foreach { p =>
       if (graceMs <= 0L) { st.fs.delete(p, true); () } // documented: no readers
       else {
-        val t = tombstonePath(st.fs, p)
+        val t = new Path(p, DeadAtFile)
         readLongFile(st.fs, t) match {
           case Some(at) if now - at >= graceMs =>
             st.fs.delete(p, true)
-            st.fs.delete(t, false) // file-part tombstones live beside the part
             ()
           case Some(_) => ()
           case None => writeLongFile(st.fs, t, now)
@@ -632,7 +611,7 @@ object SubstringIngest extends Logging {
     * @param docs       streaming DataFrame with (`doc_id` long-castable,
     *                   `text` string) columns
     * @param indexDir   persisted gram index (created if absent; a
-    *                   [[bootstrap]] or legacy batch bootstrap is honored)
+    *                   [[bootstrap]] is honored)
     * @param reportDir  retention reports, one `__batch=<id>` child per
     *                   micro-batch (same columns as cleanKeepFirst:
     *                   doc_id, n_tokens, removed_tokens, removed_ppm,
@@ -866,14 +845,9 @@ object SubstringIngest extends Logging {
     // the swap made these dead by rule; immediate deletion only in
     // offline contexts — the sink stamps death time at THIS commit and
     // defers deletion to the grace-window sweep (see DeadAtFile)
-    if (deleteFolded) {
-      (st.liveMsegs ++ st.liveSegs).foreach { case (_, p) => st.fs.delete(p, true) }
-      st.legacyRootFiles.foreach(st.fs.delete(_, false))
-    } else stampDead(st.fs,
-      (st.liveMsegs ++ st.liveSegs).map(_._2) ++ st.legacyRootFiles,
-      System.currentTimeMillis())
-    st.fs.delete(new Path(st.dir, AppliedBatchFile), false)
-    ()
+    val folded = (st.liveMsegs ++ st.liveSegs).map(_._2)
+    if (deleteFolded) folded.foreach(st.fs.delete(_, true))
+    else stampDead(st.fs, folded, System.currentTimeMillis())
   }
 
   private val ReportSchema = StructType(Seq(
@@ -895,7 +869,7 @@ object SubstringIngest extends Logging {
     * (doc_id, n_occurrences, batches) rows — empty means clean. This is
     * the ground truth the per-trigger bloom guard approximates; run it
     * periodically once a store is marked `_ids_bloom_incomplete`
-    * (legacy bootstrap or bloom saturation).
+    * (a bloom-less part or bloom saturation).
     */
   def auditIngestedIds(spark: SparkSession, reportDir: String): DataFrame = {
     import org.apache.spark.sql.functions._

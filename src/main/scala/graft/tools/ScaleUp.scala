@@ -165,9 +165,9 @@ object ScaleUp {
     // lcm(64, 6) = 192 copies (dimension-rotation period × sign-pattern
     // period); letter permutations are distinct essentially forever
     require(copies >= 1 && copies <= 150, "copies must be in [1,150]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.core.Sessions.envCores
     val spark = graft.core.Sessions
-      .configure(SparkSession.builder().master(s"local[$cpus]"), cpus.toInt)
+      .configure(SparkSession.builder().master(s"local[$cpus]"), cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     for (t <- Tables) {

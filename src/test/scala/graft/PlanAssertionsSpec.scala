@@ -356,7 +356,7 @@ class PlanAssertionsSpec extends SparkTestBase {
       val edges = (1L to 300L).flatMap(i => Seq((i, i % 50 + 1), (i, i % 31 + 2)))
         .toDF("a", "b")
       val out = graft.operators.KCore.core(edges, "a", "b", k = 3,
-        driverMaxArcs = 0)
+        driverMaxPairRows = 0)
       out.collect()
       graft.operators.Lineage.release(out)
       assert(awaitStorageEmpty().isEmpty, "kcore stranded storage")

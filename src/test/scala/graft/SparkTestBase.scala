@@ -23,43 +23,8 @@ trait SparkTestBase extends AnyFunSuite {
     spark.sparkContext.getPersistentRDDs
   }
 
-  /** Jobs launched by `body`'s thread (and threads it starts), counted
-    * by a listener between two fence jobs: the listener bus delivers in
-    * order, so once the closing fence arrives every job of `body` has.
-    */
-  def jobsDuring[T](body: => T): (T, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val tag = "graft.test.budget"
-    val token = java.util.UUID.randomUUID().toString
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val fences = new java.util.concurrent.LinkedBlockingQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty(tag)).foreach {
-          case t if t == token + "/fence" => fences.put(t)
-          case t if t == token => jobs.incrementAndGet()
-          case _ =>
-        }
-    }
-    def fence(): Unit = {
-      sc.setLocalProperty(tag, token + "/fence")
-      sc.parallelize(Seq(1), 1).count()
-      assert(fences.poll(60, java.util.concurrent.TimeUnit.SECONDS) != null,
-        "listener bus did not deliver the fence job")
-    }
-    sc.addSparkListener(listener)
-    try {
-      fence()
-      sc.setLocalProperty(tag, token)
-      val out = body
-      fence()
-      (out, jobs.get())
-    } finally {
-      sc.setLocalProperty(tag, null)
-      sc.removeSparkListener(listener)
-    }
-  }
+  /** Jobs launched by `body`, fenced: see [[JobCounter.during]]. */
+  def jobsDuring[T](body: => T): (T, Int) = JobCounter.during(spark)(body)
 
   /** Order-insensitive comparison (SURVEY N8): rows as multisets. */
   def rowsOf(df: org.apache.spark.sql.DataFrame): Map[Seq[Any], Int] =

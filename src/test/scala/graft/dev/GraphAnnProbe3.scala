@@ -13,7 +13,7 @@ import graft.operators.Similarity
   */
 object GraphAnnProbe3 {
   def main(args: Array[String]): Unit = {
-    val spark = graft.core.Sessions.local(32)
+    val spark = graft.core.Sessions.local(graft.core.Sessions.envCores)
     spark.sparkContext.setLogLevel("WARN")
     for (d <- args) {
       val emb = Tables.embeddings(spark, d).localCheckpoint(true)

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   */
 object LangIdProbe {
   def main(args: Array[String]): Unit = {
-    val spark = graft.core.Sessions.local(32)
+    val spark = graft.core.Sessions.local(graft.core.Sessions.envCores)
     spark.sparkContext.setLogLevel("WARN")
     val latin = "abcdefghijklmnopqrstuvwxyz"
     for (d <- args) {

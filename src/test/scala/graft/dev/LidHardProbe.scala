@@ -8,7 +8,7 @@ import graft.operators.LangId
   */
 object LidHardProbe {
   def main(args: Array[String]): Unit = {
-    val spark = graft.core.Sessions.local(32)
+    val spark = graft.core.Sessions.local(graft.core.Sessions.envCores)
     spark.sparkContext.setLogLevel("WARN")
     for (d <- args; trunc <- Seq(15)) {
       val planted = graft.core.Tables.documents(spark, d)

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   */
 object Q215AccProbe {
   def main(args: Array[String]): Unit = {
-    val spark = graft.core.Sessions.local(32)
+    val spark = graft.core.Sessions.local(graft.core.Sessions.envCores)
     spark.sparkContext.setLogLevel("WARN")
     for (d <- args) {
       val t0 = System.nanoTime()

@@ -11,9 +11,9 @@ import org.apache.spark.sql.functions._
 object SemDedupProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.core.Sessions.envCores
     val spark = graft.core.Sessions
-      .configure(SparkSession.builder().master(s"local[$cpus]"), cpus.toInt)
+      .configure(SparkSession.builder().master(s"local[$cpus]"), cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

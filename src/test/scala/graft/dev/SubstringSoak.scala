@@ -15,8 +15,7 @@ object SubstringSoak {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val n = args.drop(1).headOption.map(_.toInt).getOrElse(50)
     val maxSegments = args.drop(2).headOption.map(_.toInt).getOrElse(1000)
-    val spark = graft.core.Sessions.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    val spark = graft.core.Sessions.local(graft.core.Sessions.envCores)
     spark.sparkContext.setLogLevel("WARN")
     val root = java.nio.file.Files.createTempDirectory("graft_soak").toString
     val (indexDir, reportDir) = (s"$root/index", s"$root/reports")

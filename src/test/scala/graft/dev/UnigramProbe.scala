@@ -3,7 +3,7 @@ import org.apache.spark.sql.functions._
 import graft.operators.Unigram
 object UnigramProbe {
   def main(args: Array[String]): Unit = {
-    val spark = graft.core.Sessions.local(32)
+    val spark = graft.core.Sessions.local(graft.core.Sessions.envCores)
     spark.sparkContext.setLogLevel("WARN")
     for (d <- args) {
       val docs = graft.core.Tables.documents(spark, d).localCheckpoint(true)

@@ -28,11 +28,11 @@ class ComponentsSpec extends SparkTestBase {
   }
 
   test("distributed propagation path agrees with driver union-find") {
-    // random-ish graph incl. a long chain; driverMaxEdges = -1 forces the
+    // random-ish graph incl. a long chain; driverMaxPairRows = -1 forces the
     // distributed path, default takes the union-find fast path
     val edges = ((1L to 30L).map(i => (i, i + 1)) ++
       Seq((100L, 200L), (200L, 300L), (41L, 40L), (1L, 31L))).toDF("a", "b")
-    val dist = Components.connectedComponents(edges, "a", "b", driverMaxEdges = -1)
+    val dist = Components.connectedComponents(edges, "a", "b", driverMaxPairRows = -1)
       .as[(Long, Long)].collect().toMap
     val drv = Components.connectedComponents(edges, "a", "b")
       .as[(Long, Long)].collect().toMap
@@ -43,7 +43,7 @@ class ComponentsSpec extends SparkTestBase {
   test("soak: >2M-edge chain takes the distributed path and converges in O(log d) rounds") {
     // Two chains over 2,000,002 nodes (split at the midpoint), generated
     // distributed — never materialized on the driver. The edge count
-    // exceeds DriverMaxEdges, so the POINTER-JUMPING path (not driver
+    // exceeds DriverMaxPairRows, so the POINTER-JUMPING path (not driver
     // union-find) runs. Chain diameter ≈ 1e6; plain min-propagation
     // would need ~1e6 rounds, pointer jumping covers ~4^r distance per
     // round → ~10-11 rounds. maxIter=15 makes the spec FAIL (require
@@ -83,7 +83,7 @@ class ComponentsSpec extends SparkTestBase {
     // plan, so the consumer's release frees everything.
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
     val edges = ((1L to 40L).map(i => (i, i + 1)) ++ Seq((100L, 101L))).toDF("a", "b")
-    val labels = Components.connectedComponents(edges, "a", "b", driverMaxEdges = -1)
+    val labels = Components.connectedComponents(edges, "a", "b", driverMaxPairRows = -1)
     labels.write.format("noop").mode("overwrite").save() // consume
     Lineage.release(labels, blocking = true)
     assert(spark.sparkContext.getPersistentRDDs.isEmpty,
@@ -122,16 +122,16 @@ class ComponentsSpec extends SparkTestBase {
   test("gate bound: Int.MaxValue - 1 takes the driver lane; Long.MaxValue fails loud, not empty") {
     val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("a", "b")
     // the largest accepted bound: probe cap = Int.MaxValue, full answer
-    val top = Components.connectedComponents(edges, "a", "b", driverMaxEdges = Int.MaxValue - 1L)
+    val top = Components.connectedComponents(edges, "a", "b", driverMaxPairRows = Int.MaxValue - 1L)
       .as[(Long, Long)].collect().toMap
     assert(top == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
-    // driverMaxEdges + 1 would wrap to Long.MinValue and probe nothing
+    // driverMaxPairRows + 1 would wrap to Long.MinValue and probe nothing
     val e = intercept[IllegalArgumentException] {
-      Components.connectedComponents(edges, "a", "b", driverMaxEdges = Long.MaxValue)
+      Components.connectedComponents(edges, "a", "b", driverMaxPairRows = Long.MaxValue)
     }
-    assert(e.getMessage.contains("driverMaxEdges too large"))
+    assert(e.getMessage.contains("driverMaxPairRows too large"))
     intercept[IllegalArgumentException] {
-      Components.connectedComponents(edges, "a", "b", driverMaxEdges = Int.MaxValue.toLong)
+      Components.connectedComponents(edges, "a", "b", driverMaxPairRows = Int.MaxValue.toLong)
     }
   }
 }

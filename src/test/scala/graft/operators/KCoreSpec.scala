@@ -20,13 +20,13 @@ class KCoreSpec extends SparkTestBase {
     es.groupBy(_._1).map { case (v, xs) => v -> xs.size }
   }
 
-  // driverMaxArcs = 0 forces the distributed delta-peel loop; every
+  // driverMaxPairRows = 0 forces the distributed delta-peel loop; every
   // case below runs through BOTH paths so the gate can never hide a
   // divergence between the driver cascade and the degree-table loop
   private def run(edges: Seq[(Long, Long)], k: Int): Map[Long, Int] = {
     val driver = KCore.core(edges.toDF("a", "b"), "a", "b", k)
       .as[(Long, Long)].collect().map { case (v, d) => v -> d.toInt }.toMap
-    val dist = KCore.core(edges.toDF("a", "b"), "a", "b", k, driverMaxArcs = 0)
+    val dist = KCore.core(edges.toDF("a", "b"), "a", "b", k, driverMaxPairRows = 0)
       .as[(Long, Long)].collect().map { case (v, d) => v -> d.toInt }.toMap
     assert(driver == dist, "driver cascade and distributed delta-peel diverge")
     driver
@@ -67,7 +67,7 @@ class KCoreSpec extends SparkTestBase {
     // 5 raw rows (with a dup and a reverse), 3 distinct undirected edges
     val edges = Seq((1L, 2L), (2L, 1L), (1L, 2L), (2L, 3L), (3L, 1L))
     def result(cap: Long) =
-      KCore.core(edges.toDF("a", "b"), "a", "b", k = 2, driverMaxArcs = cap)
+      KCore.core(edges.toDF("a", "b"), "a", "b", k = 2, driverMaxPairRows = cap)
         .as[(Long, Long)].collect().toMap
     // cap = raw rows → driver cascade; cap = raw rows - 1 → the probe
     // overflows and the distributed loop runs; answers must agree
@@ -78,16 +78,16 @@ class KCoreSpec extends SparkTestBase {
   test("gate bound: Int.MaxValue - 1 takes the driver lane; Long.MaxValue fails loud, not empty") {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("a", "b")
     // the largest accepted bound: probe cap = Int.MaxValue, full answer
-    val top = KCore.core(edges, "a", "b", k = 2, driverMaxArcs = Int.MaxValue - 1L)
+    val top = KCore.core(edges, "a", "b", k = 2, driverMaxPairRows = Int.MaxValue - 1L)
       .as[(Long, Long)].collect().toMap
     assert(top == Map(1L -> 2L, 2L -> 2L, 3L -> 2L))
-    // driverMaxArcs + 1 would wrap to Long.MinValue and probe nothing
+    // driverMaxPairRows + 1 would wrap to Long.MinValue and probe nothing
     val e = intercept[IllegalArgumentException] {
-      KCore.core(edges, "a", "b", k = 2, driverMaxArcs = Long.MaxValue)
+      KCore.core(edges, "a", "b", k = 2, driverMaxPairRows = Long.MaxValue)
     }
-    assert(e.getMessage.contains("driverMaxArcs too large"))
+    assert(e.getMessage.contains("driverMaxPairRows too large"))
     intercept[IllegalArgumentException] {
-      KCore.core(edges, "a", "b", k = 2, driverMaxArcs = Int.MaxValue.toLong)
+      KCore.core(edges, "a", "b", k = 2, driverMaxPairRows = Int.MaxValue.toLong)
     }
   }
 }

@@ -182,18 +182,6 @@ class SubstringDedupSpec extends SparkTestBase {
     }
   }
 
-  test("hashGramKeys lane is result-identical to text keys (spans + clean)") {
-    val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
-    for (kk <- Seq(4, 20)) {
-      assertSameRows(
-        SubstringDedup.duplicatedSpans(docs, kk),
-        SubstringDedup.duplicatedSpans(docs, kk, hashGramKeys = true))
-      assertSameRows(
-        SubstringDedup.cleanKeepFirst(docs, kk),
-        SubstringDedup.cleanKeepFirst(docs, kk, hashGramKeys = true))
-    }
-  }
-
   test("spans and clean agree: removed positions lie inside reported spans") {
     val spans = SubstringDedup.duplicatedSpans(docs, k)
       .as[(Long, Long, Long, Long)].collect()

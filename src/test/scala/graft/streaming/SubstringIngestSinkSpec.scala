@@ -319,34 +319,17 @@ class SubstringIngestSinkSpec extends SparkTestBase {
     assert(e2.getMessage.contains("doc_ids"), e2.getMessage)
   }
 
-  test("legacy round-11 layout (root parquet + _applied_batch) reads, extends and compacts away") {
+  test("an index directory with data files at its root is refused, naming it") {
     val (_, indexDir, reportDir, _) = dirs()
-    val corpus = b1.toDF("doc_id", "text")
-    // simulate a round-11 store: whole index at the root + watermark file
+    // a gram index written straight at the root: not a segmented store
     assert(graft.load.Load.replaceTable(
-      spark, SubstringDedup.gramIndex(corpus, k), indexDir).isSuccess)
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(indexDir, SubstringIngest.AppliedBatchFile),
-      "0".getBytes("UTF-8"))
-    val (idx0, applied0) = SubstringIngest.readState(spark, indexDir)
-    assert(applied0 == 0L)
-    assertSameRows(idx0, SubstringDedup.gramIndex(corpus, k))
-    // a new batch appends beside the legacy files (replay of 0 skips)
-    SubstringIngest.applyBatch(b2.toDF("doc_id", "text"), 1L, indexDir, reportDir, k,
-      bloomExpectedItems = 1000)
-    val all = (b1 ++ b2).toDF("doc_id", "text")
-    assertSameRows(SubstringIngest.readState(spark, indexDir)._1,
-      SubstringDedup.gramIndex(all, k))
-    // legacy ids predate the bloom guard — the store must carry the
-    // incomplete-coverage marker once it notices
-    assert(new java.io.File(s"$indexDir/${SubstringIngest.BloomIncompleteFile}").exists)
-    // compaction migrates everything into base/ and drops the root files
-    SubstringIngest.compact(spark, indexDir)
-    val (idx2, applied2) = SubstringIngest.readState(spark, indexDir)
-    assert(applied2 == 1L)
-    assertSameRows(idx2, SubstringDedup.gramIndex(all, k))
-    assert(!new java.io.File(indexDir).listFiles().exists(f =>
-      f.isFile && f.getName.endsWith(".parquet")), "legacy root files survived compaction")
+      spark, SubstringDedup.gramIndex(b1.toDF("doc_id", "text"), k), indexDir).isSuccess)
+    val e = intercept[IllegalArgumentException](SubstringIngest.readState(spark, indexDir))
+    assert(e.getMessage.contains(indexDir), e.getMessage)
+    val e2 = intercept[IllegalArgumentException] {
+      SubstringIngest.applyBatch(b2.toDF("doc_id", "text"), 1L, indexDir, reportDir, k)
+    }
+    assert(e2.getMessage.contains(indexDir), e2.getMessage)
   }
 
   test("retention: a fold death-stamps its inputs — the sweep's grace window runs from the fold commit, not the part's own mtime (advice r12)") {
