@@ -154,12 +154,14 @@ object Quantiles {
             col(s"_hi_$i") * (position - floor(position)))
     }
     // null-safe key join (a NULL group key is still a group, exactly as
-    // groupBy treats it); missing groups report n = 0 and a null pct —
-    // the aggregate's output for an all-null group
-    val joined = allGroups.join(agg,
-      keyCols.map(c => allGroups(c) <=> agg(c)).reduce(_ && _), "left")
+    // groupBy treats it) of the two sides by alias, as both derive from
+    // `df`; missing groups report n = 0 and a null pct — the aggregate's
+    // output for an all-null group
+    def key(side: String, c: String): Column = col(s"$side.`$c`")
+    val joined = allGroups.as("_g").join(agg.as("_a"),
+      keyCols.map(c => key("_g", c) <=> key("_a", c)).reduce(_ && _), "left")
     joined.select(
-      keyCols.map(allGroups(_)) ++ Seq(
+      keyCols.map(c => key("_g", c).as(c)) ++ Seq(
         coalesce(col("n"), lit(0L)).as("n"),
         when(col("n").isNull, lit(null))
           .otherwise(array(ps.zipWithIndex.map { case (p, i) => interp(i, p) }: _*))

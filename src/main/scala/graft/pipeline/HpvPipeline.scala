@@ -4,8 +4,7 @@ import java.time.LocalDate
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
 import graft.ingest.Workbook
@@ -13,9 +12,8 @@ import graft.ops.{Clean, Derive, Rollup}
 
 /** The reference pipeline (`/root/reference/src/main.py:17-120`)
   * re-expressed for a table of about 12k rows: one driver pass builds
-  * the fact rows, Catalyst evaluates the scalar derivations and the
-  * numeric cast once per distinct value (SURVEY.md §4.2), and the
-  * rollups run on the driver.
+  * the fact rows with the [[Derive]] functions, and the rollups run on
+  * the driver too.
   *
   * Semantics notes honored (SURVEY.md §2.8): N1 (dropna before sentinel
   * replace), N2 (full-frame replace), N3 (fail-loud pivot grain), N5
@@ -30,24 +28,22 @@ import graft.ops.{Clean, Derive, Rollup}
   * are null (a sentinel in a key column) DO form null-key groups (SQL
   * GROUP BY), where pandas groupby silently drops them.
   *
-  * Cost per cycle: `transform` launches no Spark job, and the fact table
-  * it returns is one local relation, whose write is one job of one stage
-  * (no Expand, no aggregate, no shuffle).
+  * Cost per cycle: `transform` plans no query and launches no Spark
+  * job. Its one Spark call is the final `createDataFrame`: the fact
+  * table is one local relation, whose write is the cycle's only query,
+  * one job of one stage (no Expand, no aggregate, no shuffle).
   *  - [[stack]] reshapes every workbook on the driver into rows in the
-  *    column order of [[OutputSchema]]. Two collects over one-column
-  *    local relations, whatever the workbook count, evaluate the
-  *    [[Derive]] expressions: one over the distinct headers, one over
-  *    the distinct LA names. Both fold into `ConvertToLocalRelation`.
+  *    column order of [[OutputSchema]], deriving the header keys and
+  *    cleaning the LA names with the [[Derive]] functions.
   *  - The grain check (N3/D4) runs on the driver, per workbook, over the
   *    cleaned LA names and the derived header keys, before `dropna`.
-  *  - [[combine]] runs dropna and the sentinel scrub over those rows on
-  *    the driver, and one more such collect casts the distinct measure
-  *    strings. Both rollups run on the driver
-  *    ([[Rollup.labeledCubeRows]]), and the output rows become the
-  *    cycle's one fact relation. Each base row passes through as it is,
-  *    as in the reference's union, even where the grain repeats — a `*`
-  *    borough scrubs to null beside a blank one, and D7 repeats an
-  *    academic year across workbooks.
+  *  - [[combine]] runs dropna, the sentinel scrub and the measure cast
+  *    ([[Derive.measure]]) over those rows on the driver. Both rollups
+  *    run on the driver ([[Rollup.labeledCubeRows]]), and the output
+  *    rows become the cycle's one fact relation. Each base row passes
+  *    through as it is, as in the reference's union, even where the
+  *    grain repeats — a `*` borough scrubs to null beside a blank one,
+  *    and D7 repeats an academic year across workbooks.
   * The load that follows pays the write (which also counts the rows)
   * and the swap.
   */
@@ -90,18 +86,14 @@ object HpvPipeline {
     * Melt + pivot is fused: each kept header's (year group, gender,
     * metric) is derived once, and every LA row becomes one row per (year
     * group, gender) with its raw `Number` and `Number_Vaccinated` cells
-    * (null where the workbook has no such column). The [[Derive]]
-    * expressions run once over the distinct headers of all workbooks,
-    * and the LA-name cleaning once over their distinct raw names
-    * ([[evaluate]]). The pivot's fail-loud grain contract is checked per
-    * workbook by [[assertGrain]]; every refusal names the workbook's
-    * `source`.
+    * (null where the workbook has no such column). The pivot's
+    * fail-loud grain contract is checked per workbook by [[assertGrain]];
+    * every refusal names the workbook's `source`.
     */
   def stack(workbooks: Seq[Workbook], extractDate: LocalDate,
       compat: Compat = Compat.Off): Seq[Row] = {
     require(workbooks.nonEmpty, "no workbooks to stack")
-    val spark = workbooks.head.spark
-    // (workbook, id column, kept measure columns), refused before any Spark work
+    // (workbook, id column, kept measure columns), refused before any derivation
     val layouts = workbooks.map { wb =>
       // case-insensitive, as Spark's default column resolution matches it
       val ids = wb.header.indices.filter(i => wb.header(i).equalsIgnoreCase(IdCol))
@@ -113,22 +105,16 @@ object HpvPipeline {
         s"'$IdCol' after dropping % and 2-doses columns")
       (wb, ids.head, kept)
     }
-    val keyOf = evaluate(spark,
-      layouts.flatMap { case (wb, _, kept) => kept.map(wb.header) }.distinct) { c =>
-      Seq(Derive.yearGroupFromHeader(c), Derive.genderFromHeader(c), Derive.metricFromHeader(c))
-    }.map { case (h, r) => h -> HeaderKey(r.getString(0), r.getString(1), r.getString(2)) }
-    val cleaned = evaluate(spark,
-      layouts.flatMap { case (wb, id, _) => wb.rows.map(_(id)) }.distinct) { c =>
-      Seq(if (compat == Compat.PandasExact) Derive.cleanNamePandasTitle(c) else Derive.cleanName(c))
-    }.map { case (n, r) => n -> r.getString(0) }
+    val clean: String => String =
+      if (compat == Compat.PandasExact) Derive.cleanNamePandasTitle else Derive.cleanName
     // per-file metadata (E6/E7, N7)
     val years = workbooks.map(wb =>
       (Derive.academicYearEnd(wb.a1).map(Integer.valueOf).orNull,
         Derive.academicYearText(wb.a1).orNull))
     val date = java.sql.Date.valueOf(extractDate)
     layouts.zip(years).flatMap { case ((wb, id, kept), (ayEnd, ayText)) =>
-      val keys = kept.map(i => i -> keyOf(wb.header(i)))
-      val names = wb.rows.map(r => cleaned(r(id)))
+      val keys = kept.map(i => i -> headerKey(wb.header(i)))
+      val names = wb.rows.map(r => clean(r(id)))
       assertGrain(wb.source, names, keys.map(_._2))
       val cells = keys.map { case (_, k) => (k.yearGroup, k.gender) }.distinct.map { case (yg, g) =>
         def cell(metric: String): Option[Int] = keys.collectFirst {
@@ -146,22 +132,8 @@ object HpvPipeline {
 
   /** A measure header's derived pivot key (E3-E5). */
   private final case class HeaderKey(yearGroup: String, gender: String, metric: String)
-
-  /** Catalyst expressions over distinct driver values: `exprs` of one
-    * string column, over a one-column local relation of `values` (null
-    * included). The one collect folds into `ConvertToLocalRelation`, so
-    * no job runs. Keyed by input value; each row holds the expressions'
-    * results in order.
-    */
-  private def evaluate(spark: SparkSession, values: Seq[String])(
-      exprs: Column => Seq[Column]): Map[String, Row] = {
-    val c = col("value")
-    spark.createDataFrame(values.map(Row(_)).asJava, StructType(Seq(StructField("value", StringType))))
-      .select(c +: exprs(c): _*)
-      .collect()
-      .map(r => r.getString(0) -> Row.fromSeq(r.toSeq.tail))
-      .toMap
-  }
+  private def headerKey(h: String) =
+    HeaderKey(Derive.yearGroupFromHeader(h), Derive.genderFromHeader(h), Derive.metricFromHeader(h))
 
   /** The pivot's fail-loud contract (N3/D4): pandas `pivot` raises on a
     * duplicate (LA, year group, gender, metric) key. In a workbook such a
@@ -197,9 +169,9 @@ object HpvPipeline {
     * → Both/All rollups (A3, N5, [[Rollup.labeledCubeRows]]), as one
     * local relation in [[OutputSchema]].
     *
-    * The cast is Spark's `trim(c).cast(LongType)`, evaluated once per
-    * distinct measure string ([[evaluate]]), so a measure that is not a
-    * number fails with Spark's ANSI `CAST_INVALID_INPUT`, naming it.
+    * The cast is [[Derive.measure]], Spark's ANSI string-to-long parse
+    * after a space trim, so a measure that is not a number fails with
+    * `CAST_INVALID_INPUT`, naming it.
     */
   def combine(spark: SparkSession, rows: Seq[Row], compat: Compat = Compat.Off): DataFrame = {
     val measures = Measures.map(_.toUpperCase)
@@ -208,10 +180,8 @@ object HpvPipeline {
       case r if at.forall(!r.isNullAt(_)) =>
         r.toSeq.map { case s: String if Clean.DefaultSentinels.contains(s) => null; case v => v }
     }
-    val asLong = evaluate(spark, scrubbed.flatMap(r => at.map(r(_).asInstanceOf[String])).distinct)(
-      c => Seq(trim(c).cast(LongType)))
     val typed = scrubbed.map(r => Row.fromSeq(
-      at.foldLeft(r)((cells, i) => cells.updated(i, asLong(cells(i).asInstanceOf[String]).get(0)))))
+      at.foldLeft(r)((cells, i) => cells.updated(i, Derive.measure(cells(i).asInstanceOf[String])))))
     val rolled = Rollup.labeledCubeRows(typed, OutputSchema.fieldNames.toSeq, measures,
       roll1 = ("GENDER_NAME", "Both"), roll2 = ("YEAR_GROUP_NUMBER", "All"),
       pandasExact = compat == Compat.PandasExact)

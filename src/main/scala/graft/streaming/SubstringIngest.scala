@@ -765,9 +765,12 @@ object SubstringIngest extends Logging {
         val hit = udf((id: Long) => bc.value.exists(_.mightContainLong(id)))
         val hits = batch.select(col("doc_id").cast("long").as("doc_id"))
           .where(hit(col("doc_id"))).limit(5).collect().map(_.getLong(0))
+        // the false-positive chance the on-disk filters give now, whatever
+        // fpp this call or the one that built them was given
+        val fpp = merged.map(_.expectedFpp).sum
         require(hits.isEmpty,
           s"substringIngestSink batch=$batchId re-uses already-ingested doc_ids " +
-            s"${hits.mkString(", ")} (bloom hit, fpp ~$DefaultBloomFpp) - ids must be " +
+            s"${hits.mkString(", ")} (bloom hit, fpp ~$fpp) - ids must be " +
             "globally unique across the stream; replays of the same batch are " +
             "skipped by the watermark, so this is a source re-emitting ids")
         // async executor-side release; the driver ref is the

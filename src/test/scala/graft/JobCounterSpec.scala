@@ -2,6 +2,8 @@ package graft
 
 import java.util.concurrent.{Callable, Executors}
 
+import scala.jdk.CollectionConverters._
+
 /** The fenced job counter the specs and `graft.dev.Probe` share. */
 class JobCounterSpec extends SparkTestBase {
   import spark.implicits._
@@ -26,5 +28,15 @@ class JobCounterSpec extends SparkTestBase {
       assert(n == 10L)
       assert(outside == 0, s"a job from a thread without the counter's property counted $outside")
     } finally pool.shutdown()
+  }
+
+  test("the fenced counter sees body's query executions: a local collect 1, createDataFrame 0") {
+    val df = Seq(1L, 2L, 3L).toDF("v")
+    val (_, collectJobs, collects) = JobCounter.withQueries(spark)(df.collect())
+    assert(collects == 1 && collectJobs == 0,
+      s"a local relation's collect counted $collects execution(s), $collectJobs job(s)")
+    val rows = df.collect().toSeq.asJava
+    val (_, _, built) = JobCounter.withQueries(spark)(spark.createDataFrame(rows, df.schema))
+    assert(built == 0, s"createDataFrame counted $built execution(s)")
   }
 }

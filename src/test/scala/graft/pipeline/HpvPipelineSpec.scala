@@ -84,6 +84,16 @@ class HpvPipelineSpec extends SparkTestBase {
       s"only-got=${got -- expected}\nonly-expected=${expected -- got}")
   }
 
+  test("transform plans no query and runs no job: its one Spark call is the final createDataFrame") {
+    for (compat <- Seq(HpvPipeline.Compat.Off, HpvPipeline.Compat.PandasExact)) {
+      val (out, jobs, queries) =
+        graft.JobCounter.withQueries(spark)(HpvPipeline.transform(Seq(fileA, fileB), D, compat))
+      assert(queries == 0 && jobs == 0,
+        s"compat=$compat: transform ran $queries query execution(s) and $jobs job(s)")
+      assert(out.count() == expected.size)
+    }
+  }
+
   /** The stacked rows' raw schema: the grain and measure names of the
     * reference's combine, the measures still strings. */
   private val rawSchema = StructType(Seq(

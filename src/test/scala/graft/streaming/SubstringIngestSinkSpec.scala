@@ -120,6 +120,22 @@ class SubstringIngestSinkSpec extends SparkTestBase {
     assert(e.getMessage.contains("doc_ids"), e.getMessage)
   }
 
+  test("the re-use refusal reports the on-disk blooms' own fpp, not the default's") {
+    val (_, indexDir, reportDir, _) = dirs()
+    SubstringIngest.applyBatch(b1.toDF("doc_id", "text"), 0L, indexDir, reportDir, k,
+      bloomExpectedItems = 3, bloomFpp = 0.01)
+    val in = new java.io.FileInputStream(s"$indexDir/seg_0/${SubstringIngest.IdsBloomFile}")
+    val onDisk =
+      try org.apache.spark.util.sketch.BloomFilter.readFrom(in).expectedFpp() finally in.close()
+    // a later batch under the default fpp, as after a restart
+    val e = intercept[IllegalArgumentException] {
+      SubstringIngest.applyBatch(Seq((2L, "a re-used id")).toDF("doc_id", "text"),
+        1L, indexDir, reportDir, k)
+    }
+    assert(e.getMessage.contains(s"fpp ~$onDisk)"), e.getMessage)
+    assert(!e.getMessage.contains(SubstringIngest.DefaultBloomFpp.toString), e.getMessage)
+  }
+
   /** Distinct-text batches of equal shape: batch i contributes 3 docs
     * of 6 unique tokens each (every gram globally unique), so every
     * committed segment should hold the same ~9 gram rows regardless of
