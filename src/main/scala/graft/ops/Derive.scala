@@ -1,14 +1,20 @@
 package graft.ops
 
-import org.apache.spark.sql.catalyst.util.CollationSupport.{InitCap, Lower, Upper}
+import java.util.Locale
+
+import com.ibm.icu.lang.{UCharacter, UProperty}
+import com.ibm.icu.text.CaseMap
+import org.apache.spark.sql.catalyst.util.CollationSupport.{InitCap, Lower}
 import org.apache.spark.sql.catalyst.util.UTF8StringUtils
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Scalar derivations E1-E8 (SURVEY.md §2.4) as driver functions. E1-E5
   * and the measure cast equal the Catalyst expressions named in their
   * docs, value for value (`DeriveEquivalenceSpec`): trimming, case
-  * mapping and the cast call Spark's own scalar kernels. Null derives to
-  * null, except in E4/E5, whose `otherwise` default covers it.
+  * mapping and the cast call Spark's own scalar kernels. The D1 compat
+  * lane equals Python's `str.title` instead, checked against goldens
+  * from `python3`. Null derives to null, except in E4/E5, whose
+  * `otherwise` default covers it.
   */
 object Derive {
 
@@ -21,24 +27,44 @@ object Derive {
   def cleanName(s: String): String =
     onUtf8(s)(u => InitCap.execBinaryICU(u.trim()))
 
-  /** D1 COMPAT lane (opt-in, round 11): pandas `str.title` semantics to
-    * the letter — a letter is uppercased iff the PREVIOUS character is
-    * non-alphabetic (so "king's lynn" → "King'S Lynn", apostrophe
-    * included), all other letters lowercased: the fold
-    * `aggregate(split(trim(c), ""), "", ...)` over code points, where
-    * `upper(prev) = lower(prev)` is the "not a letter" test ('' ⇒
-    * true). Default pipelines keep [[cleanName]] (initcap), which is the
-    * better behavior for LA names and what the oracle encodes; this lane
+  /** D1 COMPAT lane (opt-in, round 11): Python's `str.title` to the
+    * letter, after a space `trim`. A character after a cased one takes
+    * its full lowercase mapping, with the final-sigma rule for `Σ`; any
+    * other takes its full title-case mapping ("king's lynn" → "King'S
+    * Lynn", "ßtraße" → "Sstraße", "ǆungla" → "ǅungla"). Default
+    * pipelines keep [[cleanName]] (initcap), which is the better
+    * behavior for LA names and what the oracle encodes; this lane
     * exists for byte-parity with the reference output.
     */
-  def cleanNamePandasTitle(s: String): String = onUtf8(s)(_.trim().toString.codePoints.toArray
-    .foldLeft(UTF8String.EMPTY_UTF8) { (acc, cp) =>
-      val prev = acc.substringSQL(-1, 1)
-      val x = UTF8String.fromString(Character.toString(cp))
-      UTF8String.concat(acc,
-        if (Upper.execBinaryICU(prev) == Lower.execBinaryICU(prev)) Upper.execBinaryICU(x)
-        else Lower.execBinaryICU(x))
-    })
+  def cleanNamePandasTitle(s: String): String =
+    if (s == null) null
+    else {
+      val cps = UTF8String.fromString(s).trim().toString.codePoints.toArray
+      val out = new java.lang.StringBuilder
+      for (i <- cps.indices) {
+        val c = Character.toString(cps(i))
+        out.append(
+          if (i == 0 || !cased(cps(i - 1))) TitleCase.apply(Locale.ROOT, null, c)
+          else if (cps(i) == 'Σ') (if (finalSigma(cps, i)) "ς" else "σ")
+          else LowerCase.apply(Locale.ROOT, c))
+      }
+      out.toString
+    }
+
+  private val TitleCase = CaseMap.toTitle().wholeString().noBreakAdjustment()
+  private val LowerCase = CaseMap.toLower()
+
+  private def cased(cp: Int): Boolean = UCharacter.hasBinaryProperty(cp, UProperty.CASED)
+
+  /** Unicode's Final_Sigma context: a cased letter before `Σ` and none
+    * after it, skipping case-ignorable characters on both sides.
+    */
+  private def finalSigma(cps: Array[Int], i: Int): Boolean = {
+    def nearest(side: Iterator[Int]) =
+      side.find(cp => !UCharacter.hasBinaryProperty(cp, UProperty.CASE_IGNORABLE))
+    nearest(cps.take(i).reverseIterator).exists(cased) &&
+      !nearest(cps.iterator.drop(i + 1)).exists(cased)
+  }
 
   /** E3: first digit-run in a melted header name, `regexp_extract(c,
     * "(\\d+)", 1)`; null (not "") when absent — `regexp_extract` returns

@@ -5,7 +5,7 @@ import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-import org.apache.spark.util.sketch.BloomFilter
+import org.apache.spark.util.sketch.{BloomFilter, IncompatibleMergeException}
 
 import graft.load.Load
 import graft.operators.SubstringDedup
@@ -30,9 +30,10 @@ import graft.operators.SubstringDedup
   * <indexDir>/
   *   base/           major-compacted level: parquet rows (g, fp, cnt)
   *                   + _compacted_through (max batch id folded in)
-  *                   + _ids_bloom / _ids_n (merged doc-id bloom, guard)
+  *                   + _ids_bloom (merged doc-id bloom, guard)
   *   mseg_<T>/       minor-compacted runs: the fold of segments with
   *                   ids in this run's range (see compaction below)
+  *                   + _ids_bloom (their merged blooms)
   *   seg_<batchId>/  one APPEND-ONLY segment per applied micro-batch:
   *                   the batch's own gramIndex + _ids_bloom sidecar
   * }}}
@@ -54,7 +55,7 @@ import graft.operators.SubstringDedup
   *       (T = highest folded batch id), committed by a single atomic
   *       rename. Cost O(data since the last minor).
   *     - '''major''': when live mseg runs exceed `maxSegments` or
-  *       their data bytes reach `majorRatio` x base's (classic
+  *       their data bytes reach [[MajorRatio]] x base's (classic
   *       size-ratio trigger — each major at least doubles base, so
   *       majors are geometrically spaced and total rewrite work is
   *       linear in ingested bytes), everything live folds into
@@ -99,85 +100,59 @@ import graft.operators.SubstringDedup
   * writer is alive and deletes the lock file — recovery is fail-loud,
   * not automatic (advice r11).
   *
-  * == doc_id re-use guard (default ON) ==
+  * == doc_id re-use guard ==
   *
   * [[SubstringDedup.updateGramIndex]]'s precondition — ids globally
-  * unique across the stream's lifetime — is now enforced by default at
-  * bounded cost: every segment carries a bloom filter of its batch's
-  * doc ids (`_ids_bloom`, constant size, published atomically inside
-  * the segment rename), and each trigger checks the batch's ids
-  * against the merged blooms of the live set before folding. A hit
-  * refuses the batch loudly. False positives are ~`bloomFpp` per id
-  * (default 1e-4; a refused CLEAN batch is possible but rare — widen
-  * `bloomExpectedItems`/lower `bloomFpp` if ids are very dense).
-  * Coverage is exact for stores built entirely through this sink or
-  * [[bootstrap]]; a live part without a bloom leaves its ids
-  * unguarded, and the store then carries an `_ids_bloom_incomplete`
-  * marker through compaction so the gap is visible. Replays of the
-  * SAME batch are the watermark's job and are skipped before the guard
-  * runs.
+  * unique across the stream's lifetime — is enforced on every trigger
+  * at bounded cost: every part carries ONE bloom filter of its doc ids
+  * (`_ids_bloom`, one fixed size: [[IdsBloomItems]] ids at
+  * [[IdsBloomFpp]], staged inside the part before its commit rename or
+  * swap), and each trigger checks the batch's ids against the OR of
+  * the live parts' filters before folding. A hit refuses the batch
+  * loudly. False positives are ~1e-4 per id while the store holds
+  * under 1M ids. Every part this code writes carries its bloom, so a
+  * live part without one, or with a filter of another size, was not
+  * written here and is refused with an `IllegalStateException` naming
+  * it. Replays of the SAME batch are the watermark's job and are
+  * skipped before the guard runs.
   *
   * '''Saturation''' (the guard's own scale bound): blooms merge by
-  * OR-ing fixed bitsets, so once the TOTAL ingested ids exceed
-  * `bloomExpectedItems` the merged filter's false-positive rate climbs
-  * toward 1 — past capacity the guard would start refusing CLEAN
-  * batches, an availability failure, and no driver-side bloom can be
-  * sized for a 100-TB corpus' id count. Each sidecar therefore carries
-  * its item count (`_ids_n`, summed through compaction); when the
-  * merged count crosses capacity the guard DEGRADES — logs, writes the
-  * incomplete marker, stops refusing — instead of failing wrong. Past
-  * that point (or for end-to-end certainty at any point) run
-  * [[auditIngestedIds]]: the retention reports carry every ingested
-  * doc_id, so one distributed aggregate over them is an EXACT id-reuse
-  * audit with no capacity bound.
+  * OR-ing fixed bitsets, so once the store's ids pass [[IdsBloomItems]]
+  * the merged filter's false-positive rate climbs toward 1 — past
+  * capacity the guard would start refusing CLEAN batches, an
+  * availability failure, and no driver-side bloom can be sized for a
+  * 100-TB corpus' id count. The guard therefore measures the merged
+  * filter's own `expectedFpp()` (from its set bits) and, above
+  * [[IdsBloomFpp]], DEGRADES — logs a warning and skips the check —
+  * instead of failing wrong. Compactions OR the bits, so saturation
+  * carries through them; a [[bootstrap]] of a corpus under capacity
+  * clears it with a fresh bloom. Past that point (or for end-to-end
+  * certainty at any point) run [[auditIngestedIds]]: the retention
+  * reports carry every ingested doc_id, so one distributed aggregate
+  * over them is an EXACT id-reuse audit with no capacity bound.
   *
   * == Standing soak gate ==
   *
-  * `sbt "Test/runMain graft.dev.SubstringSoak <sf1 dir> 50 8"` soaks
+  * `sbt "Test/runMain graft.dev.SubstringSoak <sf0.01 dir> 50 4"` soaks
   * this store through 50 real micro-batches; diff its per-trigger
-  * wall/publish-bytes columns against the recorded table in
-  * BASELINE.md ("Standing store-soak gate") after any store/compaction
-  * change.
+  * columns against the recorded table in BASELINE.md ("Standing
+  * store-soak gate") after any store/compaction change.
   */
 object SubstringIngest extends Logging {
-
-  /** Sidecar beside each `_ids_bloom`: how many ids went into it
-    * (summed through compaction) — the saturation accounting that lets
-    * the guard degrade loudly instead of false-refusing past capacity.
-    * One line PER FILTER in the bloom file, same order (a bloom file
-    * may hold several filters — see [[readBlooms]]); a single-line
-    * file over one filter (every store before this) reads unchanged.
-    * A bloom with no count (pre-upgrade store) counts as 0: such a
-    * store undercounts toward the capacity check, so pair it with
-    * [[auditIngestedIds]] if its true id count is near capacity.
-    */
-  val IdsNFile = "_ids_n"
-
-  /** Sidecar beside each `_ids_bloom`: the `bloomExpectedItems` each
-    * filter was BUILT with, one line per filter (same order as the
-    * bloom file; -1 = unknown, falls back to the call's parameter).
-    * Saturation must compare against the on-disk filters' capacity,
-    * not the current call's parameter — a sink restarted with a
-    * smaller default than the store was bootstrapped with would
-    * otherwise declare a roomy guard "saturated" and silently skip it
-    * forever. Saturation is judged PER merge-compatibility class
-    * (advice r12): a store mixing a roomy bootstrap bloom with small
-    * per-segment blooms is saturated only when some class's summed
-    * count exceeds ITS OWN capacity, not when the total crosses the
-    * minimum single-filter capacity.
-    */
-  val IdsCapFile = "_ids_capacity"
 
   /** Sidecar inside `base/`: highest batch id folded into it. */
   val CompactedThroughFile = "_compacted_through"
 
-  /** Per-segment doc-id bloom sidecar. */
+  /** Per-part doc-id bloom sidecar: one filter of the fixed size. */
   val IdsBloomFile = "_ids_bloom"
 
-  /** Marker: some live data carries no bloom, or the guard saturated
-    * — id coverage is best-effort, not complete.
+  /** The one size of every id bloom: [[IdsBloomItems]] ids at
+    * [[IdsBloomFpp]], ~2.3 MB per part regardless of index size,
+    * merged away at compaction. One size is what lets every live
+    * part's filter OR into one.
     */
-  val BloomIncompleteFile = "_ids_bloom_incomplete"
+  val IdsBloomItems: Long = 1L * 1000 * 1000
+  val IdsBloomFpp: Double = 1e-4
 
   /** Death-time tombstone. Liveness makes a part dead the instant a
     * newer fold's commit rename lands, but the part's own mtime is its
@@ -190,7 +165,7 @@ object SubstringIngest extends Logging {
     * this file (millis) into each part it made dead; a dead part
     * missing one (crash between the fold rename and the stamps) is
     * stamped by the first sweep that sees it. A dead part is deleted
-    * only once its stamp is `graceMs` old, so it always survives at
+    * only once its stamp is [[SweepGraceMs]] old, so it always survives at
     * least the full grace window of wall time AFTER its death was
     * recorded.
     */
@@ -213,9 +188,6 @@ object SubstringIngest extends Logging {
     StructField("g", StringType), StructField("fp", LongType),
     StructField("cnt", LongType)))
 
-  /** One live data part: its directory and its bloom, if it has one. */
-  private case class Part(path: Path, bloomAt: Option[Path])
-
   /** Parsed store state under the liveness rule. */
   private case class Store(
       fs: FileSystem,
@@ -226,12 +198,10 @@ object SubstringIngest extends Logging {
       liveMsegs: Seq[(Long, Path)], // ascending fold-through id
       liveSegs: Seq[(Long, Path)], // ascending batch id
       deadSegs: Seq[Path],
-      staleStaging: Seq[Path],
-      bloomIncomplete: Boolean) {
+      staleStaging: Seq[Path]) {
     def applied: Long =
       (compactedThrough +: (liveMsegs.map(_._1) ++ liveSegs.map(_._1))).max
-    def liveParts: Seq[Part] = (baseDir ++ (liveMsegs ++ liveSegs).map(_._2)).toSeq
-      .map(p => Part(p, someIfExists(fs, new Path(p, IdsBloomFile))))
+    def liveParts: Seq[Path] = (baseDir ++ (liveMsegs ++ liveSegs).map(_._2)).toSeq
     /** Parquet data bytes of base. */
     def baseDataBytes: Long = baseDir.fold(0L)(dataBytes(fs, _))
     /** Parquet data bytes across the live minor-compacted runs. */
@@ -248,9 +218,6 @@ object SubstringIngest extends Logging {
         !s.getPath.getName.startsWith(".") => s.getLen
     }.sum
 
-  private def someIfExists(fs: FileSystem, p: Path): Option[Path] =
-    if (fs.exists(p)) Some(p) else None
-
   private def readLongFile(fs: FileSystem, p: Path): Option[Long] =
     if (!fs.exists(p)) None
     else {
@@ -262,8 +229,7 @@ object SubstringIngest extends Logging {
     val dir = new Path(indexDir)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(dir))
-      return Store(fs, dir, exists = false, None, -1L, Nil, Nil, Nil, Nil,
-        bloomIncomplete = false)
+      return Store(fs, dir, exists = false, None, -1L, Nil, Nil, Nil, Nil)
     val children = fs.listStatus(dir).toSeq
     // every part lives in a directory; a data file at the root means
     // this is some other table, not a segmented store
@@ -299,8 +265,7 @@ object SubstringIngest extends Logging {
       liveMsegs = liveM.sortBy(_._1),
       liveSegs = live.sortBy(_._1),
       deadSegs = (dead ++ deadM).map(_._2),
-      staleStaging = staleStaging,
-      bloomIncomplete = fs.exists(new Path(dir, BloomIncompleteFile)))
+      staleStaging = staleStaging)
   }
 
   /** Raw live rows — the merge-on-read UNION, possibly multiple rows
@@ -308,7 +273,7 @@ object SubstringIngest extends Logging {
     * [[compact]] consume.
     */
   private def readLive(spark: SparkSession, st: Store): DataFrame = {
-    val paths = st.liveParts.map(_.path.toString)
+    val paths = st.liveParts.map(_.toString)
     if (paths.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], IndexSchema)
     else spark.read.schema(IndexSchema).parquet(paths: _*)
@@ -333,10 +298,10 @@ object SubstringIngest extends Logging {
 
   /** Operational snapshot of a store — what a monitor scrapes per
     * trigger or an operator checks before a manual [[compact]]:
-    * applied watermark, live part counts, data bytes per level, id
-    * count behind the guard blooms, and whether guard coverage is
-    * complete (false once a bloom-less part or bloom saturation was
-    * observed — pair with [[auditIngestedIds]] then).
+    * applied watermark, live part counts, data bytes per level, and
+    * whether the id guard is complete: the live parts' merged bloom
+    * measures at most [[IdsBloomFpp]] (false once it saturated — pair
+    * with [[auditIngestedIds]] then).
     */
   case class StoreStats(
       applied: Long,
@@ -345,14 +310,11 @@ object SubstringIngest extends Logging {
       baseDataBytes: Long,
       msegDataBytes: Long,
       segDataBytes: Long,
-      guardedIds: Long,
       guardComplete: Boolean)
 
   def storeStats(spark: SparkSession, indexDir: String): StoreStats = {
     val st = readStore(spark, indexDir)
     val segBytes = st.liveSegs.map { case (_, p) => dataBytes(st.fs, p) }.sum
-    val guarded = st.liveParts.flatMap(_.bloomAt)
-      .map(p => readLongsFile(st.fs, new Path(p.getParent, IdsNFile)).sum).sum
     StoreStats(
       applied = st.applied,
       liveSegments = st.liveSegs.size,
@@ -360,23 +322,21 @@ object SubstringIngest extends Logging {
       baseDataBytes = st.baseDataBytes,
       msegDataBytes = st.msegDataBytes,
       segDataBytes = segBytes,
-      guardedIds = guarded,
-      guardComplete = !st.bloomIncomplete && st.liveParts.forall(_.bloomAt.nonEmpty))
+      guardComplete = mergedBloom(st.fs, st.liveParts).expectedFpp() <= IdsBloomFpp)
   }
 
   /** Batch bootstrap of a segmented store: the full corpus-so-far gram
     * index lands in `base/` (staged swap) with a complete doc-id bloom
     * — the recommended seed for a store whose id guard should have
-    * full coverage, AND the saturation warning's prescribed
-    * re-bootstrap path (rebuild with a larger `bloomExpectedItems`).
-    * `appliedBatch` seeds the watermark (-1 = nothing streamed yet);
-    * on a NON-EMPTY store the written watermark is max(appliedBatch,
-    * the store's current applied), so pre-existing segments/runs are
-    * dead by rule the instant the swap lands — `docs` must therefore
-    * be the FULL corpus including everything those parts held, or the
-    * dropped grams are simply gone. Re-bootstrapping also clears the
-    * incomplete-coverage marker: the fresh bloom covers every id in
-    * `docs`.
+    * full coverage. `appliedBatch` seeds the watermark (-1 = nothing
+    * streamed yet); on a NON-EMPTY store the written watermark is
+    * max(appliedBatch, the store's current applied), so pre-existing
+    * segments/runs are dead by rule the instant the swap lands —
+    * `docs` must therefore be the FULL corpus including everything
+    * those parts held, or the dropped grams are simply gone.
+    * Re-bootstrapping also clears a saturated guard when `docs` holds
+    * under [[IdsBloomItems]] ids: the fresh bloom replaces the
+    * saturated ones.
     *
     * Superseded parts (old segments and runs) become
     * dead BY RULE the instant the swap lands — the liveness view
@@ -391,11 +351,8 @@ object SubstringIngest extends Logging {
   def bootstrap(
       spark: SparkSession, docs: DataFrame, indexDir: String, k: Int = 8,
       appliedBatch: Long = -1L,
-      bloomExpectedItems: Long = DefaultBloomItems,
-      bloomFpp: Double = DefaultBloomFpp,
       offline: Boolean = false): Unit = {
-    val bloom = docIdBloom(docs, bloomExpectedItems, bloomFpp)
-    val nIds = docs.count()
+    val bloom = docIdBloom(docs)
     // same lock as the sink: a concurrent trigger must not append a
     // segment between the watermark read and the swap
     Load.withLock(spark, indexDir, "substringIngest bootstrap") {
@@ -406,15 +363,12 @@ object SubstringIngest extends Logging {
           val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
           writeLongFile(fs, new Path(staging, CompactedThroughFile), through)
           writeBloom(fs, new Path(staging, IdsBloomFile), bloom)
-          writeLongFile(fs, new Path(staging, IdsNFile), nIds)
-          writeLongFile(fs, new Path(staging, IdsCapFile), bloomExpectedItems)
         }).get
       val post = readStore(spark, indexDir)
       // every pre-existing part is dead by rule now (compactedThrough
       // covers all their ids)
       if (offline) post.deadSegs.foreach(post.fs.delete(_, true))
       else stampDead(post.fs, post.deadSegs, System.currentTimeMillis())
-      post.fs.delete(new Path(post.dir, BloomIncompleteFile), false)
     }.get
     ()
   }
@@ -435,120 +389,35 @@ object SubstringIngest extends Logging {
     * but non-long id column would build a bloom the probe can never
     * hit, silently disabling the guard instead of enforcing it.
     */
-  private def docIdBloom(
-      docs: DataFrame, expectedItems: Long, fpp: Double): BloomFilter = {
+  private def docIdBloom(docs: DataFrame): BloomFilter = {
     import org.apache.spark.sql.functions.col
     docs.select(col("doc_id").cast("long").as("doc_id"))
-      .stat.bloomFilter("doc_id", expectedItems, fpp)
+      .stat.bloomFilter("doc_id", IdsBloomItems, IdsBloomFpp)
   }
 
-  /** A bloom sidecar may hold SEVERAL concatenated filters (writeTo /
-    * readFrom are self-delimiting): compaction folds parts whose blooms
-    * were sized differently (bootstrap vs sink params changed mid-
-    * stream), and differently-sized filters cannot mergeInPlace — so
-    * merging happens per size class and the residue rides as a list.
-    * A single-bloom file (every store before this) reads as a
-    * one-element list.
+  /** The OR of the given parts' id blooms, folded into a fresh filter
+    * of the fixed size. Every part this code commits carries one filter
+    * of that size, so a part without an `_ids_bloom`, or with one that
+    * will not merge, was not written here and is refused, naming it.
     */
-  private def readBlooms(fs: FileSystem, p: Path): Seq[BloomFilter] = {
-    val in = fs.open(p)
-    val bytes = try in.readAllBytes() finally in.close()
-    val bin = new java.io.ByteArrayInputStream(bytes)
-    val out = Seq.newBuilder[BloomFilter]
-    while (bin.available() > 0) out += BloomFilter.readFrom(bin)
-    out.result()
-  }
-
-  private def writeBlooms(fs: FileSystem, p: Path, blooms: Seq[BloomFilter]): Unit = {
-    val out = fs.create(p, true)
-    try blooms.foreach(_.writeTo(out)) finally out.close()
-  }
-
-  /** One guard filter with its saturation accounting: ids folded into
-    * it and the capacity it was built for (-1 = unknown → the call's
-    * `bloomExpectedItems` at check time).
-    */
-  private case class GuardEntry(bloom: BloomFilter, n: Long, cap: Long)
-
-  private def readLongsFile(fs: FileSystem, p: Path): Seq[Long] =
-    if (!fs.exists(p)) Nil
-    else {
-      val in = fs.open(p)
-      val s = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-      s.split("\\s+").toSeq.filter(_.nonEmpty).map(_.toLong)
+  private def mergedBloom(fs: FileSystem, parts: Seq[Path]): BloomFilter = {
+    val merged = BloomFilter.create(IdsBloomItems, IdsBloomFpp)
+    parts.foreach { part =>
+      val at = new Path(part, IdsBloomFile)
+      def refuse(what: String, cause: Throwable = null): Nothing =
+        throw new IllegalStateException(
+          s"substringIngest: live part $part $what; every part this store commits " +
+            s"carries one $IdsBloomFile filter of $IdsBloomItems ids at fpp $IdsBloomFpp",
+          cause)
+      if (!fs.exists(at)) refuse(s"has no $IdsBloomFile")
+      val in = fs.open(at)
+      try merged.mergeInPlace(BloomFilter.readFrom(in))
+      catch {
+        case e: IncompatibleMergeException => refuse(s"holds an $IdsBloomFile of another size", e)
+      } finally in.close()
     }
-
-  /** Read a part's guard state: its filters with aligned per-filter
-    * (n, cap) lines. A legacy part whose count/cap files don't align
-    * with its filter list (single-line files over a mixed-size bloom
-    * list) assigns the TOTAL n and the single cap to EVERY filter —
-    * overcounting, so saturation degrades EARLY on such parts (the
-    * pre-advice behavior) rather than admitting unguarded ids late.
-    */
-  private def readGuard(fs: FileSystem, partDir: Path): Seq[GuardEntry] = {
-    val bloomAt = new Path(partDir, IdsBloomFile)
-    if (!fs.exists(bloomAt)) Nil
-    else {
-      val blooms = readBlooms(fs, bloomAt)
-      val ns = readLongsFile(fs, new Path(partDir, IdsNFile))
-      val caps = readLongsFile(fs, new Path(partDir, IdsCapFile))
-      val nOf: Int => Long =
-        if (ns.size == blooms.size) ns.apply
-        else _ => ns.sum // legacy/misaligned: conservative overcount
-      val capOf: Int => Long =
-        if (caps.size == blooms.size) caps.apply
-        else _ => caps.headOption.getOrElse(-1L)
-      blooms.indices.map(i => GuardEntry(blooms(i), nOf(i), capOf(i)))
-    }
+    merged
   }
-
-  private def writeGuard(fs: FileSystem, dir: Path, entries: Seq[GuardEntry]): Unit = {
-    writeBlooms(fs, new Path(dir, IdsBloomFile), entries.map(_.bloom))
-    writeLinesFile(fs, new Path(dir, IdsNFile), entries.map(_.n))
-    writeLinesFile(fs, new Path(dir, IdsCapFile), entries.map(_.cap))
-  }
-
-  private def writeLinesFile(fs: FileSystem, p: Path, vs: Seq[Long]): Unit = {
-    val out = fs.create(p, true)
-    try out.write(vs.mkString("\n").getBytes("UTF-8")) finally out.close()
-  }
-
-  /** Merge guard entries into as few classes as merge-compatibility
-    * allows: try each filter into an existing accumulator, append on
-    * [[org.apache.spark.util.sketch.IncompatibleMergeException]].
-    * Grouping by bitSize alone is NOT enough — the sketch also
-    * requires equal hash counts, and two (expectedItems, fpp) configs
-    * can share a word-rounded bitSize with different hash counts. One
-    * class in a consistently-configured store; mixed sizing degrades
-    * to a few probes per id instead of crashing. Counts SUM within a
-    * class; capacity keeps the class MIN (compatible configs can
-    * still differ in nominal capacity — degrade early).
-    */
-  private def mergeGuard(entries: Seq[GuardEntry]): Seq[GuardEntry] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[GuardEntry]
-    for (e <- entries) {
-      val idx = out.indexWhere { acc =>
-        try { acc.bloom.mergeInPlace(e.bloom); true }
-        catch { case _: org.apache.spark.util.sketch.IncompatibleMergeException => false }
-      }
-      if (idx < 0) out += e
-      else {
-        val acc = out(idx)
-        val cap =
-          if (acc.cap < 0) e.cap
-          else if (e.cap < 0) acc.cap
-          else math.min(acc.cap, e.cap)
-        out(idx) = GuardEntry(acc.bloom, acc.n + e.n, cap)
-      }
-    }
-    out.toSeq
-  }
-
-  /** Defaults size the per-segment bloom at ~2.3 MB — constant per
-    * segment regardless of index size, merged away at compaction.
-    */
-  val DefaultBloomItems: Long = 1L * 1000 * 1000
-  val DefaultBloomFpp: Double = 1e-4
 
   val DefaultMaxSegments = 16
 
@@ -558,10 +427,9 @@ object SubstringIngest extends Logging {
     * concrete file list just before a compaction commit would hit
     * FileNotFound if the files vanished mid-read — the grace period is
     * the retention window that closes it (the Delta/Iceberg vacuum
-    * discipline). Zero = immediate (safe only with no concurrent
-    * readers).
+    * discipline).
     */
-  val DefaultSweepGraceMs: Long = 10L * 60 * 1000
+  val SweepGraceMs: Long = 10L * 60 * 1000
 
   /** Record death time on parts a fold just made dead (see
     * [[DeadAtFile]]). Idempotent; a replayed fold never re-stamps.
@@ -574,24 +442,21 @@ object SubstringIngest extends Logging {
       }
     }
 
-  private def sweepDead(st: Store, graceMs: Long): Unit = {
+  private def sweepDead(st: Store): Unit = {
     // staging debris is invisible to readers — always safe to drop;
     // dead DATA parts wait out the reader grace window measured from
     // their DEATH stamp (self-healing: an unstamped dead part from a
-    // crash window is stamped now and deleted graceMs later)
+    // crash window is stamped now and deleted SweepGraceMs later)
     st.staleStaging.foreach(st.fs.delete(_, true))
     val now = System.currentTimeMillis()
     st.deadSegs.foreach { p =>
-      if (graceMs <= 0L) { st.fs.delete(p, true); () } // documented: no readers
-      else {
-        val t = new Path(p, DeadAtFile)
-        readLongFile(st.fs, t) match {
-          case Some(at) if now - at >= graceMs =>
-            st.fs.delete(p, true)
-            ()
-          case Some(_) => ()
-          case None => writeLongFile(st.fs, t, now)
-        }
+      val t = new Path(p, DeadAtFile)
+      readLongFile(st.fs, t) match {
+        case Some(at) if now - at >= SweepGraceMs =>
+          st.fs.delete(p, true)
+          ()
+        case Some(_) => ()
+        case None => writeLongFile(st.fs, t, now)
       }
     }
   }
@@ -600,11 +465,10 @@ object SubstringIngest extends Logging {
     * when the live mseg runs' data bytes reach this fraction of base's.
     * At 1.0 each major at least doubles base, so majors are
     * geometrically spaced and total rewrite work stays linear in
-    * ingested bytes. Raise it to trade read fan-out for fewer
-    * full-index rewrites; the mseg-count bound (`maxSegments`) caps
+    * ingested bytes; the mseg-count bound (`maxSegments`) caps read
     * fan-out regardless.
     */
-  val DefaultMajorRatio = 1.0
+  val MajorRatio = 1.0
 
   /** Start the ingest stream.
     *
@@ -618,28 +482,18 @@ object SubstringIngest extends Logging {
     *                   kept_md5)
     * @param checkpoint stream checkpoint location
     * @param k          gram width in tokens
-    * @param checkIds   refuse a batch whose ids hit the live blooms
-    *                   (default ON — see the guard section above)
     * @param maxSegments minor-compact when live segments exceed this;
     *                   major-compact when live mseg runs exceed it
     *                   (read amplification bound, both levels)
-    * @param majorRatio  size-ratio major trigger (see
-    *                   [[DefaultMajorRatio]])
     */
   def substringIngestSink(
       docs: DataFrame, indexDir: String, reportDir: String,
       checkpoint: String, k: Int = 8,
-      checkIds: Boolean = true,
-      maxSegments: Int = DefaultMaxSegments,
-      bloomExpectedItems: Long = DefaultBloomItems,
-      bloomFpp: Double = DefaultBloomFpp,
-      majorRatio: Double = DefaultMajorRatio,
-      sweepGraceMs: Long = DefaultSweepGraceMs): StreamingQuery =
+      maxSegments: Int = DefaultMaxSegments): StreamingQuery =
     docs.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, batchId, indexDir, reportDir, k, checkIds,
-          maxSegments, bloomExpectedItems, bloomFpp, majorRatio, sweepGraceMs)
+        applyBatch(batch, batchId, indexDir, reportDir, k, maxSegments)
       }
       .start()
 
@@ -649,45 +503,35 @@ object SubstringIngest extends Logging {
     */
   def applyBatch(
       batch: DataFrame, batchId: Long, indexDir: String, reportDir: String,
-      k: Int = 8, checkIds: Boolean = true,
-      maxSegments: Int = DefaultMaxSegments,
-      bloomExpectedItems: Long = DefaultBloomItems,
-      bloomFpp: Double = DefaultBloomFpp,
-      majorRatio: Double = DefaultMajorRatio,
-      sweepGraceMs: Long = DefaultSweepGraceMs): Unit = {
+      k: Int = 8, maxSegments: Int = DefaultMaxSegments): Unit = {
     // one evaluation of the micro-batch source: the empty check, the
     // id guard, the report probe, the segment write and the bloom all
     // read cached rows
     batch.persist()
     try {
-      // ONE count replaces isEmpty + a later per-trigger count() (r16):
-      // the row count is needed anyway for the _ids_n sidecar, so the
-      // empty check rides it — one fewer job per trigger, and the count
-      // fully materializes the cache the remaining passes read
-      val nRows = batch.count()
-      if (nRows > 0) {
+      // the empty check is a count, not isEmpty: it fully materializes
+      // the cache the remaining passes read
+      if (batch.count() > 0) {
         val spark = batch.sparkSession
         Load.withLock(spark, indexDir, s"substringIngestSink batch=$batchId") {
           val st = readStore(spark, indexDir)
           if (batchId > st.applied) {
             // cleanup debris first: crashed staging dirs (always) and
             // dead parts past the reader grace window
-            sweepDead(st, sweepGraceMs)
-            if (checkIds) bloomGuard(spark, st, batch, batchId, bloomExpectedItems)
+            sweepDead(st)
+            bloomGuard(spark, st, batch, batchId)
             val live = readLive(spark, st)
             SubstringDedup.cleanKeepFirstIncremental(live, batch, k)
               .write.mode("overwrite")
               .parquet(s"$reportDir/$BatchCol=$batchId")
             // O(batch) publish: the batch's own gram segment, committed
             // by one atomic rename (bloom sidecar rides inside)
-            val bloom = docIdBloom(batch, bloomExpectedItems, bloomFpp)
+            val bloom = docIdBloom(batch)
             val segFinal = new Path(st.dir, f"$SegPrefix$batchId%d")
             val segStaging = new Path(st.dir, segFinal.getName + StagingSuffix)
             SubstringDedup.gramIndex(batch, k)
               .write.mode("overwrite").parquet(segStaging.toString)
             writeBloom(st.fs, new Path(segStaging, IdsBloomFile), bloom)
-            writeLongFile(st.fs, new Path(segStaging, IdsNFile), nRows)
-            writeLongFile(st.fs, new Path(segStaging, IdsCapFile), bloomExpectedItems)
             if (!st.fs.rename(segStaging, segFinal))
               throw new java.io.IOException(
                 s"segment commit rename $segStaging -> $segFinal failed")
@@ -703,7 +547,7 @@ object SubstringIngest extends Logging {
               // rule; actual deletion waits out the reader grace window
               // in later triggers' sweeps
               if (cur.liveMsegs.size >= maxSegments ||
-                cur.msegDataBytes + segBytes >= majorRatio * math.max(1L, cur.baseDataBytes))
+                cur.msegDataBytes + segBytes >= MajorRatio * math.max(1L, cur.baseDataBytes))
                 compactLocked(spark, indexDir, deleteFolded = false)
               else minorCompactLocked(spark, indexDir, deleteFolded = false)
             }
@@ -720,65 +564,46 @@ object SubstringIngest extends Logging {
   }
 
   /** Refuse the batch if any of its ids hits the live set's merged
-    * blooms (constant-size driver read per live part; one pass over
-    * the batch). Blooms are sized identically per store, so
-    * mergeInPlace is always compatible. Past capacity (total ingested
-    * ids > `bloomExpectedItems`) the merged filter's fpp is no longer
-    * the configured one — a refusal would mostly hit CLEAN batches, so
-    * the guard degrades: mark incomplete, warn, skip the check (the
-    * exact path past capacity is [[auditIngestedIds]]).
+    * bloom (constant-size driver read per live part; one pass over the
+    * batch). Every bloom is the same fixed size, so they merge into
+    * one. Past capacity (the store's ids > [[IdsBloomItems]]) the
+    * merged filter's measured fpp exceeds [[IdsBloomFpp]] — a refusal
+    * would mostly hit CLEAN batches, so the guard degrades: warn, skip
+    * the check (the exact path past capacity is [[auditIngestedIds]]).
     */
   private def bloomGuard(
-      spark: SparkSession, st: Store, batch: DataFrame, batchId: Long,
-      bloomExpectedItems: Long): Unit = {
-    val bloomPaths = st.liveParts.flatMap(_.bloomAt)
-    // capacities come from the ON-DISK sidecars, not this call's
-    // parameter: a sink restarted with a smaller default than the
-    // store was built with must not declare a roomy guard saturated
-    // and skip it forever. Saturation is PER merge-compatibility
-    // class (advice r12): a roomy bootstrap bloom beside small
-    // per-segment blooms saturates only when some class's own summed
-    // count exceeds its own capacity.
-    val classes = mergeGuard(bloomPaths.flatMap(p => readGuard(st.fs, p.getParent)))
-    val overCap = classes.find(c =>
-      c.n > (if (c.cap >= 0) c.cap else bloomExpectedItems))
-    val saturated = overCap.isDefined
-    overCap.foreach { c =>
-      logWarning(
-        s"substringIngest ${st.dir}: a merged id-bloom class holds ~${c.n} ids, past " +
-          s"its ${if (c.cap >= 0) c.cap else bloomExpectedItems} capacity - the id " +
-          "guard is DEGRADED (would mostly false-refuse); marking the store " +
-          "_ids_bloom_incomplete. Run auditIngestedIds over the report directory " +
-          "for an exact check, or re-bootstrap with a larger bloomExpectedItems")
+      spark: SparkSession, st: Store, batch: DataFrame, batchId: Long): Unit =
+    if (st.liveParts.nonEmpty) {
+      val merged = mergedBloom(st.fs, st.liveParts)
+      // the false-positive chance the on-disk filters give now, measured
+      // from their set bits
+      val fpp = merged.expectedFpp()
+      if (fpp > IdsBloomFpp)
+        logWarning(
+          s"substringIngest ${st.dir}: the merged id bloom measures fpp ~$fpp, past " +
+            s"its design $IdsBloomFpp ($IdsBloomItems ids) - the id guard is DEGRADED " +
+            "(would mostly false-refuse) and skipped. Run auditIngestedIds over the " +
+            "report directory for an exact check")
+      else {
+        import org.apache.spark.sql.functions.{col, udf}
+        // broadcast, not closure-capture: the filter is MBs and the
+        // closure would re-serialize it into every task of every trigger
+        val bc = spark.sparkContext.broadcast(merged)
+        try {
+          val hit = udf((id: Long) => bc.value.mightContainLong(id))
+          val hits = batch.select(col("doc_id").cast("long").as("doc_id"))
+            .where(hit(col("doc_id"))).limit(5).collect().map(_.getLong(0))
+          require(hits.isEmpty,
+            s"substringIngestSink batch=$batchId re-uses already-ingested doc_ids " +
+              s"${hits.mkString(", ")} (bloom hit, fpp ~$fpp) - ids must be " +
+              "globally unique across the stream; replays of the same batch are " +
+              "skipped by the watermark, so this is a source re-emitting ids")
+          // async executor-side release; the driver ref is the
+          // ContextCleaner's job (a blocking destroy() here was a
+          // per-trigger executor sync barrier)
+        } finally bc.unpersist(blocking = false)
+      }
     }
-    val unguarded =
-      st.liveParts.exists(_.bloomAt.isEmpty) || st.bloomIncomplete || saturated
-    if (unguarded && !st.fs.exists(new Path(st.dir, BloomIncompleteFile)) && st.exists)
-      writeLongFile(st.fs, new Path(st.dir, BloomIncompleteFile), 1L)
-    if (bloomPaths.nonEmpty && !saturated) {
-      val merged = classes.map(_.bloom)
-      import org.apache.spark.sql.functions.{col, udf}
-      // broadcast, not closure-capture: the filters are MBs and the
-      // closure would re-serialize them into every task of every trigger
-      val bc = spark.sparkContext.broadcast(merged)
-      try {
-        val hit = udf((id: Long) => bc.value.exists(_.mightContainLong(id)))
-        val hits = batch.select(col("doc_id").cast("long").as("doc_id"))
-          .where(hit(col("doc_id"))).limit(5).collect().map(_.getLong(0))
-        // the false-positive chance the on-disk filters give now, whatever
-        // fpp this call or the one that built them was given
-        val fpp = merged.map(_.expectedFpp).sum
-        require(hits.isEmpty,
-          s"substringIngestSink batch=$batchId re-uses already-ingested doc_ids " +
-            s"${hits.mkString(", ")} (bloom hit, fpp ~$fpp) - ids must be " +
-            "globally unique across the stream; replays of the same batch are " +
-            "skipped by the watermark, so this is a source re-emitting ids")
-        // async executor-side release; the driver ref is the
-        // ContextCleaner's job (a blocking destroy() here was a
-        // per-trigger executor sync barrier)
-      } finally bc.unpersist(blocking = false)
-    }
-  }
 
   /** MAJOR compaction: fold base + live mseg runs + live segments into
     * a fresh `base/` (staged swap) and drop everything folded
@@ -798,9 +623,9 @@ object SubstringIngest extends Logging {
     * base or earlier mseg runs — into one `mseg_<T>` run, committed by
     * a single atomic rename. Cost O(data since the last minor); the
     * folded segments are dead by the liveness rule the instant the
-    * rename lands (deleting them is cleanup). Blooms and id counts of
-    * the folded segments merge into the run's sidecars, so the id
-    * guard's coverage is unchanged.
+    * rename lands (deleting them is cleanup). The folded segments'
+    * blooms OR into the run's one bloom, so the id guard's coverage is
+    * unchanged.
     */
   private def minorCompactLocked(
       spark: SparkSession, indexDir: String, deleteFolded: Boolean): Unit = {
@@ -808,15 +633,12 @@ object SubstringIngest extends Logging {
     if (st.liveSegs.isEmpty) return
     val through = st.liveSegs.map(_._1).max // > any mseg/base cover by liveness
     val segPaths = st.liveSegs.map(_._2)
-    val nWithBloom = segPaths.count(p => st.fs.exists(new Path(p, IdsBloomFile)))
-    val guard = mergeGuard(segPaths.flatMap(p => readGuard(st.fs, p)))
+    val bloom = mergedBloom(st.fs, segPaths)
     val staging = new Path(st.dir, s"$MsegPrefix$through$StagingSuffix")
     if (st.fs.exists(staging)) st.fs.delete(staging, true)
     mergeRows(spark.read.schema(IndexSchema).parquet(segPaths.map(_.toString): _*))
       .write.mode("overwrite").parquet(staging.toString)
-    if (guard.nonEmpty) writeGuard(st.fs, staging, guard)
-    if (nWithBloom < segPaths.size) // should not happen for sink-written segs
-      writeLongFile(st.fs, new Path(st.dir, BloomIncompleteFile), 1L)
+    writeBloom(st.fs, new Path(staging, IdsBloomFile), bloom)
     val dest = new Path(st.dir, s"$MsegPrefix$through")
     if (st.fs.exists(dest)) st.fs.delete(dest, true)
     if (!st.fs.rename(staging, dest))
@@ -833,18 +655,13 @@ object SubstringIngest extends Logging {
     val st = readStore(spark, indexDir)
     if (st.liveSegs.isEmpty && st.liveMsegs.isEmpty) return // nothing to fold
     val through = st.applied
-    val parts = st.liveParts
-    val bloomPaths = parts.flatMap(_.bloomAt)
-    val guard = mergeGuard(bloomPaths.flatMap(p => readGuard(st.fs, p.getParent)))
-    val incomplete = st.bloomIncomplete || parts.exists(_.bloomAt.isEmpty)
+    val bloom = mergedBloom(st.fs, st.liveParts)
     Load.replaceTable(spark, mergeRows(readLive(spark, st)), s"$indexDir/base",
       decorateStaging = { staging =>
         val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
         writeLongFile(fs, new Path(staging, CompactedThroughFile), through)
-        if (guard.nonEmpty) writeGuard(fs, staging, guard)
+        writeBloom(fs, new Path(staging, IdsBloomFile), bloom)
       }).get
-    if (incomplete)
-      writeLongFile(st.fs, new Path(st.dir, BloomIncompleteFile), 1L)
     // the swap made these dead by rule; immediate deletion only in
     // offline contexts — the sink stamps death time at THIS commit and
     // defers deletion to the grace-window sweep (see DeadAtFile)
@@ -871,8 +688,8 @@ object SubstringIngest extends Logging {
     * that appeared in more than one batch (or twice in one). Returns
     * (doc_id, n_occurrences, batches) rows — empty means clean. This is
     * the ground truth the per-trigger bloom guard approximates; run it
-    * periodically once a store is marked `_ids_bloom_incomplete`
-    * (a bloom-less part or bloom saturation).
+    * periodically once the guard saturates ([[StoreStats]]'
+    * `guardComplete` false).
     */
   def auditIngestedIds(spark: SparkSession, reportDir: String): DataFrame = {
     import org.apache.spark.sql.functions._

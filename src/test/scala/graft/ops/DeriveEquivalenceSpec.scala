@@ -14,7 +14,8 @@ import graft.SparkTestBase
   * spaces beside tabs and NBSP, apostrophes and hyphens, digits, case
   * mappings that change length or have a title case (é ß İ Σ ǆ), and
   * numbers Spark's cast parses or refuses. Each Catalyst form is written
-  * out here as the oracle.
+  * out here as the oracle; the D1 compat lane's oracle is Python's
+  * `str.title`, as literal goldens.
   */
 class DeriveEquivalenceSpec extends SparkTestBase {
 
@@ -47,12 +48,33 @@ class DeriveEquivalenceSpec extends SparkTestBase {
     assertEquivalent(Derive.cleanName)(c => initcap(trim(c)))
   }
 
+  /** Python 3.11's `str.title` after a space trim, over [[corpus]]:
+    * `[None if v is None else v.strip(' ').title() for v in corpus]`.
+    * No Catalyst form gives these: `upper` maps `ß` to `SS` where
+    * Python title-cases it to `Ss`, and `lower` never yields a final
+    * `ς`.
+    */
+  private val pandasTitle: Seq[String] = Seq(
+    null, "", "", "\t", "\u00a0", "Camden", "\tCamden\t", "\u00a0Camden\u00a0",
+    "\t King'S Lynn \u00a0", "King'S Lynn", "Stoke-On-Trent", "O'Neill-Smith", "A1B C",
+    "St. Albans", "Multiple   Inner  Spaces", "Tab\tInside", "École Élémentaire",
+    "Sstraße Strasse", "İstanbul İstanbul Istanbul", "Σίσυφος Σίσυφος Σ", "ǅungla ǅ ǅ",
+    "Fish Floor", "[E]", "[E]", "*", "*",
+    "Year 8 Females: Number", "Year 8 Females: Number Vaccinated", "Year 10 Males: Number Vaccinated",
+    "Y8 Females: % Vaccinated", "Year 8 Females: Number Vacci\u0307nated", "Year ٨ Females", "Year １２",
+    "Year8Females", "No Digits Here",
+    "+12", "-0", "12", "\t12\t", "\u00a012", "1E3", "12.0", "12.", ".5", "007", "1_000", "0X10",
+    "12 Pupils", "9223372036854775807", "9223372036854775808", "-9223372036854775808",
+    "-9223372036854775809", "１２")
+
+  // the oracle is Python's str.title (goldens above), not the Catalyst fold
   test("D1 cleanNamePandasTitle equals the pandas-title aggregate(split(...)) fold") {
-    assertEquivalent(Derive.cleanNamePandasTitle)(c =>
-      aggregate(split(trim(c), ""), lit(""), (acc, x) => {
-        val prev = substring(acc, -1, 1)
-        concat(acc, when(upper(prev) === lower(prev), upper(x)).otherwise(lower(x)))
-      }))
+    assert(pandasTitle.size == corpus.size)
+    val mismatches = corpus.zip(pandasTitle).collect {
+      case (v, want) if Derive.cleanNamePandasTitle(v) != want =>
+        s"[$v]: driver [${Derive.cleanNamePandasTitle(v)}], python [$want]"
+    }
+    assert(mismatches.isEmpty, mismatches.mkString("\n"))
   }
 
   test("E3 yearGroupFromHeader equals regexp_extract, with no match as null") {

@@ -5,6 +5,7 @@ import graft.operators.SubstringDedup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.sketch.BloomFilter
 
 /** First-class streaming substring-dedup ingest
   * ([[SubstringIngest.substringIngestSink]]): the published index
@@ -39,8 +40,7 @@ class SubstringIngestSinkSpec extends SparkTestBase {
     val (_, indexDir, reportDir, ckpt) = dirs()
     val mem = MemoryStream[(Long, String)]
     val q = SubstringIngest.substringIngestSink(
-      mem.toDF().toDF("doc_id", "text"), indexDir, reportDir, ckpt, k,
-      checkIds = true)
+      mem.toDF().toDF("doc_id", "text"), indexDir, reportDir, ckpt, k)
     val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
     try {
       for (b <- Seq(b1, b2, b3)) {
@@ -115,25 +115,81 @@ class SubstringIngestSinkSpec extends SparkTestBase {
     SubstringIngest.applyBatch(b1.toDF("doc_id", "text"), 0L, indexDir, reportDir, k)
     val dup = Seq((1L, "completely different text but a re-used id x")).toDF("doc_id", "text")
     val e = intercept[IllegalArgumentException] {
-      SubstringIngest.applyBatch(dup, 1L, indexDir, reportDir, k, checkIds = true)
+      SubstringIngest.applyBatch(dup, 1L, indexDir, reportDir, k)
     }
     assert(e.getMessage.contains("doc_ids"), e.getMessage)
   }
 
   test("the re-use refusal reports the on-disk blooms' own fpp, not the default's") {
     val (_, indexDir, reportDir, _) = dirs()
-    SubstringIngest.applyBatch(b1.toDF("doc_id", "text"), 0L, indexDir, reportDir, k,
-      bloomExpectedItems = 3, bloomFpp = 0.01)
-    val in = new java.io.FileInputStream(s"$indexDir/seg_0/${SubstringIngest.IdsBloomFile}")
-    val onDisk =
-      try org.apache.spark.util.sketch.BloomFilter.readFrom(in).expectedFpp() finally in.close()
-    // a later batch under the default fpp, as after a restart
+    SubstringIngest.applyBatch(b1.toDF("doc_id", "text"), 0L, indexDir, reportDir, k)
+    SubstringIngest.applyBatch(b2.toDF("doc_id", "text"), 1L, indexDir, reportDir, k)
+    // the merged filter's fpp, measured from its set bits
+    val merged = readBloom(s"$indexDir/seg_0")
+    merged.mergeInPlace(readBloom(s"$indexDir/seg_1"))
+    val measured = merged.expectedFpp()
     val e = intercept[IllegalArgumentException] {
       SubstringIngest.applyBatch(Seq((2L, "a re-used id")).toDF("doc_id", "text"),
-        1L, indexDir, reportDir, k)
+        2L, indexDir, reportDir, k)
     }
-    assert(e.getMessage.contains(s"fpp ~$onDisk)"), e.getMessage)
-    assert(!e.getMessage.contains(SubstringIngest.DefaultBloomFpp.toString), e.getMessage)
+    assert(e.getMessage.contains(s"fpp ~$measured)"), e.getMessage)
+    assert(!e.getMessage.contains(SubstringIngest.IdsBloomFpp.toString), e.getMessage)
+  }
+
+  private def readBloom(partDir: String): BloomFilter = {
+    val in = new java.io.FileInputStream(s"$partDir/${SubstringIngest.IdsBloomFile}")
+    try BloomFilter.readFrom(in) finally in.close()
+  }
+
+  /** Overwrite a part's `_ids_bloom` with `bloom`, dropping its `.crc`
+    * sidecar (the bloom was written through Hadoop's checksummed
+    * LocalFileSystem and is rewritten here raw).
+    */
+  private def overwriteBloom(partDir: String, bloom: BloomFilter): Unit = {
+    val f = new java.io.File(partDir, SubstringIngest.IdsBloomFile)
+    new java.io.File(partDir, s".${f.getName}.crc").delete()
+    val out = new java.io.FileOutputStream(f)
+    try bloom.writeTo(out) finally out.close()
+  }
+
+  /** A filter of the store's fixed size holding ~10M ids: its measured
+    * fpp is near 1, far past the design fpp.
+    */
+  private def saturatedBloom(): BloomFilter = {
+    val bloom = BloomFilter.create(SubstringIngest.IdsBloomItems, SubstringIngest.IdsBloomFpp)
+    var id = 0L
+    while (id < 10L * 1000 * 1000) { bloom.putLong(id); id += 1 }
+    bloom
+  }
+
+  test("a live part whose bloom has another size is refused, naming the part") {
+    val (_, indexDir, reportDir, _) = dirs()
+    SubstringIngest.applyBatch(b1.toDF("doc_id", "text"), 0L, indexDir, reportDir, k)
+    SubstringIngest.applyBatch(b2.toDF("doc_id", "text"), 1L, indexDir, reportDir, k)
+    val seg1 = s"$indexDir/seg_1"
+    val small = BloomFilter.create(1000, 0.01)
+    b2.foreach { case (id, _) => small.putLong(id) }
+    overwriteBloom(seg1, small)
+    val e = intercept[IllegalStateException] {
+      SubstringIngest.applyBatch(b3.toDF("doc_id", "text"), 2L, indexDir, reportDir, k)
+    }
+    assert(e.getMessage.contains(seg1), e.getMessage)
+    // refused before anything of the batch was published
+    assert(SubstringIngest.readState(spark, indexDir)._2 == 1L)
+  }
+
+  test("a live part without its bloom is refused, naming the part") {
+    val (_, indexDir, reportDir, _) = dirs()
+    SubstringIngest.applyBatch(b1.toDF("doc_id", "text"), 0L, indexDir, reportDir, k)
+    val seg0 = s"$indexDir/seg_0"
+    val bloom = new java.io.File(seg0, SubstringIngest.IdsBloomFile)
+    assert(bloom.delete())
+    new java.io.File(seg0, s".${bloom.getName}.crc").delete()
+    val e = intercept[IllegalStateException] {
+      SubstringIngest.applyBatch(b2.toDF("doc_id", "text"), 1L, indexDir, reportDir, k)
+    }
+    assert(e.getMessage.contains(seg0), e.getMessage)
+    assert(SubstringIngest.readState(spark, indexDir)._2 == 0L)
   }
 
   /** Distinct-text batches of equal shape: batch i contributes 3 docs
@@ -156,7 +212,7 @@ class SubstringIngestSinkSpec extends SparkTestBase {
     val n = 12
     for (i <- 0 until n)
       SubstringIngest.applyBatch(uniformBatch(i).toDF("doc_id", "text"), i.toLong,
-        indexDir, reportDir, k, maxSegments = 100, bloomExpectedItems = 1000)
+        indexDir, reportDir, k, maxSegments = 100)
     // publish bytes per trigger: an early and a late segment of equal
     // batch shape must be the same size (the round-11 fold republished
     // the WHOLE index — seg 11 would be ~12x seg 1)
@@ -175,7 +231,7 @@ class SubstringIngestSinkSpec extends SparkTestBase {
     val batches = Seq(b1, b2, b3, Seq((7L, "fresh words after the fold here")))
     for ((b, i) <- batches.zipWithIndex)
       SubstringIngest.applyBatch(b.toDF("doc_id", "text"), i.toLong,
-        indexDir, reportDir, k, maxSegments = 2, bloomExpectedItems = 1000)
+        indexDir, reportDir, k, maxSegments = 2)
     // maxSegments=2 forced at least one fold: base exists, few live segs
     // (dead folded parts may LINGER on disk inside the reader grace
     // window — liveness is what counts, via storeStats)
@@ -194,8 +250,7 @@ class SubstringIngestSinkSpec extends SparkTestBase {
     // of a batch-0 id is still refused
     val dup = Seq((1L, "unrelated text entirely new tokens")).toDF("doc_id", "text")
     val e = intercept[IllegalArgumentException] {
-      SubstringIngest.applyBatch(dup, 9L, indexDir, reportDir, k,
-        maxSegments = 2, bloomExpectedItems = 1000)
+      SubstringIngest.applyBatch(dup, 9L, indexDir, reportDir, k, maxSegments = 2)
     }
     assert(e.getMessage.contains("doc_ids"), e.getMessage)
     // manual compact of the remaining segments is state-preserving
@@ -207,10 +262,11 @@ class SubstringIngestSinkSpec extends SparkTestBase {
 
   test("two-level compaction: minors fold segments into mseg runs without touching base; a major folds everything") {
     val (_, indexDir, reportDir, _) = dirs()
-    // a bootstrapped base + a huge majorRatio → only MINOR compactions
-    // can run; base must never be rewritten by them
-    val baseDocs = (100 to 140).map(i =>
-      (i.toLong, (0 to 8).map(j => s"w${i}_$j").mkString(" ")))
+    // a bootstrapped base far larger than the six small batches → the
+    // size-ratio major never trips, only MINOR compactions can run;
+    // base must never be rewritten by them
+    val baseDocs = (100 to 2099).map(i =>
+      (i.toLong, (0 to 19).map(j => s"w${i}_$j").mkString(" ")))
     SubstringIngest.bootstrap(spark, baseDocs.toDF("doc_id", "text"), indexDir, k)
     val baseSig = fileSig(s"$indexDir/base")
     val batches = Seq(b1, b2, b3,
@@ -219,8 +275,7 @@ class SubstringIngestSinkSpec extends SparkTestBase {
       Seq((9L, "nu xi omicron pi rho sigma")))
     for ((b, i) <- batches.zipWithIndex)
       SubstringIngest.applyBatch(b.toDF("doc_id", "text"), i.toLong,
-        indexDir, reportDir, k, maxSegments = 2, bloomExpectedItems = 1000,
-        majorRatio = 1e9)
+        indexDir, reportDir, k, maxSegments = 2)
     // batches 2 and 5 each pushed live segs to 3 > 2 → two mseg runs
     val msegs = new java.io.File(indexDir).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("mseg_")).map(_.getName).sorted
@@ -237,8 +292,7 @@ class SubstringIngestSinkSpec extends SparkTestBase {
     for (reused <- Seq(1L, 120L)) {
       val dup = Seq((reused, "totally fresh words for the reuse probe")).toDF("doc_id", "text")
       val e = intercept[IllegalArgumentException] {
-        SubstringIngest.applyBatch(dup, 9L, indexDir, reportDir, k,
-          maxSegments = 2, bloomExpectedItems = 1000, majorRatio = 1e9)
+        SubstringIngest.applyBatch(dup, 9L, indexDir, reportDir, k, maxSegments = 2)
       }
       assert(e.getMessage.contains("doc_ids"), e.getMessage)
     }
@@ -246,8 +300,7 @@ class SubstringIngestSinkSpec extends SparkTestBase {
     val stats = SubstringIngest.storeStats(spark, indexDir)
     assert(stats.applied == 5L && stats.liveSegments == 0 && stats.liveMsegRuns == 2,
       stats.toString)
-    assert(stats.guardComplete && stats.guardedIds == baseDocs.size + batches.flatten.size,
-      stats.toString)
+    assert(stats.guardComplete, stats.toString)
     assert(stats.baseDataBytes > 0 && stats.msegDataBytes > 0, stats.toString)
     // manual MAJOR folds the runs into base and preserves everything
     SubstringIngest.compact(spark, indexDir)
@@ -260,25 +313,22 @@ class SubstringIngestSinkSpec extends SparkTestBase {
 
   test("re-bootstrap onto a non-empty store supersedes every live part — no gram double-count, watermark kept, guard coverage restored") {
     val (_, indexDir, reportDir, _) = dirs()
-    SubstringIngest.applyBatch(b1.toDF("doc_id", "text"), 0L, indexDir, reportDir, k,
-      bloomExpectedItems = 3)
-    SubstringIngest.applyBatch(b2.toDF("doc_id", "text"), 1L, indexDir, reportDir, k,
-      bloomExpectedItems = 3)
-    // saturate so the store carries the incomplete marker (capacity 3 < 4 ids)
-    SubstringIngest.applyBatch(b3.toDF("doc_id", "text"), 2L, indexDir, reportDir, k,
-      bloomExpectedItems = 3)
-    assert(new java.io.File(s"$indexDir/${SubstringIngest.BloomIncompleteFile}").exists)
-    // the saturation warning's prescribed path: re-bootstrap with the
-    // FULL corpus and a roomier bloom — live segments must become dead
-    // (their grams are already inside the bootstrap corpus), not merge
-    // on top of it
+    SubstringIngest.applyBatch(b1.toDF("doc_id", "text"), 0L, indexDir, reportDir, k)
+    SubstringIngest.applyBatch(b2.toDF("doc_id", "text"), 1L, indexDir, reportDir, k)
+    SubstringIngest.applyBatch(b3.toDF("doc_id", "text"), 2L, indexDir, reportDir, k)
+    // saturate one part's bloom so the guard degrades
+    overwriteBloom(s"$indexDir/seg_2", saturatedBloom())
+    assert(!SubstringIngest.storeStats(spark, indexDir).guardComplete)
+    // re-bootstrap with the FULL corpus and a fresh bloom — live
+    // segments must become dead (their grams are already inside the
+    // bootstrap corpus), not merge on top of it
     val all = (b1 ++ b2 ++ b3).toDF("doc_id", "text")
-    SubstringIngest.bootstrap(spark, all, indexDir, k, bloomExpectedItems = 1000)
+    SubstringIngest.bootstrap(spark, all, indexDir, k)
     val (idx, applied) = SubstringIngest.readState(spark, indexDir)
     assert(applied == 2L, s"watermark regressed/advanced wrongly: $applied")
     assertSameRows(idx, SubstringDedup.gramIndex(all, k))
-    // guard coverage is complete again (marker cleared, fresh bloom),
-    // so an old id is refused…
+    // guard coverage is complete again (fresh bloom), so an old id is
+    // refused…
     assert(SubstringIngest.storeStats(spark, indexDir).guardComplete)
     val e = intercept[IllegalArgumentException] {
       SubstringIngest.applyBatch(
@@ -295,25 +345,24 @@ class SubstringIngestSinkSpec extends SparkTestBase {
 
   test("bloom saturation degrades the guard (no false refusals) and auditIngestedIds stays exact") {
     val (_, indexDir, reportDir, _) = dirs()
-    // capacity 3 ids: batch 0 (2 ids) leaves the guard active; after
-    // batch 1 the merged count is 4 > 3 — saturated
-    SubstringIngest.applyBatch(b1.toDF("doc_id", "text"), 0L, indexDir, reportDir, k,
-      bloomExpectedItems = 3)
-    SubstringIngest.applyBatch(b2.toDF("doc_id", "text"), 1L, indexDir, reportDir, k,
-      bloomExpectedItems = 3)
+    SubstringIngest.applyBatch(b1.toDF("doc_id", "text"), 0L, indexDir, reportDir, k)
+    SubstringIngest.applyBatch(b2.toDF("doc_id", "text"), 1L, indexDir, reportDir, k)
+    assert(SubstringIngest.storeStats(spark, indexDir).guardComplete)
+    // batch 1's bloom saturated (~10M ids, ids 0..5 among them): the
+    // merged filter now measures an fpp near 1
+    overwriteBloom(s"$indexDir/seg_1", saturatedBloom())
     // a saturated merged bloom would mostly FALSE-refuse; instead the
     // guard degrades — this clean batch must land…
-    SubstringIngest.applyBatch(b3.toDF("doc_id", "text"), 2L, indexDir, reportDir, k,
-      bloomExpectedItems = 3)
+    SubstringIngest.applyBatch(b3.toDF("doc_id", "text"), 2L, indexDir, reportDir, k)
     assert(SubstringIngest.readState(spark, indexDir)._2 == 2L)
     // …and the degradation is VISIBLE on the store
-    assert(new java.io.File(s"$indexDir/${SubstringIngest.BloomIncompleteFile}").exists,
-      "saturated guard did not mark the store incomplete")
+    assert(!SubstringIngest.storeStats(spark, indexDir).guardComplete,
+      "saturated guard still reported complete")
     // past capacity even a true re-use slips the bloom guard — which is
     // exactly what the exact report-side audit is for
     SubstringIngest.applyBatch(
       Seq((1L, "reused id entirely new words here now")).toDF("doc_id", "text"),
-      3L, indexDir, reportDir, k, bloomExpectedItems = 3)
+      3L, indexDir, reportDir, k)
     val dups = SubstringIngest.auditIngestedIds(spark, reportDir)
       .orderBy($"doc_id").collect()
     assert(dups.length == 1 && dups(0).getLong(0) == 1L)
@@ -323,16 +372,6 @@ class SubstringIngestSinkSpec extends SparkTestBase {
     SubstringIngest.applyBatch(b1.toDF("doc_id", "text"), 0L, cleanIdx, cleanRep, k)
     SubstringIngest.applyBatch(b2.toDF("doc_id", "text"), 1L, cleanIdx, cleanRep, k)
     assert(SubstringIngest.auditIngestedIds(spark, cleanRep).isEmpty)
-    // saturation is judged against the capacity the ON-DISK blooms
-    // were built with (the _ids_capacity sidecars), not the current
-    // call's parameter: a restart with a smaller default must not
-    // declare this roomy store saturated and skip the guard
-    val e2 = intercept[IllegalArgumentException] {
-      SubstringIngest.applyBatch(
-        Seq((1L, "reused id against a roomy store")).toDF("doc_id", "text"),
-        2L, cleanIdx, cleanRep, k, bloomExpectedItems = 3)
-    }
-    assert(e2.getMessage.contains("doc_ids"), e2.getMessage)
   }
 
   test("an index directory with data files at its root is refused, naming it") {
@@ -373,47 +412,12 @@ class SubstringIngestSinkSpec extends SparkTestBase {
     stamps.foreach { s =>
       new java.io.File(s.getParentFile, s".${s.getName}.crc").delete()
       java.nio.file.Files.write(s.toPath,
-        (System.currentTimeMillis() - 2 * SubstringIngest.DefaultSweepGraceMs)
+        (System.currentTimeMillis() - 2 * SubstringIngest.SweepGraceMs)
           .toString.getBytes("UTF-8"))
     }
     SubstringIngest.applyBatch(Seq((51L, "gg hh ii jj kk ll")).toDF("doc_id", "text"),
       4L, indexDir, reportDir, k, maxSegments = 2)
     assert(dead.forall(!_.exists()), "sweep left dead parts whose death stamp aged out")
-  }
-
-  test("saturation is judged per bloom size class: a roomy bootstrap beside small segment blooms keeps the guard active (advice r12)") {
-    val (_, indexDir, reportDir, _) = dirs()
-    // roomy bootstrap bloom: capacity 1000, 4 ids
-    SubstringIngest.bootstrap(spark, (b1 ++ b2).toDF("doc_id", "text"), indexDir, k,
-      bloomExpectedItems = 1000)
-    // three 1-id batches with tiny blooms (capacity 3): the small class
-    // holds 3 ids <= its OWN capacity; the TOTAL (7) is past the MIN
-    // single-part capacity — the pre-advice check declared saturation here
-    Seq(10L, 11L, 12L).zipWithIndex.foreach { case (id, i) =>
-      SubstringIngest.applyBatch(
-        Seq((id, s"fresh words number $id here")).toDF("doc_id", "text"),
-        i.toLong, indexDir, reportDir, k, bloomExpectedItems = 3)
-    }
-    assert(!new java.io.File(s"$indexDir/${SubstringIngest.BloomIncompleteFile}").exists,
-      "per-class accounting still declared a non-saturated store saturated")
-    assert(SubstringIngest.storeStats(spark, indexDir).guardComplete)
-    // the guard is ACTIVE: a bootstrap id and a segment id are both refused
-    for (reused <- Seq(1L, 11L)) {
-      val e = intercept[IllegalArgumentException] {
-        SubstringIngest.applyBatch(
-          Seq((reused, "reuse attempt text")).toDF("doc_id", "text"),
-          3L, indexDir, reportDir, k, bloomExpectedItems = 3)
-      }
-      assert(e.getMessage.contains("doc_ids"), e.getMessage)
-    }
-    // a 4th/5th small batch push the SMALL class past ITS capacity
-    // (4 > 3): now the guard genuinely saturates and degrades loudly
-    SubstringIngest.applyBatch(Seq((13L, "more fresh words")).toDF("doc_id", "text"),
-      3L, indexDir, reportDir, k, bloomExpectedItems = 3)
-    SubstringIngest.applyBatch(Seq((14L, "and yet more words")).toDF("doc_id", "text"),
-      4L, indexDir, reportDir, k, bloomExpectedItems = 3)
-    assert(new java.io.File(s"$indexDir/${SubstringIngest.BloomIncompleteFile}").exists,
-      "a genuinely over-capacity class did not degrade the guard")
   }
 
   test("bootstrap default keeps superseded parts dead-by-rule with death stamps; offline=true deletes immediately (advice r12)") {
