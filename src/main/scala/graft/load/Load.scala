@@ -1,8 +1,12 @@
 package graft.load
 
 import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetUtils}
 import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -38,9 +42,14 @@ object Load {
 
   /** K2/K3: staged atomic-ish replace of a parquet destination path
     * ([[stagedSwap]]). Returns K4's row-count report on success; K5's
-    * structured failure otherwise (destination preserved). The count is
-    * an observed metric of the write job itself ([[writeCounted]]), not
-    * a second read of the staged files.
+    * structured failure otherwise (destination preserved).
+    *
+    * A frame whose analyzed plan is a bare local relation (the HPV fact
+    * table, built by `createDataFrame`) already holds its rows on the
+    * driver: [[writeLocal]] writes them there, with no query and no
+    * job, and counts the rows it wrote. Any other plan runs one write
+    * job, counted by an observed metric of the job itself
+    * ([[writeCounted]]), not a second read of the staged files.
     *
     * `decorateStaging`: sidecar metadata (underscore-prefixed files,
     * which Spark readers ignore) written INTO the staging dir so it
@@ -53,7 +62,11 @@ object Load {
       decorateStaging: Path => Unit = _ => ()): Try[LoadReport] = {
     val result = Try {
       val rows = stagedSwap(spark, destination) { staging =>
-        val rows = writeCounted(spark, df, staging.toString)
+        val rows = df.queryExecution.analyzed match {
+          case local: LocalRelation if !local.isStreaming =>
+            writeLocal(spark, local, staging)
+          case _ => writeCounted(spark, df, staging.toString)
+        }
         decorateStaging(staging)
         rows
       }
@@ -62,9 +75,33 @@ object Load {
     report(result, destination)
   }
 
-  /** Writes `df` as parquet to `path` and returns the rows written,
-    * counted by a uniquely named `observe` metric of the write job (a
-    * retried task counts once). A listener registered for the write alone reads the metric
+  /** Writes `local`'s rows as one parquet file into the directory `dir`,
+    * then `_SUCCESS`, on the driver, and returns the rows written. The
+    * writer is the one a write job's task opens
+    * (`ParquetUtils.prepareWrite`, then the factory's `newInstance`), so
+    * the codec, Spark's schema metadata and the datetime rebase follow
+    * the session's conf as they would in a job; only the job, its
+    * planning and its commit protocol are skipped. A failure leaves the
+    * directory without `_SUCCESS`, and the caller publishes nothing.
+    */
+  private def writeLocal(spark: SparkSession, local: LocalRelation, dir: Path): Long = {
+    val state = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
+    val job = Job.getInstance(state.newHadoopConf())
+    val schema = local.schema
+    val factory = ParquetUtils.prepareWrite(
+      state.conf, job, schema, new ParquetOptions(Map.empty[String, String], state.conf))
+    val context = new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID())
+    val file = new Path(dir, s"part-00000-${java.util.UUID.randomUUID()}${factory.getFileExtension(context)}")
+    val writer = factory.newInstance(file.toString, schema, context)
+    try local.data.foreach(writer.write) finally writer.close()
+    dir.getFileSystem(job.getConfiguration).create(new Path(dir, "_SUCCESS")).close()
+    local.data.size.toLong
+  }
+
+  /** Writes `df`, any plan but a bare local relation, as parquet to
+    * `path` in one write job, and returns the rows written, counted by a
+    * uniquely named `observe` metric of the job (a retried task counts
+    * once). A listener registered for the write alone reads the metric
     * when the write succeeds. Spark's `Observation` is not used: once
     * registered, its session-wide listener re-plans every FAILED query
     * on the listener bus, where a failure in planning throws again and

@@ -4,17 +4,21 @@ import java.util.Locale
 
 import com.ibm.icu.lang.{UCharacter, UProperty}
 import com.ibm.icu.text.CaseMap
-import org.apache.spark.sql.catalyst.util.CollationSupport.{InitCap, Lower}
 import org.apache.spark.sql.catalyst.util.UTF8StringUtils
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Scalar derivations E1-E8 (SURVEY.md §2.4) as driver functions. E1-E5
   * and the measure cast equal the Catalyst expressions named in their
-  * docs, value for value (`DeriveEquivalenceSpec`): trimming, case
-  * mapping and the cast call Spark's own scalar kernels. The D1 compat
-  * lane equals Python's `str.title` instead, checked against goldens
-  * from `python3`. Null derives to null, except in E4/E5, whose
-  * `otherwise` default covers it.
+  * docs, value for value (`DeriveEquivalenceSpec`). Trimming and the
+  * cast call Spark's own `UTF8String` kernels. Case mapping calls ICU
+  * directly, in the steps of Spark 4.1's `initcap` and `lower`
+  * (`CollationAwareUTF8String.toTitleCaseICU` and `toLowerCase`):
+  * that class's static initializer title-cases all 1,114,112 code
+  * points into a lookup table, about 1.7 s of a cold JVM for the few
+  * hundred names one nightly run cleans. The D1 compat lane equals
+  * Python's `str.title` instead, checked against goldens from
+  * `python3`. Null derives to null, except in E4/E5, whose `otherwise`
+  * default covers it.
   */
 object Derive {
 
@@ -25,7 +29,36 @@ object Derive {
     * matches the DuckDB oracle.
     */
   def cleanName(s: String): String =
-    onUtf8(s)(u => InitCap.execBinaryICU(u.trim()))
+    if (s == null) null else initcap(UTF8String.fromString(s).trim().makeValid().toString)
+
+  /** Spark's ICU `initcap`: a code point at the start or after an ASCII
+    * space takes its title case, a one-to-many mapping where ICU's full
+    * title case has one; `Σ` takes the final-sigma rule, whose
+    * case-ignorable skip equals Spark's running "preceded by a cased
+    * letter" state; `İ` lowers to `i` and U+0307; any other code point
+    * takes its simple lowercase.
+    */
+  private def initcap(s: String): String = {
+    val cps = s.codePoints.toArray
+    val out = new java.lang.StringBuilder(s.length)
+    for (i <- cps.indices) {
+      val cp = cps(i)
+      if (i == 0 || cps(i - 1) == ' ') appendTitleCase(out, cp)
+      else if (cp == 'Σ') out.append(if (finalSigma(cps, i)) 'ς' else 'σ')
+      else if (cp == 'İ') out.append("i\u0307")
+      else out.appendCodePoint(UCharacter.toLowerCase(cp))
+    }
+    out.toString
+  }
+
+  /** ASCII title-cases to one code point, so ICU's full mapping, with
+    * its word-break iterator, is asked only past ASCII.
+    */
+  private def appendTitleCase(out: java.lang.StringBuilder, cp: Int): Unit = {
+    val full = if (cp < 0x80) null else UCharacter.toTitleCase(Character.toString(cp), null)
+    if (full != null && full.codePointCount(0, full.length) > 1) out.append(full)
+    else out.appendCodePoint(UCharacter.toTitleCase(cp))
+  }
 
   /** D1 COMPAT lane (opt-in, round 11): Python's `str.title` to the
     * letter, after a space `trim`. A character after a cased one takes
@@ -79,10 +112,17 @@ object Derive {
   def genderFromHeader(h: String): String =
     if (h != null && h.contains("females")) "Female" else "Male"
 
-  /** E5: case-insensitive "vaccinated" test selects the metric name. */
+  /** E5: case-insensitive "vaccinated" test selects the metric name,
+    * over Spark's ICU `lower`: an ASCII fast path, else ICU's full
+    * lowercase of the valid string.
+    */
   def metricFromHeader(h: String): String =
-    if (h != null && onUtf8(h)(Lower.execBinaryICU).contains("vaccinated")) "Number_Vaccinated"
-    else "Number"
+    if (h != null && lower(h).contains("vaccinated")) "Number_Vaccinated" else "Number"
+
+  private def lower(s: String): String = {
+    val u = UTF8String.fromString(s)
+    if (u.isFullAscii) u.toLowerCaseAscii.toString else UCharacter.toLowerCase(u.toValidString)
+  }
 
   /** A raw measure cell as a count: `trim(c).cast(LongType)` under
     * ANSI, so a cell that is not a whole number fails with
@@ -90,9 +130,6 @@ object Derive {
     */
   def measure(s: String): java.lang.Long =
     if (s == null) null else UTF8StringUtils.toLongExact(UTF8String.fromString(s).trim(), null)
-
-  private def onUtf8(s: String)(f: UTF8String => UTF8String): String =
-    if (s == null) null else f(UTF8String.fromString(s)).toString
 
   // --- driver-side scalar extraction (E6-E8; evaluated once per file
   //     on cell A1 — SURVEY §2.2 P7) ---

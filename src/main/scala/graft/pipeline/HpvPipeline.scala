@@ -28,10 +28,10 @@ import graft.ops.{Clean, Derive, Rollup}
   * are null (a sentinel in a key column) DO form null-key groups (SQL
   * GROUP BY), where pandas groupby silently drops them.
   *
-  * Cost per cycle: `transform` plans no query and launches no Spark
-  * job. Its one Spark call is the final `createDataFrame`: the fact
-  * table is one local relation, whose write is the cycle's only query,
-  * one job of one stage (no Expand, no aggregate, no shuffle).
+  * Cost per cycle: the cycle runs no Spark query and no job. The one
+  * Spark call of `transform` is the final `createDataFrame`, whose
+  * analysis builds the fact table as one local relation, and
+  * `Load.replaceTable` writes that relation's rows on the driver.
   *  - [[stack]] reshapes every workbook on the driver into rows in the
   *    column order of [[OutputSchema]], deriving the header keys and
   *    cleaning the LA names with the [[Derive]] functions.
@@ -44,8 +44,8 @@ import graft.ops.{Clean, Derive, Rollup}
   *    through as it is, as in the reference's union, even where the
   *    grain repeats — a `*` borough scrubs to null beside a blank one,
   *    and D7 repeats an academic year across workbooks.
-  * The load that follows pays the write (which also counts the rows)
-  * and the swap.
+  * The load that follows pays the driver-side parquet write of those
+  * rows (which counts them) and the swap.
   */
 object HpvPipeline {
 

@@ -41,7 +41,8 @@ import graft.operators.SubstringDedup
   *  - '''Publish''' = write the batch's gram segment under a staging
   *    name, then one atomic rename to `seg_<batchId>` — the rename IS
   *    the commit (no separate watermark file whose update could tear).
-  *    Publish bytes are O(batch grams) + one constant-size bloom.
+  *    Publish bytes are O(batch grams) + one deflated id bloom, whose
+  *    size grows with the ids it holds.
   *  - '''Probe''' = merge-on-read: the batch is probed against the
   *    UNION of live parts; [[SubstringDedup.cleanKeepFirstIncremental]]
   *    folds per-gram min/sum AFTER its gram join, so multi-row grams
@@ -147,8 +148,9 @@ object SubstringIngest extends Logging {
   val IdsBloomFile = "_ids_bloom"
 
   /** The one size of every id bloom: [[IdsBloomItems]] ids at
-    * [[IdsBloomFpp]], ~2.3 MB per part regardless of index size,
-    * merged away at compaction. One size is what lets every live
+    * [[IdsBloomFpp]], ~2.3 MB per part in memory whatever the index
+    * size ([[writeBloom]] deflates it on disk), merged away at
+    * compaction. One size is what lets every live
     * part's filter OR into one.
     */
   val IdsBloomItems: Long = 1L * 1000 * 1000
@@ -209,8 +211,8 @@ object SubstringIngest extends Logging {
   }
 
   /** Data-file bytes of one part dir (sidecars/_SUCCESS excluded —
-    * the constant-size id bloom would otherwise dominate small runs
-    * and skew the size-ratio major trigger).
+    * the id bloom, whose size follows the ids and not the grams, would
+    * otherwise skew the size-ratio major trigger).
     */
   private def dataBytes(fs: FileSystem, dir: Path): Long =
     fs.listStatus(dir).collect {
@@ -378,9 +380,18 @@ object SubstringIngest extends Logging {
     try out.write(v.toString.getBytes("UTF-8")) finally out.close()
   }
 
-  private def writeBloom(fs: FileSystem, p: Path, bloom: BloomFilter): Unit = {
-    val out = fs.create(p, true)
+  /** A bloom file is the filter's own serialization, deflated: a
+    * part's filter of [[IdsBloomItems]] ids is ~2.3 MB of mostly unset
+    * bits, which deflate to a few KB while the part holds few ids.
+    */
+  private[streaming] def writeBloom(fs: FileSystem, p: Path, bloom: BloomFilter): Unit = {
+    val out = new java.util.zip.DeflaterOutputStream(fs.create(p, true))
     try bloom.writeTo(out) finally out.close()
+  }
+
+  private[streaming] def readBloom(fs: FileSystem, p: Path): BloomFilter = {
+    val in = new java.util.zip.InflaterInputStream(fs.open(p))
+    try BloomFilter.readFrom(in) finally in.close()
   }
 
   /** Bloom over doc_id AS LONG — `stat.bloomFilter` hashes a column by
@@ -410,11 +421,15 @@ object SubstringIngest extends Logging {
             s"carries one $IdsBloomFile filter of $IdsBloomItems ids at fpp $IdsBloomFpp",
           cause)
       if (!fs.exists(at)) refuse(s"has no $IdsBloomFile")
-      val in = fs.open(at)
-      try merged.mergeInPlace(BloomFilter.readFrom(in))
+      val bloom =
+        try readBloom(fs, at)
+        catch {
+          case e: java.util.zip.ZipException => refuse(s"holds an $IdsBloomFile that does not inflate", e)
+        }
+      try merged.mergeInPlace(bloom)
       catch {
         case e: IncompatibleMergeException => refuse(s"holds an $IdsBloomFile of another size", e)
-      } finally in.close()
+      }
     }
     merged
   }

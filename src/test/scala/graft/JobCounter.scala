@@ -32,38 +32,52 @@ object JobCounter {
     * `Dataset` action over a local relation does.
     */
   def withQueries[T](spark: SparkSession)(body: => T): (T, Int, Int) = {
+    var out: Option[T] = None
+    val (jobs, queries) = tally(spark, openingFence = true)(Seq(() => out = Some(body))).head
+    (out.get, jobs, queries)
+  }
+
+  /** Jobs and query executions of each of `bodies`, run in turn, each
+    * under its own token (see [[withQueries]]), with one fence after the
+    * last. Without the opening fence no job runs before the first body,
+    * so in a fresh JVM the first body pays Spark's first-job start-up
+    * itself, as a nightly run's first query does.
+    */
+  def tally(spark: SparkSession, openingFence: Boolean)(bodies: Seq[() => Unit]): Seq[(Int, Int)] = {
     val sc = spark.sparkContext
-    val token = UUID.randomUUID().toString
-    val jobs = new AtomicInteger
-    val queries = new AtomicInteger
+    val run = UUID.randomUUID().toString
+    val tokens = bodies.indices.map(i => s"$run/$i")
+    val jobs = tokens.map(_ => new AtomicInteger)
+    val queries = tokens.map(_ => new AtomicInteger)
     val fences = new LinkedBlockingQueue[String]
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         Option(e.properties).map(_.getProperty(Tag)).foreach {
-          case t if t == token + "/fence" => fences.put(t)
-          case t if t == token => jobs.incrementAndGet()
-          case _ =>
+          case t if t == run + "/fence" => fences.put(t)
+          case t => tokens.indexOf(t) match { case -1 => case i => jobs(i).incrementAndGet() }
         }
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case q: SparkListenerSQLExecutionStart if q.jobTags.contains(token) =>
-          queries.incrementAndGet()
+        case q: SparkListenerSQLExecutionStart =>
+          tokens.indices.filter(i => q.jobTags.contains(tokens(i))).foreach(queries(_).incrementAndGet())
         case _ =>
       }
     }
     def fence(): Unit = {
-      sc.setLocalProperty(Tag, token + "/fence")
+      sc.setLocalProperty(Tag, run + "/fence")
       sc.parallelize(Seq(1), 1).count()
       assert(fences.poll(60, TimeUnit.SECONDS) != null,
         "listener bus did not deliver the fence job")
     }
     sc.addSparkListener(listener)
     try {
+      if (openingFence) fence()
+      bodies.zip(tokens).foreach { case (body, token) =>
+        sc.setLocalProperty(Tag, token)
+        sc.addJobTag(token)
+        try body() finally sc.removeJobTag(token)
+      }
       fence()
-      sc.setLocalProperty(Tag, token)
-      sc.addJobTag(token)
-      val out = try body finally sc.removeJobTag(token)
-      fence()
-      (out, jobs.get(), queries.get())
+      jobs.map(_.get).zip(queries.map(_.get))
     } finally {
       sc.setLocalProperty(Tag, null)
       sc.removeSparkListener(listener)

@@ -406,7 +406,7 @@ class PlanAssertionsSpec extends SparkTestBase {
     assert(!p.contains("CartesianProduct"), "no line-pair expansion may appear")
   }
 
-  // ---- HPV cycle budget: zero jobs in transform; the fact table is one local relation ----
+  // ---- HPV cycle budget: zero jobs in transform and load; the fact table is one local relation ----
 
   private def hpvWorkbooks: Seq[graft.ingest.Workbook] = (2023 to 2025).map { y =>
     graft.ingest.Workbook.fromGrid(spark, Seq(
@@ -430,15 +430,17 @@ class PlanAssertionsSpec extends SparkTestBase {
     assert(writeJobs > 0, "the job counter saw no job for a real action")
   }
 
-  test("HPV fact plan is one local relation: no shuffle, no Expand, and its write runs one job") {
+  test("HPV fact plan is one local relation: no shuffle, no Expand, and its load runs no job") {
     import org.apache.spark.sql.execution.ExpandExec
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     val fact = graft.pipeline.HpvPipeline.transform(hpvWorkbooks, java.time.LocalDate.of(2026, 1, 15))
     val dir = java.nio.file.Files.createTempDirectory("graft_hpv_fact").resolve("t").toString
-    val (report, jobs) = jobsDuring(graft.load.Load.replaceTable(spark, fact, dir).get)
+    val (report, jobs, queries) =
+      graft.JobCounter.withQueries(spark)(graft.load.Load.replaceTable(spark, fact, dir).get)
     assert(report.rows == fact.count(), s"load reported ${report.rows} rows")
-    assert(jobs == 1, s"the fact write ran $jobs jobs; one local relation needs one")
+    assert(jobs == 0 && queries == 0,
+      s"the fact load ran $jobs jobs and $queries queries; its rows are already on the driver")
     fact.collect()
     val executed = fact.queryExecution.executedPlan
     // node types, not plan text: BroadcastExchange and ReusedExchange

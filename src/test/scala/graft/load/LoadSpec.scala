@@ -1,8 +1,11 @@
 package graft.load
 
 import graft.SparkTestBase
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DateType, LongType, StringType, StructField, StructType}
 
+import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Success}
 
 /** K1-K5: staged atomic replace — success reports rows; failure leaves
@@ -65,6 +68,62 @@ class LoadSpec extends SparkTestBase {
     val empty = spark.range(0, 100, 1, 2).where(col("id") < 0).toDF("v")
     assert(Load.replaceTable(spark, empty, dir) == Success(LoadReport(0, dir)))
     assert(spark.read.parquet(dir).count() == 0)
+  }
+
+  private def localFrame(rows: Seq[Row]) = spark.createDataFrame(rows.asJava, StructType(Seq(
+    StructField("s", StringType), StructField("n", LongType), StructField("d", DateType))))
+
+  private def partFiles(dir: String): Seq[String] =
+    new java.io.File(dir).list().toSeq.filter(_.startsWith("part-"))
+
+  test("a local relation loads on the driver: no job, no query, one part file and _SUCCESS") {
+    val dir = tempDest("graft_load_local")
+    val df = localFrame(Seq(Row("a", 1L, java.sql.Date.valueOf("2026-01-15")),
+      Row(null, null, null), Row("ç", -7L, java.sql.Date.valueOf("1582-10-04"))))
+    val (r, jobs, queries) = graft.JobCounter.withQueries(spark)(Load.replaceTable(spark, df, dir))
+    assert(jobs == 0 && queries == 0, s"the local load ran $jobs jobs and $queries queries")
+    val back = spark.read.parquet(dir)
+    assert(r == Success(LoadReport(back.count(), dir)) && r.get.rows == 3, s"got $r")
+    assert(back.schema == df.schema, s"${back.schema} != ${df.schema}")
+    assert(rowsOf(back) == rowsOf(df))
+    assert(exists(s"$dir/_SUCCESS"))
+    assert(partFiles(dir).size == 1 && partFiles(dir).head.matches(
+      "part-00000-[0-9a-f-]{36}\\.snappy\\.parquet"), partFiles(dir).mkString(", "))
+  }
+
+  test("an empty local relation loads as a readable table of 0 rows that keeps its schema") {
+    val dir = tempDest("graft_load_local_empty")
+    val df = localFrame(Seq.empty)
+    assert(Load.replaceTable(spark, df, dir) == Success(LoadReport(0, dir)))
+    val back = spark.read.parquet(dir)
+    assert(back.count() == 0 && back.schema == df.schema, back.schema.toString)
+  }
+
+  test("a local relation's driver write matches the write job's files; a projection takes the job") {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val df = localFrame(Seq(Row("x", 3L, java.sql.Date.valueOf("2024-08-31")), Row("y", null, null)))
+    val driverDir = tempDest("graft_load_lane_driver")
+    val jobDir = tempDest("graft_load_lane_job")
+    assert(Load.replaceTable(spark, df, driverDir).isSuccess)
+    // a projection over the relation is not a bare relation: it takes
+    // the job, whose local scan may split the rows over several files
+    val (r, jobs) = jobsDuring(Load.replaceTable(spark, df.select(df.columns.map(col).toSeq: _*), jobDir))
+    assert(jobs == 1 && r.map(_.rows) == Success(2L), s"$r after $jobs jobs")
+    def footer(dir: String) = {
+      val f = new org.apache.hadoop.fs.Path(dir, partFiles(dir).head)
+      val reader = ParquetFileReader.open(
+        HadoopInputFile.fromPath(f, spark.sparkContext.hadoopConfiguration))
+      try {
+        val meta = reader.getFooter.getFileMetaData
+        (meta.getSchema, meta.getKeyValueMetaData)
+      } finally reader.close()
+    }
+    assert(footer(driverDir) == footer(jobDir))
+    assert(rowsOf(spark.read.parquet(driverDir)) == rowsOf(spark.read.parquet(jobDir)))
+    // `toDF` renames through a projection: one job too
+    val (renamed, renameJobs) = jobsDuring(Load.replaceTable(spark, Seq(1, 2).toDF("v"), jobDir))
+    assert(renamed == Success(LoadReport(2, jobDir)) && renameJobs == 1, s"$renamed after $renameJobs jobs")
   }
 
   test("a retried write task is counted once (child JVM at local[2,3])") {

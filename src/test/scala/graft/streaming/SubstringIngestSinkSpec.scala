@@ -136,21 +136,17 @@ class SubstringIngestSinkSpec extends SparkTestBase {
     assert(!e.getMessage.contains(SubstringIngest.IdsBloomFpp.toString), e.getMessage)
   }
 
-  private def readBloom(partDir: String): BloomFilter = {
-    val in = new java.io.FileInputStream(s"$partDir/${SubstringIngest.IdsBloomFile}")
-    try BloomFilter.readFrom(in) finally in.close()
-  }
+  private def localFs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
 
-  /** Overwrite a part's `_ids_bloom` with `bloom`, dropping its `.crc`
-    * sidecar (the bloom was written through Hadoop's checksummed
-    * LocalFileSystem and is rewritten here raw).
-    */
-  private def overwriteBloom(partDir: String, bloom: BloomFilter): Unit = {
-    val f = new java.io.File(partDir, SubstringIngest.IdsBloomFile)
-    new java.io.File(partDir, s".${f.getName}.crc").delete()
-    val out = new java.io.FileOutputStream(f)
-    try bloom.writeTo(out) finally out.close()
-  }
+  private def bloomPath(partDir: String) =
+    new org.apache.hadoop.fs.Path(partDir, SubstringIngest.IdsBloomFile)
+
+  private def readBloom(partDir: String): BloomFilter =
+    SubstringIngest.readBloom(localFs, bloomPath(partDir))
+
+  /** Overwrite a part's `_ids_bloom` with `bloom`, as the store writes it. */
+  private def overwriteBloom(partDir: String, bloom: BloomFilter): Unit =
+    SubstringIngest.writeBloom(localFs, bloomPath(partDir), bloom)
 
   /** A filter of the store's fixed size holding ~10M ids: its measured
     * fpp is near 1, far past the design fpp.
@@ -176,6 +172,23 @@ class SubstringIngestSinkSpec extends SparkTestBase {
     assert(e.getMessage.contains(seg1), e.getMessage)
     // refused before anything of the batch was published
     assert(SubstringIngest.readState(spark, indexDir)._2 == 1L)
+  }
+
+  test("a live part whose bloom does not inflate is refused, naming the part") {
+    val (_, indexDir, reportDir, _) = dirs()
+    SubstringIngest.applyBatch(b1.toDF("doc_id", "text"), 0L, indexDir, reportDir, k)
+    val seg0 = s"$indexDir/seg_0"
+    // the filter's raw serialization, as an undeflated bloom file holds it
+    val raw = readBloom(seg0)
+    val f = new java.io.File(seg0, SubstringIngest.IdsBloomFile)
+    new java.io.File(seg0, s".${f.getName}.crc").delete()
+    val out = new java.io.FileOutputStream(f)
+    try raw.writeTo(out) finally out.close()
+    val e = intercept[IllegalStateException] {
+      SubstringIngest.applyBatch(b2.toDF("doc_id", "text"), 1L, indexDir, reportDir, k)
+    }
+    assert(e.getMessage.contains(seg0) && e.getMessage.contains("does not inflate"), e.getMessage)
+    assert(SubstringIngest.readState(spark, indexDir)._2 == 0L)
   }
 
   test("a live part without its bloom is refused, naming the part") {
