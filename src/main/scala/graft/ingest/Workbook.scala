@@ -2,8 +2,6 @@ package graft.ingest
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
-
 /** A reference-shaped workbook sheet, as shaped cells: the raw A1
   * metadata cell, the header taken from a mid-sheet header row, and the
   * data rows under it, every cell a string or null (SURVEY.md §2.1
@@ -11,12 +9,11 @@ import org.apache.spark.sql.SparkSession
   *
   * One read captures both A1 and the table — fixing the reference's
   * double scan of every file (`src/main.py:27,30`; divergence D5). The
-  * cells stay on the driver: the pipeline reshapes every workbook into
-  * fact rows itself, so no per-file DataFrame is built.
+  * cells stay on the driver and no Spark session is involved: the
+  * pipeline reshapes every workbook into fact rows itself.
   */
 final case class Workbook(
-    source: String, a1: String, header: Seq[String], rows: Seq[Seq[String]])(
-    val spark: SparkSession)
+    source: String, a1: String, header: Seq[String], rows: Seq[Seq[String]])
 
 object Workbook {
 
@@ -27,15 +24,14 @@ object Workbook {
     * inputs; bulk data enters the engine through `spark.read`
     * (parquet/csv) instead.
     */
-  def fromGrid(spark: SparkSession, grid: Seq[Seq[String]], headerRow: Int = 2): Workbook =
-    fromSource(spark, grid, headerRow, "grid")
+  def fromGrid(grid: Seq[Seq[String]], headerRow: Int = 2): Workbook =
+    fromSource(grid, headerRow, "grid")
 
   /** [[fromGrid]] with the grid's origin (a file path) named in its
     * errors. */
-  private[ingest] def fromSource(
-      spark: SparkSession, grid: Seq[Seq[String]], headerRow: Int, source: String): Workbook = {
+  private[ingest] def fromSource(grid: Seq[Seq[String]], headerRow: Int, source: String): Workbook = {
     val (a1, header, rows) = shape(grid, headerRow, source)
-    Workbook(source, a1, header, rows)(spark)
+    Workbook(source, a1, header, rows)
   }
 
   /** The sheet shape every reader shares: (A1, trimmed header row, data
@@ -68,8 +64,8 @@ object Workbook {
     * (D5): the file is read once on the driver; A1 and the data grid
     * both come from that read.
     */
-  def readCsvGrid(spark: SparkSession, path: String, headerRow: Int = 2): Workbook = {
+  def readCsvGrid(path: String, headerRow: Int = 2): Workbook = {
     val lines = java.nio.file.Files.readAllLines(java.nio.file.Paths.get(path)).asScala.toSeq
-    fromSource(spark, lines.map(_.split(",", -1).toSeq), headerRow, path)
+    fromSource(lines.map(_.split(",", -1).toSeq), headerRow, path)
   }
 }

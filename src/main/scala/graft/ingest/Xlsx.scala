@@ -25,11 +25,17 @@ object Xlsx {
 
   /** Read one sheet into a Workbook (grid semantics identical to
     * `Workbook.fromGrid`: row 0 = sheet row 1, cell A1 = metadata).
+    * Needs no Spark session.
     */
-  def readWorkbook(
-      spark: SparkSession, path: String, sheetName: String,
-      headerRow: Int = 2): Workbook =
-    Workbook.fromSource(spark, readGrid(path, sheetName), headerRow, path)
+  def readWorkbook(path: String, sheetName: String, headerRow: Int = 2): Workbook =
+    Workbook.fromSource(readGrid(path, sheetName), headerRow, path)
+
+  /** [[readWorkbook]] for callers that still pass a session, which is
+    * ignored. Goes away once the benchmark's HPV mode calls the
+    * session-free form (ROADMAP direction 1, step 2).
+    */
+  def readWorkbook(spark: SparkSession, path: String, sheetName: String): Workbook =
+    readWorkbook(path, sheetName)
 
   /** Workbook file-size bound of [[readGrid]], checked before the file
     * is opened. The file is never held whole: parts stream out of it

@@ -1,5 +1,6 @@
 package graft.load
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
@@ -8,6 +9,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetUtils}
 import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import scala.concurrent.{Await, Promise}
@@ -24,8 +26,7 @@ import scala.util.{Failure, Success, Try}
   * write job runs, so a mid-job failure loses the previous contents.
   * [[replaceTable]] stages into a sibling directory and swaps via
   * rename ([[stagedSwap]]): any failure before the swap leaves the
-  * destination untouched. [[replaceJdbcTable]] gives the same contract
-  * over a live JDBC connection, as one database transaction.
+  * destination untouched.
   */
 final case class LoadReport(rows: Long, destination: String)
 
@@ -40,16 +41,29 @@ final class LockHeldException(message: String, cause: Throwable)
 
 object Load {
 
-  /** K2/K3: staged atomic-ish replace of a parquet destination path
-    * ([[stagedSwap]]). Returns K4's row-count report on success; K5's
-    * structured failure otherwise (destination preserved).
-    *
-    * A frame whose analyzed plan is a bare local relation (the HPV fact
-    * table, built by `createDataFrame`) already holds its rows on the
-    * driver: [[writeLocal]] writes them there, with no query and no
-    * job, and counts the rows it wrote. Any other plan runs one write
-    * job, counted by an observed metric of the job itself
-    * ([[writeCounted]]), not a second read of the staged files.
+  /** K2/K3 for rows already on the driver (the HPV fact table):
+    * staged atomic-ish replace of a parquet destination path
+    * ([[stagedSwap]]) that needs no Spark session. [[writeLocal]] writes
+    * the relation's rows with no query and no job. Returns K4's
+    * row-count report on success; K5's structured failure otherwise
+    * (destination preserved).
+    */
+  def replaceTable(rows: LocalRelation, destination: String): Try[LoadReport] = {
+    val result = Try(LoadReport(stagedSwap(localHadoopConf, destination)(writeLocal(rows, _)), destination))
+    report(result, destination)
+  }
+
+  /** [[replaceTable]] of a local relation for callers that still pass a
+    * session, which is ignored. Goes away once the benchmark's HPV mode
+    * calls the session-free form (ROADMAP direction 1, step 2).
+    */
+  def replaceTable(spark: SparkSession, rows: LocalRelation, destination: String): Try[LoadReport] =
+    replaceTable(rows, destination)
+
+  /** K2/K3 for a frame: the same staged replace, with `df` written in
+    * one write job, whose rows are counted by an observed metric of the
+    * job itself ([[writeCounted]]), not a second read of the staged
+    * files.
     *
     * `decorateStaging`: sidecar metadata (underscore-prefixed files,
     * which Spark readers ignore) written INTO the staging dir so it
@@ -61,12 +75,8 @@ object Load {
       spark: SparkSession, df: DataFrame, destination: String,
       decorateStaging: Path => Unit = _ => ()): Try[LoadReport] = {
     val result = Try {
-      val rows = stagedSwap(spark, destination) { staging =>
-        val rows = df.queryExecution.analyzed match {
-          case local: LocalRelation if !local.isStreaming =>
-            writeLocal(spark, local, staging)
-          case _ => writeCounted(spark, df, staging.toString)
-        }
+      val rows = stagedSwap(spark.sparkContext.hadoopConfiguration, destination) { staging =>
+        val rows = writeCounted(spark, df, staging.toString)
         decorateStaging(staging)
         rows
       }
@@ -75,21 +85,28 @@ object Load {
     report(result, destination)
   }
 
+  /** The SQL conf of [[writeLocal]]: Spark's defaults. No key that
+    * `Sessions.configure` sets reaches the parquet writer. */
+  private lazy val localSqlConf = new SQLConf
+
+  /** The Hadoop conf of the session-free lane, built once per JVM: a
+    * new `Configuration` parses Hadoop's default resources again. */
+  private lazy val localHadoopConf = new Configuration()
+
   /** Writes `local`'s rows as one parquet file into the directory `dir`,
     * then `_SUCCESS`, on the driver, and returns the rows written. The
     * writer is the one a write job's task opens
     * (`ParquetUtils.prepareWrite`, then the factory's `newInstance`), so
-    * the codec, Spark's schema metadata and the datetime rebase follow
-    * the session's conf as they would in a job; only the job, its
-    * planning and its commit protocol are skipped. A failure leaves the
-    * directory without `_SUCCESS`, and the caller publishes nothing.
+    * the codec, Spark's schema metadata and the datetime rebase are a
+    * session write job's; only the session, the job, its planning and
+    * its commit protocol are skipped. A failure leaves the directory
+    * without `_SUCCESS`, and the caller publishes nothing.
     */
-  private def writeLocal(spark: SparkSession, local: LocalRelation, dir: Path): Long = {
-    val state = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
-    val job = Job.getInstance(state.newHadoopConf())
+  private def writeLocal(local: LocalRelation, dir: Path): Long = {
+    val job = Job.getInstance(localHadoopConf)
     val schema = local.schema
     val factory = ParquetUtils.prepareWrite(
-      state.conf, job, schema, new ParquetOptions(Map.empty[String, String], state.conf))
+      localSqlConf, job, schema, new ParquetOptions(Map.empty[String, String], localSqlConf))
     val context = new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID())
     val file = new Path(dir, s"part-00000-${java.util.UUID.randomUUID()}${factory.getFileExtension(context)}")
     val writer = factory.newInstance(file.toString, schema, context)
@@ -98,10 +115,9 @@ object Load {
     local.data.size.toLong
   }
 
-  /** Writes `df`, any plan but a bare local relation, as parquet to
-    * `path` in one write job, and returns the rows written, counted by a
-    * uniquely named `observe` metric of the job (a retried task counts
-    * once). A listener registered for the write alone reads the metric
+  /** Writes `df` as parquet to `path` in one write job, and returns the
+    * rows written, counted by a uniquely named `observe` metric of the
+    * job (a retried task counts once). A listener registered for the write alone reads the metric
     * when the write succeeds. Spark's `Observation` is not used: once
     * registered, its session-wide listener re-plans every FAILED query
     * on the listener bus, where a failure in planning throws again and
@@ -138,14 +154,14 @@ object Load {
     * beside an existing destination is crash debris from after a
     * successful publish — safe to clear. Shared by [[replaceTable]] and
     * `operators.IndexStore`, whose unit of atomicity is a whole index
-    * directory.
+    * directory. `hadoopConf` resolves the destination's filesystem.
     */
-  private[graft] def stagedSwap[T](spark: SparkSession, destination: String)(
+  private[graft] def stagedSwap[T](hadoopConf: Configuration, destination: String)(
       stage: Path => T): T = {
     val dest = new Path(destination)
     val staging = new Path(destination + "__staging")
     val backup = new Path(destination + "__old")
-    val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = dest.getFileSystem(hadoopConf)
     if (fs.exists(backup) && !fs.exists(dest))
       throw new IllegalStateException(
         s"destination $destination is missing but backup $backup exists - a prior " +
@@ -172,109 +188,6 @@ object Load {
     }
     if (hadPrev) fs.delete(backup, true)
     out
-  }
-
-  /** K2/K3 over a LIVE JDBC CONNECTION — the closest shape to the
-    * reference's actual sink (`database_util.py:39-57`: one transaction
-    * wrapping TRUNCATE + bulk load, ROLLBACK on failure). Sequence:
-    *
-    *  1. bulk-write `df` to a STAGING table (`<table>__staging`,
-    *     overwritten) — the distributed leg: each partition loads over
-    *     its own connection, and any failure here leaves the
-    *     destination untouched;
-    *  2. in ONE driver-side transaction: empty the destination
-    *     (`DELETE FROM` — transactional in every dialect, where
-    *     TRUNCATE often is not) and `INSERT … SELECT` the staged rows
-    *     across inside the database (no data moves through the
-    *     driver); commit; ROLLBACK on any failure — the destination
-    *     keeps its previous contents, exactly the reference's K5;
-    *  3. best-effort drop of the staging table.
-    *
-    * A destination that doesn't exist yet is created empty from the
-    * staging table's shape before the transaction. Returns K4's
-    * row-count report (the INSERT's update count). Verified end-to-end
-    * against embedded Derby in LoadSpec (commit, failure-rollback,
-    * report); the sequence is dialect-portable — Snowflake/Postgres/
-    * MySQL all run the same statements.
-    */
-  def replaceJdbcTable(
-      spark: SparkSession, df: DataFrame, url: String, table: String,
-      properties: java.util.Properties = new java.util.Properties): Try[LoadReport] = {
-    val staging = table + "__staging"
-    val result = Try {
-      df.write.mode(SaveMode.Overwrite).jdbc(url, qq(staging), properties)
-      val conn = java.sql.DriverManager.getConnection(url, properties)
-      try {
-        val st = conn.createStatement()
-        // Existence probe by zero-row SELECT on the exact quoted name —
-        // NOT metadata.getTables, whose name argument is a LIKE pattern
-        // ('daily_facts' matches 'daily9facts' and would skip the
-        // CREATE) and whose escape string some drivers (Derby) return
-        // empty, making the pattern impossible to neutralize.
-        val destExists =
-          try {
-            val rs = st.executeQuery(s"SELECT 1 FROM ${qq(table)} WHERE 1=0")
-            rs.close(); true
-          } catch { case _: java.sql.SQLException => false }
-        try {
-          if (!destExists) {
-            // CTAS dialect gap: MySQL and Snowflake reject the
-            // SQL-standard `WITH NO DATA`, Derby REQUIRES it, Postgres
-            // takes both. Try the widely-accepted zero-row filter form
-            // first and fall back to the standard form — between them
-            // every dialect the writer itself reaches is covered.
-            try st.executeUpdate(
-              s"CREATE TABLE ${qq(table)} AS SELECT * FROM ${qq(staging)} WHERE 1=0")
-            catch {
-              case first: java.sql.SQLException =>
-                // a failed statement ABORTS any open transaction on
-                // Postgres-like engines — clear it or the fallback
-                // fails spuriously on autoCommit=false connections
-                if (!conn.getAutoCommit) Try(conn.rollback())
-                try st.executeUpdate(
-                  s"CREATE TABLE ${qq(table)} AS SELECT * FROM ${qq(staging)} WITH NO DATA")
-                catch {
-                  case second: java.sql.SQLException =>
-                    // both forms failed: the FIRST failure is usually
-                    // the real cause (permissions, dead connection) —
-                    // surface it instead of masking it with the
-                    // second form's dialect error
-                    first.addSuppressed(second)
-                    throw first
-                }
-            }
-          }
-          conn.setAutoCommit(false)
-          val rows =
-            try {
-              st.executeUpdate(s"DELETE FROM ${qq(table)}")
-              val n = st.executeUpdate(
-                s"INSERT INTO ${qq(table)} SELECT * FROM ${qq(staging)}")
-              conn.commit()
-              n.toLong
-            } catch {
-              case e: Throwable =>
-                Try(conn.rollback())
-                throw new java.io.IOException(
-                  s"JDBC load into $table failed; transaction rolled back, " +
-                    "previous contents preserved", e)
-            } finally conn.setAutoCommit(true)
-          Try(st.executeUpdate(s"DROP TABLE ${qq(staging)}")) // best-effort cleanup
-          LoadReport(rows, s"$url/$table")
-        } finally st.close()
-      } finally conn.close()
-    }
-    report(result, s"$url/$table")
-  }
-
-  /** Double-quote a JDBC identifier (the SQL-standard quoting Spark's
-    * JDBC writer applies), so handwritten statements hit the same table
-    * the writer created. Embedded quotes are rejected, not escaped.
-    */
-  private def qq(name: String): String = {
-    require(!name.contains("\""), s"table name must not contain double quotes: $name")
-    require(name.nonEmpty, "table name must not be empty")
-    "\"" + name + "\""
   }
 
   /** Cooperative single-writer lock for a destination. Every sink in

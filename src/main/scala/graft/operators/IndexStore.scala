@@ -40,7 +40,7 @@ object IndexStore {
     * never serve.
     */
   def saveKnnGraph(spark: SparkSession, graph: DataFrame, dir: String): Unit =
-    Load.stagedSwap(spark, dir) { staging =>
+    Load.stagedSwap(spark.sparkContext.hadoopConfiguration, dir) { staging =>
       graph.select("query_id", "neighbor_id", "sim").write.parquet(s"$staging/edges")
     }
 

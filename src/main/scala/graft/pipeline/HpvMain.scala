@@ -2,7 +2,6 @@ package graft.pipeline
 
 import java.time.LocalDate
 
-import graft.core.Sessions
 import graft.ingest.{Workbook, Xlsx}
 import graft.load.Load
 
@@ -19,6 +18,11 @@ import graft.load.Load
   * (path overridable via HPV_ENV_FILE) > default. CSV-staged workbooks
   * (*.csv) are accepted alongside *.xlsx.
   *
+  * Like the reference, the run is one eager driver process: it builds
+  * no Spark session. The workbooks are read on the driver, `transform`
+  * returns the fact table as a local relation, and the load writes its
+  * rows as parquet on the driver.
+  *
   * Usage: `sbt "runMain graft.pipeline.HpvMain [dataDir dest]"`.
   */
 object HpvMain {
@@ -30,17 +34,12 @@ object HpvMain {
       .getOrElse(graft.core.DotEnv.get("HPV_DEST", envFile, "./output/hpv_uptake"))
     val sheet = graft.core.DotEnv.get("HPV_SHEET", envFile, "Local_authority")
 
-    val spark = Sessions.local()
-    try {
-      val xlsx = Xlsx.glob(dataDir).map(p => Xlsx.readWorkbook(spark, p, sheet))
-      val csvs = Xlsx.glob(dataDir, ext = ".csv")
-        .map(p => Workbook.readCsvGrid(spark, p))
-      val workbooks = xlsx ++ csvs
-      require(workbooks.nonEmpty, s"no *.xlsx or *.csv workbooks under $dataDir")
+    val workbooks = Xlsx.glob(dataDir).map(p => Xlsx.readWorkbook(p, sheet)) ++
+      Xlsx.glob(dataDir, ext = ".csv").map(p => Workbook.readCsvGrid(p))
+    require(workbooks.nonEmpty, s"no *.xlsx or *.csv workbooks under $dataDir")
 
-      val fact = HpvPipeline.transform(workbooks, LocalDate.now())
-      // Load prints the reference's "Uploaded X rows to <dest>" signal (K4).
-      Load.replaceTable(spark, fact, dest).get
-    } finally spark.stop()
+    val fact = HpvPipeline.transform(workbooks, LocalDate.now())
+    // Load prints the reference's "Uploaded X rows to <dest>" signal (K4).
+    Load.replaceTable(fact, dest).get
   }
 }

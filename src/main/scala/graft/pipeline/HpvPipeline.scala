@@ -2,9 +2,9 @@ package graft.pipeline
 
 import java.time.LocalDate
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.types._
 
 import graft.ingest.Workbook
@@ -28,9 +28,9 @@ import graft.ops.{Clean, Derive, Rollup}
   * are null (a sentinel in a key column) DO form null-key groups (SQL
   * GROUP BY), where pandas groupby silently drops them.
   *
-  * Cost per cycle: the cycle runs no Spark query and no job. The one
-  * Spark call of `transform` is the final `createDataFrame`, whose
-  * analysis builds the fact table as one local relation, and
+  * Cost per cycle: the cycle needs no Spark session and runs no query
+  * and no job. `transform` returns the fact table as one Catalyst
+  * `LocalRelation`, built without an analyzer, and
   * `Load.replaceTable` writes that relation's rows on the driver.
   *  - [[stack]] reshapes every workbook on the driver into rows in the
   *    column order of [[OutputSchema]], deriving the header keys and
@@ -167,13 +167,14 @@ object HpvPipeline {
     * → sentinel replace (P4, N2: every string cell equal to one of
     * [[Clean.DefaultSentinels]], untrimmed, becomes null) → numeric cast
     * → Both/All rollups (A3, N5, [[Rollup.labeledCubeRows]]), as one
-    * local relation in [[OutputSchema]].
+    * `LocalRelation` in [[OutputSchema]]. A caller that wants a
+    * DataFrame wraps the plan in its own session.
     *
     * The cast is [[Derive.measure]], Spark's ANSI string-to-long parse
     * after a space trim, so a measure that is not a number fails with
     * `CAST_INVALID_INPUT`, naming it.
     */
-  def combine(spark: SparkSession, rows: Seq[Row], compat: Compat = Compat.Off): DataFrame = {
+  def combine(rows: Seq[Row], compat: Compat = Compat.Off): LocalRelation = {
     val measures = Measures.map(_.toUpperCase)
     val at = measures.map(OutputSchema.fieldIndex)
     val scrubbed = rows.collect {
@@ -185,7 +186,7 @@ object HpvPipeline {
     val rolled = Rollup.labeledCubeRows(typed, OutputSchema.fieldNames.toSeq, measures,
       roll1 = ("GENDER_NAME", "Both"), roll2 = ("YEAR_GROUP_NUMBER", "All"),
       pandasExact = compat == Compat.PandasExact)
-    spark.createDataFrame(rolled.asJava, OutputSchema)
+    LocalRelation.fromExternalRows(DataTypeUtils.toAttributes(OutputSchema), rolled)
   }
 
   /** D7: academic years that appear in MORE THAN ONE workbook. The
@@ -200,16 +201,17 @@ object HpvPipeline {
       .toSeq.sortBy(_._1)
 
   /** Full pipeline: workbooks → fact table, in the destination schema
-    * the reference delegates to its DDL ([[OutputSchema]]).
+    * the reference delegates to its DDL ([[OutputSchema]]), as the
+    * local relation of [[combine]].
     */
   def transform(workbooks: Seq[Workbook], extractDate: LocalDate = LocalDate.now(),
-      compat: Compat = Compat.Off): DataFrame = {
+      compat: Compat = Compat.Off): LocalRelation = {
     duplicateAcademicYears(workbooks).foreach { case (yr, n) =>
       System.err.println(
         s"[hpv] WARNING (D7): academic year ${yr.getOrElse("<unparsed>")} appears in $n " +
           "workbooks - reference semantics double-count it in the rollups")
     }
     val rows = stack(workbooks, extractDate, compat)
-    combine(workbooks.head.spark, rows, compat)
+    combine(rows, compat)
   }
 }

@@ -409,7 +409,7 @@ class PlanAssertionsSpec extends SparkTestBase {
   // ---- HPV cycle budget: zero jobs in transform and load; the fact table is one local relation ----
 
   private def hpvWorkbooks: Seq[graft.ingest.Workbook] = (2023 to 2025).map { y =>
-    graft.ingest.Workbook.fromGrid(spark, Seq(
+    graft.ingest.Workbook.fromGrid(Seq(
       Seq(s"HPV coverage, September ${y - 1} to August $y"),
       Seq(""),
       Seq("Local authority", "Year 8 females: Number", "Year 8 females: Number vaccinated",
@@ -426,7 +426,7 @@ class PlanAssertionsSpec extends SparkTestBase {
     assert(jobs == 0, s"transform launched $jobs job(s); its driver reads must fold into local relations")
     // a local relation collects without a job; a write always runs one
     val dir = java.nio.file.Files.createTempDirectory("graft_hpv_budget").resolve("t").toString
-    val (_, writeJobs) = jobsDuring(fact.write.parquet(dir))
+    val (_, writeJobs) = jobsDuring(frame(fact).write.parquet(dir))
     assert(writeJobs > 0, "the job counter saw no job for a real action")
   }
 
@@ -434,13 +434,14 @@ class PlanAssertionsSpec extends SparkTestBase {
     import org.apache.spark.sql.execution.ExpandExec
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    val fact = graft.pipeline.HpvPipeline.transform(hpvWorkbooks, java.time.LocalDate.of(2026, 1, 15))
+    val rel = graft.pipeline.HpvPipeline.transform(hpvWorkbooks, java.time.LocalDate.of(2026, 1, 15))
     val dir = java.nio.file.Files.createTempDirectory("graft_hpv_fact").resolve("t").toString
     val (report, jobs, queries) =
-      graft.JobCounter.withQueries(spark)(graft.load.Load.replaceTable(spark, fact, dir).get)
-    assert(report.rows == fact.count(), s"load reported ${report.rows} rows")
+      graft.JobCounter.withQueries(spark)(graft.load.Load.replaceTable(rel, dir).get)
+    assert(report.rows == rel.data.size, s"load reported ${report.rows} rows")
     assert(jobs == 0 && queries == 0,
       s"the fact load ran $jobs jobs and $queries queries; its rows are already on the driver")
+    val fact = frame(rel)
     fact.collect()
     val executed = fact.queryExecution.executedPlan
     // node types, not plan text: BroadcastExchange and ReusedExchange
@@ -457,7 +458,7 @@ class PlanAssertionsSpec extends SparkTestBase {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     val helper = new AdaptiveSparkPlanHelper {}
     for (wbs <- Seq(hpvWorkbooks.take(1), hpvWorkbooks, hpvWorkbooks ++ hpvWorkbooks)) {
-      val fact = graft.pipeline.HpvPipeline.transform(wbs, java.time.LocalDate.of(2026, 1, 15))
+      val fact = frame(graft.pipeline.HpvPipeline.transform(wbs, java.time.LocalDate.of(2026, 1, 15)))
       fact.collect()
       val executed = fact.queryExecution.executedPlan
       // query stages are walked into, so the leaves are the real scans

@@ -26,6 +26,10 @@ trait SparkTestBase extends AnyFunSuite {
   /** Jobs launched by `body`, fenced: see [[JobCounter.during]]. */
   def jobsDuring[T](body: => T): (T, Int) = JobCounter.during(spark)(body)
 
+  /** A session-free plan (the HPV fact table) as a DataFrame of [[spark]]. */
+  def frame(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.graft.PlanFrame(spark, plan)
+
   /** Order-insensitive comparison (SURVEY N8): rows as multisets. */
   def rowsOf(df: org.apache.spark.sql.DataFrame): Map[Seq[Any], Int] =
     df.collect().toSeq.map(_.toSeq).groupBy(identity).view.mapValues(_.size).toMap

@@ -32,9 +32,12 @@ object Probe {
   /** One cold and one warm HPV cycle in this fresh JVM, split into the
     * nightly run's phases: ingest (glob and read), `stack`, `combine`
     * and the load. Prints one line per phase with its wall time, jobs
-    * and query executions, then the cycle's total. The counter fences
-    * only after each cycle, so no job runs before the cold cycle and its
-    * phases pay the JVM's start-up costs as a nightly run does.
+    * and query executions, then the cycle's total. The phases call the
+    * session-free forms `HpvMain` calls; the session built first serves
+    * only [[graft.JobCounter]], and its set-up is printed on its own
+    * line. The counter fences only after each cycle, so no job runs
+    * before the cold cycle and its phases pay the JVM's start-up costs
+    * as a nightly run does.
     */
   private def hpv(workbookDir: String): Unit = {
     val t0 = System.nanoTime()
@@ -45,13 +48,13 @@ object Probe {
     for (cycle <- Seq("cold", "warm")) {
       var workbooks = Seq.empty[Workbook]
       var rows = Seq.empty[org.apache.spark.sql.Row]
-      var fact: org.apache.spark.sql.DataFrame = null
+      var fact: org.apache.spark.sql.catalyst.plans.logical.LocalRelation = null
       val phases = Seq[(String, () => Unit)](
         "ingest" -> (() => workbooks =
-          Xlsx.glob(workbookDir).map(p => Xlsx.readWorkbook(spark, p, "Local_authority"))),
+          Xlsx.glob(workbookDir).map(p => Xlsx.readWorkbook(p, "Local_authority"))),
         "stack" -> (() => rows = HpvPipeline.stack(workbooks, extract)),
-        "combine" -> (() => fact = HpvPipeline.combine(spark, rows)),
-        "load" -> (() => Load.replaceTable(spark, fact, dest).get))
+        "combine" -> (() => fact = HpvPipeline.combine(rows)),
+        "load" -> (() => Load.replaceTable(fact, dest).get))
       val secs = new Array[Double](phases.size)
       val counts = graft.JobCounter.tally(spark, openingFence = false)(phases.indices.map { i => () =>
         val t = System.nanoTime()

@@ -134,9 +134,9 @@ class XlsxSpec extends SparkTestBase {
   }
 
   test("xlsx → full HPV pipeline end-to-end") {
-    val wb = Xlsx.readWorkbook(spark, fixture, "Local_authority")
+    val wb = Xlsx.readWorkbook(fixture, "Local_authority")
     assert(wb.a1 == "Coverage September 2023 to August 2024")
-    val out = HpvPipeline.transform(Seq(wb), java.time.LocalDate.of(2026, 1, 15))
+    val out = frame(HpvPipeline.transform(Seq(wb), java.time.LocalDate.of(2026, 1, 15)))
     // camden female survives; barnet female: total null (missing) → dropped
     val rows = out.collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
     assert(rows == Set(
@@ -297,7 +297,7 @@ class XlsxSpec extends SparkTestBase {
     zos.closeEntry(); zos.close()
     try {
       assert(java.nio.file.Files.size(f) > 64L * 1024 * 1024)
-      val got = Xlsx.readWorkbook(spark, f.toString, "Local_authority").rows
+      val got = Xlsx.readWorkbook(f.toString, "Local_authority").rows
       assert(got.length == 2 && got.map(_.head).toSet == Set("camden", "barnet"))
     } finally java.nio.file.Files.delete(f)
   }

@@ -11,15 +11,15 @@ class OpsSpec extends SparkTestBase {
   test("N1 ordering: dropna before sentinel replace keeps '*' rows") {
     val df = Seq(("a", "*", "1"), ("b", null, "2"), ("c", "3", "4"))
       .toDF("k", "total", "vacc")
-    val dropped = Clean.dropNullRows(df, Seq("total", "vacc"))
+    val dropped = CleanFrames.dropNullRows(df, Seq("total", "vacc"))
     assert(dropped.count() == 2) // born-null 'b' gone, '*' row survives
-    val scrubbed = Clean.sentinelsToNull(dropped)
+    val scrubbed = CleanFrames.sentinelsToNull(dropped)
     assert(scrubbed.where($"k" === "a").select("total").head().isNullAt(0))
   }
 
   test("N2 replace is full-frame: sentinels nulled in key columns too") {
     val df = Seq(("*", "1"), ("[E]", "2"), ("[DS]", "3"), ("ok", "4")).toDF("k", "v")
-    val s = Clean.sentinelsToNull(df)
+    val s = CleanFrames.sentinelsToNull(df)
     assert(s.where($"k".isNull).count() == 3)
   }
 

@@ -10,7 +10,7 @@ import org.apache.spark.sql.types._
 
 import graft.SparkTestBase
 import graft.ingest.Workbook
-import graft.ops.{Clean, Rollup}
+import graft.ops.{CleanFrames, Rollup}
 
 /** End-to-end golden test (SURVEY §5.2 tier 2): two synthesized
   * workbooks exercising every branch — sentinel in a measure, born-null
@@ -25,7 +25,7 @@ class HpvPipelineSpec extends SparkTestBase {
   private val T24 = "September 2023 to August 2024"
   private val T25 = "September 2024 to August 2025"
 
-  private def fileA = Workbook.fromGrid(spark, Seq(
+  private def fileA = Workbook.fromGrid(Seq(
     Seq(s"HPV vaccination coverage for $T24"),
     Seq(""),
     Seq("Local authority", "Year 8 females: Number", "Year 8 females: Number vaccinated",
@@ -35,7 +35,7 @@ class HpvPipelineSpec extends SparkTestBase {
     Seq("ISLINGTON", "*", "60", "50.0", "50", "40", "3"),
     Seq("enfield", "", "10", "10.0", "30", "20", "2")))
 
-  private def fileB = Workbook.fromGrid(spark, Seq(
+  private def fileB = Workbook.fromGrid(Seq(
     Seq(s"Coverage $T25"),
     Seq(""),
     Seq("Local authority", "Year 9 females: Number", "Year 9 females: Number vaccinated"),
@@ -71,7 +71,7 @@ class HpvPipelineSpec extends SparkTestBase {
   }
 
   test("golden: two workbooks → hand-computed fact table") {
-    val out = HpvPipeline.transform(Seq(fileA, fileB), D)
+    val out = frame(HpvPipeline.transform(Seq(fileA, fileB), D))
     assert(out.columns.toSeq == HpvPipeline.OutputSchema.fieldNames.toSeq)
     val got = out.collect().map { r =>
       (r.getString(0), r.getString(1), r.getString(2),
@@ -90,7 +90,7 @@ class HpvPipelineSpec extends SparkTestBase {
         graft.JobCounter.withQueries(spark)(HpvPipeline.transform(Seq(fileA, fileB), D, compat))
       assert(queries == 0 && jobs == 0,
         s"compat=$compat: transform ran $queries query execution(s) and $jobs job(s)")
-      assert(out.count() == expected.size)
+      assert(out.data.size == expected.size)
     }
   }
 
@@ -111,8 +111,8 @@ class HpvPipelineSpec extends SparkTestBase {
     * (`Rollup.byUnion`).
     */
   private def faithfulCombine(stacked: DataFrame, compat: HpvPipeline.Compat): DataFrame = {
-    val scrubbed = Clean.sentinelsToNull(
-      Clean.dropNullRows(stacked, HpvPipeline.Measures))
+    val scrubbed = CleanFrames.sentinelsToNull(
+      CleanFrames.dropNullRows(stacked, HpvPipeline.Measures))
     val typed = HpvPipeline.Measures.foldLeft(scrubbed)((d, m) =>
       d.withColumn(m, trim(col(m)).cast(LongType)))
     val grain = rawSchema.fieldNames.toSeq.filterNot(HpvPipeline.Measures.contains)
@@ -128,7 +128,7 @@ class HpvPipelineSpec extends SparkTestBase {
     for (wbs <- inputs; compat <- Seq(HpvPipeline.Compat.Off, HpvPipeline.Compat.PandasExact)) {
       val stacked = HpvPipeline.stack(wbs, D, compat)
       withClue(s"compat=$compat files=${wbs.size}: ") {
-        assertSameRows(HpvPipeline.combine(spark, stacked, compat),
+        assertSameRows(frame(HpvPipeline.combine(stacked, compat)),
           faithfulCombine(spark.createDataFrame(stacked.asJava, rawSchema), compat))
       }
     }
@@ -143,7 +143,7 @@ class HpvPipelineSpec extends SparkTestBase {
     }.groupBy(identity).view.mapValues(_.size).toMap
 
   private def grid(a1: String, header: Seq[String], rows: Seq[String]*): Workbook =
-    Workbook.fromGrid(spark, Seq(Seq(a1), Seq(""), "Local authority" +: header) ++ rows)
+    Workbook.fromGrid(Seq(Seq(a1), Seq(""), "Local authority" +: header) ++ rows)
 
   private val y8F = Seq("Year 8 females: Number", "Year 8 females: Number vaccinated")
 
@@ -178,7 +178,7 @@ class HpvPipelineSpec extends SparkTestBase {
 
   test("golden D7: a repeated academic year keeps both base rows; the rollups double-count") {
     val wb = grid(s"x $T24", y8F, Seq("camden", "10", "5"))
-    val out = HpvPipeline.transform(Seq(wb, wb), D)
+    val out = frame(HpvPipeline.transform(Seq(wb, wb), D))
     assert(cells(out) == Map(
       ("Camden", "8", "Female", 10L, 5L) -> 2,
       ("Camden", "8", "Both", 20L, 10L) -> 1,
@@ -195,7 +195,7 @@ class HpvPipelineSpec extends SparkTestBase {
     Seq("camden", "40", "4"), Seq("islington", "*", "7"))
 
   test("golden: `*` and a blank borough give two null-borough base rows, rolled together") {
-    val out = HpvPipeline.transform(Seq(nullBoroughs), D)
+    val out = frame(HpvPipeline.transform(Seq(nullBoroughs), D))
     assert(cells(out) == Map(
       (null, "8", "Female", 10L, 5L) -> 1, (null, "8", "Female", 30L, 1L) -> 1,
       ("[e]", "8", "Female", 20L, 9L) -> 1, ("Camden", "8", "Female", 40L, 4L) -> 1,
@@ -209,7 +209,7 @@ class HpvPipelineSpec extends SparkTestBase {
   }
 
   test("golden: Compat.PandasExact — `[E]` scrubs too, null-key groups drop, all-null sums are 0") {
-    val out = HpvPipeline.transform(Seq(nullBoroughs), D, HpvPipeline.Compat.PandasExact)
+    val out = frame(HpvPipeline.transform(Seq(nullBoroughs), D, HpvPipeline.Compat.PandasExact))
     assert(cells(out) == Map(
       (null, "8", "Female", 10L, 5L) -> 1, (null, "8", "Female", 20L, 9L) -> 1,
       (null, "8", "Female", 30L, 1L) -> 1, ("Camden", "8", "Female", 40L, 4L) -> 1,
@@ -220,12 +220,12 @@ class HpvPipelineSpec extends SparkTestBase {
   }
 
   test("D3: unmatched A1 still yields (null) metadata columns, no crash") {
-    val wb = Workbook.fromGrid(spark, Seq(
+    val wb = Workbook.fromGrid(Seq(
       Seq("garbage header"),
       Seq(""),
       Seq("Local authority", "Year 8 females: Number", "Year 8 females: Number vaccinated"),
       Seq("camden", "10", "5")))
-    val out = HpvPipeline.transform(Seq(wb), D)
+    val out = frame(HpvPipeline.transform(Seq(wb), D))
     val row = out.where(out("YEAR_GROUP_NUMBER") === "8").head()
     assert(row.isNullAt(out.columns.indexOf("ACADEMIC_YEAR_END_DATE")))
     assert(row.isNullAt(out.columns.indexOf("ACADEMIC_YEAR_TEXT")))
@@ -233,13 +233,13 @@ class HpvPipelineSpec extends SparkTestBase {
 
   test("D3: a blank A1 beside a filled B1 yields null metadata; D7 reports it unparsed") {
     // readers pad a blank A1 with null when row 1 has a later cell
-    def wb = Workbook.fromGrid(spark, Seq(
+    def wb = Workbook.fromGrid(Seq(
       Seq(null, "Provisional"),
       Seq(""),
       Seq("Local authority", "Year 8 females: Number", "Year 8 females: Number vaccinated"),
       Seq("camden", "10", "5")))
     assert(wb.a1 == "")
-    val out = HpvPipeline.transform(Seq(wb), D)
+    val out = frame(HpvPipeline.transform(Seq(wb), D))
     val row = out.where(out("YEAR_GROUP_NUMBER") === "8").head()
     assert(row.isNullAt(out.columns.indexOf("ACADEMIC_YEAR_END_DATE")))
     assert(row.isNullAt(out.columns.indexOf("ACADEMIC_YEAR_TEXT")))
@@ -247,13 +247,13 @@ class HpvPipelineSpec extends SparkTestBase {
   }
 
   test("D6: sentinel in a key column forms a null-key group (SQL semantics)") {
-    val wb = Workbook.fromGrid(spark, Seq(
+    val wb = Workbook.fromGrid(Seq(
       Seq(s"x $T24"),
       Seq(""),
       Seq("Local authority", "Year 8 females: Number", "Year 8 females: Number vaccinated"),
       Seq("*", "10", "5"),
       Seq("camden", "20", "9")))
-    val out = HpvPipeline.transform(Seq(wb), D)
+    val out = frame(HpvPipeline.transform(Seq(wb), D))
     // the '*' borough becomes a null borough key but still aggregates:
     // base + Both + All·Female + All·Both
     assert(out.where(out("BOROUGH_NAME").isNull).count() == 4)
@@ -265,7 +265,7 @@ class HpvPipelineSpec extends SparkTestBase {
 
   test("data past the last header column fails loud (no silent truncation)") {
     val e = intercept[IllegalArgumentException] {
-      Workbook.fromGrid(spark, Seq(
+      Workbook.fromGrid(Seq(
         Seq("a1"), Seq(""),
         Seq("Local authority", "Year 8 females: Number"),
         Seq("camden", "10", "stray-extra-value")))
@@ -281,10 +281,10 @@ class HpvPipelineSpec extends SparkTestBase {
          |Local authority,Year 8 females: Number,Year 8 females: Number vaccinated
          | camden ,100,80
          |""".stripMargin)
-    val wb = Workbook.readCsvGrid(spark, tmp.toString)
+    val wb = Workbook.readCsvGrid(tmp.toString)
     assert(wb.a1 == s"Coverage $T24")
     assert(wb.header == Seq("Local authority", "Year 8 females: Number", "Year 8 females: Number vaccinated"))
-    val out = HpvPipeline.transform(Seq(wb), D)
+    val out = frame(HpvPipeline.transform(Seq(wb), D))
     assert(out.count() == 4) // base + Both + All·Female + All·Both
     java.nio.file.Files.delete(tmp)
   }
@@ -302,26 +302,26 @@ class HpvPipelineSpec extends SparkTestBase {
     val noMeasure = csv("Local authority,Year 8 females: % vaccinated", "camden,50.0")
     try {
       val e = intercept[IllegalArgumentException](HpvPipeline.transform(
-        Seq(fileA, Workbook.readCsvGrid(spark, noId.toString)), D))
+        Seq(fileA, Workbook.readCsvGrid(noId.toString)), D))
       assert(e.getMessage.startsWith(s"$noId: "), e.getMessage)
       assert(e.getMessage.contains("'Local authority'"), e.getMessage)
       val g = intercept[IllegalStateException](HpvPipeline.transform(
-        Seq(Workbook.readCsvGrid(spark, dupLa.toString)), D))
+        Seq(Workbook.readCsvGrid(dupLa.toString)), D))
       assert(g.getMessage.startsWith(s"$dupLa: pivot grain"), g.getMessage)
       val m = intercept[IllegalArgumentException](HpvPipeline.transform(
-        Seq(Workbook.readCsvGrid(spark, noMeasure.toString)), D))
+        Seq(Workbook.readCsvGrid(noMeasure.toString)), D))
       assert(m.getMessage.contains(s"$noMeasure: workbook has no measure columns"), m.getMessage)
     } finally Seq(noId, dupLa, noMeasure).foreach(java.nio.file.Files.delete)
   }
 
   test("the Local authority column matches case-insensitively; two such columns are refused") {
-    def wb(ids: String*) = Workbook.fromGrid(spark, Seq(
+    def wb(ids: String*) = Workbook.fromGrid(Seq(
       Seq(s"Coverage $T25"), Seq(""),
       ids ++ Seq("Year 9 females: Number", "Year 9 females: Number vaccinated"),
       ids.map(_ => "camden") ++ Seq("110", "95")))
     def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
-    assert(rows(HpvPipeline.transform(Seq(wb("LOCAL AUTHORITY")), D)) ==
-      rows(HpvPipeline.transform(Seq(wb("Local authority")), D)))
+    assert(rows(frame(HpvPipeline.transform(Seq(wb("LOCAL AUTHORITY")), D))) ==
+      rows(frame(HpvPipeline.transform(Seq(wb("Local authority")), D))))
     val e = intercept[IllegalArgumentException](
       HpvPipeline.transform(Seq(wb("Local authority", "Local Authority")), D))
     assert(e.getMessage.contains("expected one 'Local authority' column in the header, found 2"),
@@ -337,7 +337,7 @@ class HpvPipelineSpec extends SparkTestBase {
 
   test("N1 before the cast: a non-number beside a born-null measure is dropped, never cast") {
     val wb = grid(s"x $T24", y8F, Seq("camden", "12 pupils", ""), Seq("barnet", "7", "6"))
-    val out = HpvPipeline.transform(Seq(wb), D)
+    val out = frame(HpvPipeline.transform(Seq(wb), D))
     assert(cells(out).keySet.map(_._1) == Set("Barnet"))
   }
 
