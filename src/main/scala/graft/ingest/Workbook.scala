@@ -62,10 +62,13 @@ object Workbook {
   /** Read a CSV-staged sheet (no quoting/escaping — staging format is
     * plain cells) with the same header-offset semantics. Single pass
     * (D5): the file is read once on the driver; A1 and the data grid
-    * both come from that read.
+    * both come from that read. The file must be UTF-8: a read failure,
+    * such as a cp1252 byte, is refused naming the path.
     */
   def readCsvGrid(path: String, headerRow: Int = 2): Workbook = {
-    val lines = java.nio.file.Files.readAllLines(java.nio.file.Paths.get(path)).asScala.toSeq
+    val lines = try java.nio.file.Files.readAllLines(java.nio.file.Paths.get(path)).asScala.toSeq
+      catch { case e: java.io.IOException =>
+        throw new IllegalArgumentException(s"$path is not a readable UTF-8 csv: $e", e) }
     fromSource(lines.map(_.split(",", -1).toSeq), headerRow, path)
   }
 }

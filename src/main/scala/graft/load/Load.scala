@@ -91,7 +91,7 @@ object Load {
 
   /** The Hadoop conf of the session-free lane, built once per JVM: a
     * new `Configuration` parses Hadoop's default resources again. */
-  private lazy val localHadoopConf = new Configuration()
+  private[graft] lazy val localHadoopConf = new Configuration()
 
   /** Writes `local`'s rows as one parquet file into the directory `dir`,
     * then `_SUCCESS`, on the driver, and returns the rows written. The
@@ -196,7 +196,7 @@ object Load {
     * backup/publish renames and break the rollback invariant. Callers
     * that can race wrap the sink call (note the inner `.get` — a
     * Try-returning body would otherwise nest as Success(Failure(...))):
-    * `Load.withLock(spark, dir, "nightly-load") { Load.replaceTable(...).get }`.
+    * `Load.withLock(hadoopConf, dir, "nightly-load") { Load.replaceTable(...).get }`.
     *
     * The lock is an atomically-created `<dir>__lock` file holding owner
     * and acquisition time for diagnostics. The create must be the race
@@ -208,12 +208,13 @@ object Load {
     * writer outliving a wall-clock lease would corrupt exactly what
     * the lock protects — a crashed holder's lock is removed by an
     * operator, informed by the identity inside). Always released on
-    * body exit, success or failure.
+    * body exit, success or failure. `hadoopConf` resolves the lock's
+    * filesystem.
     */
-  def withLock[T](spark: SparkSession, destination: String, owner: String)(
+  def withLock[T](hadoopConf: Configuration, destination: String, owner: String)(
       body: => T): Try[T] = Try {
     val lock = new Path(destination + "__lock")
-    val fs = lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = lock.getFileSystem(hadoopConf)
     val note = s"$owner @ ${java.time.Instant.now()}".getBytes("UTF-8")
     def refuse(e: java.io.IOException): Nothing = {
       val holder = Try {

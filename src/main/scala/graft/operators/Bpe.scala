@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.core.Gates
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Byte-pair-encoding tokenization — both halves: greedy merge-table
@@ -98,7 +99,7 @@ object Bpe extends org.apache.spark.internal.Logging {
     * exists for pathological vocabularies (random strings, binary
     * spill), not for big corpora.
     */
-  val MaxDriverVocab: Long = 2L * 1000 * 1000
+  private val MaxDriverVocab: Long = 2L * 1000 * 1000
 
   /** How many top pairs each distributed round collects as batch
     * candidates — also the max merges one round can apply. 16 keeps
@@ -116,7 +117,7 @@ object Bpe extends org.apache.spark.internal.Logging {
     * 10-word corpus should hear about it, not get 7 merges silently).
     *
     * Scale shape: ONE corpus pass builds the word-frequency table;
-    * when it fits under `maxDriverVocab` (the normal case — see the
+    * when it fits under [[MaxDriverVocab]] (the normal case — see the
     * gate's doc) training runs IN MEMORY on the driver with an
     * incremental pair-count lazy-heap: O(total pair updates · log)
     * instead of one Spark job per merge round, which at a production
@@ -142,26 +143,36 @@ object Bpe extends org.apache.spark.internal.Logging {
     * choice (the GPT-2/SentencePiece lineage does the same), default
     * OFF.
     */
-  def trainMerges(
-      docs: DataFrame, nMerges: Int, textCol: String = "text",
-      maxDriverVocab: Long = MaxDriverVocab,
-      freqFloor: Long = 1L,
-      batchTopK: Int = DefaultBatchTopK): Seq[(String, String)] = {
+  def trainMerges(docs: DataFrame, nMerges: Int, textCol: String = "text",
+      freqFloor: Long = 1L, batchTopK: Int = DefaultBatchTopK): Seq[(String, String)] =
+    trainMergesGated(docs, nMerges, textCol, freqFloor, batchTopK)(
+      Gates.collectAtMost(_, MaxDriverVocab))
+
+  /** [[trainMerges]] on the lane `gate` picks from the (word, freq) rows. */
+  private[graft] def trainMergesGated(docs: DataFrame, nMerges: Int, textCol: String = "text",
+      freqFloor: Long = 1L, batchTopK: Int = DefaultBatchTopK)(
+      gate: Dataset[(String, Long)] => Option[Array[(String, Long)]]): Seq[(String, String)] = {
     require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
     require(freqFloor >= 1L, s"freqFloor must be >= 1, got $freqFloor")
-    // ONE corpus pass: everything after this is vocabulary-sized
+    val wordFreq = wordFrequencies(docs, textCol, freqFloor)
+    try {
+      import wordFreq.sparkSession.implicits._
+      gate(wordFreq.as[(String, Long)]) match {
+        case Some(words) => trainInMemory(words, nMerges)
+        case None => trainDistributed(wordFreq, nMerges, batchTopK)
+      }
+    } finally Lineage.release(wordFreq)
+  }
+
+  /** The (w, freq) table of the corpus's words, those below `freqFloor`
+    * dropped, checkpointed for the caller to release: the ONE corpus pass
+    * of [[trainMerges]] and `Unigram.train`; all after it is vocabulary-sized. */
+  private[operators] def wordFrequencies(
+      docs: DataFrame, textCol: String, freqFloor: Long): DataFrame = {
     val allWords = docs
       .select(explode(graft.functions.TextFunctions.tokens(col(textCol))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
-    val wordFreq = (if (freqFloor > 1L) allWords.where(col("freq") >= freqFloor)
-                    else allWords)
-      .localCheckpoint()
-    try {
-      if (wordFreq.count() <= maxDriverVocab)
-        trainInMemory(
-          wordFreq.collect().map(r => (r.getString(0), r.getLong(1))), nMerges)
-      else trainDistributed(wordFreq, nMerges, batchTopK)
-    } finally Lineage.release(wordFreq)
+    (if (freqFloor > 1L) allWords.where(col("freq") >= freqFloor) else allWords).localCheckpoint()
   }
 
   /** Batched distributed trainer (round-12 verdict #2): instead of one

@@ -2,7 +2,8 @@ package graft.operators
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.DataFrame
+import graft.core.Gates
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Connected components over a pair list — the step that turns
@@ -52,51 +53,30 @@ object Components {
     *   sit in the block manager until GC (observed as the q95 bench
     *   leak). Callers needing the pair frame afterwards should pass a
     *   recomputable plan or re-checkpoint.
-    * @param driverMaxPairRows driver-lane gate: the largest number of RAW
-    *   pair rows (non-null, counted before direction normalization and
-    *   dedup) solved by driver-side union-find; one more row takes the
-    *   distributed label propagation, so duplicate-heavy inputs go
-    *   distributed even when their distinct edges would fit. Negative
-    *   disables the driver lane; must be below `Int.MaxValue`.
     * @return (node, component) — component = min node id reachable
     */
   def connectedComponents(
-      pairs: DataFrame, aCol: String, bCol: String,
-      maxIter: Int = 25,
-      driverMaxPairRows: Long = DriverMaxPairRows): DataFrame = {
+      pairs: DataFrame, aCol: String, bCol: String, maxIter: Int = 25): DataFrame =
+    connectedComponentsGated(pairs, aCol, bCol, maxIter)(Gates.collectAtMost(_, DriverMaxPairRows))
+
+  /** [[connectedComponents]] on the lane `gate` picks from the RAW
+    * non-null pair rows, before direction normalization and dedup. */
+  private[graft] def connectedComponentsGated(
+      pairs: DataFrame, aCol: String, bCol: String, maxIter: Int = 25)(
+      gate: Dataset[(Long, Long)] => Option[Array[(Long, Long)]]): DataFrame = {
+    import pairs.sparkSession.implicits._
     val e0 = pairs.select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
 
-    // Small-graph fast path: exact driver-side union-find, gated by a
-    // LIMIT-probed collect of the RAW pair list — ONE job, no shuffle
-    // (r15: the old gate normalized first — union(reverse) + distinct +
-    // persist + count + collect was three passes and a cache write over
-    // the pair plan, and for the quadratic exact-dedup producers every
-    // pass re-scans O(N²) work or its cache; union-find needs neither
-    // direction-doubling nor dedup, duplicates and self-loops are
-    // absorbed). The limit makes the gate safe: an oversized edge list
-    // collects only driverMaxPairRows+1 rows before falling to the
-    // distributed path. The gate therefore counts RAW pair rows, not
-    // normalized directed edges — same scale, same budget rationale
-    // (see DriverMaxPairRows).
-    if (driverMaxPairRows >= 0) {
-      val spark = pairs.sparkSession
-      import spark.implicits._
-      // guard the input, not the sum: driverMaxPairRows + 1 wraps at
-      // Long.MaxValue, and a wrapped cap would collect nothing and pass
-      // the gate with an empty graph
-      require(driverMaxPairRows < Int.MaxValue, s"driverMaxPairRows too large: $driverMaxPairRows")
-      val probeCap = driverMaxPairRows + 1
-      // typed collect: primitive-friendly tuple encoding, no Row boxing
-      val probe = e0.where(col("src").isNotNull && col("dst").isNotNull)
-        .limit(probeCap.toInt).as[(Long, Long)].collect()
-      if (probe.length <= driverMaxPairRows) {
+    // Small-graph fast path: exact union-find over the RAW pair list,
+    // probed with no shuffle (r15: normalizing first re-ran quadratic
+    // exact-dedup producers three times; union-find absorbs duplicates,
+    // reversals and self-loops). Over the gate the truncated probe is
+    // discarded and the distributed rounds below pay the normalization.
+    gate(e0.where(col("src").isNotNull && col("dst").isNotNull).as[(Long, Long)]) match {
+      case Some(edges) =>
         Lineage.release(pairs) // see @param pairs
-        val labeled = driverUnionFind(probe)
-        return spark.createDataset(labeled).toDF("node", "component")
-      }
-      // over the gate: fall through and pay the normalization the
-      // distributed rounds need (the probe is discarded — its truncated
-      // edge set is not a valid input to anything)
+        return pairs.sparkSession.createDataset(driverUnionFind(edges)).toDF("node", "component")
+      case None =>
     }
 
     // ONE explode of both orientations, not union-of-two-selects: the

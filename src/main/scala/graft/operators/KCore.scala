@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import graft.core.Gates
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** k-core decomposition (fixed k): the maximal subgraph in which every
@@ -56,18 +57,12 @@ object KCore {
   private val BroadcastMaxPeel = 4L * 1000 * 1000
 
   /** Small-graph gate for the exact driver-side cascade (the
-    * [[Components]] union-find precedent, same 4M budget): under it the
-    * whole peel runs as one collect + linear-time bucket cascade — a
-    * synchronous distributed loop pays ~4 job launches per round for a
-    * graph that fits in a few tens of MB. Above it the delta-peel loop
-    * below takes over. Counts RAW pair rows (r16, the Components-r15
-    * gate shape): the probe is a LIMIT-bounded typed collect of the
-    * raw stream — one job, no shuffle — and normalization (both
-    * directions, dedup) happens on the driver inside [[driverPeel]];
-    * the former gate normalized distributively first, paying the
-    * explode + repartition exchange + checkpoint write + count for
-    * exactly the graphs small enough not to need them. Same scale,
-    * same ~300-500 MB transient-heap budget rationale.
+    * [[Components]] union-find precedent): under it the whole peel runs
+    * as one collect + linear-time bucket cascade — a synchronous
+    * distributed loop pays ~4 job launches per round for a graph that
+    * fits in a few tens of MB. Counts RAW pair rows (r16): [[driverPeel]]
+    * normalizes on the driver, so graphs this small skip the explode,
+    * exchange, checkpoint and count. ~300-500 MB transient driver heap.
     */
   private val DriverMaxPairRows = 4L * 1000 * 1000
 
@@ -122,22 +117,17 @@ object KCore {
     * internally; self-loops dropped). Returns (vertex, core_degree):
     * the surviving vertices with their degree INSIDE the core
     * (≥ k by construction). Empty result when no k-core exists.
-    *
-    * @param driverMaxPairRows driver-lane gate: the largest number of RAW
-    *   pair rows (non-null, non-loop, counted before canonicalization
-    *   and dedup) solved on the driver; one more row takes the
-    *   distributed peel, so duplicate-heavy inputs go distributed even
-    *   when their distinct arcs would fit. Negative disables the driver
-    *   lane; must be below `Int.MaxValue`.
     */
-  def core(
-      pairs: DataFrame, aCol: String, bCol: String, k: Int,
-      maxIter: Int = 50, driverMaxPairRows: Long = DriverMaxPairRows): DataFrame = {
+  def core(pairs: DataFrame, aCol: String, bCol: String, k: Int, maxIter: Int = 50): DataFrame =
+    coreGated(pairs, aCol, bCol, k, maxIter)(Gates.collectAtMost(_, DriverMaxPairRows))
+
+  /** [[core]] on the lane `gate` picks from the RAW non-null, non-loop
+    * pair rows, before canonicalization and dedup. */
+  private[graft] def coreGated(
+      pairs: DataFrame, aCol: String, bCol: String, k: Int, maxIter: Int = 50)(
+      gate: Dataset[(Long, Long)] => Option[Array[(Long, Long)]]): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    // guard the input, not the sum: the probe cap driverMaxPairRows + 1 wraps
-    // at Long.MaxValue, and a wrapped cap collects nothing and passes the
-    // gate with an empty graph
-    require(driverMaxPairRows < Int.MaxValue, s"driverMaxPairRows too large: $driverMaxPairRows")
+    import pairs.sparkSession.implicits._
     // LAZY localCheckpoint: the gate probe below and (over the gate)
     // the prep both read THIS frame — one LogicalRDD, one shuffle
     // lineage — so the caller's producer plan evaluates its map stages
@@ -149,27 +139,16 @@ object KCore {
       .where(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
       .localCheckpoint(false)
 
-    // Small-graph fast path, gated by a LIMIT-probed collect of the RAW
-    // pair list (the Components-r15 gate): the cascade dedups and
-    // direction-doubles on the driver, so for graphs under the gate the
-    // distributed explode + repartition exchange + dedup + arc
-    // checkpoint + count were pure overhead (solo q144 at sf0.1:
-    // 4.7 → 3.5 s). Cost model: the probe action evaluates the producer
-    // only until driverMaxPairRows+1 rows arrive, but the lazy
-    // localCheckpoint then materializes every partition the probe did
-    // not reach in a follow-up job, so either lane pays one full pass
-    // over the producer. What the gate saves is the explode, exchange
-    // and dedup; the over-gate lane reads the checkpointed raw blocks
-    // and never re-runs the producer.
-    if (driverMaxPairRows >= 0) {
-      val spark = pairs.sparkSession
-      import spark.implicits._
-      val probeCap = driverMaxPairRows + 1
-      val probe = cleaned.limit(probeCap.toInt).as[(Long, Long)].collect()
-      if (probe.length <= driverMaxPairRows) {
+    // Small-graph fast path (solo q144 at sf0.1: 4.7 → 3.5 s). Cost
+    // model: the probe evaluates the producer only until the gate's
+    // cap + 1 rows arrive, and the lazy checkpoint materializes the
+    // rest in a follow-up job, so either lane pays one full pass over
+    // the producer; the over-gate lane reads the checkpointed blocks.
+    gate(cleaned.as[(Long, Long)]) match {
+      case Some(edges) =>
         release(cleaned)
-        return spark.createDataset(driverPeel(probe, k)).toDF("vertex", "core_degree")
-      }
+        return pairs.sparkSession.createDataset(driverPeel(edges, k)).toDF("vertex", "core_degree")
+      case None =>
     }
 
     // over the gate: pay the normalization the distributed rounds need.

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.core.Gates
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -126,18 +127,18 @@ object LangId {
 
   /** Feature-row gate for the in-memory trainer: 8M (doc, bucket)
     * rows ≈ a few hundred MB of driver heap with the per-doc index —
-    * the [[Bpe.MaxDriverVocab]] sizing discipline. Labeled LID
+    * the `Bpe.MaxDriverVocab` sizing discipline. Labeled LID
     * training data is curated and corpus-size-independent (the 100 TB
     * lever is scoring), so production training slices sit far under
     * this; the distributed loop exists for oversized label dumps, not
     * big corpora.
     */
-  val MaxDriverFeatureRows: Long = 8L * 1000 * 1000
+  private val MaxDriverFeatureRows: Long = 8L * 1000 * 1000
 
   /** Train softmax-regression weights on labeled documents. Fails
     * loudly on an empty corpus, a null label, or K < 2.
     *
-    * Under `maxDriverRows` (the normal case) the gradient loop runs
+    * Under [[MaxDriverFeatureRows]] (the normal case) the gradient loop runs
     * IN MEMORY on the driver — one collect of the feature table, then
     * `iters` rounds with NO job launches, bit-identical to the
     * distributed loop by construction: every row contribution is
@@ -148,12 +149,18 @@ object LangId {
     * the softmax / weight-update double arithmetic replays the same
     * operation order (LangIdSpec pins the lane equivalence).
     */
-  def train(
-      docs: DataFrame, labelCol: String, nBuckets: Int = DefaultBuckets,
-      gram: Int = DefaultGram, iters: Int = DefaultIters,
-      lr: Double = DefaultLearningRate,
-      idCol: String = "doc_id", textCol: String = "text",
-      maxDriverRows: Long = MaxDriverFeatureRows): Model = {
+  def train(docs: DataFrame, labelCol: String, nBuckets: Int = DefaultBuckets,
+      gram: Int = DefaultGram, iters: Int = DefaultIters, lr: Double = DefaultLearningRate,
+      idCol: String = "doc_id", textCol: String = "text"): Model =
+    trainGated(docs, labelCol, nBuckets, gram, iters, lr, idCol, textCol)(
+      Gates.collectAtMost(_, MaxDriverFeatureRows))
+
+  /** [[train]] on the lane `gate` picks from the (doc_id, b, x, y) feature rows. */
+  private[graft] def trainGated(docs: DataFrame, labelCol: String, nBuckets: Int = DefaultBuckets,
+      gram: Int = DefaultGram, iters: Int = DefaultIters, lr: Double = DefaultLearningRate,
+      idCol: String = "doc_id", textCol: String = "text")(
+      gate: Dataset[(Long, Long, Double, Int)] => Option[Array[(Long, Long, Double, Int)]])
+      : Model = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val labels = docs.select(col(labelCol).cast("string").as("y"))
     require(labels.where(col("y").isNull).limit(1).collect().isEmpty,
@@ -175,19 +182,13 @@ object LangId {
     try {
       val nDocs = labeled.count()
       require(nDocs > 0, "cannot train on an empty corpus")
-      // the gate count stays a separate (cheap — feat is checkpointed)
-      // job: it must run BEFORE any collect, or an oversized feature
-      // table would land on the driver just to learn it shouldn't have.
-      // The collect itself is TYPED — the encoder builds the tuple
-      // array in one pass, no transient Array[Row] copy (advice r14).
-      val weights =
-        if (feat.count() <= maxDriverRows) {
-          import feat.sparkSession.implicits._
-          trainRowsInMemory(
-            feat.select(col("doc_id"), col("b"), col("x"), col("y"))
-              .as[(Long, Long, Double, Int)].collect(),
-            nBuckets, k, iters, lr, nDocs)
-        } else trainDistributed(feat, nBuckets, k, iters, lr, nDocs)
+      // a TYPED collect: no transient Array[Row] copy (advice r14)
+      import feat.sparkSession.implicits._
+      val weights = gate(feat.select(col("doc_id"), col("b"), col("x"), col("y"))
+          .as[(Long, Long, Double, Int)]) match {
+        case Some(inMemory) => trainRowsInMemory(inMemory, nBuckets, k, iters, lr, nDocs)
+        case None => trainDistributed(feat, nBuckets, k, iters, lr, nDocs)
+      }
       Model(nBuckets, gram, classes, weights)
     } finally Lineage.release(feat)
   }

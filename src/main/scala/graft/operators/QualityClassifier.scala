@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.core.Gates
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -109,12 +110,12 @@ object QualityClassifier {
       .agg(sum(col("c")).cast("double").as("m"))
 
   /** Feature-row gate for the in-memory trainer — the
-    * [[LangId.MaxDriverFeatureRows]] / [[Bpe.MaxDriverVocab]] sizing
+    * `LangId.MaxDriverFeatureRows` / `Bpe.MaxDriverVocab` sizing
     * discipline: labeled quality data is curated and corpus-size-
     * independent, so production training slices collect; the
     * distributed loop remains for oversized label dumps.
     */
-  val MaxDriverFeatureRows: Long = 8L * 1000 * 1000
+  private val MaxDriverFeatureRows: Long = 8L * 1000 * 1000
 
   /** Train logistic-regression weights on labeled documents
     * (`labelCol` ∈ {0, 1}). Fixed `iters` full-batch rounds at
@@ -122,7 +123,7 @@ object QualityClassifier {
     * object doc). Fails loudly on an empty corpus or a label outside
     * {0, 1} (a silently coerced label poisons every weight).
     *
-    * Under `maxDriverRows` (the normal case) the gradient loop runs
+    * Under [[MaxDriverFeatureRows]] (the normal case) the gradient loop runs
     * IN MEMORY on the driver — one collect of the feature table, zero
     * per-iteration job launches — bit-identical to the distributed
     * loop: row contributions are rounded to decimal(38,18) exactly as
@@ -131,11 +132,18 @@ object QualityClassifier {
     * operation order (QualityClassifierSpec pins the lane
     * equivalence).
     */
-  def train(
-      docs: DataFrame, labelCol: String, nBuckets: Int = DefaultBuckets,
+  def train(docs: DataFrame, labelCol: String, nBuckets: Int = DefaultBuckets,
       iters: Int = DefaultIters, lr: Double = DefaultLearningRate,
-      idCol: String = "doc_id", textCol: String = "text",
-      maxDriverRows: Long = MaxDriverFeatureRows): Model = {
+      idCol: String = "doc_id", textCol: String = "text"): Model =
+    trainGated(docs, labelCol, nBuckets, iters, lr, idCol, textCol)(
+      Gates.collectAtMost(_, MaxDriverFeatureRows))
+
+  /** [[train]] on the lane `gate` picks from the (doc_id, b, x, y) feature rows. */
+  private[graft] def trainGated(docs: DataFrame, labelCol: String, nBuckets: Int = DefaultBuckets,
+      iters: Int = DefaultIters, lr: Double = DefaultLearningRate,
+      idCol: String = "doc_id", textCol: String = "text")(
+      gate: Dataset[(Long, Long, Double, Double)] => Option[Array[(Long, Long, Double, Double)]])
+      : Model = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val labels = docs.select(col(idCol).cast("long").as("doc_id"),
       col(labelCol).cast("double").as("y"))
@@ -156,18 +164,13 @@ object QualityClassifier {
     try {
       val nDocs = labels.count()
       require(nDocs > 0, "cannot train on an empty corpus")
-      // gate count first (cheap — feat is checkpointed; collecting to
-      // discover the table is oversized would defeat the gate), then a
-      // TYPED one-pass collect: the encoder builds the tuple array
-      // directly, no transient Array[Row] copy (advice r14).
-      val w =
-        if (feat.count() <= maxDriverRows) {
-          import feat.sparkSession.implicits._
-          trainRowsInMemory(
-            feat.select(col("doc_id"), col("b"), col("x"), col("y"))
-              .as[(Long, Long, Double, Double)].collect(),
-            nBuckets, iters, lr, nDocs)
-        } else trainDistributed(feat, nBuckets, iters, lr, nDocs)
+      // a TYPED collect: no transient Array[Row] copy (advice r14)
+      import feat.sparkSession.implicits._
+      val w = gate(feat.select(col("doc_id"), col("b"), col("x"), col("y"))
+          .as[(Long, Long, Double, Double)]) match {
+        case Some(inMemory) => trainRowsInMemory(inMemory, nBuckets, iters, lr, nDocs)
+        case None => trainDistributed(feat, nBuckets, iters, lr, nDocs)
+      }
       Model(nBuckets, w)
     } finally Lineage.release(feat)
   }

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.core.Gates
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Unigram-LM (SentencePiece-style) subword tokenizer — the OTHER
@@ -52,7 +53,7 @@ import org.apache.spark.sql.functions._
   * corpus size, so at 100 TB the driver lane still holds; `freqFloor`
   * is the same tail-drop lever). Seeding is one distributed
   * explode+groupBy over the vocabulary — substring mass in exact longs.
-  * Above `maxDriverVocab` the E-step runs distributed: words
+  * Above [[MaxDriverVocab]] the E-step runs distributed: words
   * mapPartitions against the BROADCAST piece table (a few hundred KB),
   * one decimal-sum aggregate per round — no shuffle grows with corpus
   * size, only with |vocab|. Apply segments only DISTINCT words
@@ -62,9 +63,9 @@ import org.apache.spark.sql.functions._
 object Unigram extends org.apache.spark.internal.Logging {
 
   /** Vocabulary-size gate for the in-memory EM lane — the
-    * [[Bpe.MaxDriverVocab]] budget and rationale, verbatim.
+    * `Bpe.MaxDriverVocab` budget and rationale, verbatim.
     */
-  val MaxDriverVocab: Long = 2L * 1000 * 1000
+  private val MaxDriverVocab: Long = 2L * 1000 * 1000
 
   val DefaultMaxPieceLen = 6
   val DefaultEmRounds = 4
@@ -263,31 +264,29 @@ object Unigram extends org.apache.spark.internal.Logging {
     * vocabulary target smaller than the corpus alphabet (single code
     * points are never pruned — below that there is no lossless model).
     */
-  def train(
-      docs: DataFrame, vocabSize: Int, textCol: String = "text",
-      maxPieceLen: Int = DefaultMaxPieceLen,
-      emRounds: Int = DefaultEmRounds,
-      pruneAfter: Int = DefaultPruneAfter,
-      seedMax: Int = 0,
-      freqFloor: Long = 1L,
-      maxDriverVocab: Long = MaxDriverVocab): Model = {
+  def train(docs: DataFrame, vocabSize: Int, textCol: String = "text",
+      maxPieceLen: Int = DefaultMaxPieceLen, emRounds: Int = DefaultEmRounds,
+      pruneAfter: Int = DefaultPruneAfter, seedMax: Int = 0, freqFloor: Long = 1L): Model =
+    trainGated(docs, vocabSize, textCol, maxPieceLen, emRounds, pruneAfter, seedMax, freqFloor)(
+      Gates.collectAtMost(_, MaxDriverVocab))
+
+  /** [[train]] with the E-step lane `gate` picks from the (word, freq) rows. */
+  private[graft] def trainGated(docs: DataFrame, vocabSize: Int, textCol: String = "text",
+      maxPieceLen: Int = DefaultMaxPieceLen, emRounds: Int = DefaultEmRounds,
+      pruneAfter: Int = DefaultPruneAfter, seedMax: Int = 0, freqFloor: Long = 1L)(
+      gate: Dataset[(String, Long)] => Option[Array[(String, Long)]]): Model = {
     require(vocabSize >= 1, s"vocabSize must be >= 1, got $vocabSize")
     require(emRounds >= 1 && pruneAfter >= 1 && pruneAfter <= emRounds,
       s"need 1 <= pruneAfter <= emRounds, got $pruneAfter/$emRounds")
     require(maxPieceLen >= 1, s"maxPieceLen must be >= 1, got $maxPieceLen")
     val seedCap = if (seedMax > 0) seedMax else math.max(vocabSize * 4, 1024)
 
-    // ONE corpus pass (the Bpe.trainMerges shape — everything after
-    // this is vocabulary-sized)
-    val allWords = docs
-      .select(explode(graft.functions.TextFunctions.tokens(col(textCol))).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("freq"))
-    val wordFreq = (if (freqFloor > 1L) allWords.where(col("freq") >= freqFloor)
-                    else allWords)
-      .localCheckpoint()
+    val wordFreq = Bpe.wordFrequencies(docs, textCol, freqFloor)
     try {
-      val nWords = wordFreq.count()
-      require(nWords > 0, "cannot train on an empty corpus")
+      import wordFreq.sparkSession.implicits._
+      // the probe doubles as the empty check: a vocabulary over the gate is non-empty
+      val driverWords = gate(wordFreq.as[(String, Long)])
+      require(driverWords.forall(_.nonEmpty), "cannot train on an empty corpus")
 
       // ---- seed: distributed substring mass in exact longs — one
       // explode+groupBy over the VOCABULARY (not the corpus). substr is
@@ -320,17 +319,12 @@ object Unigram extends org.apache.spark.internal.Logging {
       val counts0 = seed.map(x => java.math.BigDecimal.valueOf(x._2))
       var model = mStep(pieces0, counts0, maxPieceLen)
 
-      val driverLane = nWords <= maxDriverVocab
-      lazy val wordsInMemory: Array[(String, Long)] = {
-        import wordFreq.sparkSession.implicits._
-        wordFreq.as[(String, Long)].collect()
-      }
-
       var round = 1
       while (round <= emRounds) {
-        val counts =
-          if (driverLane) eStepInMemory(wordsInMemory, model)
-          else eStepDistributed(wordFreq, model)
+        val counts = driverWords match {
+          case Some(words) => eStepInMemory(words, model)
+          case None => eStepDistributed(wordFreq, model)
+        }
         var next = mStep(model.pieces, counts, maxPieceLen)
         if (round == pruneAfter && next.pieces.length > vocabSize) {
           // prune by EXACT expected-count decimals (count desc, piece

@@ -21,7 +21,8 @@ import graft.load.Load
   * Like the reference, the run is one eager driver process: it builds
   * no Spark session. The workbooks are read on the driver, `transform`
   * returns the fact table as a local relation, and the load writes its
-  * rows as parquet on the driver.
+  * rows as parquet on the driver, under the destination's lock: a run
+  * overlapping another writer fails naming the holder, table untouched.
   *
   * Usage: `sbt "runMain graft.pipeline.HpvMain [dataDir dest]"`.
   */
@@ -40,6 +41,6 @@ object HpvMain {
 
     val fact = HpvPipeline.transform(workbooks, LocalDate.now())
     // Load prints the reference's "Uploaded X rows to <dest>" signal (K4).
-    Load.replaceTable(fact, dest).get
+    Load.withLock(Load.localHadoopConf, dest, "HpvMain")(Load.replaceTable(fact, dest).get).get
   }
 }

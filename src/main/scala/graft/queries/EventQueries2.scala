@@ -114,7 +114,7 @@ object EventQueries2 {
             (pmod(col("event_id") * 7919, lit(nodes))).as("b"))
           .where(col("a") =!= col("b"))
         val labels = graft.operators.Components
-          .connectedComponents(edges, "a", "b", driverMaxPairRows = -1)
+          .connectedComponentsGated(edges, "a", "b")(_ => None)
         labels.groupBy(col("component")).agg(count(lit(1)).as("sz"))
           .agg(count(lit(1)).as("n_components"),
             max(col("sz")).as("max_component"),

@@ -357,7 +357,7 @@ object SubstringIngest extends Logging {
     val bloom = docIdBloom(docs)
     // same lock as the sink: a concurrent trigger must not append a
     // segment between the watermark read and the swap
-    Load.withLock(spark, indexDir, "substringIngest bootstrap") {
+    Load.withLock(spark.sparkContext.hadoopConfiguration, indexDir, "substringIngest bootstrap") {
       val pre = readStore(spark, indexDir)
       val through = math.max(appliedBatch, if (pre.exists) pre.applied else -1L)
       Load.replaceTable(spark, SubstringDedup.gramIndex(docs, k), s"$indexDir/base",
@@ -528,7 +528,8 @@ object SubstringIngest extends Logging {
       // the cache the remaining passes read
       if (batch.count() > 0) {
         val spark = batch.sparkSession
-        Load.withLock(spark, indexDir, s"substringIngestSink batch=$batchId") {
+        val conf = spark.sparkContext.hadoopConfiguration
+        Load.withLock(conf, indexDir, s"substringIngestSink batch=$batchId") {
           val st = readStore(spark, indexDir)
           if (batchId > st.applied) {
             // cleanup debris first: crashed staging dirs (always) and
@@ -628,7 +629,7 @@ object SubstringIngest extends Logging {
     * window). Takes the same index lock as the sink.
     */
   def compact(spark: SparkSession, indexDir: String): Unit = {
-    Load.withLock(spark, indexDir, "substringIngest compact") {
+    Load.withLock(spark.sparkContext.hadoopConfiguration, indexDir, "substringIngest compact") {
       compactLocked(spark, indexDir, deleteFolded = true)
     }.get
     ()

@@ -355,8 +355,7 @@ class PlanAssertionsSpec extends SparkTestBase {
       // dense-ish small graph, forced past the driver gate
       val edges = (1L to 300L).flatMap(i => Seq((i, i % 50 + 1), (i, i % 31 + 2)))
         .toDF("a", "b")
-      val out = graft.operators.KCore.core(edges, "a", "b", k = 3,
-        driverMaxPairRows = 0)
+      val out = graft.operators.KCore.coreGated(edges, "a", "b", k = 3)(_ => None)
       out.collect()
       graft.operators.Lineage.release(out)
       assert(awaitStorageEmpty().isEmpty, "kcore stranded storage")

@@ -18,9 +18,10 @@ class LoadSpec extends SparkTestBase {
 
   test("withLock: holds, blocks a second writer loudly, releases on exit and on failure") {
     val dir = java.nio.file.Files.createTempDirectory("graft_lock").toString + "/t"
-    val r = Load.withLock(spark, dir, "writer-1") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val r = Load.withLock(conf, dir, "writer-1") {
       // contender inside the critical section fails and names the holder
-      val c = Load.withLock(spark, dir, "writer-2")(fail("must not enter"))
+      val c = Load.withLock(conf, dir, "writer-2")(fail("must not enter"))
       assert(c.isFailure)
       // typed refusal: retry loops classify on the class, not the text
       assert(c.failed.get.isInstanceOf[LockHeldException], c.failed.get.toString)
@@ -30,11 +31,11 @@ class LoadSpec extends SparkTestBase {
     }
     assert(r.isSuccess && r.get.rows == 2)
     // released: a new writer acquires immediately
-    assert(Load.withLock(spark, dir, "writer-3")(42).get == 42)
+    assert(Load.withLock(conf, dir, "writer-3")(42).get == 42)
     // released even when the body throws
-    val boom = Load.withLock(spark, dir, "writer-4")(throw new RuntimeException("x"))
+    val boom = Load.withLock(conf, dir, "writer-4")(throw new RuntimeException("x"))
     assert(boom.isFailure)
-    assert(Load.withLock(spark, dir, "writer-5")(1).isSuccess)
+    assert(Load.withLock(conf, dir, "writer-5")(1).isSuccess)
   }
 
   test("replaceTable overwrites atomically and reports row count") {

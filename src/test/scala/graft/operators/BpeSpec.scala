@@ -72,7 +72,7 @@ class BpeSpec extends SparkTestBase {
     ).toDF("doc_id", "text")
     val n = 8
     val fast = Bpe.trainMerges(docs, n) // vocab << gate → driver path
-    val slow = Bpe.trainMerges(docs, n, maxDriverVocab = 0L) // forced distributed
+    val slow = Bpe.trainMergesGated(docs, n)(_ => None) // forced distributed
     assert(fast == slow, s"driver $fast != distributed $slow")
     assertSameRows(Bpe.subwordReport(docs, fast), Bpe.subwordReport(docs, slow))
   }
@@ -170,10 +170,10 @@ class BpeSpec extends SparkTestBase {
       .zipWithIndex.map { case (w, i) => (i.toLong, w) }.toDF("doc_id", "text")
     val n = 10
     val mem = Bpe.trainMerges(docs, n) // driver path
-    val dist = Bpe.trainMerges(docs, n, maxDriverVocab = 0L) // batched distributed
+    val dist = Bpe.trainMergesGated(docs, n)(_ => None) // batched distributed
     assert(mem == dist, s"in-memory $mem != batched distributed $dist")
     // and with batching disabled (round per merge), identical again
-    val single = Bpe.trainMerges(docs, n, maxDriverVocab = 0L, batchTopK = 1)
+    val single = Bpe.trainMergesGated(docs, n, batchTopK = 1)(_ => None)
     assert(single == dist, s"batchTopK=1 $single != batched $dist")
   }
 

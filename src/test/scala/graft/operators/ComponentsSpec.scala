@@ -28,11 +28,11 @@ class ComponentsSpec extends SparkTestBase {
   }
 
   test("distributed propagation path agrees with driver union-find") {
-    // random-ish graph incl. a long chain; driverMaxPairRows = -1 forces the
+    // random-ish graph incl. a long chain; a gate giving None forces the
     // distributed path, default takes the union-find fast path
     val edges = ((1L to 30L).map(i => (i, i + 1)) ++
       Seq((100L, 200L), (200L, 300L), (41L, 40L), (1L, 31L))).toDF("a", "b")
-    val dist = Components.connectedComponents(edges, "a", "b", driverMaxPairRows = -1)
+    val dist = Components.connectedComponentsGated(edges, "a", "b")(_ => None)
       .as[(Long, Long)].collect().toMap
     val drv = Components.connectedComponents(edges, "a", "b")
       .as[(Long, Long)].collect().toMap
@@ -83,7 +83,7 @@ class ComponentsSpec extends SparkTestBase {
     // plan, so the consumer's release frees everything.
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
     val edges = ((1L to 40L).map(i => (i, i + 1)) ++ Seq((100L, 101L))).toDF("a", "b")
-    val labels = Components.connectedComponents(edges, "a", "b", driverMaxPairRows = -1)
+    val labels = Components.connectedComponentsGated(edges, "a", "b")(_ => None)
     labels.write.format("noop").mode("overwrite").save() // consume
     Lineage.release(labels, blocking = true)
     assert(spark.sparkContext.getPersistentRDDs.isEmpty,
@@ -117,21 +117,5 @@ class ComponentsSpec extends SparkTestBase {
     val minId = Components.dropNearDuplicates(corpus, "id", pairs, "a", "b")
       .select($"id").as[Long].collect().toSet
     assert(minId == Set(1L, 4L, 8L))
-  }
-
-  test("gate bound: Int.MaxValue - 1 takes the driver lane; Long.MaxValue fails loud, not empty") {
-    val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("a", "b")
-    // the largest accepted bound: probe cap = Int.MaxValue, full answer
-    val top = Components.connectedComponents(edges, "a", "b", driverMaxPairRows = Int.MaxValue - 1L)
-      .as[(Long, Long)].collect().toMap
-    assert(top == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
-    // driverMaxPairRows + 1 would wrap to Long.MinValue and probe nothing
-    val e = intercept[IllegalArgumentException] {
-      Components.connectedComponents(edges, "a", "b", driverMaxPairRows = Long.MaxValue)
-    }
-    assert(e.getMessage.contains("driverMaxPairRows too large"))
-    intercept[IllegalArgumentException] {
-      Components.connectedComponents(edges, "a", "b", driverMaxPairRows = Int.MaxValue.toLong)
-    }
   }
 }

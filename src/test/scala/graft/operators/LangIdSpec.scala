@@ -149,8 +149,7 @@ class LangIdSpec extends SparkTestBase {
   test("driver-gated in-memory trainer ≡ distributed trainer, bit-identical weights") {
     val corpus = planted(60).localCheckpoint(true)
     val mem = LangId.train(corpus, "lang_true", iters = 4) // under the gate → driver
-    val dist = LangId.train(corpus, "lang_true", iters = 4,
-      maxDriverRows = 0L) // forced distributed
+    val dist = LangId.trainGated(corpus, "lang_true", iters = 4)(_ => None) // forced distributed
     assert(mem.labels == dist.labels)
     assert(mem.weights.flatten.toSeq == dist.weights.flatten.toSeq,
       "in-memory and distributed lanes must train bit-identical weights")

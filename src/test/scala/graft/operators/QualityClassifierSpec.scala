@@ -71,8 +71,7 @@ class QualityClassifierSpec extends SparkTestBase {
   test("driver-gated in-memory trainer ≡ distributed trainer, bit-identical weights") {
     val docs = planted(120)
     val mem = QualityClassifier.train(docs, "label", iters = 6) // under the gate → driver
-    val dist = QualityClassifier.train(docs, "label", iters = 6,
-      maxDriverRows = 0L) // forced distributed
+    val dist = QualityClassifier.trainGated(docs, "label", iters = 6)(_ => None) // forced distributed
     assert(mem.weights.toSeq == dist.weights.toSeq,
       "in-memory and distributed lanes must train bit-identical weights")
   }

@@ -49,7 +49,7 @@ class UnigramSpec extends SparkTestBase {
   test("driver-gated EM lane ≡ distributed lane, bit-identical model") {
     val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.001").limit(20)
     val mem = Unigram.train(docs, vocabSize = 64)
-    val dist = Unigram.train(docs, vocabSize = 64, maxDriverVocab = 0L)
+    val dist = Unigram.trainGated(docs, vocabSize = 64)(_ => None)
     assert(mem.pieces.toSeq == dist.pieces.toSeq, "lanes picked different pieces")
     assert(mem.logp.toSeq == dist.logp.toSeq, "lanes trained different probabilities")
   }

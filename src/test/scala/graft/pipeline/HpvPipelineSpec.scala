@@ -84,7 +84,7 @@ class HpvPipelineSpec extends SparkTestBase {
       s"only-got=${got -- expected}\nonly-expected=${expected -- got}")
   }
 
-  test("transform plans no query and runs no job: its one Spark call is the final createDataFrame") {
+  test("transform plans no query and runs no job: it returns one local relation") {
     for (compat <- Seq(HpvPipeline.Compat.Off, HpvPipeline.Compat.PandasExact)) {
       val (out, jobs, queries) =
         graft.JobCounter.withQueries(spark)(HpvPipeline.transform(Seq(fileA, fileB), D, compat))
@@ -286,6 +286,17 @@ class HpvPipelineSpec extends SparkTestBase {
     assert(wb.header == Seq("Local authority", "Year 8 females: Number", "Year 8 females: Number vaccinated"))
     val out = frame(HpvPipeline.transform(Seq(wb), D))
     assert(out.count() == 4) // base + Both + All·Female + All·Both
+    java.nio.file.Files.delete(tmp)
+  }
+
+  test("readCsvGrid refuses a csv that is not UTF-8, naming the file") {
+    // a cp1252 export: NBSP is the single byte 0xA0, malformed in UTF-8
+    val tmp = java.nio.file.Files.createTempFile("wb", ".csv")
+    java.nio.file.Files.write(tmp,
+      s"Coverage $T24,,\n,,\nLocal authority,Year 8 females: Number\n".getBytes("UTF-8") ++
+        Array(0xA0.toByte) ++ "Camden,10\n".getBytes("UTF-8"))
+    val e = intercept[IllegalArgumentException](Workbook.readCsvGrid(tmp.toString))
+    assert(e.getMessage.contains(tmp.toString) && e.getMessage.contains("UTF-8"), e.getMessage)
     java.nio.file.Files.delete(tmp)
   }
 
