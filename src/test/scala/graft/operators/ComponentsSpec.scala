@@ -118,4 +118,17 @@ class ComponentsSpec extends SparkTestBase {
       .select($"id").as[Long].collect().toSet
     assert(minId == Set(1L, 4L, 8L))
   }
+
+  test("gate bound: Int.MaxValue - 1 takes the driver lane; Long.MaxValue fails loud, not empty") {
+    val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("a", "b")
+    def gated(cap: Long) =
+      Components.connectedComponentsGated(edges, "a", "b")(graft.core.Gates.collectAtMost(_, cap))
+    // the largest accepted bound: probe limit = Int.MaxValue, full answer
+    val top = gated(Int.MaxValue - 1L).as[(Long, Long)].collect().toMap
+    assert(top == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
+    // cap + 1 would wrap and probe nothing; the operator refuses it
+    val e = intercept[IllegalArgumentException](gated(Long.MaxValue))
+    assert(e.getMessage.contains("driver-lane cap"))
+    intercept[IllegalArgumentException](gated(Int.MaxValue.toLong))
+  }
 }

@@ -74,4 +74,17 @@ class KCoreSpec extends SparkTestBase {
     assert(result(5L) == result(4L))
     assert(result(5L) == Map(1L -> 2L, 2L -> 2L, 3L -> 2L))
   }
+
+  test("gate bound: Int.MaxValue - 1 takes the driver lane; Long.MaxValue fails loud, not empty") {
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("a", "b")
+    def gated(cap: Long) =
+      KCore.coreGated(edges, "a", "b", k = 2)(graft.core.Gates.collectAtMost(_, cap))
+    // the largest accepted bound: probe limit = Int.MaxValue, full answer
+    val top = gated(Int.MaxValue - 1L).as[(Long, Long)].collect().toMap
+    assert(top == Map(1L -> 2L, 2L -> 2L, 3L -> 2L))
+    // cap + 1 would wrap and probe nothing; the operator refuses it
+    val e = intercept[IllegalArgumentException](gated(Long.MaxValue))
+    assert(e.getMessage.contains("driver-lane cap"))
+    intercept[IllegalArgumentException](gated(Int.MaxValue.toLong))
+  }
 }
