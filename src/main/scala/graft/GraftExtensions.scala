@@ -51,7 +51,7 @@ object GraftExtensions {
       }),
     ("graft_normalize",
       info("graft_normalize", "graft_normalize(v) - unit-normalize an array<double> in one fused pass"),
-      oneArg("graft_normalize")(NormalizeVector)),
+      oneArg("graft_normalize")(NormalizeVector(_))),
     ("graft_simhash64",
       info("graft_simhash64", "graft_simhash64(hashes) - 64-bit majority-vote simhash of array<bigint>"),
       oneArg("graft_simhash64")(SimHash64)),

@@ -2,9 +2,9 @@ package graft.core
 
 import org.apache.spark.sql.Dataset
 
-/** The driver-lane gate of Components, KCore, Bpe, Unigram, LangId and
-  * QualityClassifier: each runs its driver lane on `Some(rows)` and its
-  * distributed lane on `None`.
+/** The driver-lane gate of Components, KCore, Bpe, Unigram, LangId,
+  * QualityClassifier and Ivf: each runs its driver lane on `Some(rows)`
+  * and its distributed lane on `None`.
   */
 object Gates {
 

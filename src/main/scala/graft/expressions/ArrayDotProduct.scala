@@ -35,20 +35,8 @@ case class ArrayDotProduct(left: Expression, right: Expression)
   override def nullable: Boolean = true
   override def prettyName: String = "graft_dot"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    if (n != y.numElements()) return null
-    var acc = 0d
-    var i = 0
-    while (i < n) {
-      if (x.isNullAt(i) || y.isNullAt(i)) return null
-      acc += x.getDouble(i) * y.getDouble(i)
-      i += 1
-    }
-    acc
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    ArrayDotProduct.fold(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (x, y) => {
@@ -73,4 +61,23 @@ case class ArrayDotProduct(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): ArrayDotProduct =
     copy(left = newLeft, right = newRight)
+}
+
+object ArrayDotProduct {
+
+  /** The interpreted fold, shared with driver-side callers (the IVF
+    * build's driver lane): a boxed Double, or null when the lengths
+    * differ or a needed element is null. */
+  def fold(x: ArrayData, y: ArrayData): java.lang.Double = {
+    val n = x.numElements()
+    if (n != y.numElements()) return null
+    var acc = 0d
+    var i = 0
+    while (i < n) {
+      if (x.isNullAt(i) || y.isNullAt(i)) return null
+      acc += x.getDouble(i) * y.getDouble(i)
+      i += 1
+    }
+    acc
+  }
 }

@@ -30,24 +30,7 @@ case class NormalizeVector(child: Expression)
   override def nullable: Boolean = true
   override def prettyName: String = "graft_normalize"
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    var acc = 0d
-    var i = 0
-    while (i < n) {
-      if (arr.isNullAt(i)) return null
-      val x = arr.getDouble(i)
-      acc += x * x
-      i += 1
-    }
-    val norm = math.sqrt(acc)
-    if (norm == 0d) return null
-    val out = new Array[Any](n)
-    i = 0
-    while (i < n) { out(i) = arr.getDouble(i) / norm; i += 1 }
-    new GenericArrayData(out)
-  }
+  override def nullSafeEval(input: Any): Any = NormalizeVector.fold(input.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, c => {
@@ -79,4 +62,28 @@ case class NormalizeVector(child: Expression)
 
   override protected def withNewChildInternal(newChild: Expression): NormalizeVector =
     copy(child = newChild)
+}
+
+object NormalizeVector {
+
+  /** The interpreted fold, shared with driver-side callers (the IVF
+    * build's driver lane): null when an element is null or the norm is
+    * zero. */
+  def fold(arr: ArrayData): ArrayData = {
+    val n = arr.numElements()
+    var acc = 0d
+    var i = 0
+    while (i < n) {
+      if (arr.isNullAt(i)) return null
+      val x = arr.getDouble(i)
+      acc += x * x
+      i += 1
+    }
+    val norm = math.sqrt(acc)
+    if (norm == 0d) return null
+    val out = new Array[Any](n)
+    i = 0
+    while (i < n) { out(i) = arr.getDouble(i) / norm; i += 1 }
+    new GenericArrayData(out)
+  }
 }

@@ -53,26 +53,7 @@ case class VectorSumAgg(
 
   override def update(buffer: Array[Double], input: InternalRow): Array[Double] = {
     val v = child.eval(input)
-    if (v == null) return buffer
-    val arr = v.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    // A zero-length vector would be indistinguishable from the
-    // "no input seen" empty-buffer sentinel and silently bypass the
-    // dims check below — reject it instead.
-    require(n > 0, s"$prettyName: zero-length vector in input")
-    val acc =
-      if (buffer.isEmpty) new Array[Double](n)
-      else {
-        require(buffer.length == n,
-          s"$prettyName: mismatched vector dims ${buffer.length} vs $n")
-        buffer
-      }
-    var i = 0
-    while (i < n) {
-      if (!arr.isNullAt(i)) acc(i) += arr.getDouble(i)
-      i += 1
-    }
-    acc
+    if (v == null) buffer else VectorSumAgg.add(buffer, v.asInstanceOf[ArrayData])
   }
 
   override def merge(buffer: Array[Double], other: Array[Double]): Array[Double] = {
@@ -111,4 +92,31 @@ case class VectorSumAgg(
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildInternal(newChild: Expression): VectorSumAgg =
     copy(child = newChild)
+}
+
+object VectorSumAgg {
+
+  /** `buffer` plus `arr`, null elements skipped: the update step, shared
+    * with driver-side callers (the IVF build's driver lane). An empty
+    * `buffer` means no input seen yet. */
+  def add(buffer: Array[Double], arr: ArrayData): Array[Double] = {
+    val n = arr.numElements()
+    // A zero-length vector would be indistinguishable from the
+    // "no input seen" empty-buffer sentinel and silently bypass the
+    // dims check below — reject it instead.
+    require(n > 0, "graft_vec_sum: zero-length vector in input")
+    val acc =
+      if (buffer.isEmpty) new Array[Double](n)
+      else {
+        require(buffer.length == n,
+          s"graft_vec_sum: mismatched vector dims ${buffer.length} vs $n")
+        buffer
+      }
+    var i = 0
+    while (i < n) {
+      if (!arr.isNullAt(i)) acc(i) += arr.getDouble(i)
+      i += 1
+    }
+    acc
+  }
 }

@@ -1,10 +1,17 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil, TypeUtils}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.core.Gates
+import graft.expressions.{ArrayDotProduct, NormalizeVector, VectorSumAgg}
 import graft.functions.VectorFunctions._
 
 /** IVF-flat approximate nearest neighbor: partition the corpus into
@@ -16,12 +23,22 @@ import graft.functions.VectorFunctions._
   * bound the scanned fraction and both re-score exactly.
   *
   * Centroid seeding is deterministic (first nCentroids ids) followed by
-  * one Lloyd refinement — at production scale you'd run k-means on a
-  * sample and broadcast the codebook; the dataflow here is exactly
-  * that shape (centroids are always broadcast-sized, assignments are
-  * the corpus shuffled once by cell id).
+  * `lloydSteps` Lloyd refinements (default 2). A corpus of at most
+  * [[DriverMaxVectors]] vectors is clustered on the driver in one job;
+  * a larger one runs the distributed lane, whose dataflow is the
+  * production shape (centroids are always broadcast-sized, assignments
+  * are the corpus shuffled once by cell id).
   */
 object Ivf {
+
+  /** Vectors the driver lane clusters. One copy of them as doubles is
+    * 16,384 × dims × 8 bytes: 8 MiB at 64 dimensions, 192 MiB at 1,536.
+    * The lane holds about four such copies at its peak: the collected
+    * rows box each element (about 2.5 copies), the returned assignment
+    * relation refers to the same boxes, and the working copy is
+    * unboxed — some 32 MiB at 64 dimensions and 770 MiB at 1,536.
+    */
+  private val DriverMaxVectors = 16384L
 
   // Same (id, unit-vector) contract as the other similarity operators.
   private def prep(df: DataFrame, idCol: String, vecCol: String): DataFrame =
@@ -44,45 +61,60 @@ object Ivf {
     else ranked.drop("rnk", "score")
   }
 
-  /** Build the index: (centroids, assignments). Both persisted — the
-    * index is built once and probed many times.
+  // cid is just a deterministic cell id: the seed's own vid serves (no
+  // global row_number window — an unpartitioned WindowExec funnels its
+  // input, however small, through one partition). vid order == rank
+  // order, so tie-breaks in `nearest` are unchanged.
+  private def seeds(vecs: DataFrame, nCentroids: Int): DataFrame =
+    vecs.orderBy(col("vid")).limit(nCentroids).select(col("vid").as("cid"), col("v").as("cvec"))
+
+  // One Lloyd round: assign → cell sum → renormalize. normalized()
+  // cancels uniform scaling, so the cell MEAN and the cell SUM have the
+  // same direction — no count / division needed. Cells that lose all
+  // members drop out (their cid disappears from the aggregation).
+  private def lloydRound(vecs: DataFrame, centroids: DataFrame): DataFrame =
+    nearest(vecs, centroids, keep = 1)
+      .groupBy(col("cid"))
+      .agg(vecSum(col("v")).as("vs"))
+      .select(col("cid"), normalized(col("vs")).as("cvec"))
+
+  /** Build the index: (centroids, assignments), the (cid, cvec) and
+    * (vid, v, cid) tables. On the driver lane both are local relations;
+    * on the distributed lane both are persisted — the index is built
+    * once and probed many times. [[release]] frees either.
     *
     * @param lloydSteps k-means refinement rounds over the seeds. Each
-    *   step is one vecSum aggregation of the corpus (a single shuffle on
-    *   cid — the VectorSumAgg accumulator keeps dims OUT of the row
-    *   count), so extra steps are cheap; cell balance improves markedly
-    *   over raw seeds by step 2 on clustered data.
+    *   distributed step is one vecSum aggregation of the corpus (a
+    *   single shuffle on cid — the VectorSumAgg accumulator keeps dims
+    *   OUT of the row count), so extra steps are cheap; cell balance
+    *   improves markedly over raw seeds by step 2 on clustered data.
     */
   def build(
       df: DataFrame, idCol: String, vecCol: String, nCentroids: Int,
-      lloydSteps: Int = 2, farthestSeeding: Boolean = false): (DataFrame, DataFrame) = {
+      lloydSteps: Int = 2): (DataFrame, DataFrame) =
+    buildGated(df, idCol, vecCol, nCentroids, lloydSteps)(Gates.collectAtMost(_, DriverMaxVectors))
+
+  /** [[build]] on the lane `gate` picks from the (vid, v) rows: the
+    * distributed lane's projection without its repartition, so the
+    * probe is one job and `v` is bit-identical on both lanes. */
+  private[graft] def buildGated(
+      df: DataFrame, idCol: String, vecCol: String, nCentroids: Int, lloydSteps: Int = 2)(
+      gate: DataFrame => Option[Array[Row]]): (DataFrame, DataFrame) = {
     require(lloydSteps >= 0, s"lloydSteps must be >= 0, got $lloydSteps")
+    val vecs = Similarity.unitVectors(df, idCol, vecCol)
+    gate(vecs) match {
+      case Some(rows) => return driverBuild(vecs, rows, nCentroids, lloydSteps)
+      case None =>
+    }
     val p = prep(df, idCol, vecCol).persist(StorageLevel.MEMORY_AND_DISK)
-    // cid is just a deterministic cell id: the seed's own vid serves (no
-    // global row_number window — an unpartitioned WindowExec funnels its
-    // input, however small, through one partition). vid order == rank
-    // order, so tie-breaks in `nearest` are unchanged.
-    val seeds =
-      if (farthestSeeding) farthestPointSeeds(p, nCentroids)
-      else p.orderBy(col("vid")).limit(nCentroids)
-        .select(col("vid").as("cid"), col("v").as("cvec"))
-    // Lloyd iterations: assign → cell mean → renormalize. Each
-    // iteration's centroids are persisted and materialized so the next
+    // Each round's centroids are persisted and materialized so the next
     // round's `nearest` broadcasts a computed table instead of
     // re-running the whole lineage (centroids are always
-    // broadcast-sized). Cells that lose all members simply drop out
-    // (their cid disappears from the mean aggregation).
-    var centroids = seeds
+    // broadcast-sized).
+    var centroids = seeds(p, nCentroids)
     var step = 0
     while (step < lloydSteps) {
-      val assigned = nearest(p, centroids, keep = 1)
-      // normalized() cancels uniform scaling, so the cell MEAN and the
-      // cell SUM have the same direction — no count / division needed.
-      val next = assigned
-        .groupBy(col("cid"))
-        .agg(vecSum(col("v")).as("vs"))
-        .select(col("cid"), normalized(col("vs")).as("cvec"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      val next = lloydRound(p, centroids).persist(StorageLevel.MEMORY_AND_DISK)
       next.count() // materialize before the previous iteration unpins
       if (step > 0) centroids.unpersist(blocking = false)
       centroids = next
@@ -95,83 +127,102 @@ object Ivf {
     (centroids, assignments)
   }
 
-  /** Free a built index's cached frames. `build`'s returned centroids/
-    * assignments are deliberately persisted (built once, probed many
-    * times) — long-lived services call this when done with the index so
-    * the cache entries don't outlive their use.
+  /** The distributed lane's k-means over `rows`, the collected (vid, v)
+    * of `vecs`, with no job: seeds are the first `nCentroids` rows by
+    * vid; each assignment keeps, per vid, the (vector, centroid) pair
+    * first in `nearest`'s window order (score descending with nulls
+    * last, then cid ascending, in Spark's orderings); a cell's next
+    * centroid is the normalized sum of its non-null vectors, null when
+    * it has none. Scores, sums and norms go through the kernels'
+    * shared folds, so only the order of the cell sums' additions
+    * differs from the distributed lane. Both frames are local relations
+    * whose schemas come from analysing the distributed lane's plans.
+    */
+  private def driverBuild(
+      vecs: DataFrame, rows: Array[Row], nCentroids: Int, lloydSteps: Int): (DataFrame, DataFrame) = {
+    val vidType = vecs.schema("vid").dataType
+    val toKey = CatalystTypeConverters.createToCatalystConverter(vidType)
+    val keyOrder = TypeUtils.getInterpretedOrdering(vidType)
+    val byVid: Ordering[Any] = (a, b) => // ascending, nulls first
+      if (a == null) { if (b == null) 0 else -1 } else if (b == null) 1 else keyOrder.compare(a, b)
+    val (keys, sorted) = rows.map(r => (toKey(r.get(0)), r)).sortBy(_._1)(byVid).unzip
+    val n = sorted.length
+    // rank(i): the first position holding sorted(i)'s vid, so equal ids
+    // (the window's partition, the aggregate's group) share a rank and
+    // rank order is vid order
+    val rank = new Array[Int](n)
+    for (i <- 1 until n) rank(i) = if (byVid.compare(keys(i - 1), keys(i)) == 0) rank(i - 1) else i
+    val vs: Array[ArrayData] = sorted.map { r =>
+      if (r.isNullAt(1)) null else UnsafeArrayData.fromPrimitiveArray(r.getSeq[Double](1).toArray)
+    }
+
+    // Centroids are (cid rank, vector), sorted by rank. Per vid, the
+    // (position, centroid index) first in `nearest`'s window order.
+    def assign(cents: Array[(Int, ArrayData)]): Seq[(Int, Int)] = {
+      val won = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
+      var start = 0
+      while (start < n && cents.nonEmpty) {
+        var end = start + 1
+        while (end < n && rank(end) == rank(start)) end += 1
+        var (pos, c, score) = (-1, -1, null: java.lang.Double)
+        for (i <- start until end; j <- cents.indices) {
+          val s = if (vs(i) == null || cents(j)._2 == null) null else ArrayDotProduct.fold(vs(i), cents(j)._2)
+          if (pos < 0 || beats(s, score) || (sameScore(s, score) && cents(j)._1 < cents(c)._1)) {
+            pos = i; c = j; score = s
+          }
+        }
+        won += ((pos, c))
+        start = end
+      }
+      won.toSeq
+    }
+
+    var cents = (0 until math.min(nCentroids, n)).map(i => (rank(i), vs(i))).toArray
+    for (_ <- 0 until lloydSteps) {
+      val sums = scala.collection.mutable.TreeMap.empty[Int, Array[Double]]
+      assign(cents).foreach { case (pos, c) =>
+        val cell = cents(c)._1
+        val acc = sums.getOrElse(cell, Array.emptyDoubleArray)
+        sums(cell) = if (vs(pos) == null) acc else VectorSumAgg.add(acc, vs(pos))
+      }
+      cents = sums.iterator.map { case (cell, acc) =>
+        (cell, if (acc.isEmpty) null else NormalizeVector.fold(UnsafeArrayData.fromPrimitiveArray(acc)))
+      }.toArray
+    }
+
+    val spark = vecs.sparkSession
+    def vid(pos: Int): Any = sorted(pos).get(0)
+    def seq(v: ArrayData): Any = if (v == null) null else v.toDoubleArray().toSeq
+    val seedPlan = seeds(vecs, nCentroids)
+    val centSchema = (if (lloydSteps == 0) seedPlan else lloydRound(vecs, seedPlan)).schema
+    val centroids = spark.createDataFrame(
+      cents.toSeq.map { case (cell, v) => Row(vid(cell), seq(v)) }.asJava, centSchema)
+    val assignments = spark.createDataFrame(
+      assign(cents).map { case (pos, c) =>
+        Row(vid(pos), sorted(pos).get(1), vid(cents(c)._1))
+      }.asJava,
+      nearest(vecs, seedPlan, keep = 1).schema)
+    (centroids, assignments)
+  }
+
+  // `nearest`'s score order: descending, nulls last, Spark's double
+  // ordering (NaN largest, -0.0 == 0.0)
+  private def beats(s: java.lang.Double, other: java.lang.Double): Boolean =
+    s != null && (other == null || SQLOrderingUtil.compareDoubles(s, other) > 0)
+
+  private def sameScore(s: java.lang.Double, other: java.lang.Double): Boolean =
+    if (s == null) other == null else other != null && SQLOrderingUtil.compareDoubles(s, other) == 0
+
+  /** Free a built index's cached frames. The distributed lane's
+    * centroids/assignments are deliberately persisted (built once,
+    * probed many times) — long-lived services call this when done with
+    * the index so the cache entries don't outlive their use. A no-op on
+    * the driver lane's local relations.
     */
   def release(index: (DataFrame, DataFrame)): Unit = {
     index._1.unpersist(blocking = false)
     index._2.unpersist(blocking = false)
     ()
-  }
-
-  /** Deterministic k-means++-style seeding: farthest-point traversal
-    * (the 2-approximation for k-center) over a hash-chosen sample. The
-    * sample is picked by md5-derived hash of the id (deterministic, not
-    * id-order-biased), capped so the driver does O(sample × k) dot
-    * products and the corpus never leaves the executors.
-    *
-    * OFF by default, by measurement: on the near-uniform fixture
-    * embeddings it LOWERS recall@10 vs first-k seeding (0.82→0.52 at
-    * sf0.001, 0.80→0.60 at sf0.01, nProbe=4) — k-center deliberately
-    * seeds on extreme points, the wrong objective for unclustered data
-    * where random-equivalent seeds are already well spread. Reach for
-    * it on corpora with strong natural clusters, where first-k can land
-    * every seed inside one dense cluster.
-    */
-  private def farthestPointSeeds(
-      p: DataFrame, nCentroids: Int, sampleSize: Int = 2048): DataFrame = {
-    val spark = p.sparkSession
-    val sample = p
-      .withColumn("h", graft.functions.TextFunctions.hash60(col("vid").cast("string")))
-      .orderBy(col("h"), col("vid")).limit(sampleSize)
-      .select(col("vid"), col("v"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    require(sample.nonEmpty, "cannot seed IVF from an empty corpus")
-    def dot(a: Array[Double], b: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < math.min(a.length, b.length)) { s += a(i) * b(i); i += 1 }
-      s
-    }
-    val startIdx = sample.indices.minBy(sample(_)._1)
-    val chosen = scala.collection.mutable.ArrayBuffer(
-      sample(startIdx)) // deterministic start: min id in the sample
-    val isChosen = new Array[Boolean](sample.length)
-    isChosen(startIdx) = true
-    // maxSim(i) = similarity of sample(i) to its closest chosen seed;
-    // O(sample × k) total — one dot per point per round, flag array for
-    // membership (a chosen.exists scan would make this O(sample × k²))
-    val maxSim = Array.fill(sample.length)(-2.0)
-    while (chosen.length < math.min(nCentroids, sample.length)) {
-      val last = chosen.last._2
-      var bestIdx = -1
-      var bestVal = 2.0 // want the MIN max-similarity (farthest point)
-      var i = 0
-      while (i < sample.length) {
-        val s = dot(sample(i)._2, last)
-        if (s > maxSim(i)) maxSim(i) = s
-        // tie-break on id for determinism
-        if (!isChosen(i) &&
-            (maxSim(i) < bestVal || (maxSim(i) == bestVal && bestIdx >= 0 &&
-              sample(i)._1 < sample(bestIdx)._1))) {
-          bestVal = maxSim(i); bestIdx = i
-        }
-        i += 1
-      }
-      if (bestIdx < 0) return toSeedsDf(spark, chosen.toSeq) // all points chosen
-      isChosen(bestIdx) = true
-      chosen += sample(bestIdx)
-    }
-    toSeedsDf(spark, chosen.toSeq)
-  }
-
-  private def toSeedsDf(
-      spark: org.apache.spark.sql.SparkSession,
-      seeds: Seq[(Long, Array[Double])]): DataFrame = {
-    import spark.implicits._
-    seeds.map { case (id, v) => (id, v.toSeq) }.toDF("cid", "cvec")
   }
 
   /** Assign NEW vectors to frozen centroids — the per-batch rows of

@@ -48,9 +48,10 @@ object IvfPq {
     val cb = Pq.trainPrepped(resid.select(col("vid"), col("v")), m, k)
     val coded = Pq.encodePrepped(resid, cb).persist(StorageLevel.MEMORY_AND_DISK)
     coded.count() // materialize before the assignments unpin
-    // keep the centroids' ORIGINAL persist alive for the probe path
-    // (re-persisting after a release would re-run the whole Lloyd
-    // lineage); only the full-width assignments are dropped here
+    // the centroids stay as built for the probe path (a local relation
+    // on Ivf's driver lane; on its distributed lane the persisted Lloyd
+    // result, which a release and re-persist would recompute); only the
+    // full-width assignments are dropped here
     assigns.unpersist(blocking = false)
     Index(cents, coded, cb)
   }

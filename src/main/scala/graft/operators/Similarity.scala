@@ -26,7 +26,11 @@ object Similarity {
     * one place keeps brute/LSH/IVF results consistent).
     */
   private[operators] def prep(df: DataFrame, idCol: String, vecCol: String): DataFrame =
-    fanOut(df).select(col(idCol).as("vid"), normalized(vecD(col(vecCol))).as("v"))
+    unitVectors(fanOut(df), idCol, vecCol)
+
+  /** [[prep]]'s projection without its repartition. */
+  private[operators] def unitVectors(df: DataFrame, idCol: String, vecCol: String): DataFrame =
+    df.select(col(idCol).as("vid"), normalized(vecD(col(vecCol))).as("v"))
 
   private def fanOut(df: DataFrame): DataFrame = graft.core.Partitioning.fanOut(df)
 

@@ -17,7 +17,10 @@ import graft.pipeline.HpvPipeline
   * specs' fenced counter), its wall time, and the join strategies,
   * shuffle exchanges and AQE shuffle reads of the write's executed
   * plan, after AQE re-planned it. The query's `prepare` runs first,
-  * outside the counted region, as Bench stages it.
+  * outside the counted region, as Bench stages it. Between queries it
+  * runs the cleanup perfbench and `graft.Bench` run (`clearCache`, then
+  * unpersist every persisted RDD), so no cache a query leaves behind
+  * shapes the next one's plan.
   *
   * `hpv <workbookDir>` instead runs one cold and one warm HPV cycle over
   * the directory's `.xlsx` workbooks ([[hpv]]).
@@ -103,6 +106,8 @@ object Probe {
         f"SHJ=${count("ShuffledHashJoin")}%2d Exch=$exch%2d " +
         f"AQERead=${count("AQEShuffleRead")}%2d")
       graft.operators.Lineage.release(df, blocking = true)
+      spark.catalog.clearCache()
+      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
     }
     spark.stop()
   }
